@@ -28,12 +28,14 @@ import java.nio.file.{Files, Paths}
   */
 object ScalingBench {
 
-  /** Balanced corpus: replicate ids, then salted-repartition the SMALL
-    * (id, text) rows — size estimate × salt, mirroring
-    * ExtractionPipeline.salted but before synthesis, so the expensive
-    * payload construction is spread across all cores and full payloads
-    * never shuffle (the parquet source is one file = one input split;
-    * without this the whole synthesis stage runs on one core).
+  /** Balanced corpus: replicate ids, then repartition the SMALL
+    * (id, text) rows on `id`, before synthesis, so the expensive payload
+    * construction is spread across all cores and full payloads never
+    * shuffle (the parquet source is one file = one input split; without
+    * this the whole synthesis stage runs on one core). Both exchanges
+    * key on the id column itself: each row is an independent hash draw,
+    * where a pmod'ed or composite key with few distinct values would be
+    * hashed again into the partitions and collide whole groups.
     */
   def corpus(spark: SparkSession, sfDir: String, repl: Int, partitions: Int): Dataset[RawDoc] = {
     import org.apache.spark.sql.functions._
@@ -43,20 +45,13 @@ object ScalingBench {
       // spread the base rows FIRST: the parquet source is one split, so
       // everything before the first exchange runs on one core — keep that
       // serial stage down to reading 5k small rows
-      .repartition(partitions, pmod(hash(col("doc_id")), lit(partitions)))
+      .repartition(partitions, col("doc_id"))
       .as[(Long, String)]
       .flatMap { case (id, text) =>
         (0 until repl).iterator.map(r => (id * repl + r, text))
       }
       .toDF("id", "text")
-      // size estimate replicates DocGen.expand's multiplier
-      .withColumn("size_est",
-        length(col("text")) *
-          when(pmod(col("id"), lit(101)) === 100, lit(40))
-            .otherwise(lit(1) + pmod(col("id"), lit(4))))
-      .repartition(partitions,
-        ceil(log2(col("size_est") + lit(1))), pmod(hash(col("id")), lit(partitions)))
-      .select(col("id"), col("text"))
+      .repartition(partitions, col("id"))
       .as[(Long, String)]
       .map { case (id, text) => DocGen.synthesize(id, text) }
   }
@@ -88,8 +83,8 @@ object ScalingBench {
     corpus(spark, sfDir, repl, 128).write.mode("overwrite").parquet(path)
   }
 
-  /** One measured run: parquet scan → salted repartition (the production
-    * skew guard — payloads shuffle once) → fused extraction; count +
+  /** One measured run: parquet scan → `doc_id` repartition (the
+    * production shuffle — payloads shuffle once) → fused extraction; count +
     * page-sum forces every stage. Result sink I/O excluded (both levels
     * would share one local disk, which a real cluster would not).
     */
@@ -98,8 +93,7 @@ object ScalingBench {
     val p = spark.sparkContext.defaultParallelism * 4
     val raw = spark.read.parquet(corpusPath).as[RawDoc]
     val t0 = System.nanoTime()
-    val (docs, pages) = ExtractionPipeline.runCounting(spark, raw, partitions = p,
-      salt = !sys.env.contains("GRAFT_BENCH_NOSALT"))
+    val (docs, pages) = ExtractionPipeline.runCounting(spark, raw, partitions = p)
     val sec = (System.nanoTime() - t0) / 1e9
     (sec, docs, pages)
   }
@@ -159,8 +153,8 @@ object ScalingBench {
          |
          |**Scaling efficiency thr(4N) / (4 × thr(N)) = $eff%.3f** (north
          |rule requires ≥ 0.8). Measured job shape = production shape:
-         |parquet scan of raw docs → salted repartition on (size-bucket,
-         |salt) — the skew guard; payloads shuffle exactly once → fused
+         |parquet scan of raw docs → repartition on `doc_id` — each doc
+         |an independent hash draw; payloads shuffle exactly once → fused
          |extraction stage → count/pages fold inside the same stage
          |(result-sink I/O excluded: both levels would contend on ONE
          |local disk, which distinct clusters would not). Corpus

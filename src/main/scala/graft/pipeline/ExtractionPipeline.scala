@@ -18,12 +18,11 @@ import org.apache.spark.sql.functions._
   * (`pipeline/in_memory_document.py:4-6`). The executor boundary replaces
   * the reference's process/queue machinery.
   *
-  * Skew (SURVEY.md §4): giant documents would dominate task time, so the
-  * input is salted-repartitioned on (size bucket, hash-salt) before the
-  * heavy stage — at 1000 executors this spreads the big-doc tail evenly
-  * instead of letting hash luck stack giants on one task. The
-  * reference's own caps (100 pages, 50KB extraction) bound the worst
-  * case per doc.
+  * Skew (SURVEY.md §4): the one payload shuffle before the heavy stage
+  * is keyed on `doc_id` alone (`salted`), so every doc — giants
+  * included — lands in a partition by an independent hash draw and the
+  * tasks stay balanced up to binomial noise. The reference's own caps
+  * (100 pages, 50KB extraction) bound the worst case per doc.
   */
 object ExtractionPipeline {
 
@@ -135,34 +134,37 @@ object ExtractionPipeline {
     }
   }
 
-  /** Size-bucket salted repartition: log2 size bucket × a doc-id salt.
-    * Docs of similar size hash across ALL partitions (salt) while the
-    * bucket term keeps any single partition from drawing only giants.
+  /** The one payload shuffle, keyed on `doc_id` alone. Spark's hash
+    * partitioner puts a doc in partition pmod(murmur3(doc_id, 42), p),
+    * the same function `ResumableJob.bucketOf` applies with B buckets,
+    * and that condition is the reason for the key:
+    *  - task i holds only the buckets ≡ i mod gcd(p, B), so the bucketed
+    *    sink writes lcm(p, B) files instead of p × B (one per bucket when
+    *    p divides B);
+    *  - each doc is an independent draw, so partitions are balanced. A
+    *    composite key with few distinct values (size bucket × pmod salt)
+    *    is hashed again into p partitions and collides whole groups.
     */
-  def salted(raw: Dataset[RawDoc], partitions: Int): Dataset[RawDoc] = {
-    val salts = math.max(partitions, 1)
-    raw.repartition(partitions,
-      ceil(log2(col("size_bytes") + lit(1))),
-      pmod(hash(col("doc_id")), lit(salts)))
-  }
+  def salted(raw: Dataset[RawDoc], partitions: Int): Dataset[RawDoc] =
+    raw.repartition(partitions, col("doc_id"))
 
-  /** Full job: raw docs → extracted docs, fused + salted. Pass
-    * salt = false when the caller has already balanced the input (e.g.
-    * a pre-synthesis salted repartition of small rows — cheaper than
-    * re-shuffling full payloads here).
+  /** Full job: raw docs → extracted docs, one `doc_id` shuffle then the
+    * fused stage.
     */
   def run(spark: SparkSession, raw: Dataset[RawDoc], partitions: Int = 0,
-      salt: Boolean = true, config: PipelineConfig = PipelineConfig()): Dataset[ExtractedDoc] = {
+      config: PipelineConfig = PipelineConfig()): Dataset[ExtractedDoc] = {
     import spark.implicits._
-    val p = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism * 2
-    val balanced = if (salt) salted(raw, p) else raw
     // ship the driver's active corpus bundle (built-in or table-loaded)
     // to every executor: one broadcast, an idempotent install per JVM
     // per version at partition start (no-op when already current)
     val installCorpus = graft.matching.CorpusTable.broadcastInstaller(
       spark, graft.matching.Corpora.bundle)
-    balanced.mapPartitions { it => installCorpus(); it.map(processDoc(_, config)) }
+    salted(raw, parallelism(spark, partitions))
+      .mapPartitions { it => installCorpus(); it.map(processDoc(_, config)) }
   }
+
+  private def parallelism(spark: SparkSession, partitions: Int): Int =
+    if (partitions > 0) partitions else spark.sparkContext.defaultParallelism * 2
 
   /** Corpus-level metrics via `observe()` — the Spark counterpart of the
     * reference's pipeline metrics (`base_extractor.py:111-157`): doc /
@@ -185,14 +187,11 @@ object ExtractionPipeline {
     * into the sink; a count-after-Dataset would pay serialize +
     * deserialize per doc, an artifact the bench must not measure.
     */
-  def runCounting(spark: SparkSession, raw: Dataset[RawDoc], partitions: Int = 0,
-      salt: Boolean = true): (Long, Long) = {
+  def runCounting(spark: SparkSession, raw: Dataset[RawDoc], partitions: Int = 0): (Long, Long) = {
     import spark.implicits._
-    val p = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism * 2
-    val balanced = if (salt) salted(raw, p) else raw
     val installCorpus = graft.matching.CorpusTable.broadcastInstaller(
       spark, graft.matching.Corpora.bundle)
-    balanced.mapPartitions { it =>
+    salted(raw, parallelism(spark, partitions)).mapPartitions { it =>
       installCorpus()
       var docs = 0L
       var pages = 0L

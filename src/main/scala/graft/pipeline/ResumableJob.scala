@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.model.{ExtractedDoc, RawDoc}
+import graft.model.RawDoc
 import graft.sources.Storage
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,19 +34,28 @@ object ResumableJob {
 
   def bucketOf(buckets: Int) = pmod(hash(col("doc_id")), lit(buckets))
 
-  /** Buckets already completed for this snapshot (empty on first run). */
+  /** Buckets already completed for this snapshot (empty on first run).
+    * Only an absent lineage table means "nothing done": any other read
+    * failure propagates, because swallowing it would silently recompute
+    * every bucket.
+    */
   def completedBuckets(spark: SparkSession, outDir: String, snapshot: String,
       storage: Storage = Storage.default): Set[Int] = {
     val path = s"$outDir/lineage"
-    try {
-      storage.read(spark, path)
-        .filter(col("source_snapshot") === snapshot)
-        .select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSet
-    } catch { case _: Exception => Set.empty }
+    if (!storage.exists(spark, path)) Set.empty
+    else storage.read(spark, path)
+      .filter(col("source_snapshot") === snapshot)
+      .select("bucket").distinct()
+      .collect().map(_.getInt(0)).toSet
   }
 
-  /** Process + write only the buckets not yet recorded in lineage.
+  /** Process + write only the buckets not yet recorded in lineage, in one
+    * pass over the payloads:
+    *  1. a key-only pass (reads only `doc_id`) finds the pending buckets;
+    *  2. the fused job streams straight into the bucketed sink;
+    *  3. lineage is aggregated from a column-pruned read of the committed
+    *     data, restricted to the pending buckets, so it certifies what was
+    *     written (a stale bucket with no pending docs gets no row).
     * Returns the number of buckets (re)computed.
     */
   def runResumable(
@@ -58,31 +67,31 @@ object ResumableJob {
       storage: Storage = Storage.default): Int = {
     import spark.implicits._
     val done = completedBuckets(spark, outDir, snapshot, storage)
-    val pending = raw
-      .withColumn("bucket", bucketOf(buckets))
-      .filter(!col("bucket").isin(done.toSeq: _*))
-    val pendingRaw = pending.drop("bucket").as[RawDoc]
-    if (pendingRaw.isEmpty) return 0
+    val pending = raw.select(bucketOf(buckets)).distinct()
+      .collect().map(_.getInt(0)).filterNot(done).toSeq
+    if (pending.isEmpty) return 0
 
+    val pendingRaw = raw.filter(bucketOf(buckets).isin(pending: _*))
     val extracted = ExtractionPipeline.run(spark, pendingRaw)
       .withColumn("bucket", bucketOf(buckets))
-    extracted.cache()
-    try {
-      // dynamic partition overwrite: only touched buckets are replaced
-      // (Iceberg binding: writeTo(...).overwritePartitions() — same call)
-      storage.overwritePartitions(extracted.toDF(), s"$outDir/data", "bucket")
+    // dynamic partition overwrite: only touched buckets are replaced
+    // (Iceberg binding: writeTo(...).overwritePartitions() — same call)
+    storage.overwritePartitions(extracted.toDF(), s"$outDir/data", "bucket")
 
-      val lineage = extracted.groupBy(col("bucket"))
-        .agg(
-          count(lit(1)).as("doc_count"),
-          sum(size(col("spans"))).cast("long").as("span_count"),
-          sum(when(!col("success"), 1L).otherwise(0L)).as("fail_count"))
-        .withColumn("source_snapshot", lit(snapshot))
-        .as[LineageRow]
-      val nBuckets = lineage.count().toInt
-      storage.append(lineage.toDF(), s"$outDir/lineage")
-      nBuckets
-    } finally extracted.unpersist()
+    // size(spans.offset) == size(spans), but reads one int leaf per span
+    // instead of the span text
+    val lineage = readData(spark, outDir, storage)
+      .filter(col("bucket").isin(pending: _*))
+      .groupBy(col("bucket"))
+      .agg(
+        count(lit(1)).as("doc_count"),
+        sum(size(col("spans.offset"))).cast("long").as("span_count"),
+        sum(when(!col("success"), 1L).otherwise(0L)).as("fail_count"))
+      .withColumn("source_snapshot", lit(snapshot))
+      .as[LineageRow]
+      .collect()
+    storage.append(lineage.toSeq.toDF(), s"$outDir/lineage")
+    lineage.length
   }
 
   def readData(spark: SparkSession, outDir: String,

@@ -24,7 +24,7 @@ object DocGen {
 
   /** Deterministic size variance: most docs carry 1-4 copies of their
     * base text; every 101st is a "giant" (40 copies) — the skew tail the
-    * salted repartition must absorb (FIXTURES.md P3).
+    * `doc_id` repartition must absorb (FIXTURES.md P3).
     */
   private def expand(id: Long, text: String): String = {
     val k = if (id % 101 == 100) 40 else 1 + (id % 4).toInt

@@ -27,6 +27,9 @@ trait Storage {
   /** Read a table by logical name. */
   def read(spark: SparkSession, table: String): DataFrame
 
+  /** Whether the table exists at all (Iceberg: `catalog.tableExists`). */
+  def exists(spark: SparkSession, table: String): Boolean
+
   /** Overwrite only the partitions present in `df` (dynamic overwrite —
     * the idempotent-resume primitive; Iceberg: `overwritePartitions()`).
     */
@@ -60,13 +63,19 @@ final class ParquetStorage extends Storage {
   override def append(df: DataFrame, table: String): Unit =
     df.write.mode(SaveMode.Append).parquet(table)
 
-  override def snapshotId(spark: SparkSession, table: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
+  private def fileSystem(spark: SparkSession, table: String) =
+    org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(table match {
         case t if t.contains("://") => t
         case t => s"file://$t"
       }),
       spark.sparkContext.hadoopConfiguration)
+
+  override def exists(spark: SparkSession, table: String): Boolean =
+    fileSystem(spark, table).exists(new org.apache.hadoop.fs.Path(table))
+
+  override def snapshotId(spark: SparkSession, table: String): String = {
+    val fs = fileSystem(spark, table)
     val path = new org.apache.hadoop.fs.Path(table)
     if (!fs.exists(path)) return "absent"
     // recursive listing with the full relative path in the digest:

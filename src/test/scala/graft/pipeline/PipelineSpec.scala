@@ -79,6 +79,22 @@ class PipelineSpec extends AnyFunSuite {
     out.unpersist()
   }
 
+  /** Per-bucket (doc_count, span_count, fail_count) of the committed data. */
+  private def dataTriples(outDir: String): Map[Int, (Long, Long, Long)] = {
+    import org.apache.spark.sql.functions._
+    ResumableJob.readData(spark, outDir).groupBy("bucket")
+      .agg(count(lit(1)), sum(size(col("spans"))).cast("long"),
+        sum(when(!col("success"), 1L).otherwise(0L)))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+  }
+
+  private def lineageTriples(outDir: String): Map[Int, (Long, Long, Long)] = {
+    val rows = ResumableJob.readLineage(spark, outDir)
+      .select("bucket", "doc_count", "span_count", "fail_count").collect()
+    assert(rows.map(_.getInt(0)).distinct.length === rows.length, "one lineage row per bucket")
+    rows.map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+  }
+
   test("P2 resume: only missing buckets recomputed; data complete after resume") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -90,17 +106,57 @@ class PipelineSpec extends AnyFunSuite {
       pmod(hash(col("doc_id")), lit(buckets)) =!= 3).as[graft.model.RawDoc]
     val n1 = ResumableJob.runResumable(spark, partial, tmp, buckets, "snap1")
     assert(n1 === buckets - 1)
+    // lineage certifies exactly what was committed
+    assert(lineageTriples(tmp) === dataTriples(tmp))
     // resume with the FULL input: only bucket 3 is recomputed
     val n2 = ResumableJob.runResumable(spark, raw, tmp, buckets, "snap1")
     assert(n2 === 1)
     assert(ResumableJob.readData(spark, tmp).count() === raw.count())
+    assert(lineageTriples(tmp) === dataTriples(tmp))
     // lineage rows carry per-partition metrics
     val lin = ResumableJob.readLineage(spark, tmp)
     assert(lin.columns.toSet ===
       Set("bucket", "doc_count", "span_count", "fail_count", "source_snapshot"))
     assert(lin.agg(sum("doc_count")).head.getLong(0) === raw.count())
+    // the doc_id shuffle is aligned with the buckets: at p = 2 × cores
+    // dividing B, one task writes each bucket, so one part file per bucket
+    val dirs = new java.io.File(tmp, "data").listFiles().filter(_.getName.startsWith("bucket="))
+    assert(dirs.length === buckets)
+    dirs.foreach { d =>
+      val parts = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+      assert(parts.length === 1, s"${d.getName} holds ${parts.toSeq}")
+    }
     // idempotent: a third run computes nothing
     assert(ResumableJob.runResumable(spark, raw, tmp, buckets, "snap1") === 0)
+  }
+
+  test("resume fails loudly on an unreadable lineage table instead of recomputing") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-resume-bad")
+    val lineage = java.nio.file.Files.createDirectories(tmp.resolve("lineage"))
+    java.nio.file.Files.writeString(lineage.resolve("part-00000.parquet"), "not a parquet file")
+    intercept[Exception] {
+      ResumableJob.runResumable(spark, DocGen.rawDocs(spark, sfDir), tmp.toString, 8, "snap1")
+    }
+    assert(!java.nio.file.Files.exists(tmp.resolve("data")), "no bucket may be recomputed")
+  }
+
+  test("P3 skew: the doc_id shuffle balances partitions and aligns them with the buckets") {
+    import spark.implicits._
+    val raw = DocGen.rawDocs(spark, sfDir)
+    for (p <- Seq(8, 16)) {
+      val parts = ExtractionPipeline.salted(raw, p)
+        .select(org.apache.spark.sql.functions.spark_partition_id(), ResumableJob.bucketOf(p))
+        .as[(Int, Int)].collect()
+        .groupMap(_._1)(_._2)
+      val counts = (0 until p).map(i => parts.get(i).fold(0)(_.length))
+      val mean = counts.sum.toDouble / p
+      assert(counts.max <= 1.5 * mean, s"p = $p: partition sizes $counts")
+      assert(counts.min >= 0.5 * mean, s"p = $p: partition sizes $counts")
+      (0 until p).foreach { i =>
+        assert(parts.getOrElse(i, Array.empty[Int]).distinct.length === 1,
+          s"p = $p: partition $i holds buckets ${parts.get(i).map(_.distinct.toSeq)}")
+      }
+    }
   }
 
   test("P3 observe: corpus metrics ride along with the job") {
