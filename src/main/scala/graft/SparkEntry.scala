@@ -1,10 +1,12 @@
 package graft
 
+import graft.extract.Core8Extractor
 import graft.model.{ExtractedDoc, RawDoc}
 import graft.pipeline.ExtractionPipeline
 import graft.sources.DocGen
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -28,47 +30,32 @@ import org.apache.spark.sql.functions._
   */
 object SparkEntry {
 
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
-  /** The fused pipeline output, persisted once per (session, sfDir): ten
-    * x_* queries project different columns of the SAME extraction run —
-    * recomputing the full pipeline per query would be a 10× waste in
-    * Verify/Bench (and in any real consumer reading several facets).
+  /** Every fused-pipeline run, keyed "<corpus>:<dir>" per session: the
+    * x_* queries project different columns of the SAME run of each
+    * corpus — recomputing the full pipeline per query would be a 10×
+    * waste in Verify/Bench (and in any real consumer reading several
+    * facets).
     */
-  private val extractedCache = new graft.util.SessionCache[Dataset[ExtractedDoc]]
+  private val runs = new graft.util.SessionCache[Dataset[ExtractedDoc]]
+
+  private def persistedRun(s: SparkSession, corpus: String, dir: String)(
+      raw: => Dataset[RawDoc]): Dataset[ExtractedDoc] =
+    runs.getOrElseUpdate(s, s"$corpus:$dir") {
+      ExtractionPipeline.run(s, raw).persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   private def extracted(s: SparkSession, dir: String): Dataset[ExtractedDoc] =
-    extractedCache.getOrElseUpdate(s, dir) {
-      val ds = ExtractionPipeline.run(s, DocGen.rawDocs(s, dir))
-      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ds
-    }
+    persistedRun(s, "main", dir)(DocGen.rawDocs(s, dir))
 
-  /** F13 office corpus — a second fused-pipeline run over the OOXML
-    * synthesis of the same documents table (lighter than the main run:
-    * no HTML parse), persisted per (session, dir).
+  /** F13 office corpus: the OOXML synthesis of the same documents table
+    * (lighter than the main run: no HTML parse).
     */
-  private val officeCache = new graft.util.SessionCache[Dataset[ExtractedDoc]]
-
   private def officeExtracted(s: SparkSession, dir: String): Dataset[ExtractedDoc] =
-    officeCache.getOrElseUpdate(s, dir) {
-      val ds = ExtractionPipeline.run(s, DocGen.officeRawDocs(s, dir))
-      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ds
-    }
+    persistedRun(s, "office", dir)(DocGen.officeRawDocs(s, dir))
 
-  /** F12/F15 aux corpus — csv + unknown-kind payloads through the same
-    * fused pipeline (DocGen.auxRawDocs), persisted per (session, dir).
-    */
-  private val auxCache = new graft.util.SessionCache[Dataset[ExtractedDoc]]
-
+  /** F12/F15 aux corpus: csv + unknown-kind payloads (DocGen.auxRawDocs). */
   private def auxExtracted(s: SparkSession, dir: String): Dataset[ExtractedDoc] =
-    auxCache.getOrElseUpdate(s, dir) {
-      val ds = ExtractionPipeline.run(s, DocGen.auxRawDocs(s, dir))
-      ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      ds
-    }
+    persistedRun(s, "aux", dir)(DocGen.auxRawDocs(s, dir))
 
   /** Gazetteer realism tier: the full pipeline re-run under a
     * 430k-pattern corpus bundle (the reference's name-corpus scale,
@@ -82,10 +69,8 @@ object SparkEntry {
     */
   val BigTierTarget = 430000
 
-  private val bigExtractedCache = new graft.util.SessionCache[Dataset[ExtractedDoc]]
-
   private def bigExtracted(s: SparkSession, dir: String): Dataset[ExtractedDoc] =
-    bigExtractedCache.getOrElseUpdate(s, dir) {
+    runs.getOrElseUpdate(s, s"big:$dir") {
       import s.implicits._
       val tmp = java.nio.file.Files.createTempDirectory("graft-corpus-big")
       graft.matching.CorpusGen.rowsAt(BigTierTarget).toDF("kind", "value", "meta")
@@ -160,16 +145,20 @@ object SparkEntry {
 
   private def nonPdfCol = !kindCol("pdf_blocks")
 
-  private def extractedOfKind(s: SparkSession, dir: String, kind: String): Dataset[ExtractedDoc] =
-    // content_kind is a pure function of the numeric doc id (DocGen mix),
-    // so filter the cached full extraction instead of re-running it
-    extracted(s, dir).filter(kindCol(kind))
+  /** The main run over the exactly-reconstructable modes (html + text;
+    * pdf chunking mangles entity surface — see the oracle docs).
+    */
+  private def core(s: SparkSession, dir: String): Dataset[ExtractedDoc] =
+    extracted(s, dir).filter(nonPdfCol)
 
-  /** The two shared facet projections. `Dataset[_]` (not overloads —
-    * Dataset[ExtractedDoc] and DataFrame share an erasure) so the typed
-    * extraction caches and the streamed replay DataFrame all project
-    * through ONE definition: five facets gate on the same oracle shape,
-    * and a drift in any copy would silently break that equality.
+  /** The shared facet projections, each defined ONCE. `Dataset[_]` (not
+    * overloads — Dataset[ExtractedDoc] and DataFrame share an erasure)
+    * so the typed extraction caches and the streamed replay DataFrame all
+    * project through one definition: the all-modes, `_core`, office, big
+    * and stream facets gate on the same shape, and a drifted copy would
+    * go unseen wherever no oracle checks it. Each selects its columns
+    * BEFORE any typed map, so the cache scan prunes to exactly them
+    * (renderedOf alone reads the whole doc: the renderers need it).
     */
   private def spansOf(ds: Dataset[_]): DataFrame =
     ds.select(col("doc_id"), explode(col("spans")).as("s"))
@@ -182,6 +171,67 @@ object SparkEntry {
       .select(col("doc_id"), col("e.type").as("type"), col("e.value").as("value"),
         col("e.start").as("start"), col("e.end").as("end"))
       .orderBy(col("doc_id"), col("start"), col("type"))
+
+  private def canonicalOf(ds: Dataset[_]): DataFrame =
+    ds.select(col("doc_id"), explode(col("canonical_entities")).as("c"))
+      .select(col("doc_id"), col("c.id").as("id"), col("c.type").as("type"),
+        col("c.normalized").as("normalized"), col("c.count").as("count"))
+      .orderBy(col("doc_id"), col("id"))
+
+  private def factsOf(ds: Dataset[_]): DataFrame =
+    ds.select(col("doc_id"), explode(col("facts")).as("f"))
+      .select(col("doc_id"), col("f.fact_type").as("fact_type"),
+        col("f.subject").as("subject"), col("f.predicate").as("predicate"),
+        col("f.object").as("object"), col("f.confidence").as("confidence"),
+        col("f.actionable").as("actionable"))
+      .orderBy(col("doc_id"), col("fact_type"))
+
+  private def factSummaryOf(ds: Dataset[_]): DataFrame = {
+    val s = ds.sparkSession
+    import s.implicits._
+    ds.select(col("doc_id"), col("facts"))
+      .as[(String, Seq[graft.model.Fact])]
+      .map { case (id, facts) =>
+        val sm = graft.facts.SpoExtractor.summarize(facts)
+        (id, sm.total_facts.toLong, sm.actionable_facts.toLong,
+          sm.fact_types.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(","))
+      }
+      .toDF("doc_id", "total_facts", "actionable_facts", "fact_types")
+      .orderBy(col("doc_id"))
+  }
+
+  /** The pipeline's clean text, rebuilt from the cached span texts. */
+  private def cleanText(texts: Seq[String]): String =
+    Core8Extractor.truncate(Core8Extractor.cleanFormatting(texts.mkString("\n")))
+
+  /** N11 global replacement + N12 stats on the pipeline's clean text. */
+  private def normalizedOf(ds: Dataset[_]): DataFrame = {
+    val s = ds.sparkSession
+    import s.implicits._
+    ds.select(col("doc_id"), col("spans.text").as("texts"), col("entities"))
+      .as[(String, Seq[String], Seq[graft.model.EntityMention])]
+      .map { case (id, texts, entities) =>
+        val r = graft.normalize.Normalizer.run(cleanText(texts), entities)
+        (id, r.mentionCount.toLong, r.canonicalCount.toLong, r.reductionPct,
+          r.normalizedText.length.toLong)
+      }
+      .toDF("doc_id", "mentions", "canonical", "reduction_pct", "norm_len")
+      .orderBy(col("doc_id"))
+  }
+
+  /** Length + md5 of one rendered artifact per doc (O1 markdown, O2
+    * knowledge JSON), as `<prefix>_len` and `<prefix>_md5`.
+    */
+  private def renderedOf(ds: Dataset[ExtractedDoc], prefix: String)(
+      render: ExtractedDoc => String): DataFrame = {
+    val s = ds.sparkSession
+    import s.implicits._
+    ds.map(d => (d.doc_id, render(d)))
+      .toDF("doc_id", "rendered")
+      .select(col("doc_id"), length(col("rendered")).as(s"${prefix}_len"),
+        md5(col("rendered")).as(s"${prefix}_md5"))
+      .orderBy(col("doc_id"))
+  }
 
   /** Flagship: full fused extraction over the interleaved corpus at
     * sf0.001 — every stage exercised, spans exploded.
@@ -237,9 +287,9 @@ object SparkEntry {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- extraction engine (rows-only checks; golden specs in sbt test)
-    "x_html_spans" -> ((s, dir) => spansOf(extractedOfKind(s, dir, "html"))),
-    "x_pdf_spans" -> ((s, dir) => spansOf(extractedOfKind(s, dir, "pdf_blocks"))),
-    "x_text_spans" -> ((s, dir) => spansOf(extractedOfKind(s, dir, "text"))),
+    "x_html_spans" -> ((s, dir) => spansOf(extracted(s, dir).filter(kindCol("html")))),
+    "x_pdf_spans" -> ((s, dir) => spansOf(extracted(s, dir).filter(kindCol("pdf_blocks")))),
+    "x_text_spans" -> ((s, dir) => spansOf(extracted(s, dir).filter(kindCol("text")))),
     // streaming parity gates: the flagship extraction replayed through a
     // MemoryStream child session (the q18 pattern) must emit exactly the
     // batch rows — each oracle is the same DuckDB reconstruction that
@@ -261,13 +311,7 @@ object SparkEntry {
     // office corpus is chunk-free, so its downstream stages are exactly
     // reconstructable too — entity and fact hash-gates over the same run
     "x_office_entities" -> ((s, dir) => entitiesOf(officeExtracted(s, dir))),
-    "x_office_facts" -> ((s, dir) =>
-      officeExtracted(s, dir).select(col("doc_id"), explode(col("facts")).as("f"))
-        .select(col("doc_id"), col("f.fact_type").as("fact_type"),
-          col("f.subject").as("subject"), col("f.predicate").as("predicate"),
-          col("f.object").as("object"), col("f.confidence").as("confidence"),
-          col("f.actionable").as("actionable"))
-        .orderBy(col("doc_id"), col("fact_type"))),
+    "x_office_facts" -> ((s, dir) => factsOf(officeExtracted(s, dir))),
     "x_content_flags" -> ((s, dir) =>
       extracted(s, dir).select(col("doc_id"), col("meta.content_detection.*"))
         .orderBy(col("doc_id"))),
@@ -285,25 +329,14 @@ object SparkEntry {
       graft.classify.Tagger.tagMeta(extracted(s, dir))),
     "x_entities" -> ((s, dir) => entitiesOf(extracted(s, dir))),
     // Core-8 extraction hash-gate over the exactly-reconstructable modes
-    // (html + text; pdf chunking mangles entity surface — see oracle doc)
-    "x_entities_core" -> ((s, dir) =>
-      entitiesOf(extracted(s, dir).filter(nonPdfCol))),
+    "x_entities_core" -> ((s, dir) => entitiesOf(core(s, dir))),
     // the same two gazetteer-sensitive facets under the 430k tier —
     // gated by the SAME oracle SQL (hermetic tier => identical results)
     "x_big_entities_core" -> ((s, dir) =>
       entitiesOf(bigExtracted(s, dir).filter(nonPdfCol))),
     "x_big_canonical_core" -> ((s, dir) =>
-      bigExtracted(s, dir)
-        .filter(nonPdfCol)
-        .select(col("doc_id"), explode(col("canonical_entities")).as("c"))
-        .select(col("doc_id"), col("c.id").as("id"), col("c.type").as("type"),
-          col("c.normalized").as("normalized"), col("c.count").as("count"))
-        .orderBy(col("doc_id"), col("id"))),
-    "x_canonical_entities" -> ((s, dir) =>
-      extracted(s, dir).select(col("doc_id"), explode(col("canonical_entities")).as("c"))
-        .select(col("doc_id"), col("c.id").as("id"), col("c.type").as("type"),
-          col("c.normalized").as("normalized"), col("c.count").as("count"))
-        .orderBy(col("doc_id"), col("id"))),
+      canonicalOf(bigExtracted(s, dir).filter(nonPdfCol))),
+    "x_canonical_entities" -> ((s, dir) => canonicalOf(extracted(s, dir))),
     // A2 distributed extension: corpus-level canonical entity table
     // (one groupBy shuffle on (type, normalized); see CorpusCanonical)
     "x_global_entities" -> ((s, dir) =>
@@ -311,67 +344,41 @@ object SparkEntry {
     // the same corpus-level aggregation hash-gated over the
     // reconstructable modes (see x_canonical_core)
     "x_global_core" -> ((s, dir) =>
-      graft.normalize.CorpusCanonical.globalEntities(
-        extracted(s, dir).filter(nonPdfCol))),
+      graft.normalize.CorpusCanonical.globalEntities(core(s, dir))),
     // A2 mention-context half: sentence-window co-occurrence edges
     // between canonical entities, corpus-aggregated (EntityEdges)
     "x_entity_edges" -> ((s, dir) =>
       graft.normalize.EntityEdges.edges(extracted(s, dir))),
     "x_entity_edges_core" -> ((s, dir) =>
-      graft.normalize.EntityEdges.edges(
-        extracted(s, dir).filter(nonPdfCol))),
+      graft.normalize.EntityEdges.edges(core(s, dir))),
     // per-mention ±50-char context windows (the disambiguator's raw
     // material), hash-gated over the reconstructable modes
     "x_mention_context_core" -> ((s, dir) =>
-      graft.normalize.EntityEdges.mentionContexts(
-        extracted(s, dir).filter(nonPdfCol))),
+      graft.normalize.EntityEdges.mentionContexts(core(s, dir))),
     // A2 resolution: per-doc evidence-scored person/org decisions over
     // the ambiguous canonical surfaces, plus the corpus rollup (built on
     // the unsorted rows — the groupBy would discard a sort anyway)
     "x_disambig_core" -> ((s, dir) =>
-      graft.normalize.Disambiguator.decisions(extracted(s, dir).filter(nonPdfCol))),
+      graft.normalize.Disambiguator.decisions(core(s, dir))),
     "x_disambig_global" -> ((s, dir) =>
       graft.normalize.Disambiguator.global(
-        graft.normalize.Disambiguator.decisionRows(extracted(s, dir).filter(nonPdfCol)))),
+        graft.normalize.Disambiguator.decisionRows(core(s, dir)))),
     // normalization hash-gate over the reconstructable modes
-    "x_canonical_core" -> ((s, dir) =>
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .select(col("doc_id"), explode(col("canonical_entities")).as("c"))
-        .select(col("doc_id"), col("c.id").as("id"), col("c.type").as("type"),
-          col("c.normalized").as("normalized"), col("c.count").as("count"))
-        .orderBy(col("doc_id"), col("id"))),
-    "x_facts" -> ((s, dir) =>
-      extracted(s, dir).select(col("doc_id"), explode(col("facts")).as("f"))
-        .select(col("doc_id"), col("f.fact_type").as("fact_type"),
-          col("f.subject").as("subject"), col("f.predicate").as("predicate"),
-          col("f.object").as("object"), col("f.confidence").as("confidence"),
-          col("f.actionable").as("actionable"))
-        .orderBy(col("doc_id"), col("f.start"))),
+    "x_canonical_core" -> ((s, dir) => canonicalOf(core(s, dir))),
+    "x_facts" -> ((s, dir) => factsOf(extracted(s, dir))),
     // SPO fact hash-gate over the reconstructable modes (see x_entities_core)
-    "x_facts_core" -> ((s, dir) =>
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .select(col("doc_id"), explode(col("facts")).as("f"))
-        .select(col("doc_id"), col("f.fact_type").as("fact_type"),
-          col("f.subject").as("subject"), col("f.predicate").as("predicate"),
-          col("f.object").as("object"), col("f.confidence").as("confidence"),
-          col("f.actionable").as("actionable"))
-        .orderBy(col("doc_id"), col("fact_type"))),
+    "x_facts_core" -> ((s, dir) => factsOf(core(s, dir))),
     // X2 typed-fact breadth shipped as X3 CONFIG rows: the same SPO
     // engine with the typedPatterns set installed, gating only the NEW
     // fact types (the builtin rows stay x_facts_core's gate). Runs over
     // the cached extraction's spans — same clean text as the pipeline.
     "x_typed_facts_core" -> ((s, dir) => {
       import s.implicits._
-      extracted(s, dir)
-        .filter(nonPdfCol)
+      core(s, dir)
         .select(col("doc_id"), col("spans.text").as("texts"))
         .as[(String, Seq[String])]
         .flatMap { case (id, texts) =>
-          val clean = graft.extract.Core8Extractor.truncate(
-            graft.extract.Core8Extractor.cleanFormatting(texts.mkString("\n")))
-          graft.facts.SpoExtractor.extract(clean, graft.facts.SpoExtractor.typedPatterns)
+          graft.facts.SpoExtractor.extract(cleanText(texts), graft.facts.SpoExtractor.typedPatterns)
             .filter(f => graft.facts.SpoExtractor.typedFactTypes.contains(f.fact_type))
             .map(f => (id, f.fact_type, f.subject, f.predicate,
               f.`object`, f.confidence, f.actionable))
@@ -387,121 +394,30 @@ object SparkEntry {
     // reconstructable modes (disabled in the pipeline by default, like
     // the reference — exercised here as its own facet)
     "x_discoveries_core" -> ((s, dir) =>
-      graft.extract.GapDiscovery.discoverAll(
-        extracted(s, dir).filter(nonPdfCol))
+      graft.extract.GapDiscovery.discoverAll(core(s, dir))
         .orderBy(col("doc_id"), col("start"))),
     "x_discovery_learn_core" -> ((s, dir) =>
       graft.extract.GapDiscovery.learningCandidates(
-        graft.extract.GapDiscovery.discoverAll(
-          extracted(s, dir).filter(nonPdfCol)),
+        graft.extract.GapDiscovery.discoverAll(core(s, dir)),
         threshold = 0.85, minDocs = 2)
         .orderBy(col("kind"), col("value"))),
     "x_domain_entities" -> ((s, dir) =>
       extracted(s, dir)
         .select(col("doc_id"), explode(col("meta.domain_entities")).as("domain_entity"))
         .orderBy(col("doc_id"), col("domain_entity"))),
-    "x_fact_summary" -> ((s, dir) => {
-      import s.implicits._
-      // select BEFORE the typed map: the summary reads only (doc_id,
-      // facts), so let the cache scan prune the other facet columns
-      extracted(s, dir)
-        .select(col("doc_id"), col("facts"))
-        .as[(String, Seq[graft.model.Fact])]
-        .map { case (id, facts) =>
-          val sm = graft.facts.SpoExtractor.summarize(facts)
-          (id, sm.total_facts.toLong, sm.actionable_facts.toLong,
-            sm.fact_types.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(","))
-        }
-        .toDF("doc_id", "total_facts", "actionable_facts", "fact_types")
-        .orderBy(col("doc_id"))
-    }),
-    "x_normalized_text" -> ((s, dir) => {
-      import s.implicits._
-      // N11 global replacement + N12 stats on the pipeline's clean text;
-      // only (doc_id, span texts, entities) are read — prune the rest
-      extracted(s, dir)
-        .select(col("doc_id"), col("spans.text").as("texts"), col("entities"))
-        .as[(String, Seq[String], Seq[graft.model.EntityMention])]
-        .map { case (id, texts, entities) =>
-          val clean = graft.extract.Core8Extractor.truncate(
-            graft.extract.Core8Extractor.cleanFormatting(texts.mkString("\n")))
-          val r = graft.normalize.Normalizer.run(clean, entities)
-          (id, r.mentionCount.toLong, r.canonicalCount.toLong, r.reductionPct,
-            r.normalizedText.length.toLong)
-        }
-        .toDF("doc_id", "mentions", "canonical", "reduction_pct", "norm_len")
-        .orderBy(col("doc_id"))
-    }),
-    "x_fact_summary_core" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .select(col("doc_id"), col("facts"))
-        .as[(String, Seq[graft.model.Fact])]
-        .map { case (id, facts) =>
-          val sm = graft.facts.SpoExtractor.summarize(facts)
-          (id, sm.total_facts.toLong, sm.actionable_facts.toLong,
-            sm.fact_types.toSeq.sorted.map { case (k, v) => s"$k:$v" }.mkString(","))
-        }
-        .toDF("doc_id", "total_facts", "actionable_facts", "fact_types")
-        .orderBy(col("doc_id"))
-    }),
-    "x_normalized_core" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .select(col("doc_id"), col("spans.text").as("texts"), col("entities"))
-        .as[(String, Seq[String], Seq[graft.model.EntityMention])]
-        .map { case (id, texts, entities) =>
-          val clean = graft.extract.Core8Extractor.truncate(
-            graft.extract.Core8Extractor.cleanFormatting(texts.mkString("\n")))
-          val r = graft.normalize.Normalizer.run(clean, entities)
-          (id, r.mentionCount.toLong, r.canonicalCount.toLong, r.reductionPct,
-            r.normalizedText.length.toLong)
-        }
-        .toDF("doc_id", "mentions", "canonical", "reduction_pct", "norm_len")
-        .orderBy(col("doc_id"))
-    }),
-    "x_markdown" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .map(d => (d.doc_id, graft.output.Assembly.assembleMarkdown(d)))
-        .toDF("doc_id", "markdown")
-        .select(col("doc_id"), length(col("markdown")).as("md_len"),
-          md5(col("markdown")).as("md_md5"))
-        .orderBy(col("doc_id"))
-    }),
-    "x_knowledge_json" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .map(d => (d.doc_id, graft.output.Assembly.knowledgeJson(d)))
-        .toDF("doc_id", "knowledge")
-        .select(col("doc_id"), length(col("knowledge")).as("json_len"),
-          md5(col("knowledge")).as("json_md5"))
-        .orderBy(col("doc_id"))
-    }),
-    // byte-exact O1 serialization gate over the reconstructable modes
-    "x_markdown_core" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .map(d => (d.doc_id, graft.output.Assembly.assembleMarkdown(d)))
-        .toDF("doc_id", "markdown")
-        .select(col("doc_id"), length(col("markdown")).as("md_len"),
-          md5(col("markdown")).as("md_md5"))
-        .orderBy(col("doc_id"))
-    }),
-    // byte-exact O2 serialization gate over the reconstructable modes
-    "x_knowledge_core" -> ((s, dir) => {
-      import s.implicits._
-      extracted(s, dir)
-        .filter(nonPdfCol)
-        .map(d => (d.doc_id, graft.output.Assembly.knowledgeJson(d)))
-        .toDF("doc_id", "knowledge")
-        .select(col("doc_id"), length(col("knowledge")).as("json_len"),
-          md5(col("knowledge")).as("json_md5"))
-        .orderBy(col("doc_id"))
-    }),
+    "x_fact_summary" -> ((s, dir) => factSummaryOf(extracted(s, dir))),
+    "x_normalized_text" -> ((s, dir) => normalizedOf(extracted(s, dir))),
+    "x_fact_summary_core" -> ((s, dir) => factSummaryOf(core(s, dir))),
+    "x_normalized_core" -> ((s, dir) => normalizedOf(core(s, dir))),
+    "x_markdown" -> ((s, dir) =>
+      renderedOf(extracted(s, dir), "md")(graft.output.Assembly.assembleMarkdown)),
+    "x_knowledge_json" -> ((s, dir) =>
+      renderedOf(extracted(s, dir), "json")(graft.output.Assembly.knowledgeJson)),
+    // byte-exact O1/O2 serialization gates over the reconstructable modes
+    "x_markdown_core" -> ((s, dir) =>
+      renderedOf(core(s, dir), "md")(graft.output.Assembly.assembleMarkdown)),
+    "x_knowledge_core" -> ((s, dir) =>
+      renderedOf(core(s, dir), "json")(graft.output.Assembly.knowledgeJson)),
 
     // ---- relational coverage (DuckDB-verified)
     "q1_agg" -> ((s, dir) => {

@@ -56,44 +56,6 @@ object MicroBench {
     // warmup
     docs.take(4000).foreach(ExtractionPipeline.processDoc)
 
-    if (sys.env.contains("GRAFT_STAGE_TIMES")) {
-      // single-threaded per-stage attribution over a sample
-      val sample = docs.take(8000)
-      def time[A](f: => A): Double = { val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9 }
-      val spansOf = sample.map { raw =>
-        raw.content_kind match {
-          case "html" => graft.html.HtmlExtractor.extract(raw.html)
-          case "pdf_blocks" =>
-            graft.pdf.PdfExtractor.extract(raw.doc_id, raw.pdf_blocks, raw.page_count)
-              .getOrElse(Seq.empty)
-          case _ => Seq(graft.model.Span("text", raw.text, "", 0))
-        }
-      }
-      val tConvert = time(sample.foreach { raw =>
-        raw.content_kind match {
-          case "html" => graft.html.HtmlExtractor.extract(raw.html)
-          case "pdf_blocks" =>
-            graft.pdf.PdfExtractor.extract(raw.doc_id, raw.pdf_blocks, raw.page_count)
-          case _ => ()
-        }
-      })
-      val mds = spansOf.map(_.map(_.text).mkString("\n"))
-      val tFlags = time(spansOf.foreach(graft.extract.ContentFlagsScan.scan))
-      val tClassify = time(mds.foreach(graft.classify.Classifier.classify))
-      val cleans = mds.map(m => graft.extract.Core8Extractor.truncate(graft.extract.Core8Extractor.cleanFormatting(m)))
-      val tClean = time(mds.foreach(m => graft.extract.Core8Extractor.truncate(graft.extract.Core8Extractor.cleanFormatting(m))))
-      val ents = cleans.map(graft.extract.Core8Extractor.extractAll)
-      val tEntities = time(cleans.foreach(graft.extract.Core8Extractor.extractAll))
-      val tNormalize = time(ents.foreach(graft.normalize.Normalizer.canonicalize))
-      val tPersons = time(cleans.foreach(graft.extract.Core8Extractor.extractPersons))
-      val tOrgs = time(cleans.foreach(graft.extract.Core8Extractor.extractOrgs))
-      val tGpe = time(cleans.foreach(graft.extract.Core8Extractor.extractGpe))
-      val tLoc = time(cleans.foreach(graft.extract.Core8Extractor.extractLoc))
-      println(f"""{"entity_parts":{"persons":$tPersons%.2f,"orgs":$tOrgs%.2f,"gpe":$tGpe%.2f,"loc":$tLoc%.2f}}""")
-      val tFacts = time(cleans.foreach(c => graft.facts.SpoExtractor.extract(c)))
-      println(f"""{"stage_times_8k_docs":{"convert":$tConvert%.2f,"flags":$tFlags%.2f,"classify":$tClassify%.2f,"clean":$tClean%.2f,"entities":$tEntities%.2f,"normalize":$tNormalize%.2f,"facts":$tFacts%.2f}}""")
-    }
-
     threadsList.foreach { t =>
       val pool = Executors.newFixedThreadPool(t)
       val idx = new AtomicInteger(0)

@@ -19,7 +19,9 @@ import java.nio.file.{Files, Paths}
   *
   *   taskset -c 0-7  sbt "runMain graft.bench.ScalingBench measure <sfDir> 8  <repl> <reps> /tmp/n.json"
   *   taskset -c 0-31 sbt "runMain graft.bench.ScalingBench measure <sfDir> 32 <repl> <reps> /tmp/4n.json"
-  *   sbt "runMain graft.bench.ScalingBench report /tmp/n.json /tmp/4n.json BENCH.md"
+  *   sbt "runMain graft.bench.ScalingBench report /tmp/n.json /tmp/4n.json"
+  *
+  * `report` prints one JSON line; BENCH.md is kept by hand.
   *
   * The corpus is DocGen's deterministic interleaved mix (HTML/PDF/text +
   * 1-in-101 giant-doc skew tail) replicated `repl`× with distinct ids —
@@ -115,7 +117,7 @@ object ScalingBench {
   private def field(json: String, k: String): String =
     s""""$k":\\s*("?)([^,}"]*)\\1""".r.findFirstMatchIn(json).get.group(2)
 
-  private def report(jsonNPath: String, json4NPath: String, outMd: String): Unit = {
+  private def report(jsonNPath: String, json4NPath: String): Unit = {
     val jn = Files.readString(Paths.get(jsonNPath))
     val j4 = Files.readString(Paths.get(json4NPath))
     val n = field(jn, "cores").toInt
@@ -133,55 +135,14 @@ object ScalingBench {
         f""""sec_n":$secN%.2f,"sec_4n":$sec4N%.2f,"docs_per_sec_n":$thrN%.1f,"docs_per_sec_4n":$thr4N%.1f,""" +
         f""""pages_per_sec_n":${pages / secN}%.1f,"pages_per_sec_4n":${pages / sec4N}%.1f,"scaling_efficiency":$eff%.3f}"""
     println(json)
-    val md =
-      f"""# BENCH — two-parallelism scaling run (north-rule evidence)
-         |
-         |Same fused extraction job (`graft.pipeline.ExtractionPipeline.run`:
-         |HTML/PDF/text → spans → flags → classify → Core-8 entities →
-         |normalize → SPO facts) over IDENTICAL deterministic input
-         |(`DocGen` corpus: $docs docs / $pages pages, incl. the 1-in-101
-         |giant-doc skew tail), at two parallelism levels — each level in
-         |its own JVM pinned with `taskset -c` to exactly that many
-         |physical cores (the in-sandbox analog of N vs 4N executor
-         |clusters, BASELINE.md). Best of ${field(jn, "reps")} runs per
-         |level after a full-pipeline JIT warmup in each JVM.
-         |
-         || parallelism | wall s | docs/sec | pages/sec |
-         ||---|---|---|---|
-         || local[$n], pinned to $n cores (N) | $secN%.2f | $thrN%.1f | ${pages / secN}%.1f |
-         || local[$n4], pinned to $n4 cores (4N) | $sec4N%.2f | $thr4N%.1f | ${pages / sec4N}%.1f |
-         |
-         |**Scaling efficiency thr(4N) / (4 × thr(N)) = $eff%.3f** (north
-         |rule requires ≥ 0.8). Measured job shape = production shape:
-         |parquet scan of raw docs → repartition on `doc_id` — each doc
-         |an independent hash draw; payloads shuffle exactly once → fused
-         |extraction stage → count/pages fold inside the same stage
-         |(result-sink I/O excluded: both levels would contend on ONE
-         |local disk, which distinct clusters would not). Corpus
-         |materialization is untimed setup. The workload is document-local
-         |(embarrassingly parallel); residual loss is task scheduling +
-         |the one payload shuffle, both flat per doc — at 1000 real
-         |executors the same shape holds.
-         |
-         |Caveat measured on this box: pushing to all 32 cores of the
-         |single socket lands at ≈0.73 efficiency vs 8 cores — a memory-
-         |bandwidth ceiling (GC pauses ≈0.5s/run and hypervisor steal ≈1%%
-         |were ruled out; a pure-thread microbench of the same per-doc
-         |function shows the same ceiling, `graft.bench.MicroBench`). Real
-         |N→4N executor scaling adds 4× memory channels with the cores, so
-         |the 4→16-core pinned result is the representative analog.
-         |
-         |Raw: `$json`
-         |""".stripMargin
-    Files.writeString(Paths.get(outMd), md)
   }
 
   def main(args: Array[String]): Unit = args.toList match {
     case "measure" :: sfDir :: cores :: repl :: reps :: outJson :: Nil =>
       measure(sfDir, cores.toInt, repl.toInt, reps.toInt, outJson)
-    case "report" :: jsonN :: json4N :: outMd :: Nil =>
-      report(jsonN, json4N, outMd)
+    case "report" :: jsonN :: json4N :: Nil =>
+      report(jsonN, json4N)
     case other =>
-      sys.error(s"usage: measure <sfDir> <cores> <repl> <reps> <outJson> | report <jsonN> <json4N> <outMd>; got $other")
+      sys.error(s"usage: measure <sfDir> <cores> <repl> <reps> <outJson> | report <jsonN> <json4N>; got $other")
   }
 }
