@@ -1824,7 +1824,7 @@ object OracleSql {
        |bsz AS (SELECT tbl, bucket, count(*) AS n FROM bk GROUP BY 1, 2),
        |bok AS (SELECT bk.vec_id, bk.tbl, bk.bucket FROM bk
        | JOIN bsz ON bk.tbl = bsz.tbl AND bk.bucket = bsz.bucket
-       |  AND bsz.n <= ${graft.sim.Similarity.MaxSignBucket}),
+       |  AND bsz.n <= ${TextOps.MaxBandBucket}),
        |pairs AS (SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
        | FROM bok x JOIN bok y ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id),
        |j AS (SELECT p.a, p.b,

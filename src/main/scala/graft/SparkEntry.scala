@@ -200,10 +200,6 @@ object SparkEntry {
       .orderBy(col("doc_id"))
   }
 
-  /** The pipeline's clean text, rebuilt from the cached span texts. */
-  private def cleanText(texts: Seq[String]): String =
-    Core8Extractor.truncate(Core8Extractor.cleanFormatting(texts.mkString("\n")))
-
   /** N11 global replacement + N12 stats on the pipeline's clean text. */
   private def normalizedOf(ds: Dataset[_]): DataFrame = {
     val s = ds.sparkSession
@@ -211,7 +207,7 @@ object SparkEntry {
     ds.select(col("doc_id"), col("spans.text").as("texts"), col("entities"))
       .as[(String, Seq[String], Seq[graft.model.EntityMention])]
       .map { case (id, texts, entities) =>
-        val r = graft.normalize.Normalizer.run(cleanText(texts), entities)
+        val r = graft.normalize.Normalizer.run(Core8Extractor.cleanText(texts.mkString("\n")), entities)
         (id, r.mentionCount.toLong, r.canonicalCount.toLong, r.reductionPct,
           r.normalizedText.length.toLong)
       }
@@ -378,7 +374,8 @@ object SparkEntry {
         .select(col("doc_id"), col("spans.text").as("texts"))
         .as[(String, Seq[String])]
         .flatMap { case (id, texts) =>
-          graft.facts.SpoExtractor.extract(cleanText(texts), graft.facts.SpoExtractor.typedPatterns)
+          graft.facts.SpoExtractor.extract(Core8Extractor.cleanText(texts.mkString("\n")),
+            graft.facts.SpoExtractor.typedPatterns)
             .filter(f => graft.facts.SpoExtractor.typedFactTypes.contains(f.fact_type))
             .map(f => (id, f.fact_type, f.subject, f.predicate,
               f.`object`, f.confidence, f.actionable))

@@ -368,7 +368,12 @@ object Core8Extractor {
     }.toSet
   }
 
-  /** Pipeline entry: markdown text → cleanup → truncate → extract. */
-  def run(markdown: String): Seq[EntityMention] =
-    extractAll(truncate(cleanFormatting(markdown)))
+  /** The extraction clean text: cleanup → truncate. Entity offsets
+    * refer to this text, so every consumer that re-reads them rebuilds
+    * it here, never from a copy of the two steps.
+    */
+  def cleanText(markdown: String): String = truncate(cleanFormatting(markdown))
+
+  /** Pipeline entry: markdown text → clean text → extract. */
+  def run(markdown: String): Seq[EntityMention] = extractAll(cleanText(markdown))
 }

@@ -48,8 +48,7 @@ object EntityEdges {
     val spark = extracted.sparkSession
     import spark.implicits._
     pruned(extracted).flatMap { case (docId, texts, canonical) =>
-      val clean = Core8Extractor.truncate(
-        Core8Extractor.cleanFormatting(texts.mkString("\n")))
+      val clean = Core8Extractor.cleanText(texts.mkString("\n"))
       canonical.flatMap { c =>
         c.mentions.map { m =>
           val s = math.min(math.max(0, m.start), clean.length)
@@ -72,8 +71,7 @@ object EntityEdges {
     val spark = extracted.sparkSession
     import spark.implicits._
     pruned(extracted).flatMap { case (docId, texts, canonical) =>
-      val clean = Core8Extractor.truncate(
-        Core8Extractor.cleanFormatting(texts.mkString("\n")))
+      val clean = Core8Extractor.cleanText(texts.mkString("\n"))
       val sents = Core8Extractor.splitSentences(clean)
       // a canonical entity sits in a sentence iff any of its mentions
       // overlaps the sentence span

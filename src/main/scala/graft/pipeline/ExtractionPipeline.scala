@@ -7,7 +7,7 @@ import graft.facts.SpoExtractor
 import graft.html.HtmlExtractor
 import graft.normalize.Normalizer
 import graft.pdf.PdfExtractor
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The fused extraction job (SURVEY.md §3.1 restated Spark-first):
@@ -102,7 +102,7 @@ object ExtractionPipeline {
           // stage 3: classification
           val cls = Classifier.classify(markdown)
           // stage 4: entity extraction (routing skip per confidence <5.0)
-          val cleanText = Core8Extractor.truncate(Core8Extractor.cleanFormatting(markdown))
+          val cleanText = Core8Extractor.cleanText(markdown)
           val entities =
             if (cls.skipEntityExtraction) Seq.empty
             else Core8Extractor.extractAll(cleanText)
@@ -128,7 +128,10 @@ object ExtractionPipeline {
             success = true, error = "")
       }
     } catch {
-      case e: Exception =>
+      // a stack overflow (deeply nested markup in the recursive tree
+      // walks) unwinds to here: the thread is usable again, so the doc
+      // becomes a reject row instead of killing the executor
+      case e @ (_: Exception | _: StackOverflowError) =>
         ExtractedDoc(raw.doc_id, Seq.empty, DocMeta.empty, Seq.empty, Seq.empty,
           Seq.empty, success = false, error = s"${e.getClass.getSimpleName}: ${e.getMessage}")
     }
@@ -154,17 +157,22 @@ object ExtractionPipeline {
   def run(spark: SparkSession, raw: Dataset[RawDoc], partitions: Int = 0,
       config: PipelineConfig = PipelineConfig()): Dataset[ExtractedDoc] = {
     import spark.implicits._
-    // ship the driver's active corpus bundle (built-in or table-loaded)
-    // to every executor: one broadcast, an idempotent install per JVM
-    // per version at partition start (no-op when already current)
-    val installCorpus = graft.matching.CorpusTable.broadcastInstaller(
-      spark, graft.matching.Corpora.bundle)
-    salted(raw, parallelism(spark, partitions))
-      .mapPartitions { it => installCorpus(); it.map(processDoc(_, config)) }
+    fused(spark, raw, partitions)(_.map(processDoc(_, config)))
   }
 
-  private def parallelism(spark: SparkSession, partitions: Int): Int =
-    if (partitions > 0) partitions else spark.sparkContext.defaultParallelism * 2
+  /** The one fused stage of `run` and `runCounting`: the `doc_id`
+    * shuffle, then `f` over each partition. The driver's active corpus
+    * bundle (built-in or table-loaded) ships to every executor as one
+    * broadcast, installed idempotently per JVM per version at partition
+    * start (no-op when already current).
+    */
+  private def fused[T: Encoder](spark: SparkSession, raw: Dataset[RawDoc],
+      partitions: Int)(f: Iterator[RawDoc] => Iterator[T]): Dataset[T] = {
+    val installCorpus = graft.matching.CorpusTable.broadcastInstaller(
+      spark, graft.matching.Corpora.bundle)
+    val p = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism * 2
+    salted(raw, p).mapPartitions { it => installCorpus(); f(it) }
+  }
 
   /** Corpus-level metrics via `observe()` — the Spark counterpart of the
     * reference's pipeline metrics (`base_extractor.py:111-157`): doc /
@@ -189,10 +197,7 @@ object ExtractionPipeline {
     */
   def runCounting(spark: SparkSession, raw: Dataset[RawDoc], partitions: Int = 0): (Long, Long) = {
     import spark.implicits._
-    val installCorpus = graft.matching.CorpusTable.broadcastInstaller(
-      spark, graft.matching.Corpora.bundle)
-    salted(raw, parallelism(spark, partitions)).mapPartitions { it =>
-      installCorpus()
+    fused(spark, raw, partitions) { it =>
       var docs = 0L
       var pages = 0L
       it.foreach { r =>

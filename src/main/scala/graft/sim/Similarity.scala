@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.textops.TextOps
 
 /** Similarity search over the `embeddings` table (vec_id, embedding:
   * array<float>, label).
@@ -25,7 +26,7 @@ object Similarity {
     * fold as the old aggregate/zip_with chain and the DuckDB oracle, but
     * a tight generated loop instead of per-element interpreted lambdas.
     */
-  private def cosine(a: String, b: String) = expr(s"cosine_sim($a, $b)")
+  private def cosine(a: Column, b: Column) = call_function("cosine_sim", a, b)
 
   private val topkCache = new graft.util.SessionCache[DataFrame]
 
@@ -37,27 +38,30 @@ object Similarity {
     */
   def cosineTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5): DataFrame =
     topkCache.getOrElseUpdate(s, s"$dir#$nQueries#$k") {
-      cosineTopKUncached(s, dir, nQueries, k).localCheckpoint()
+      cosineTopKOn(embeddings(s, dir), nQueries, k).localCheckpoint()
     }
-
-  private def cosineTopKUncached(s: SparkSession, dir: String, nQueries: Int, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    cosineTopKOn(embeddings(s, dir), nQueries, k)
-  }
 
   /** Brute-force top-k over an arbitrary (vec_id, embedding) frame —
     * the table-reading wrapper above and the s8 clustered family share
     * this one definition.
     */
   private def cosineTopKOn(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.ensureRegistered(emb.sparkSession)
     val queries = broadcast(
       emb.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
+    rankTopK(emb.join(queries, col("vec_id") =!= col("q_id")), k)
+  }
+
+  /** The one exact re-rank of every top-k path (s1, s2, s4, s8): cosine
+    * of each (q_id, q_emb) × (vec_id, embedding) candidate row, then the
+    * top `k` per query by (cos desc, vec_id) — the oracles' tie-break.
+    */
+  private def rankTopK(cand: DataFrame, k: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    graft.functions.GraftFunctions.ensureRegistered(cand.sparkSession)
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    emb.join(queries, col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(cosine("q_emb", "embedding"), 4))
+    cand
+      .withColumn("cos", round(cosine(col("q_emb"), col("embedding")), 4))
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
@@ -126,8 +130,6 @@ object Similarity {
     * carries (q_id, vec_id) pairs, not vectors.
     */
   def lshTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.ensureRegistered(s)
     val emb = embeddings(s, dir)
     val buckets = lshBuckets(s, dir)
     val qBuckets = broadcast(
@@ -142,15 +144,7 @@ object Similarity {
     val qEmb = broadcast(
       emb.filter(col("vec_id") < nQueries)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    pairs
-      .join(emb, "vec_id")
-      .join(qEmb, "q_id")
-      .withColumn("cos", round(cosine("q_emb", "embedding"), 4))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
-      .orderBy(col("q_id"), col("rank"))
+    rankTopK(pairs.join(emb, "vec_id").join(qEmb, "q_id"), k)
   }
 
   /** Centroid (mean vector) per label — the IVF coarse-quantizer step:
@@ -192,29 +186,27 @@ object Similarity {
       .sortBy(_._1)
 
   /** Embedding-cosine near-duplicate detection: candidate pairs from the
-    * multi-table LSH layout (no O(n²) scan), verified with exact cosine,
-    * kept at ≥ threshold. The dedup twin of lshTopK — at 10^9 vectors
-    * this is the "collapse same-content embeddings" pass of a training
-    * pipeline.
-    */
-  /** Verified pairs persisted per (session, dir, threshold): t9 and the
-    * s5 grouping share one bucket-join + cosine computation.
+    * multi-table LSH layout (no O(n²) scan; the shared TextOps.bandPairs
+    * join and MaxBandBucket cap, one band per hash table), verified with
+    * exact cosine, kept at ≥ threshold. The dedup twin of lshTopK — at
+    * 10^9 vectors this is the "collapse same-content embeddings" pass of
+    * a training pipeline. Verified pairs are memoized per (session, dir,
+    * threshold): t9 and the s5 grouping share one computation.
     */
   private val dedupPairCache = new graft.util.SessionCache[DataFrame]
 
   def embeddingDedup(s: SparkSession, dir: String, threshold: Double = 0.40): DataFrame =
     dedupPairCache.getOrElseUpdate(s, s"$dir#$threshold") {
-      // localCheckpoint: truncate the bucket/cosine lineage so consumer
-      // plans (t9 dump, s5 components) stay leaf-sized
-      embeddingDedupUncached(s, dir, threshold).localCheckpoint()
+      graft.functions.GraftFunctions.ensureRegistered(s)
+      val emb = embeddings(s, dir)
+      // exact-dedup-first: byte-equal embeddings collapse before bucket
+      // pairing, via the fingerprint-keyed keeper selection
+      val bands = lshBuckets(s, dir).join(exactKeepers(emb), Seq("vec_id"), "left_semi")
+        .select(col("vec_id").as("id"), col("tbl").as("band"), col("bucket").as("key"))
+      TextOps.verifiedPairs(TextOps.bandPairs(bands, "t9"),
+        emb.select(col("vec_id").as("id"), col("embedding").as("v")), "cos")(
+        (ea, eb) => round(cosine(ea, eb), 4), _ >= threshold)
     }
-
-  /** Max vectors per sign-LSH bucket for the dedup pair join — the
-    * embedding-side twin of TextOps.MaxBandBucket (a hot bucket of
-    * near-identical vectors pairs quadratically). Mirrored in
-    * OracleSql.embeddingDedup.
-    */
-  val MaxSignBucket = 1000
 
   /** Exact-dedup keepers: one min vec_id per byte-identical vector,
     * grouped on a 128-bit CONTENT FINGERPRINT (two differently-salted
@@ -242,53 +234,16 @@ object Similarity {
       .agg(min(col("vec_id")).as("vec_id"))
       .select("vec_id")
 
-  private def embeddingDedupUncached(s: SparkSession, dir: String, threshold: Double): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val emb = embeddings(s, dir)
-    // exact-dedup-first: byte-equal embeddings collapse before bucket
-    // pairing, via the fingerprint-keyed keeper selection
-    val keepers = exactKeepers(emb)
-    val buckets = lshBuckets(s, dir)
-      .join(keepers, Seq("vec_id"), "left_semi")
-    val bsz = buckets.groupBy("tbl", "bucket").agg(count(lit(1)).as("bsz"))
-    val nDropped = bsz.filter(col("bsz") > MaxSignBucket).count()
-    if (nDropped > 0)
-      System.err.println(
-        s"[graft] t9: dropped $nDropped sign buckets over cap $MaxSignBucket from candidate generation")
-    val bucketsOk = buckets.join(
-      bsz.filter(col("bsz") <= MaxSignBucket).select("tbl", "bucket"),
-      Seq("tbl", "bucket"), "left_semi")
-    val pairs = bucketsOk.as("x")
-      .join(bucketsOk.as("y"),
-        col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
-          col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
-      .distinct()
-    pairs
-      .join(emb.select(col("vec_id").as("a"), col("embedding").as("ea")), "a")
-      .join(emb.select(col("vec_id").as("b"), col("embedding").as("eb")), "b")
-      .withColumn("cos", round(cosine("ea", "eb"), 4))
-      .filter(col("cos") >= threshold)
-      .select(col("a"), col("b"), col("cos"))
-      .orderBy(col("a"), col("b"))
-  }
-
   /** s5: embedding near-dup GROUPS — connected components over the
-    * cosine-verified pairs (same pointer-doubling loop as the text-side
-    * t10), one keeper id per cluster of same-content embeddings.
-    * Memoized per (session, dir, threshold) like dupGroups.
+    * cosine-verified pairs (the text-side t10 grouping), one keeper id
+    * per cluster of same-content embeddings. Memoized per (session,
+    * dir, threshold) like dupGroups.
     */
   private val embGroupCache = new graft.util.SessionCache[DataFrame]
 
   def embeddingGroups(s: SparkSession, dir: String, threshold: Double = 0.40): DataFrame =
     embGroupCache.getOrElseUpdate(s, s"$dir#$threshold") {
-      val pairs = embeddingDedup(s, dir, threshold).select(col("a"), col("b"))
-      val comp = graft.textops.TextOps.connectedComponents(pairs)
-      val sizes = comp.groupBy(col("label")).agg(count(lit(1)).as("group_size"))
-      comp.join(sizes, "label")
-        .select(col("doc_id").as("vec_id"), col("label").as("group_id"), col("group_size"))
-        .orderBy("vec_id")
-        .localCheckpoint()
+      TextOps.groupsOf(embeddingDedup(s, dir, threshold), "vec_id")
     }
 
   /** Mixed-type cosine (float[] column vs literal double[] centroid) as
@@ -329,7 +284,7 @@ object Similarity {
     val (assigned, probes) =
       if (cents.length * dim <= LiteralCentroidBudget) literalCells(s, dir, nQueries, nProbe)
       else joinCells(s, dir, nQueries, nProbe)
-    topKWithin(s, assigned, probes, k)
+    topKWithin(assigned, probes, k)
   }
 
   /** s6: measured IVF quality — recall of the nProbe-cell search against
@@ -361,7 +316,7 @@ object Similarity {
 
   def clusteredEmbeddings(s: SparkSession, dir: String): DataFrame = {
     val comps = (0 until ClusterDim).map { d =>
-      ((graft.textops.TextOps.md5Head8(
+      ((TextOps.md5Head8(
         concat(col("vec_id").cast("string"), lit("_" + d))) % 1000)
         .cast("double") / 1000.0 - 0.5 +
         when(col("label") % ClusterDim === d, lit(ClusterSep)).otherwise(lit(0.0)))
@@ -425,31 +380,19 @@ object Similarity {
     val cents = centroidsOf(labelCentroidsOf(emb))
     val truth = cosineTopKOn(emb, nQueries, k)
     val (assigned, probes) = literalCellsOn(emb, cents, nQueries, nProbe)
-    val cand = topKWithin(s, assigned, probes, k)
+    val cand = topKWithin(assigned, probes, k)
     annRecall(s, truth, cand, "nprobe", nProbe.toLong, "n_ivf")
   }
 
-  /** The one recall/precision measurement shared by s6 and s7: full-outer
-    * join the candidate top-k against the truth top-k, count hits, round
-    * via rint to mirror the oracle's round_even. Any change to the
-    * formula lands in both metrics (and their oracles) at once.
+  /** s6, s7 and s8's row: TextOps.recallOf of the candidate top-k
+    * against the truth top-k on (q_id, vec_id), led by the swept knob.
     */
   private def annRecall(s: SparkSession, truthTopK: DataFrame, candTopK: DataFrame,
       labelCol: String, labelValue: Long, candCountCol: String): DataFrame = {
-    val truth = truthTopK.select("q_id", "vec_id")
-    val cand = candTopK.select("q_id", "vec_id")
-    val agg = truth.withColumn("in_t", lit(1))
-      .join(cand.withColumn("in_c", lit(1)), Seq("q_id", "vec_id"), "full_outer")
-      .agg(
-        coalesce(sum(col("in_t")), lit(0L)).as("nt"),
-        coalesce(sum(col("in_c")), lit(0L)).as("nc"),
-        coalesce(sum(when(col("in_t").isNotNull && col("in_c").isNotNull, 1L)), lit(0L)).as("nh"))
-      .head()
-    val (nTruth, nCand, nHits) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
+    val (nTruth, nCand, nHits, recall, precision) =
+      TextOps.recallOf(truthTopK, candTopK, Seq("q_id", "vec_id"))
     import s.implicits._
-    Seq((labelValue, nTruth, nCand, nHits,
-      if (nTruth == 0) 1.0 else math.rint(nHits.toDouble / nTruth * 10000) / 10000,
-      if (nCand == 0) 1.0 else math.rint(nHits.toDouble / nCand * 10000) / 10000))
+    Seq((labelValue, nTruth, nCand, nHits, recall, precision))
       .toDF(labelCol, "n_truth", candCountCol, "n_hits", "recall", "precision")
   }
 
@@ -531,22 +474,13 @@ object Similarity {
     (assigned, probes)
   }
 
-  private def topKWithin(s: SparkSession, assigned: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.ensureRegistered(s)
-    val wK = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    assigned
-      .join(probes, col("cell") === col("probe_cell") && col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(cosine("q_emb", "embedding"), 4))
-      .withColumn("rank", row_number().over(wK).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
-      .orderBy(col("q_id"), col("rank"))
-  }
+  private def topKWithin(assigned: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    rankTopK(assigned.join(probes,
+      col("cell") === col("probe_cell") && col("vec_id") =!= col("q_id")), k)
 
   /** Test hook: the join-path variant regardless of budget. */
   private[sim] def ivfTopKJoinPath(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5): DataFrame = {
     val (assigned, probes) = joinCells(s, dir, nQueries)
-    topKWithin(s, assigned, probes, k)
+    topKWithin(assigned, probes, k)
   }
 }

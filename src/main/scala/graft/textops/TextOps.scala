@@ -439,24 +439,62 @@ object TextOps {
     docs(s, dir).select(col("doc_id"), fingerprintCol.as("fp"))
       .groupBy("fp").agg(min("doc_id").as("doc_id")).select("doc_id")
 
-  /** Max docs per LSH band bucket. A degenerate hot bucket (boilerplate
-    * or near-empty docs whose signatures collide) pairs quadratically
-    * inside the bucket, re-creating the blowup LSH exists to avoid —
-    * production pipelines drop such buckets (their contents are exactly
-    * the junk dedup is trying to kill) and log the count (no silent
-    * caps). Mirrored in OracleSql.minhashLsh; bounded pair cost:
-    * Σ min(bucket, cap)² per (band, hash).
+  /** Max docs per band bucket, for all three near-dup families (t7
+    * MinHash, t14 SimHash, t9 embedding sign-LSH). A degenerate hot
+    * bucket (boilerplate or near-empty docs whose signatures collide)
+    * pairs quadratically inside the bucket, re-creating the blowup LSH
+    * exists to avoid — production pipelines drop such buckets (their
+    * contents are exactly the junk dedup is trying to kill) and log the
+    * count (no silent caps). Mirrored in the t7, t14 and t9 oracles;
+    * bounded pair cost: Σ min(bucket, cap)² per (band, key).
     */
   val MaxBandBucket = 1000
+
+  /** The one capped band join of the near-dup families: `bands` is
+    * (id, band, key). Count each (band, key) bucket, drop over-cap
+    * buckets from pairing and LOG the drop — never truncate silently —
+    * then self-join on (band, key, a < b). Returns the distinct
+    * candidate pairs (a, b): O(collisions), never O(n²).
+    */
+  private[graft] def bandPairs(bands: DataFrame, family: String): DataFrame = {
+    val bsz = bands.groupBy("band", "key").agg(count(lit(1)).as("bsz"))
+    val nDropped = bsz.filter(col("bsz") > MaxBandBucket).count()
+    if (nDropped > 0)
+      System.err.println(
+        s"[graft] $family: dropped $nDropped band buckets over cap $MaxBandBucket from candidate generation")
+    val ok = bands.join(
+      bsz.filter(col("bsz") <= MaxBandBucket).select("band", "key"),
+      Seq("band", "key"), "left_semi")
+    ok.as("x").join(ok.as("y"),
+        col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+        col("x.id") < col("y.id"))
+      .select(col("x.id").as("a"), col("y.id").as("b"))
+      .distinct()
+  }
+
+  /** The one verify tail: attach each side's value from `values` (id, v)
+    * to the candidate pairs, score exactly |cand| pairs, keep, and
+    * materialize `(a, b, name)` sorted — eager localCheckpoint, so the
+    * pairs exist NOW and consumer plans stay leaf-sized.
+    */
+  private[graft] def verifiedPairs(cand: DataFrame, values: DataFrame, name: String)(
+      score: (Column, Column) => Column, keep: Column => Column): DataFrame =
+    cand
+      .join(values.select(col("id").as("a"), col("v").as("va")), Seq("a"))
+      .join(values.select(col("id").as("b"), col("v").as("vb")), Seq("b"))
+      .withColumn(name, score(col("va"), col("vb")))
+      .filter(keep(col(name)))
+      .select("a", "b", name)
+      .orderBy("a", "b")
+      .localCheckpoint()
 
   /** MinHash+LSH near-dup: band the signature (4 bands × 4 rows), bucket
     * by band hash, equi-join buckets for candidates, verify candidates
     * with true Jaccard, keep ≥ threshold. The scale path: candidate
     * generation is O(collisions), not O(n²). Exact dups are collapsed
     * first and over-cap buckets dropped (see exactKeepers/MaxBandBucket).
-    */
-  /** Verified LSH pairs persisted per (session, dir, threshold): t7,
-    * t10 and t11 all consume them — one signature+verify computation.
+    * Verified pairs are memoized per (session, dir, threshold): t7, t10
+    * and t11 all consume them.
     */
   private val lshPairCache = new graft.util.SessionCache[DataFrame]
 
@@ -477,26 +515,11 @@ object TextOps {
     val r = NumHashes / NumBands
     val bands = (0 until NumBands).map { b =>
       val cols = (b * r until (b + 1) * r).map(i => col(s"m$i"))
-      sig.select(col("doc_id"), lit(b).as("band"),
-        md5(concat_ws(",", cols: _*)).as("bh"))
+      sig.select(col("doc_id").as("id"), lit(b).as("band"),
+        md5(concat_ws(",", cols: _*)).as("key"))
     }.reduce(_.unionByName(_))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // bucket-size gate: count each (band, hash) bucket, drop over-cap
-    // buckets from pairing, and LOG the drop — never truncate silently
-    val bsz = bands.groupBy("band", "bh").agg(count(lit(1)).as("bsz"))
-    val nDropped = bsz.filter(col("bsz") > MaxBandBucket).count()
-    if (nDropped > 0)
-      System.err.println(
-        s"[graft] t7: dropped $nDropped band buckets over cap $MaxBandBucket from candidate generation")
-    val bandsOk = bands.join(
-      bsz.filter(col("bsz") <= MaxBandBucket).select("band", "bh"),
-      Seq("band", "bh"), "left_semi")
-    val cand = bandsOk.as("x").join(bandsOk.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-      .cache()
+    val cand = bandPairs(bands, "t7").cache()
     // verify candidates with exact Jaccard computed per candidate PAIR:
     // collect each candidate doc's shingle set (bounded by its own
     // shingle count) and intersect the two arrays per pair. This touches
@@ -507,17 +530,11 @@ object TextOps {
     val candDocs = cand.select(col("a").as("doc_id"))
       .unionByName(cand.select(col("b").as("doc_id"))).distinct()
     val sets = shk.join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-      .groupBy("doc_id").agg(collect_set(col("sh")).as("shs"))
-    val out = cand
-      .join(sets.select(col("doc_id").as("a"), col("shs").as("sa")), Seq("a"))
-      .join(sets.select(col("doc_id").as("b"), col("shs").as("sb")), Seq("b"))
-      .withColumn("i", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("jaccard", round(col("i").cast("double") /
-        (size(col("sa")) + size(col("sb")) - col("i")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select("a", "b", "jaccard")
-      .orderBy("a", "b")
-      .localCheckpoint() // eager: pairs materialize NOW, lineage truncated
+      .groupBy(col("doc_id").as("id")).agg(collect_set(col("sh")).as("v"))
+    val out = verifiedPairs(cand, sets, "jaccard")((sa, sb) => {
+      val i = size(array_intersect(sa, sb)).cast("long")
+      round(i.cast("double") / (size(sa) + size(sb) - i), 4)
+    }, _ >= threshold)
     // the band/candidate caches have zero readers once the pairs are
     // checkpointed — release them instead of pinning storage memory for
     // the session lifetime (one leak per (dir, threshold) memo key)
@@ -615,8 +632,6 @@ object TextOps {
       changed = !next.where(col("chg")).isEmpty
       labels = next.select("doc_id", "label")
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round $rounds changed=$changed ${System.nanoTime() / 1000000}ms")
     }
     // a correctness-gated operator must fail loudly, never return
     // silently split groups (unreachable below 2^25-diameter components)
@@ -624,22 +639,28 @@ object TextOps {
     labels
   }
 
-  /** t10: duplicate groups from the MinHash-LSH verified pairs: every
-    * doc in some near-dup pair, its component id (min doc id in the
-    * component) and the component size. Memoized per (session, dir,
-    * threshold) — t11's curation reuses the same components.
+  /** The one grouping step of the near-dup families: every id in some
+    * verified pair (a, b), its component id (min id in the component)
+    * and the component size, sorted by `idName` and checkpointed.
+    */
+  private[graft] def groupsOf(pairs: DataFrame, idName: String): DataFrame = {
+    val comp = connectedComponents(pairs.select("a", "b"))
+    val sizes = comp.groupBy(col("label")).agg(count(lit(1)).as("group_size"))
+    comp.join(sizes, "label")
+      .select(col("doc_id").as(idName), col("label").as("group_id"), col("group_size"))
+      .orderBy(idName)
+      .localCheckpoint()
+  }
+
+  /** t10: duplicate groups from the MinHash-LSH verified pairs.
+    * Memoized per (session, dir, threshold) — t11's curation reuses the
+    * same components.
     */
   private val dupGroupCache = new graft.util.SessionCache[DataFrame]
 
   def dupGroups(s: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
     dupGroupCache.getOrElseUpdate(s, s"$dir#$threshold") {
-      val pairs = minhashLsh(s, dir, threshold).select("a", "b")
-      val comp = connectedComponents(pairs)
-      val sizes = comp.groupBy(col("label")).agg(count(lit(1)).as("group_size"))
-      comp.join(sizes, "label")
-        .select(col("doc_id"), col("label").as("group_id"), col("group_size"))
-        .orderBy("doc_id")
-        .localCheckpoint()
+      groupsOf(minhashLsh(s, dir, threshold), "doc_id")
     }
 
   // --------------------------------------------------------- lsh recall
@@ -672,23 +693,29 @@ object TextOps {
       .join(keepers.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
       .join(keepers.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
       .select("a", "b")
-    val lsh = minhashLsh(s, dir, threshold).select("a", "b")
-    // one outer join + one aggregation = ONE action for all three
-    // counts (r2 ran three separate count() jobs, each re-planning the
-    // keeper joins)
-    val agg = truth.withColumn("in_t", lit(1))
-      .join(lsh.withColumn("in_l", lit(1)), Seq("a", "b"), "full_outer")
+    import s.implicits._
+    Seq(recallOf(truth, minhashLsh(s, dir, threshold), Seq("a", "b")))
+      .toDF("n_truth", "n_candidates", "n_hits", "recall", "precision")
+  }
+
+  /** The one recall/precision measurement (t12 here; s6, s7 and s8 in
+    * Similarity): full-outer join the candidate rows against the truth
+    * rows on `keys` and count all three numbers in ONE action, then round
+    * via rint to mirror the oracles' round_even. Returns (n_truth,
+    * n_candidates, n_hits, recall, precision); an empty side scores 1.0.
+    */
+  private[graft] def recallOf(truth: DataFrame, cand: DataFrame,
+      keys: Seq[String]): (Long, Long, Long, Double, Double) = {
+    val agg = truth.select(keys.map(col): _*).withColumn("in_t", lit(1))
+      .join(cand.select(keys.map(col): _*).withColumn("in_c", lit(1)), keys, "full_outer")
       .agg(
         coalesce(sum(col("in_t")), lit(0L)).as("nt"),
-        coalesce(sum(col("in_l")), lit(0L)).as("nl"),
-        coalesce(sum(when(col("in_t").isNotNull && col("in_l").isNotNull, 1L)), lit(0L)).as("nh"))
+        coalesce(sum(col("in_c")), lit(0L)).as("nc"),
+        coalesce(sum(when(col("in_t").isNotNull && col("in_c").isNotNull, 1L)), lit(0L)).as("nh"))
       .head()
-    val (nTruth, nLsh, nHits) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
-    import s.implicits._
-    Seq((nTruth, nLsh, nHits,
-      if (nTruth == 0) 1.0 else math.rint(nHits.toDouble / nTruth * 10000) / 10000,
-      if (nLsh == 0) 1.0 else math.rint(nHits.toDouble / nLsh * 10000) / 10000))
-      .toDF("n_truth", "n_candidates", "n_hits", "recall", "precision")
+    val (nTruth, nCand, nHits) = (agg.getLong(0), agg.getLong(1), agg.getLong(2))
+    def ratio(n: Long): Double = if (n == 0) 1.0 else math.rint(nHits.toDouble / n * 10000) / 10000
+    (nTruth, nCand, nHits, ratio(nTruth), ratio(nCand))
   }
 
   // ------------------------------------------------------ corpus select
@@ -793,32 +820,14 @@ object TextOps {
     val sh = simhashFrame(s, dir)
     val shk = sh.join(exactKeepers(s, dir), Seq("doc_id"), "left_semi")
     val bands = (0 until SimhashBands).map { b =>
-      shk.select(col("doc_id"), lit(b).as("band"),
+      shk.select(col("doc_id").as("id"), lit(b).as("band"),
         shiftright(col("simhash"), b * SimhashBandBits)
-          .bitwiseAND(lit((1L << SimhashBandBits) - 1)).as("bv"))
+          .bitwiseAND(lit((1L << SimhashBandBits) - 1)).as("key"))
     }.reduce(_.unionByName(_))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bsz = bands.groupBy("band", "bv").agg(count(lit(1)).as("bsz"))
-    val nDropped = bsz.filter(col("bsz") > MaxBandBucket).count()
-    if (nDropped > 0)
-      System.err.println(
-        s"[graft] t14: dropped $nDropped simhash band buckets over cap $MaxBandBucket from candidate generation")
-    val bandsOk = bands.join(
-      bsz.filter(col("bsz") <= MaxBandBucket).select("band", "bv"),
-      Seq("band", "bv"), "left_semi")
-    val cand = bandsOk.as("x").join(bandsOk.as("y"),
-        col("x.band") === col("y.band") && col("x.bv") === col("y.bv") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    val out = cand
-      .join(sh.select(col("doc_id").as("a"), col("simhash").as("sa")), Seq("a"))
-      .join(sh.select(col("doc_id").as("b"), col("simhash").as("sb")), Seq("b"))
-      .withColumn("hamming", expr("bit_count(sa ^ sb)").cast("long"))
-      .filter(col("hamming") <= maxHamming)
-      .select("a", "b", "hamming")
-      .orderBy("a", "b")
-      .localCheckpoint() // eager: pairs materialize NOW, lineage truncated
+    val out = verifiedPairs(bandPairs(bands, "t14"),
+      sh.select(col("doc_id").as("id"), col("simhash").as("v")), "hamming")(
+      (sa, sb) => bit_count(sa.bitwiseXOR(sb)).cast("long"), _ <= maxHamming)
     bands.unpersist(false)
     out
   }
@@ -830,13 +839,7 @@ object TextOps {
 
   def simhashGroups(s: SparkSession, dir: String, maxHamming: Int = HammingMax): DataFrame =
     simhashGroupCache.getOrElseUpdate(s, s"$dir#$maxHamming") {
-      val pairs = simhashDedup(s, dir, maxHamming).select("a", "b")
-      val comp = connectedComponents(pairs)
-      val sizes = comp.groupBy(col("label")).agg(count(lit(1)).as("group_size"))
-      comp.join(sizes, "label")
-        .select(col("doc_id"), col("label").as("group_id"), col("group_size"))
-        .orderBy("doc_id")
-        .localCheckpoint()
+      groupsOf(simhashDedup(s, dir, maxHamming), "doc_id")
     }
 
   // ------------------------------------------ t21: n-gram repetition
@@ -855,43 +858,49 @@ object TextOps {
     * deterministic tie-break (count desc, gram asc), coverage fractions,
     * and the Gopher-threshold flag. Document-local map over the same
     * `[a-z]+` tokenization the shingle family uses — zero shuffle
-    * beyond the facet sort, so the 100 TB cost is one scan.
+    * beyond the facet sort, so the 100 TB cost is one scan. Memoized +
+    * checkpointed per (session, dir) like the other funnel stage frames:
+    * t18 and t21 tokenize once.
     */
-  def repetition(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val tokenRx = java.util.regex.Pattern.compile("[a-z]+")
-    docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
-      .map { case (id, text) =>
-        val toks = {
-          val b = scala.collection.mutable.ArrayBuffer.empty[String]
-          val m = tokenRx.matcher(text.toLowerCase)
-          while (m.find()) b += m.group()
-          b.toArray
-        }
-        def top(n: Int): (String, Long) =
-          if (toks.length < n) ("", 0L)
-          else {
-            val counts = scala.collection.mutable.HashMap.empty[String, Long]
-            var i = 0
-            while (i + n <= toks.length) {
-              val g = toks.slice(i, i + n).mkString(" ")
-              counts.update(g, counts.getOrElse(g, 0L) + 1L)
-              i += 1
-            }
-            counts.minBy { case (g, c) => (-c, g) }
+  private val repetitionCache = new graft.util.SessionCache[DataFrame]
+
+  def repetition(s: SparkSession, dir: String): DataFrame =
+    repetitionCache.getOrElseUpdate(s, dir) {
+      import s.implicits._
+      val tokenRx = java.util.regex.Pattern.compile("[a-z]+")
+      docs(s, dir).select(col("doc_id"), col("text")).as[(Long, String)]
+        .map { case (id, text) =>
+          val toks = {
+            val b = scala.collection.mutable.ArrayBuffer.empty[String]
+            val m = tokenRx.matcher(text.toLowerCase)
+            while (m.find()) b += m.group()
+            b.toArray
           }
-        val nTok = toks.length.toLong
-        def frac(count: Long, n: Int): Double =
-          if (nTok == 0) 0.0
-          else math.rint(count * n.toDouble / nTok * 10000) / 10000
-        val (g2, c2) = top(2)
-        val (g3, c3) = top(3)
-        val f2 = frac(c2, 2)
-        val f3 = frac(c3, 3)
-        (id, nTok, g2, f2, g3, f3, f2 > TopBigramFracMax || f3 > TopTrigramFracMax)
-      }
-      .toDF("doc_id", "n_tokens", "top_bigram", "bigram_frac",
-        "top_trigram", "trigram_frac", "repetitive")
-      .orderBy("doc_id")
-  }
+          def top(n: Int): (String, Long) =
+            if (toks.length < n) ("", 0L)
+            else {
+              val counts = scala.collection.mutable.HashMap.empty[String, Long]
+              var i = 0
+              while (i + n <= toks.length) {
+                val g = toks.slice(i, i + n).mkString(" ")
+                counts.update(g, counts.getOrElse(g, 0L) + 1L)
+                i += 1
+              }
+              counts.minBy { case (g, c) => (-c, g) }
+            }
+          val nTok = toks.length.toLong
+          def frac(count: Long, n: Int): Double =
+            if (nTok == 0) 0.0
+            else math.rint(count * n.toDouble / nTok * 10000) / 10000
+          val (g2, c2) = top(2)
+          val (g3, c3) = top(3)
+          val f2 = frac(c2, 2)
+          val f3 = frac(c3, 3)
+          (id, nTok, g2, f2, g3, f3, f2 > TopBigramFracMax || f3 > TopTrigramFracMax)
+        }
+        .toDF("doc_id", "n_tokens", "top_bigram", "bigram_frac",
+          "top_trigram", "trigram_frac", "repetitive")
+        .orderBy("doc_id")
+        .localCheckpoint()
+    }
 }

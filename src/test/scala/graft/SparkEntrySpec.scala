@@ -1,11 +1,15 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, LeftSemi}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the initial (pre-execution) AQE plan at sf0.001: every x_* facet is a
   * projection pushed into the one cached extraction run, so its
   * in-memory scan must read only the facet's columns; t16 never builds a
-  * pair join; t17 broadcasts its budgets table.
+  * pair join; t17 broadcasts its budgets table; s4 shuffles only for
+  * its top-k window and final sort.
   */
 class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -97,5 +102,26 @@ class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
   test("t17 broadcasts the budgets table") {
     assert(joins("t17_token_budget").exists(j =>
       j.isInstanceOf[BroadcastHashJoinExec] && j.joinType == Inner))
+  }
+
+  test("s4 IVF top-k: the window's q_id exchange and the final sort's, nothing else") {
+    val p = plan("s4_ivf_topk")
+    val exchanges = p.collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 2, p.treeString)
+    // the first exchange below the window, past its sort and group limit
+    def firstExchange(n: SparkPlan): SparkPlan = n match {
+      case _: SortExec | _: WindowGroupLimitExec => firstExchange(n.children.head)
+      case other => other
+    }
+    val window = p.collectFirst { case w: WindowExec => w }.get
+    firstExchange(window.child) match {
+      case e: ShuffleExchangeExec => e.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.collect { case a: Attribute => a.name } == Seq("q_id"), p.treeString)
+        case other => fail(s"window exchange is $other")
+      }
+      case _ => fail(s"no exchange directly under the window:\n${p.treeString}")
+    }
+    assert(exchanges.count(_.outputPartitioning.isInstanceOf[RangePartitioning]) == 1, p.treeString)
   }
 }

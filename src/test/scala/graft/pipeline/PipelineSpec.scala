@@ -171,4 +171,21 @@ class PipelineSpec extends AnyFunSuite {
     assert(m("spans").asInstanceOf[Long] > 0L)
     assert(m("entities").asInstanceOf[Long] > 0L)
   }
+
+  test("a deeply nested page is a reject row naming StackOverflowError, not a dead executor") {
+    val depth = 20000
+    val html = "<html><body>" + "<div>" * depth + "deep" + "</div>" * depth + "</body></html>"
+    val raw = graft.model.RawDoc("deep", "html", html, Seq.empty, "", html.length.toLong, 1)
+    // a 1 MB stack, the executor default, on which the recursive tree
+    // walks overflow at this depth
+    var out: Either[Throwable, graft.model.ExtractedDoc] = null
+    val t = new Thread(null, () => out =
+      try Right(ExtractionPipeline.processDoc(raw)) catch { case e: Throwable => Left(e) },
+      "deep-html", 1L << 20)
+    t.start()
+    t.join()
+    val doc = out.fold(e => fail(s"processDoc threw $e"), identity)
+    assert(!doc.success)
+    assert(doc.error.contains("StackOverflowError"), doc.error)
+  }
 }

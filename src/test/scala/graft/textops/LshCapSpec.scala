@@ -37,14 +37,15 @@ class LshCapSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val words = (0 until 300).map(i => s"w$i").mkString(" ")
 
+  private val unrelated = Seq(
+    "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+    "one two three four five six seven eight nine ten eleven",
+    "red orange yellow green blue indigo violet cyan magenta white")
+
   test("500 identical docs collapse to one keeper: zero near-dup pairs") {
     val dir = tmp("lsh-identical")
     // 500 byte-identical docs + 3 distinct unrelated docs
-    val distinct = Seq(
-      "alpha beta gamma delta epsilon zeta eta theta iota kappa",
-      "one two three four five six seven eight nine ten eleven",
-      "red orange yellow green blue indigo violet cyan magenta white")
-    writeDocs(dir, Seq.fill(500)(words) ++ distinct)
+    writeDocs(dir, Seq.fill(500)(words) ++ unrelated)
     val pairs = TextOps.minhashLsh(spark, dir, 0.5)
     assert(pairs.count() === 0L,
       "identical docs must be collapsed by exact-dedup before candidate generation")
@@ -60,6 +61,27 @@ class LshCapSpec extends AnyFunSuite with BeforeAndAfterAll {
     writeDocs(dir, (0 until 1100).map(i => s"$words unique$i"))
     val pairs = TextOps.minhashLsh(spark, dir, 0.5)
     assert(pairs.count() === 0L,
+      s"hot bucket over cap ${TextOps.MaxBandBucket} must be dropped from pairing")
+  }
+
+  test("500 identical docs: zero simhash near-dup pairs") {
+    val dir = tmp("simhash-identical")
+    writeDocs(dir, Seq.fill(500)(words) ++ unrelated)
+    assert(TextOps.simhashDedup(spark, dir).count() === 0L,
+      "identical docs must be collapsed by exact-dedup before band pairing")
+  }
+
+  test("over-cap simhash band bucket is dropped, not paired quadratically") {
+    val dir = tmp("simhash-hotbucket")
+    // 1100 distinct docs with ONE simhash: 101 shared letter-only words
+    // written twice give every bit vote an odd multiple of 2, so each
+    // doc's one unique word (weight 1) cannot flip a bit. Every band is
+    // then one bucket of 1100 > MaxBandBucket docs.
+    def letters(i: Int): String = i.toString.map(c => ('a' + (c - '0')).toChar)
+    val shared = (0 until 101).map(i => s"q${letters(i)}").flatMap(w => Seq(w, w)).mkString(" ")
+    writeDocs(dir, (0 until 1100).map(i => s"$shared z${letters(i)}"))
+    assert(TextOps.simhash(spark, dir).select("simhash").distinct().count() === 1L)
+    assert(TextOps.simhashDedup(spark, dir).count() === 0L,
       s"hot bucket over cap ${TextOps.MaxBandBucket} must be dropped from pairing")
   }
 
@@ -90,6 +112,6 @@ class LshCapSpec extends AnyFunSuite with BeforeAndAfterAll {
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
     val pairs = graft.sim.Similarity.embeddingDedup(spark, dir, 0.40)
     assert(pairs.count() === 0L,
-      s"hot sign bucket over cap ${graft.sim.Similarity.MaxSignBucket} must be dropped")
+      s"hot sign bucket over cap ${TextOps.MaxBandBucket} must be dropped")
   }
 }
