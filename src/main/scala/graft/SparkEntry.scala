@@ -112,7 +112,7 @@ object SparkEntry {
 
   private val streamReplayCache = new graft.util.SessionCache[DataFrame]
 
-  /** One MemoryStream replay of the raw corpus per (session, dir),
+  /** One `Replay.run` replay of the raw corpus per (session, dir),
     * sinking FULL extracted docs (localCheckpoint'ed by docReplay) —
     * both stream parity facets project from this single replay.
     */
@@ -244,13 +244,11 @@ object SparkEntry {
     * to a JSON consumer comparing rounds.
     */
   def timed(name: String)(f: => Unit): (String, Double, Boolean) = {
-    val t0 = System.nanoTime()
-    val ok =
-      try { f; true } catch { case e: Throwable =>
-        System.err.println(s"[graft] $name FAILED after ${(System.nanoTime() - t0) / 1e9}s: ${e.getMessage}")
-        false
-      }
-    (name, (System.nanoTime() - t0) / 1e9, !ok)
+    val (err, sec) = graft.util.Harness.secs {
+      try { f; None } catch { case e: Throwable => Some(e) }
+    }
+    err.foreach(e => System.err.println(s"[graft] $name FAILED after ${sec}s: ${e.getMessage}"))
+    (name, sec, err.isDefined)
   }
 
   /** Timed materialization of every cross-query shared cache, in
@@ -287,7 +285,7 @@ object SparkEntry {
     "x_pdf_spans" -> ((s, dir) => spansOf(extracted(s, dir).filter(kindCol("pdf_blocks")))),
     "x_text_spans" -> ((s, dir) => spansOf(extracted(s, dir).filter(kindCol("text")))),
     // streaming parity gates: the flagship extraction replayed through a
-    // MemoryStream child session (the q18 pattern) must emit exactly the
+    // `Replay.run` child session (the q18 pattern) must emit exactly the
     // batch rows — each oracle is the same DuckDB reconstruction that
     // gates the batch facet, so stream == batch is proven through an
     // independent re-derivation rather than self-comparison. Spans gate
@@ -504,7 +502,7 @@ object SparkEntry {
         .orderBy(col("window_start"), col("event_type"))),
     "q15_percentiles" -> ((s, dir) => graft.relational.Relational.percentiles(s, dir)),
     // stream/batch parity for SESSIONS (q13's streaming twin): the
-    // flatMapGroupsWithState transform replayed over a MemoryStream,
+    // flatMapGroupsWithState transform replayed through `Replay.run`,
     // gated against the same gaps-and-islands oracle
     "q18_stream_sessions" -> ((s, dir) =>
       graft.streaming.EventStream.sessionizeReplay(

@@ -26,16 +26,13 @@ object Main {
     val outDir = args(1)
     val buckets = args.lift(2).map(_.toInt).getOrElse(64)
 
-    // master/conf come from spark-submit; fall back to local[*] when run
-    // outside spark-submit (dev / sbt runMain)
-    val builder = SparkSession.builder()
-      .appName("graft-extract")
-      .config("spark.sql.session.timeZone", "UTC")
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master("local[*]")
-                   .config("spark.sql.shuffle.partitions",
-                     Runtime.getRuntime.availableProcessors.toString))
-      .getOrCreate()
+    // master/conf come from spark-submit; fall back to a local session
+    // on every core when run outside spark-submit (dev / sbt runMain)
+    val spark =
+      if (sys.props.contains("spark.master"))
+        SparkSession.builder().appName("graft-extract")
+          .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+      else graft.util.Harness.session(Runtime.getRuntime.availableProcessors)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -2,7 +2,7 @@ package graft.bench
 
 import graft.pipeline.ResumableJob
 import graft.sources.DocGen
-import org.apache.spark.sql.SparkSession
+import graft.util.Harness
 import org.apache.spark.sql.functions._
 
 /** Resume-at-scale evidence (r4 verdict #8): a wave-driven resumable
@@ -29,22 +29,19 @@ object ResumeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val buckets = 32
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCpus)
     import spark.implicits._
     val raw = DocGen.rawDocs(spark, sfDir)
     val snap = "probe-snap"
+    def tmp(name: String) = java.nio.file.Files.createTempDirectory(name).toString
 
-    def secs[T](body: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = body; (r, (System.nanoTime() - t0) / 1e9)
-    }
+    // untimed warm-up: JIT, codegen and the corpus install must not be
+    // charged to the full run and credited to the resume
+    ResumableJob.runResumable(spark, raw, tmp("graft-resume-warm"), buckets, snap)
 
     // reference: one uninterrupted run
-    val outFull = java.nio.file.Files.createTempDirectory("graft-resume-full").toString
-    val (nFull, tFull) = secs(ResumableJob.runResumable(spark, raw, outFull, buckets, snap))
+    val outFull = tmp("graft-resume-full")
+    val (nFull, tFull) = Harness.secs(ResumableJob.runResumable(spark, raw, outFull, buckets, snap))
     require(nFull == buckets, s"full run computed $nFull of $buckets buckets")
     def lineageTriples(out: String) = ResumableJob.readLineage(spark, out)
       .select("bucket", "doc_count", "span_count", "fail_count")
@@ -55,7 +52,7 @@ object ResumeProbe {
 
     // wave-driven run, killed between waves: wave A (even buckets)
     // commits data+lineage; wave B never starts
-    val outKilled = java.nio.file.Files.createTempDirectory("graft-resume-killed").toString
+    val outKilled = tmp("graft-resume-killed")
     val waveA = raw
       .filter(ResumableJob.bucketOf(buckets) % 2 === 0)
       .as[graft.model.RawDoc]
@@ -64,7 +61,7 @@ object ResumeProbe {
     // -- kill here --
 
     // resume with the FULL input: exactly the uncommitted buckets run
-    val (nResume, tResume) = secs(ResumableJob.runResumable(spark, raw, outKilled, buckets, snap))
+    val (nResume, tResume) = Harness.secs(ResumableJob.runResumable(spark, raw, outKilled, buckets, snap))
     require(nResume == buckets / 2,
       s"resume recomputed $nResume buckets, expected exactly ${buckets / 2}")
 
@@ -75,7 +72,7 @@ object ResumeProbe {
       "resumed data row count differs from the uninterrupted run")
 
     // idempotence: nothing pending
-    val (nAgain, _) = secs(ResumableJob.runResumable(spark, raw, outKilled, buckets, snap))
+    val nAgain = ResumableJob.runResumable(spark, raw, outKilled, buckets, snap)
     require(nAgain == 0, s"third run recomputed $nAgain buckets, expected 0")
 
     println(s"""{"probe":"resume","sf":"$sfDir","buckets":$buckets,""" +

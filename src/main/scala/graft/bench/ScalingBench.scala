@@ -3,6 +3,7 @@ package graft.bench
 import graft.model.RawDoc
 import graft.pipeline.ExtractionPipeline
 import graft.sources.DocGen
+import graft.util.Harness
 import org.apache.spark.sql.{Dataset, SparkSession}
 import java.nio.file.{Files, Paths}
 
@@ -58,24 +59,6 @@ object ScalingBench {
       .map { case (id, text) => DocGen.synthesize(id, text) }
   }
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the bench corpus is small (≈18MB / 128 files); with the 128MB /
-      // 4MB defaults the whole scan coalesces into ~5 splits and the
-      // scan+shuffle-write stage serializes. At 100 TB the defaults are
-      // right — here they must shrink with the data so the scan fans out.
-      .config("spark.sql.files.maxPartitionBytes", (1L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (64L << 10).toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Materialize the corpus as a many-file parquet table (setup, NOT
     * measured) — the measured job then has the production shape: scan
     * partitioned parquet of raw docs → fused extraction. 128 output
@@ -94,14 +77,18 @@ object ScalingBench {
     import spark.implicits._
     val p = spark.sparkContext.defaultParallelism * 4
     val raw = spark.read.parquet(corpusPath).as[RawDoc]
-    val t0 = System.nanoTime()
-    val (docs, pages) = ExtractionPipeline.runCounting(spark, raw, partitions = p)
-    val sec = (System.nanoTime() - t0) / 1e9
+    val ((docs, pages), sec) = Harness.secs(ExtractionPipeline.runCounting(spark, raw, partitions = p))
     (sec, docs, pages)
   }
 
   private def measure(sfDir: String, cores: Int, repl: Int, reps: Int, outJson: String): Unit = {
-    val s = session(cores)
+    // the bench corpus is small (≈18MB / 128 files); with the 128MB /
+    // 4MB defaults the whole scan coalesces into ~5 splits and the
+    // scan+shuffle-write stage serializes. At 100 TB the defaults are
+    // right — here they must shrink with the data so the scan fans out.
+    val s = Harness.session(cores,
+      "spark.sql.files.maxPartitionBytes" -> (1L << 20).toString,
+      "spark.sql.files.openCostInBytes" -> (64L << 10).toString)
     val corpusPath = s"/tmp/graft_bench_corpus_$repl"
     if (!Files.exists(Paths.get(corpusPath, "_SUCCESS"))) materialize(s, sfDir, repl, corpusPath)
     runOnce(s, corpusPath) // JIT warmup

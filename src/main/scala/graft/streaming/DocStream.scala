@@ -21,15 +21,6 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object DocStream {
 
-  /** The replay harnesses ([[docReplay]], StreamDedup.dedupReplay) are
-    * driver-bounded by construction: MemoryStream can only be fed from
-    * the driver, so the corpus is collected. Beyond this many rows the
-    * harness refuses (r4 ADVICE: a corpus-scale frame would OOM the
-    * driver before any error explained why) — use the production
-    * `readStream` shape in the scaladoc instead.
-    */
-  val MaxReplayRows = 200000
-
   def extract(spark: SparkSession, raw: Dataset[RawDoc],
       config: ExtractionPipeline.PipelineConfig = ExtractionPipeline.PipelineConfig()): Dataset[ExtractedDoc] = {
     import spark.implicits._
@@ -49,8 +40,7 @@ object DocStream {
   }
 
   /** Stream/batch parity replay harness (the q18 pattern): drive the raw
-    * corpus through a MemoryStream micro-batch by micro-batch in a child
-    * session and return the FULL extracted-doc rows from the memory sink
+    * corpus through [[Replay.run]] micro-batch by micro-batch and return the FULL extracted-doc rows from the memory sink
     * — the caller projects span/entity facets from it, each gated
     * against the same reconstruction oracles as the batch facets, so
     * streaming and batch extraction are proven equal through an
@@ -59,41 +49,16 @@ object DocStream {
     * including the bundle-SENSITIVE entity facet that a span-only gate
     * cannot see diverge.
     *
-    * Stateless transform — no watermark or state store. The repartition
-    * spreads each micro-batch across the full worker width: a
-    * MemoryStream batch arrives as one driver block, which would
-    * otherwise serialize the extraction CPU. The collect() is the replay
-    * harness's cost (same as q18's event replay); production uses the
-    * readStream file/Kafka shape in the scaladoc above and never
-    * touches the driver. The result is localCheckpoint'ed: the sink
-    * table lives in the child session and the replay must not re-run
-    * per downstream facet.
+    * Stateless transform — no watermark or state store. The collect is
+    * the replay harness's cost; production uses the readStream file/Kafka
+    * shape in the scaladoc above and never touches the driver. The
+    * result is localCheckpoint'ed: the sink table lives in the child
+    * session and the replay must not re-run per downstream facet.
     */
   def docReplay(spark: SparkSession, raw: Dataset[RawDoc], numBatches: Int = 6): org.apache.spark.sql.DataFrame = {
-    // limit BEFORE collect: the guard must fire before the driver heap
-    // does (limit+1 rows is the most this harness will ever hold)
-    val docs = raw.limit(MaxReplayRows + 1).collect()
-    require(docs.length <= MaxReplayRows,
-      s"docReplay is a driver-memory replay harness (MemoryStream is driver-fed); " +
-        s">$MaxReplayRows rows — use the production readStream shape (see DocStream scaladoc)")
-    require(docs.nonEmpty, "no docs to replay")
-    val width = spark.sparkContext.defaultParallelism
-    val ss = spark.newSession()
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-    import ss.implicits._
-    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[RawDoc]
-    val name = "stream_docs_sink"
-    val q = extract(ss, stream.toDS().repartition(width))
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      val chunk = math.max(1, docs.length / numBatches + 1)
-      docs.grouped(chunk).foreach { c => stream.addData(c.toSeq); q.processAllAvailable() }
-    } finally q.stop()
-    // eager checkpoint, then drop the sink's temp view: otherwise the
-    // replayed corpus lives TWICE on the driver for the session lifetime
-    // (memory-sink buffer + checkpoint blocks)
-    val out = ss.table(name).localCheckpoint()
-    ss.catalog.dropTempView(name)
-    out
+    import spark.implicits._
+    val docs = Replay.collect(raw, "docReplay")
+    Replay.run(spark, Replay.chunks(docs.toSeq, numBatches), "append")(
+      ds => extract(ds.sparkSession, ds))(identity)
   }
 }

@@ -93,49 +93,33 @@ object EventStream {
   private def round2(d: Double): Double = math.rint(d * 100) / 100
 
   /** Driver-gated stream/batch parity surface: replay the events table
-    * chronologically through a MemoryStream in several micro-batches,
+    * chronologically through [[Replay.run]] in several micro-batches,
     * flush open sessions with far-future sentinel rows (the watermark
     * only advances between batches), and return the emitted sessions as
     * (user_id, n_events, duration_s) — the multiset the DuckDB
     * gaps-and-islands oracle reproduces exactly.
     *
-    * MemoryStream is inherently a driver-side test source (production
+    * The replay source is a driver-side test source (production
     * replaces it with Kafka/file sources); the collect here feeds the
     * harness, not the engine — sessionize itself shuffles once on
     * user_id and keeps state O(active users).
     */
-  def sessionizeReplay(spark: SparkSession, events: DataFrame, numBatches: Int = 6): org.apache.spark.sql.DataFrame = {
+  def sessionizeReplay(spark: SparkSession, events: DataFrame, numBatches: Int = 6): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val evs = events.select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-      .collect().sortBy(e => (e.ts.getTime, e.event_id))
-    require(evs.nonEmpty, "no events to replay")
-    // child session: state-store partition count scales with ACTIVE KEYS,
-    // and every micro-batch pays a per-partition state commit — 8
-    // partitions for a replay harness instead of the session-wide 32
-    // (production sizes this to key cardinality / executor count)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val name = "stream_sessions_sink"
-    val q = sessionize(ss, stream.toDS())
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
-    try {
-      val chunk = math.max(1, evs.length / numBatches + 1)
-      evs.grouped(chunk).foreach { c => stream.addData(c.toSeq); q.processAllAvailable() }
-      // two sentinel batches: the first advances the watermark past every
-      // open session's timeout, the second triggers the timeout pass
-      val maxTs = evs.last.ts.getTime
-      stream.addData(Event(-1L, new Timestamp(maxTs + 2 * 3600 * 1000L), -1L, "flush", 0.0))
-      q.processAllAvailable()
-      stream.addData(Event(-2L, new Timestamp(maxTs + 4 * 3600 * 1000L), -1L, "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    ss.table(name)
-      .filter(col("user_id") >= 0)
-      .selectExpr("user_id", "n_events",
-        "unix_timestamp(session_end) - unix_timestamp(session_start) AS duration_s")
-      .orderBy(col("user_id"), col("n_events"), col("duration_s"))
+    val evs = Replay.collect(
+      events.select("event_id", "ts", "user_id", "event_type", "value").as[Event],
+      "sessionizeReplay").sortBy(e => (e.ts.getTime, e.event_id))
+    // two sentinel batches: the first advances the watermark past every
+    // open session's timeout, the second triggers the timeout pass
+    val maxTs = evs.last.ts.getTime
+    val flush = Seq(
+      Seq(Event(-1L, new Timestamp(maxTs + 2 * 3600 * 1000L), -1L, "flush", 0.0)),
+      Seq(Event(-2L, new Timestamp(maxTs + 4 * 3600 * 1000L), -1L, "flush", 0.0)))
+    Replay.run(spark, Replay.chunks(evs.toSeq, numBatches) ++ flush, "append")(
+      ds => sessionize(ds.sparkSession, ds))(
+      _.filter(col("user_id") >= 0)
+        .selectExpr("user_id", "n_events",
+          "unix_timestamp(session_end) - unix_timestamp(session_start) AS duration_s")
+        .orderBy(col("user_id"), col("n_events"), col("duration_s")))
   }
 }

@@ -24,48 +24,22 @@ object StreamDedup {
       .agg(min("doc_id").as("keeper_id"), count(lit(1)).as("n_docs"))
 
   /** Replay harness (the q18 pattern): micro-batch the documents table
-    * through a MemoryStream in a child session; the complete-mode
-    * memory sink's final table IS the aggregation state, gated against
-    * the batch reconstruction oracle.
+    * through [[Replay.run]]; the complete-mode memory sink's final table
+    * IS the aggregation state, gated against the batch reconstruction
+    * oracle.
     */
   def dedupReplay(spark: SparkSession, docs: DataFrame,
       numBatches: Int = 6): DataFrame = {
+    import spark.implicits._
     // replay DESCENDING by doc_id: each fingerprint's min id then
     // arrives LAST, so the driver gate itself discriminates the
     // min-aggregation from a first-row-wins keeper (ascending arrival
     // would let a dropDuplicates-style regression pass green)
-    val rows = docs.select(col("doc_id").cast("long"), col("text"))
-      .limit(DocStream.MaxReplayRows + 1).collect()
-      .map(r => (r.getLong(0), r.getString(1))).sortBy(-_._1)
-    require(rows.length <= DocStream.MaxReplayRows,
-      s"dedupReplay is a driver-memory replay harness (MemoryStream is driver-fed); " +
-        s">${DocStream.MaxReplayRows} rows — use the production readStream shape (see scaladoc)")
-    require(rows.nonEmpty, "no docs to replay")
-    val ss = spark.newSession()
-    // state-store width sized to the replay, not the session (the q18
-    // convention): every micro-batch pays a per-partition state commit
-    // AND a complete-mode sink rewrite, so width 4 — the fingerprint key
-    // space is small and the per-batch fixed cost scales with width
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-    import ss.implicits._
-    val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val name = "stream_dedup_sink"
-    // the docReplay convention: a MemoryStream batch arrives as ONE
-    // driver block — spread it before the per-doc fingerprint (the
-    // dominant CPU) or the whole map side runs in a single task
-    val width = spark.sparkContext.defaultParallelism
-    val q = dedup(stream.toDS().toDF("doc_id", "text").repartition(width))
-      .writeStream.format("memory").queryName(name).outputMode("complete").start()
-    try {
-      val chunk = math.max(1, rows.length / numBatches + 1)
-      rows.grouped(chunk).foreach { c => stream.addData(c.toSeq); q.processAllAvailable() }
-    } finally q.stop()
-    // eager checkpoint + drop the sink view (the docReplay convention:
-    // never hold the result twice for the session lifetime)
-    val out = ss.table(name).orderBy("keeper_id").localCheckpoint()
-    ss.catalog.dropTempView(name)
-    out
+    val rows = Replay.collect(
+      docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)],
+      "dedupReplay").sortBy(-_._1)
+    Replay.run(spark, Replay.chunks(rows.toSeq, numBatches), "complete")(
+      ds => dedup(ds.toDF("doc_id", "text")))(_.orderBy("keeper_id"))
   }
 
   // ------------------------------------------- t20: bounded horizon
@@ -107,48 +81,29 @@ object StreamDedup {
     */
   def boundedReplay(spark: SparkSession, docs: DataFrame,
       horizonSeconds: Int = 100): DataFrame = {
-    val all = docs.select(col("doc_id").cast("long"), col("text"),
-        graft.textops.TextOps.fingerprintCol.as("fp"))
-      .limit(DocStream.MaxReplayRows + 1).collect()
-    require(all.length <= DocStream.MaxReplayRows,
-      s"boundedReplay is a driver-memory replay harness (MemoryStream is driver-fed); " +
-        s">${DocStream.MaxReplayRows} rows — use the production readStream shape (see scaladoc)")
-    require(all.nonEmpty, "no docs to replay")
+    import spark.implicits._
+    val all = Replay.collect(
+      docs.select(col("doc_id").cast("long"), col("text"),
+        graft.textops.TextOps.fingerprintCol.as("fp")).as[(Long, String, String)],
+      "boundedReplay")
     // keepers: min doc_id per fingerprint — grouped on the SAME Spark
     // fingerprint column the operator hashes with, never a re-spelled
     // driver-side md5 (the md5Head8 lesson)
-    val keepers = all.groupBy(_.getString(2)).valuesIterator
-      .map(rs => rs.minBy(_.getLong(0)))
-      .map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
+    val keepers = all.groupBy(_._3).valuesIterator
+      .map(_.minBy(_._1))
+      .map { case (id, t, _) => (id, t) }.toSeq.sortBy(_._1)
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
     def at(off: Long) = new java.sql.Timestamp(base + off * 1000L)
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = ss.sqlContext
-    import ss.implicits._
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val name = "stream_dedup_bounded_sink"
-    val width = spark.sparkContext.defaultParallelism
-    val q = dedupBounded(
-        stream.toDS().toDF("doc_id", "text", "ingest_ts").repartition(width),
-        s"$horizonSeconds seconds")
-      .writeStream.format("memory").queryName(name).outputMode("append").start()
     val batches = Seq(
       keepers.map { case (id, t) => (id, t, at(0)) },
       keepers.filter(_._1 % 3 != 0).map { case (id, t) => (id, t, at(10)) },
       Seq((-1L, "graft-wm-tick", at(10 * horizonSeconds.toLong))),
       Seq((-2L, "graft-wm-tick-two", at(10 * horizonSeconds.toLong + 1))),
       keepers.filter(_._1 % 3 == 0).map { case (id, t) => (id, t, at(19 * horizonSeconds.toLong / 2)) })
-    try {
-      batches.foreach { b => stream.addData(b); q.processAllAvailable() }
-    } finally q.stop()
-    val out = ss.table(name)
-      .filter(col("doc_id") >= 0) // drop the watermark ticks
-      .groupBy(col("doc_id").as("keeper_id")).agg(count(lit(1)).as("n_emits"))
-      .orderBy("keeper_id")
-      .localCheckpoint()
-    ss.catalog.dropTempView(name)
-    out
+    Replay.run(spark, batches, "append")(ds => dedupBounded(
+        ds.toDF("doc_id", "text", "ingest_ts"), s"$horizonSeconds seconds"))(
+      _.filter(col("doc_id") >= 0) // drop the watermark ticks
+        .groupBy(col("doc_id").as("keeper_id")).agg(count(lit(1)).as("n_emits"))
+        .orderBy("keeper_id"))
   }
 }

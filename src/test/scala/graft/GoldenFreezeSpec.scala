@@ -3,6 +3,7 @@ package graft
 import graft.output.Assembly
 import graft.pipeline.ExtractionPipeline
 import graft.sources.DocGen
+import graft.util.Harness
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,13 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class GoldenFreezeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("golden-freeze")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.util.Harness
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, LeftSemi}
@@ -22,11 +23,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
 
   override def afterAll(): Unit = spark.stop()
 

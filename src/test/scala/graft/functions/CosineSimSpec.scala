@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.util.Harness
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -7,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class CosineSimSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("cosine-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -2,6 +2,7 @@ package graft.matching
 
 import graft.extract.Core8Extractor
 import graft.pipeline.ExtractionPipeline
+import graft.util.Harness
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CorpusTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("corpus-table")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(2)
 
   override def afterAll(): Unit = {
     Corpora.reset()
@@ -99,10 +95,7 @@ class CorpusTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("corpus-100k").toString
     rows.toDF("kind", "value", "meta").coalesce(1).write.parquet(s"$dir/corpus.parquet")
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    val (bundle, tLoad) = timed(
+    val (bundle, tLoad) = Harness.secs(
       CorpusTable.loadVersioned(spark, spark.read.parquet(s"$dir/corpus.parquet")))
     assert(bundle.version.startsWith("snap-"))
     assert(bundle.lastNames.size >= target)
@@ -113,12 +106,12 @@ class CorpusTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     // per-executor automaton build over the 10^5 surname tier (the
     // generic E20 engine the org/gpe/loc automatons use)
     val key = s"probe.last.${bundle.version}"
-    val (ac, tBuild) = timed(AhoCorasick.cached(key, bundle.lastNames.toSeq.sorted))
+    val (ac, tBuild) = Harness.secs(AhoCorasick.cached(key, bundle.lastNames.toSeq.sorted))
     try {
       val probeName = CorpusGen.derivedTierAt(1).head
       val hits = ac.findLongestNonOverlapping(s"report filed by $probeName yesterday")
       assert(hits.nonEmpty, s"derived name '$probeName' not matched")
-      val (_, tBc) = timed {
+      val (_, tBc) = Harness.secs {
         val bc = spark.sparkContext.broadcast(bundle)
         bc.value.lastNames.size
       }

@@ -2,6 +2,7 @@ package graft.normalize
 
 import graft.pipeline.ExtractionPipeline
 import graft.sources.DocGen
+import graft.util.Harness
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CorpusCanonicalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("corpus-canonical")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,6 +1,7 @@
 package graft.normalize
 
 import graft.model.{CanonicalEntity, DocMeta, ExtractedDoc, Mention, Span}
+import graft.util.Harness
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EntityEdgesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,21 +1,17 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 import graft.sources.DocGen
 import graft.SparkEntry
+import graft.util.Harness
 
 /** End-to-end pipeline + lineage/resume tests (FIXTURES.md §4.7) over
   * the deterministic corpus at sf0.001.
   */
 class PipelineSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = Harness.session(4,
+    "spark.sql.shuffle.partitions" -> "8")
 
   private val sfDir = "/root/testdata/sf0.001"
 

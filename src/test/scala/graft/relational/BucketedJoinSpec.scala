@@ -1,5 +1,6 @@
 package graft.relational
 
+import graft.util.Harness
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -14,14 +15,9 @@ class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bucketed-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.warehouse.dir", wh)
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4,
+    "spark.sql.warehouse.dir" -> wh,
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1") // force SMJ path
 
   override def afterAll(): Unit = spark.stop()
 

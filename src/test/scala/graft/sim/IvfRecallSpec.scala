@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Harness
 import org.scalatest.funsuite.AnyFunSuite
 
 /** s6: the IVF probe/recall trade-off measured against the s1 brute-force
@@ -10,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class IvfRecallSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("ivf-recall-spec")
-    .getOrCreate()
+  private lazy val spark = Harness.session(4)
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.util.Harness
 import java.nio.file.{Files, Paths, Path}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -12,10 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StorageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import graft.streaming.EventStream._
+import graft.util.Harness
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.BeforeAndAfterAll
@@ -9,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -133,5 +128,17 @@ class EventStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the bundle-sensitive facet: entity extraction must match too
     assert(sEnts === bEnts)
     assert(sEnts.nonEmpty)
+  }
+
+  test("q18: sessionizeReplay equals batch Relational.sessionize over the sf0.001 events") {
+    val dir = "/root/testdata/sf0.001"
+    def sessions(df: org.apache.spark.sql.DataFrame) =
+      df.select("user_id", "n_events", "duration_s").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .groupBy(identity).view.mapValues(_.length).toMap
+    val streamed = sessions(sessionizeReplay(spark, spark.read.parquet(s"$dir/events.parquet")))
+    val batch = sessions(graft.relational.Relational.sessionize(spark, dir))
+    assert(streamed.nonEmpty)
+    assert(streamed == batch)
   }
 }

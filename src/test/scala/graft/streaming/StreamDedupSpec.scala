@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.util.Harness
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(2)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -39,30 +36,39 @@ class StreamDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("t20: in-horizon dup dropped, beyond-horizon dup re-admitted (state evicted)") {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
     def at(off: Long) = new java.sql.Timestamp(base + off * 1000L)
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamDedup.dedupBounded(
-        stream.toDS().toDF("doc_id", "text", "ingest_ts"), "100 seconds")
-      .writeStream.format("memory").queryName("sdb_test").outputMode("append").start()
-    try {
+    val batches = Seq(
       // first sightings
-      stream.addData(Seq((1L, "alpha", at(0)), (2L, "beta", at(0)))); q.processAllAvailable()
+      Seq((1L, "alpha", at(0)), (2L, "beta", at(0))),
       // in-horizon duplicate of "alpha" -> dropped
-      stream.addData(Seq((3L, "alpha", at(10)))); q.processAllAvailable()
+      Seq((3L, "alpha", at(10))),
       // two watermark ticks push the watermark to T+900 and give the
       // store a batch boundary to evict on
-      stream.addData(Seq((-1L, "tick", at(1000)))); q.processAllAvailable()
-      stream.addData(Seq((-2L, "tick-two", at(1001)))); q.processAllAvailable()
+      Seq((-1L, "tick", at(1000))),
+      Seq((-2L, "tick-two", at(1001))),
       // beyond-horizon duplicate of "beta" -> state evicted, re-admitted
-      stream.addData(Seq((4L, "beta", at(950)))); q.processAllAvailable()
-    } finally q.stop()
-    val ids = spark.table("sdb_test").collect().map(_.getLong(0)).toSet
+      Seq((4L, "beta", at(950))))
+    val ids = Replay.run(spark, batches, "append")(ds => StreamDedup.dedupBounded(
+        ds.toDF("doc_id", "text", "ingest_ts"), "100 seconds"))(identity)
+      .collect().map(_.getLong(0)).toSet
     assert(ids.contains(1L) && ids.contains(2L), s"first sightings must emit: $ids")
     assert(!ids.contains(3L), s"in-horizon duplicate must be dropped: $ids")
     assert(ids.contains(4L), s"beyond-horizon duplicate must be re-admitted: $ids")
+  }
+
+  test("t20 replay at two horizons: id%3==0 keepers emit twice, every other keeper once") {
+    import spark.implicits._
+    val docs = graft.textops.TextOps.docs(spark, "/root/testdata/sf0.001")
+    val keepers = StreamDedup.dedup(docs).select("keeper_id").as[Long].collect().toSet
+    Seq(100, 40).foreach { h =>
+      val emits = StreamDedup.boundedReplay(spark, docs, horizonSeconds = h)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(emits.keySet == keepers, s"horizon ${h}s: emitted ids are not the keepers")
+      val wrong = emits.filter { case (id, n) => n != (if (id % 3 == 0) 2L else 1L) }
+      assert(wrong.isEmpty, s"horizon ${h}s: wrong emission counts $wrong")
+      assert(emits.values.toSet == Set(1L, 2L), s"horizon ${h}s: one side of the horizon unexercised")
+    }
   }
 
   test("replay harness equals the direct batch group-by") {

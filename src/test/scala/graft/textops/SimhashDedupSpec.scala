@@ -1,6 +1,6 @@
 package graft.textops
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Harness
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SimhashDedupSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("simhash-dedup-spec")
-    .getOrCreate()
+  private lazy val spark = Harness.session(4)
 
   private val dir = "/root/testdata/sf0.001"
 
