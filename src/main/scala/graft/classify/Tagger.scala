@@ -93,8 +93,20 @@ object Tagger {
     "technology" -> TechnicalTopics,
     "financial" -> FinancialTopics)
 
+  /** Each domain's topics with their words, split once: a topic
+    * matches when any of its words occurs in the lowercased content.
+    */
+  private val topicWordsByDomain: Map[String, Seq[(String, Array[String])]] =
+    topicsByDomain.map { case (d, ts) => d -> ts.map(t => (t, t.split(" "))) }
+
   /** Regex SOURCES, shared with the oracle SQL (letters, spaces, \b and
     * \d only — identical semantics in Java regex and RE2).
+    *
+    * `KeywordWordRegex` is an ADAPTATION: the reference tokenizes
+    * keywords with `\b[a-z]+\b` (`mvp-hyper-tagger.py:361`), which skips
+    * letter runs touching digits or `_`; here every letter run counts,
+    * so `kg` in `100kg` is a keyword candidate. Spark and the oracle
+    * share this constant, so both sides agree.
     */
   val KeywordWordRegex: String = "[a-z]+"
   val TechnicalRegex: String = "\\b(" + TechnicalTerms.mkString("|") + ")\\b"
@@ -147,8 +159,8 @@ object Tagger {
     */
   private[classify] def metaOf(content: String, lower: String,
       primaryDomain: String): (Seq[String], Double, Long, Long) = {
-    val domainTopics = topicsByDomain.getOrElse(primaryDomain, Seq.empty)
-      .filter(t => t.split(" ").exists(lower.contains))
+    val domainTopics = topicWordsByDomain.getOrElse(primaryDomain, Seq.empty)
+      .collect { case (t, words) if words.exists(lower.contains) => t }
     val topics =
       (if (domainTopics.nonEmpty) domainTopics
        else FallbackTopics.collect { case (cue, t) if lower.contains(cue) => t })

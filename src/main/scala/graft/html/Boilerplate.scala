@@ -1,7 +1,6 @@
 package graft.html
 
 import HtmlParser.Node
-import scala.collection.mutable.ArrayBuffer
 
 /** Boilerplate removal — two phases, mirroring the reference's strip
   * order (`utils/html_to_markdown_converter.py:48-61`) and extending it
@@ -19,6 +18,10 @@ import scala.collection.mutable.ArrayBuffer
   * `0.7·linkDensity + 0.2·(1−textDensity) + 0.1·min(depth,10)/10 > 0.6`.
   * Containers inside `article`/`main` are protected (they're the main
   * content the readability heuristic is trying to keep).
+  *
+  * Both phases run in one post-order walk: the walk prunes a child's
+  * subtree and returns that subtree's counts as they were before
+  * pruning, so the scoring reads them and no subtree is walked twice.
   */
 object Boilerplate {
 
@@ -32,27 +35,19 @@ object Boilerplate {
       val t = textChars.toDouble
       if (t + 40.0 * elemCount == 0) 0.0 else t / (t + 40.0 * elemCount)
     }
+    /** This score with a child subtree's added; under an `<a>` all of
+      * the child's text is link text.
+      */
+    def plus(child: Score, inLink: Boolean): Score =
+      Score(textChars + child.textChars,
+        linkChars + (if (inLink) child.textChars else child.linkChars),
+        elemCount + child.elemCount)
   }
 
   /** Text/link/element counts for a subtree (whitespace-squashed length). */
-  def score(node: Node): Score = {
-    var textChars = 0
-    var linkChars = 0
-    var elems = 0
-    def walk(n: Node, inLink: Boolean): Unit = {
-      if (n.isText) {
-        val len = squashedLen(n.text)
-        textChars += len
-        if (inLink) linkChars += len
-      } else {
-        elems += 1
-        val il = inLink || n.tag == "a"
-        n.children.foreach(walk(_, il))
-      }
-    }
-    walk(node, inLink = false)
-    Score(textChars, linkChars, elems)
-  }
+  def score(node: Node): Score =
+    if (node.isText) Score(squashedLen(node.text), 0, 0)
+    else node.children.foldLeft(Score(0, 0, 1))((s, ch) => s.plus(score(ch), node.tag == "a"))
 
   private def squashedLen(s: String): Int = {
     var count = 0
@@ -76,25 +71,27 @@ object Boilerplate {
     * buffers; the input tree is consumed).
     */
   def clean(root: Node): Node = {
-    def walk(n: Node, depth: Int, inProtected: Boolean): Unit = {
-      val kept = new ArrayBuffer[Node]
-      n.children.foreach { ch =>
-        if (ch.isText) kept += ch
-        else if (stripTags.contains(ch.tag)) () // phase 1
-        else if (ch.tag == "link" &&
-                 (ch.attr("rel").toLowerCase.contains("stylesheet") || ch.attr("rel").isEmpty)) ()
-        else if (ch.tag == "meta" || ch.tag == "base" || ch.tag == "title" && depth > 1) kept += ch
-        else {
-          val prot = inProtected || protectedTags.contains(ch.tag)
-          if (!prot && scorable.contains(ch.tag)) {
-            val sc = score(ch)
-            if (sc.textChars > 0 && boilerplateScore(sc, depth) > threshold) ()
-            else { walk(ch, depth + 1, prot); kept += ch }
-          } else { walk(ch, depth + 1, prot); kept += ch }
-        }
+    // prunes n's subtree; returns n's unpruned score
+    def walk(n: Node, depth: Int, inProtected: Boolean): Score = {
+      var total = Score(0, 0, 1)
+      n.children.filterInPlace { ch =>
+        val (sc, keep) =
+          if (ch.isText || ch.tag == "meta" || ch.tag == "base" || ch.tag == "title" && depth > 1)
+            (score(ch), true)
+          else if (stripTags.contains(ch.tag) || ch.tag == "link" &&
+                   (ch.attr("rel").toLowerCase.contains("stylesheet") || ch.attr("rel").isEmpty))
+            (score(ch), false) // phase 1: dropped without a walk
+          else {
+            val prot = inProtected || protectedTags.contains(ch.tag)
+            val sub = walk(ch, depth + 1, prot)
+            val drop = !prot && scorable.contains(ch.tag) &&
+              sub.textChars > 0 && boilerplateScore(sub, depth) > threshold
+            (sub, !drop)
+          }
+        total = total.plus(sc, n.tag == "a")
+        keep
       }
-      n.children.clear()
-      n.children ++= kept
+      total
     }
     walk(root, 0, inProtected = false)
     root

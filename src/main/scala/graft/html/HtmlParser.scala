@@ -2,21 +2,18 @@ package graft.html
 
 import scala.collection.mutable.ArrayBuffer
 
-/** From-scratch, dependency-free HTML tokenizer + lenient DOM-lite builder.
+/** From-scratch, dependency-free HTML lexer + lenient DOM-lite builder.
   *
   * Re-expresses the parse step the reference delegates to BeautifulSoup
   * (`utils/html_to_markdown_converter.py:31-46`) as a single-pass JVM
-  * lexer designed to run inside `mapPartitions` (no per-row allocation of
-  * parser machinery beyond the token buffer). Lenient recovery: unclosed
-  * tags, stray `>` inside quoted attributes, unknown tags, and mismatched
-  * close tags are all tolerated (SURVEY.md §7.4 item 2).
+  * parser designed to run inside `mapPartitions`: the lexer hands each
+  * open tag, close tag and text run straight to the tree builder, so
+  * one pass over the characters builds the tree with no token objects
+  * in between. Lenient recovery: unclosed tags, stray `>` inside quoted
+  * attributes, unknown tags, and mismatched close tags are all
+  * tolerated (SURVEY.md §7.4 item 2).
   */
 object HtmlParser {
-
-  sealed trait Tok
-  final case class TOpen(name: String, attrs: Map[String, String], selfClosing: Boolean) extends Tok
-  final case class TClose(name: String) extends Tok
-  final case class TText(text: String) extends Tok
 
   /** Elements whose content is raw text (no nested markup). Shared with
     * HtmlStrategies.html2text, which prunes exactly these from the tree.
@@ -31,13 +28,65 @@ object HtmlParser {
   private def isNameChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
 
-  def tokenize(s: String): IndexedSeq[Tok] = {
-    val out = new ArrayBuffer[Tok]
+  /** Minimal DOM node. Element nodes have a tag; text nodes have tag ""
+    * and `text` set.
+    */
+  final class Node(
+      val tag: String,
+      val attrs: Map[String, String],
+      val children: ArrayBuffer[Node],
+      val text: String) {
+    def isText: Boolean = tag.isEmpty
+    def attr(k: String): String = attrs.getOrElse(k, "")
+  }
+
+  object Node {
+    def elem(tag: String, attrs: Map[String, String]): Node =
+      new Node(tag, attrs, new ArrayBuffer[Node], "")
+    def textNode(t: String): Node = new Node("", Map.empty, new ArrayBuffer[Node], t)
+  }
+
+  /** Block-level elements that implicitly close an open `<p>`. */
+  private val closesP = Set(
+    "p", "div", "ul", "ol", "li", "table", "h1", "h2", "h3", "h4", "h5", "h6",
+    "blockquote", "pre", "section", "article", "nav", "header", "footer",
+    "aside", "main", "hr", "form", "figure")
+
+  /** Build a lenient DOM tree in one pass over `s`. Returns a synthetic
+    * root node (tag "#root").
+    */
+  def parse(s: String): Node = {
+    val root = Node.elem("#root", Map.empty)
+    val stack = new ArrayBuffer[Node]
+    stack += root
+    def top = stack(stack.length - 1)
+    def text(t: String): Unit = top.children += Node.textNode(t)
+    def close(name: String): Unit = { // unmatched close tags are ignored
+      var idx = -1
+      var k = stack.length - 1
+      while (k >= 1 && idx < 0) { if (stack(k).tag == name) idx = k; k -= 1 }
+      if (idx >= 0) stack.remove(idx, stack.length - idx)
+    }
+    def open(name: String, attrs: Map[String, String], selfClosing: Boolean): Unit = {
+      // implied closes (lenient HTML recovery)
+      if (closesP.contains(name) && top.tag == "p") stack.remove(stack.length - 1)
+      if (name == "li" && top.tag == "li") stack.remove(stack.length - 1)
+      if ((name == "td" || name == "th") && (top.tag == "td" || top.tag == "th"))
+        stack.remove(stack.length - 1)
+      if (name == "tr") {
+        if (top.tag == "td" || top.tag == "th") stack.remove(stack.length - 1)
+        if (top.tag == "tr") stack.remove(stack.length - 1)
+      }
+      val node = Node.elem(name, attrs)
+      top.children += node
+      if (!selfClosing && !voidElems.contains(name)) stack += node
+    }
+
     val n = s.length
     var i = 0
-    val text = new java.lang.StringBuilder
+    val pending = new java.lang.StringBuilder
     def flushText(): Unit = {
-      if (text.length > 0) { out += TText(text.toString); text.setLength(0) }
+      if (pending.length > 0) { text(pending.toString); pending.setLength(0) }
     }
     while (i < n) {
       val c = s.charAt(i)
@@ -62,7 +111,7 @@ object HtmlParser {
           val nm = new java.lang.StringBuilder
           while (j < n && isNameChar(s.charAt(j))) { nm.append(Character.toLowerCase(s.charAt(j))); j += 1 }
           val e = s.indexOf('>', j)
-          if (nm.length > 0) out += TClose(nm.toString)
+          if (nm.length > 0) close(nm.toString)
           i = if (e < 0) n else e + 1
         } else if (Character.isLetter(c1)) {
           flushText()
@@ -111,103 +160,41 @@ object HtmlParser {
                 attrs = attrs.updated(an.toString, Entities.unescape(av))
             }
           }
-          out += TOpen(name, attrs, selfClosing)
+          open(name, attrs, selfClosing)
           i = j
           // raw-text elements: consume verbatim until the matching close tag
           if (rawTextElems.contains(name) && !selfClosing) {
-            val lower = s
             var k = i
             var endIdx = -1
             val closeSeq = "</" + name
             var found = false
             while (!found && k < n) {
-              val cand = lower.indexOf('<', k)
+              val cand = s.indexOf('<', k)
               if (cand < 0) { found = true; endIdx = -1 }
               else if (cand + closeSeq.length <= n &&
-                       lower.regionMatches(true, cand, closeSeq, 0, closeSeq.length)) {
+                       s.regionMatches(true, cand, closeSeq, 0, closeSeq.length)) {
                 found = true; endIdx = cand
               } else k = cand + 1
             }
             if (endIdx < 0) { // unterminated — swallow to EOF
-              out += TText(s.substring(i))
-              out += TClose(name)
+              text(s.substring(i))
+              close(name)
               i = n
             } else {
-              if (endIdx > i) out += TText(s.substring(i, endIdx))
+              if (endIdx > i) text(s.substring(i, endIdx))
               val gt = s.indexOf('>', endIdx)
-              out += TClose(name)
+              close(name)
               i = if (gt < 0) n else gt + 1
             }
           }
         } else { // '<' followed by non-tag char: literal text
-          text.append(c); i += 1
+          pending.append(c); i += 1
         }
       } else {
-        text.append(c); i += 1
+        pending.append(c); i += 1
       }
     }
     flushText()
-    out.toIndexedSeq
-  }
-
-  /** Minimal DOM node. Element nodes have a tag; text nodes have tag ""
-    * and `text` set.
-    */
-  final class Node(
-      val tag: String,
-      val attrs: Map[String, String],
-      val children: ArrayBuffer[Node],
-      val text: String) {
-    def isText: Boolean = tag.isEmpty
-    def attr(k: String): String = attrs.getOrElse(k, "")
-  }
-
-  object Node {
-    def elem(tag: String, attrs: Map[String, String]): Node =
-      new Node(tag, attrs, new ArrayBuffer[Node], "")
-    def textNode(t: String): Node = new Node("", Map.empty, new ArrayBuffer[Node], t)
-  }
-
-  /** Block-level elements that implicitly close an open `<p>`. */
-  private val closesP = Set(
-    "p", "div", "ul", "ol", "li", "table", "h1", "h2", "h3", "h4", "h5", "h6",
-    "blockquote", "pre", "section", "article", "nav", "header", "footer",
-    "aside", "main", "hr", "form", "figure")
-
-  /** Build a lenient DOM tree from a token stream. Returns a synthetic
-    * root node (tag "#root").
-    */
-  def parse(htmlSrc: String): Node = {
-    val root = Node.elem("#root", Map.empty)
-    val stack = new ArrayBuffer[Node]
-    stack += root
-    def top = stack(stack.length - 1)
-    def closeUpTo(name: String): Boolean = {
-      var idx = -1
-      var k = stack.length - 1
-      while (k >= 1 && idx < 0) { if (stack(k).tag == name) idx = k; k -= 1 }
-      if (idx < 0) false
-      else { stack.remove(idx, stack.length - idx); true }
-    }
-    tokenize(htmlSrc).foreach {
-      case TText(t) =>
-        top.children += Node.textNode(t)
-      case TClose(name) =>
-        closeUpTo(name) // unmatched close tags are ignored
-      case TOpen(name, attrs, selfClosing) =>
-        // implied closes (lenient HTML recovery)
-        if (closesP.contains(name) && top.tag == "p") stack.remove(stack.length - 1)
-        if (name == "li" && top.tag == "li") stack.remove(stack.length - 1)
-        if ((name == "td" || name == "th") && (top.tag == "td" || top.tag == "th"))
-          stack.remove(stack.length - 1)
-        if (name == "tr") {
-          if (top.tag == "td" || top.tag == "th") stack.remove(stack.length - 1)
-          if (top.tag == "tr") stack.remove(stack.length - 1)
-        }
-        val node = Node.elem(name, attrs)
-        top.children += node
-        if (!selfClosing && !voidElems.contains(name)) stack += node
-    }
     root
   }
 }

@@ -25,9 +25,6 @@ object SpanKinds {
   val Rule = "rule"
 }
 
-/** A document already in span form (the authoritative input table shape). */
-final case class DocSpans(doc_id: String, spans: Seq[Span])
-
 /** Pre-parsed PDF block geometry, mirroring what PyMuPDF
   * `page.get_text("blocks")` hands the reference
   * (`extraction/highspeed_markdown_general_extractor.py:230`).

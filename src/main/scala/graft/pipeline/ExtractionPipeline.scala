@@ -71,69 +71,74 @@ object ExtractionPipeline {
     try {
       // S5 URL gate runs BEFORE conversion — a 404 body or a
       // non-whitelisted payload must not reach the extractors
-      validateUrl(raw).foreach { err =>
-        return ExtractedDoc(raw.doc_id, Seq.empty, urlMeta(raw, DocMeta.empty),
-          Seq.empty, Seq.empty, Seq.empty, success = false, error = err)
-      }
-      // stage 1-2: convert to spans
-      val spansOrErr: Either[String, Seq[Span]] = raw.content_kind match {
-        case "html" => Right(graft.html.HtmlStrategies.convert(config.htmlStrategy, raw.html))
-        case "pdf_blocks" => PdfExtractor.extract(raw.doc_id, raw.pdf_blocks, raw.page_count)
-        case "text" =>
-          Right(
-            if (raw.text.trim.isEmpty) Seq.empty
-            else Seq(Span(SpanKinds.Text, raw.text, "", 0)))
-        case "csv" => Right(graft.sources.CsvText.extract(raw.text))
-        case "docx" | "pptx" | "xlsx" =>
-          graft.office.OfficeExtractor.extract(raw.content_kind, raw.office_parts)
-        // F15 universal fallback: unknown kinds never hard-reject —
-        // text-sample pass-through, else printable-strings harvest,
-        // else a placeholder span (reference last-resort chain)
-        case _ => Right(graft.extract.UniversalFallback.extract(raw.doc_id, raw.text))
-      }
-      spansOrErr match {
-        case Left(err) =>
-          ExtractedDoc(raw.doc_id, Seq.empty, DocMeta.empty, Seq.empty, Seq.empty,
-            Seq.empty, success = false, error = err)
-        case Right(spans) =>
-          val markdown = spans.map(_.text).mkString("\n")
-          // stage 2b: content flags (single pass over spans)
-          val flags = ContentFlagsScan.scan(spans)
-          // stage 3: classification
-          val cls = Classifier.classify(markdown)
-          // stage 4: entity extraction (routing skip per confidence <5.0)
-          val cleanText = Core8Extractor.cleanText(markdown)
-          val entities =
-            if (cls.skipEntityExtraction) Seq.empty
-            else Core8Extractor.extractAll(cleanText)
-          // stage 5: normalization (document-local canonical grouping)
-          val canonical = Normalizer.canonicalize(entities)
-          // stage 6: semantic facts on the clean text
-          val facts = SpoExtractor.extract(cleanText)
-          // C4: deep-domain entity pass only on the high-confidence route
-          // (routing per reference `service_processor.py:1922-1927`)
-          val domainEntities =
-            if (cls.enableDeepDomainExtraction)
-              Classifier.extractDomainEntities(cleanText, cls.domains.keySet)
-            else Seq.empty
-          val meta = urlMeta(raw, DocMeta(
-            content_detection = flags,
-            page_count = raw.page_count,
-            primary_domain = cls.primaryDomain,
-            primary_domain_confidence = cls.primaryDomainConfidence,
-            primary_document_type = cls.primaryDocType,
-            domains = cls.domains,
-            domain_entities = domainEntities))
-          ExtractedDoc(raw.doc_id, spans, meta, entities, canonical, facts,
-            success = true, error = "")
+      validateUrl(raw) match {
+        case Some(err) => reject(raw.doc_id, urlMeta(raw, DocMeta.empty), err)
+        case None => convertAndExtract(raw, config)
       }
     } catch {
       // a stack overflow (deeply nested markup in the recursive tree
       // walks) unwinds to here: the thread is usable again, so the doc
       // becomes a reject row instead of killing the executor
       case e @ (_: Exception | _: StackOverflowError) =>
-        ExtractedDoc(raw.doc_id, Seq.empty, DocMeta.empty, Seq.empty, Seq.empty,
-          Seq.empty, success = false, error = s"${e.getClass.getSimpleName}: ${e.getMessage}")
+        reject(raw.doc_id, DocMeta.empty, s"${e.getClass.getSimpleName}: ${e.getMessage}")
+    }
+  }
+
+  /** A failed row: no spans, entities or facts. */
+  private def reject(docId: String, meta: DocMeta, error: String): ExtractedDoc =
+    ExtractedDoc(docId, Seq.empty, meta, Seq.empty, Seq.empty, Seq.empty,
+      success = false, error = error)
+
+  private def convertAndExtract(raw: RawDoc, config: PipelineConfig): ExtractedDoc = {
+    // stage 1-2: convert to spans
+    val spansOrErr: Either[String, Seq[Span]] = raw.content_kind match {
+      case "html" => Right(graft.html.HtmlStrategies.convert(config.htmlStrategy, raw.html))
+      case "pdf_blocks" => PdfExtractor.extract(raw.doc_id, raw.pdf_blocks, raw.page_count)
+      case "text" =>
+        Right(
+          if (raw.text.trim.isEmpty) Seq.empty
+          else Seq(Span(SpanKinds.Text, raw.text, "", 0)))
+      case "csv" => Right(graft.sources.CsvText.extract(raw.text))
+      case "docx" | "pptx" | "xlsx" =>
+        graft.office.OfficeExtractor.extract(raw.content_kind, raw.office_parts)
+      // F15 universal fallback: unknown kinds never hard-reject —
+      // text-sample pass-through, else printable-strings harvest,
+      // else a placeholder span (reference last-resort chain)
+      case _ => Right(graft.extract.UniversalFallback.extract(raw.doc_id, raw.text))
+    }
+    spansOrErr match {
+      case Left(err) => reject(raw.doc_id, DocMeta.empty, err)
+      case Right(spans) =>
+        val markdown = spans.map(_.text).mkString("\n")
+        // stage 2b: content flags (single pass over spans)
+        val flags = ContentFlagsScan.scan(spans)
+        // stage 3: classification
+        val cls = Classifier.classify(markdown)
+        // stage 4: entity extraction (routing skip per confidence <5.0)
+        val cleanText = Core8Extractor.cleanText(markdown)
+        val entities =
+          if (cls.skipEntityExtraction) Seq.empty
+          else Core8Extractor.extractAll(cleanText)
+        // stage 5: normalization (document-local canonical grouping)
+        val canonical = Normalizer.canonicalize(entities)
+        // stage 6: semantic facts on the clean text
+        val facts = SpoExtractor.extract(cleanText)
+        // C4: deep-domain entity pass only on the high-confidence route
+        // (routing per reference `service_processor.py:1922-1927`)
+        val domainEntities =
+          if (cls.enableDeepDomainExtraction)
+            Classifier.extractDomainEntities(cleanText, cls.domains.keySet)
+          else Seq.empty
+        val meta = urlMeta(raw, DocMeta(
+          content_detection = flags,
+          page_count = raw.page_count,
+          primary_domain = cls.primaryDomain,
+          primary_domain_confidence = cls.primaryDomainConfidence,
+          primary_document_type = cls.primaryDocType,
+          domains = cls.domains,
+          domain_entities = domainEntities))
+        ExtractedDoc(raw.doc_id, spans, meta, entities, canonical, facts,
+          success = true, error = "")
     }
   }
 

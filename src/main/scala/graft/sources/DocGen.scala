@@ -237,8 +237,6 @@ object DocGen {
   // goldens and facet oracles stay untouched. No expand(): skew is the
   // main corpus's concern — these gates verify conversion semantics.
 
-  def auxKindOf(id: Long): String = if (id % 2 == 0) "csv" else "bin"
-
   /** Even ids: a deterministic RFC-4180-lite CSV (header + 3..7 rows,
     * one quoted field with an embedded comma per row) whose converted
     * `' | '`-joined text is pure arithmetic of (id, words).

@@ -417,9 +417,6 @@ object TextOps {
   /** MinHash signatures: one groupBy with 16 min-aggregates (map-side
     * partial aggregation — one shuffle of 16 longs per doc).
     */
-  def minhashSignatures(s: SparkSession, dir: String): DataFrame =
-    minhashSignaturesFrom(shingles(s, dir))
-
   private def minhashSignaturesFrom(sh: DataFrame): DataFrame = {
     val hs = sh.select(col("doc_id"), shingleHash.as("h"))
     val aggs = (0 until NumHashes).map(i =>

@@ -1,7 +1,8 @@
 package graft
 
 import graft.extract.Core8Extractor
-import graft.html.HtmlExtractor
+import graft.html.{Boilerplate, HtmlExtractor, HtmlParser}
+import graft.html.HtmlParser.Node
 import graft.model.{PdfBlock, Span}
 import graft.normalize.Normalizer
 import graft.pdf.PdfExtractor
@@ -151,6 +152,75 @@ class PropertySpec extends AnyFunSuite {
         "<table><tr><td>", "&#xZZ;", "&unknown;", "\u0000<b>\u0000").foreach { s =>
       HtmlExtractor.extract(s)
     }
+  }
+
+  // P9's reference: boilerplate removal that re-scores every scorable
+  // container's subtree from scratch before deciding (O(nodes × depth)).
+  // Returns the number of containers the density rule dropped.
+  private def naiveClean(root: Node): Int = {
+    val stripTags = Set("script", "noscript", "style", "nav", "footer", "header", "aside")
+    def naiveScore(node: Node): Boilerplate.Score = {
+      var text = 0; var link = 0; var elems = 0
+      def walk(n: Node, inLink: Boolean): Unit =
+        if (n.isText) {
+          // whitespace runs count as one char, none at either end
+          val words = n.text.split("\\p{javaWhitespace}+").filter(_.nonEmpty)
+          val len = words.map(_.length).sum + math.max(words.length - 1, 0)
+          text += len
+          if (inLink) link += len
+        } else {
+          elems += 1
+          n.children.foreach(walk(_, inLink || n.tag == "a"))
+        }
+      walk(node, inLink = false)
+      Boilerplate.Score(text, link, elems)
+    }
+    var dropped = 0
+    def walk(n: Node, depth: Int, inProtected: Boolean): Unit = {
+      val kept = n.children.filter { ch =>
+        if (ch.isText) true
+        else if (stripTags.contains(ch.tag)) false
+        else if (ch.tag == "link" &&
+                 (ch.attr("rel").toLowerCase.contains("stylesheet") || ch.attr("rel").isEmpty)) false
+        else if (ch.tag == "meta" || ch.tag == "base" || ch.tag == "title" && depth > 1) true
+        else {
+          val prot = inProtected || ch.tag == "article" || ch.tag == "main"
+          val sc = naiveScore(ch)
+          val drop = !prot && Set("div", "section", "ul", "table").contains(ch.tag) &&
+            sc.textChars > 0 && Boilerplate.boilerplateScore(sc, depth) > 0.6
+          if (drop) dropped += 1 else walk(ch, depth + 1, prot)
+          !drop
+        }
+      }
+      n.children.clear()
+      n.children ++= kept
+    }
+    walk(root, 0, inProtected = false)
+    dropped
+  }
+
+  private def dump(n: Node): String =
+    if (n.isText) s"[${n.text}]"
+    else s"<${n.tag} ${n.attrs.toSeq.sorted.mkString(",")}>${n.children.map(dump).mkString}</${n.tag}>"
+
+  private val soupGen: Gen[String] = Gen.listOf(Gen.frequency(
+    (4, Gen.oneOf("div", "div", "section", "ul", "li", "table", "tr", "td", "a", "a", "p",
+      "span", "article", "main", "nav", "script", "meta", "title", "base").map(t => s"<$t>")),
+    (1, Gen.oneOf("<link rel=\"stylesheet\">", "<link rel=\"preload\">", "<link>")),
+    (3, Gen.oneOf("div", "section", "ul", "li", "table", "a", "p", "article", "main")
+      .map(t => s"</$t>")),
+    (4, Gen.oneOf("menu", "home", " ", "contact us",
+      "the plant inspection covered every guard rail on the second floor"))))
+    .map(_.mkString)
+
+  test("P9: one-pass Boilerplate.clean keeps exactly what a naive re-score keeps") {
+    var drops = 0
+    forAll(soupGen, 400) { html =>
+      val expected = HtmlParser.parse(html)
+      drops += naiveClean(expected)
+      assert(dump(Boilerplate.clean(HtmlParser.parse(html))) == dump(expected), html)
+    }
+    assert(drops > 20, s"the soup exercised the density rule only $drops times")
   }
 
   test("P7: universal fallback never throws and always yields a span") {

@@ -3,14 +3,17 @@ package graft
 import graft.util.Harness
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.aggregate.Min
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
-import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,7 +22,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * projection pushed into the one cached extraction run, so its
   * in-memory scan must read only the facet's columns; t16 never builds a
   * pair join; t17 broadcasts its budgets table; s4 shuffles only for
-  * its top-k window and final sort.
+  * its top-k window and final sort. t7's result is a checkpoint scan, so
+  * its pin reads the executed plans of the jobs t7 runs instead.
   */
 class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -120,5 +124,46 @@ class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
       case _ => fail(s"no exchange directly under the window:\n${p.treeString}")
     }
     assert(exchanges.count(_.outputPartitioning.isInstanceOf[RangePartitioning]) == 1, p.treeString)
+  }
+
+  /** `p` and every node below it, through AQE stages and cached plans. */
+  private def subtree(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => subtree(a.executedPlan)
+    case q: QueryStageExec => subtree(q.plan)
+    case r: ReusedExchangeExec => subtree(r.child)
+    case m: InMemoryTableScanExec => subtree(m.relation.cachedPlan)
+    case _ => p.children.flatMap(subtree)
+  })
+
+  test("t7 runs the exact-dup keepers semi-join before the MinHash signatures") {
+    // a child session: t7's pair memo is per session, so its jobs run here
+    val s = spark.newSession()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
+    SparkEntry.queries("t7_minhash_lsh")(s, dir)
+    // the signature aggregates: mins over the shingle hash `h` (the
+    // optimizer prunes them to one aggregate per band)
+    def signatureAggs: Seq[SparkPlan] = plans.toArray(Array.empty[SparkPlan]).toSeq
+      .flatMap(subtree).collect {
+        case a: BaseAggregateExec if a.aggregateExpressions.nonEmpty &&
+            a.aggregateExpressions.forall(_.aggregateFunction match {
+              case m: Min => m.child.references.exists(_.name == "h")
+              case _ => false
+            }) => a
+      }
+    val deadline = System.nanoTime() + 60L * 1000000000L // listener events arrive async
+    while (signatureAggs.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    val aggs = signatureAggs
+    assert(aggs.nonEmpty, s"no signature aggregate in ${plans.size} captured plans")
+    aggs.foreach { a =>
+      assert(subtree(a).exists {
+        case j: BaseJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }, a.treeString)
+    }
   }
 }
