@@ -41,10 +41,13 @@ object Bench {
       .mkString("[", ",", "]")
     // failures are machine-readable, not stderr-only: a fast failure must
     // never read as a fast query to a consumer comparing BENCH rounds
-    val failed = results.collect { case (k, _, true) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
+    def failedNames(rs: Seq[(String, Double, Boolean)]) =
+      rs.collect { case (k, _, true) => "\"" + k + "\"" }.mkString("[", ",", "]")
+    val failed = failedNames(results)
+    // per pass, so a fast failed pass never reads as a real timing
+    val passFailed = passes.map(failedNames).mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passJson,"failed":$failed,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"passes":$passJson,"pass_failed":$passFailed,"failed":$failed,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -179,21 +179,6 @@ object ExtractionPipeline {
     salted(raw, p).mapPartitions { it => installCorpus(); f(it) }
   }
 
-  /** Corpus-level metrics via `observe()` — the Spark counterpart of the
-    * reference's pipeline metrics (`base_extractor.py:111-157`): doc /
-    * reject / span / entity counts ride along with the job, collected by
-    * a QueryExecutionListener or `Observation` without a second pass.
-    */
-  def withMetrics(out: Dataset[ExtractedDoc],
-      observation: org.apache.spark.sql.Observation): Dataset[ExtractedDoc] = {
-    import org.apache.spark.sql.functions._
-    out.observe(observation,
-      count(lit(1)).as("docs"),
-      sum(when(!col("success"), 1L).otherwise(0L)).as("rejects"),
-      sum(size(col("spans"))).as("spans"),
-      sum(size(col("entities"))).as("entities"))
-  }
-
   /** Throughput-measurement variant: run the fused stage and fold
     * (docs, pages) INSIDE the same mapPartitions, so no ExtractedDoc is
     * serialized to rows just to be counted. Production serializes once —

@@ -22,6 +22,16 @@ import org.apache.spark.sql.functions._
   * source snapshot, recompute only the missing buckets, and write them
   * with dynamic partition overwrite (idempotent — a re-run of a
   * completed bucket replaces it byte-identically).
+  *
+  * The write job counts what it writes: the sink's `bucket` column adds
+  * each row's (doc, span, fail) counts to that bucket's accumulators, and
+  * the lineage rows are read off them once the write has committed. No
+  * pass over the input finds the pending buckets and no pass over the
+  * committed data aggregates them. The counts are exact because the
+  * counting projection runs in the write's result stage, after the one
+  * `doc_id` exchange: Spark applies a result task's accumulator updates
+  * once per partition, from its successful attempt. In a shuffle-map
+  * stage a stage retry could apply them twice.
   */
 object ResumableJob {
 
@@ -50,13 +60,11 @@ object ResumableJob {
   }
 
   /** Process + write only the buckets not yet recorded in lineage, in one
-    * pass over the payloads:
-    *  1. a key-only pass (reads only `doc_id`) finds the pending buckets;
-    *  2. the fused job streams straight into the bucketed sink;
-    *  3. lineage is aggregated from a column-pruned read of the committed
-    *     data, restricted to the pending buckets, so it certifies what was
-    *     written (a stale bucket with no pending docs gets no row).
-    * Returns the number of buckets (re)computed.
+    * job: the fused stage streams straight into the bucketed sink, and the
+    * sink counts each bucket's docs, spans and fails as it writes them. A
+    * first run writes the whole input; a resume drops the completed
+    * buckets in the scan. Each bucket that received a doc gets one lineage
+    * row. Returns the number of buckets (re)computed.
     */
   def runResumable(
       spark: SparkSession,
@@ -67,30 +75,25 @@ object ResumableJob {
       storage: Storage = Storage.default): Int = {
     import spark.implicits._
     val done = completedBuckets(spark, outDir, snapshot, storage)
-    val pending = raw.select(bucketOf(buckets)).distinct()
-      .collect().map(_.getInt(0)).filterNot(done).toSeq
-    if (pending.isEmpty) return 0
+    if ((0 until buckets).forall(done)) return 0
+    val pendingRaw =
+      if (done.isEmpty) raw else raw.filter(!bucketOf(buckets).isin(done.toSeq: _*))
 
-    val pendingRaw = raw.filter(bucketOf(buckets).isin(pending: _*))
-    val extracted = ExtractionPipeline.run(spark, pendingRaw)
-      .withColumn("bucket", bucketOf(buckets))
+    // exact while this runs in the write's result stage: its updates apply once per partition
+    val acc = Array.fill(buckets, 3)(spark.sparkContext.longAccumulator)
+    val counted = udf { (b: Int, spans: Int, success: Boolean) =>
+      acc(b)(0).add(1); acc(b)(1).add(spans); if (!success) acc(b)(2).add(1); b
+    }.asNondeterministic()
+    val extracted = ExtractionPipeline.run(spark, pendingRaw).toDF()
+      .withColumn("bucket", counted(bucketOf(buckets), size(col("spans")), col("success")))
     // dynamic partition overwrite: only touched buckets are replaced
     // (Iceberg binding: writeTo(...).overwritePartitions() — same call)
-    storage.overwritePartitions(extracted.toDF(), s"$outDir/data", "bucket")
+    storage.overwritePartitions(extracted, s"$outDir/data", "bucket")
 
-    // size(spans.offset) == size(spans), but reads one int leaf per span
-    // instead of the span text
-    val lineage = readData(spark, outDir, storage)
-      .filter(col("bucket").isin(pending: _*))
-      .groupBy(col("bucket"))
-      .agg(
-        count(lit(1)).as("doc_count"),
-        sum(size(col("spans.offset"))).cast("long").as("span_count"),
-        sum(when(!col("success"), 1L).otherwise(0L)).as("fail_count"))
-      .withColumn("source_snapshot", lit(snapshot))
-      .as[LineageRow]
-      .collect()
-    storage.append(lineage.toSeq.toDF(), s"$outDir/lineage")
+    val lineage = acc.indices.filter(acc(_)(0).value > 0).map { b =>
+      LineageRow(b, acc(b)(0).value, acc(b)(1).value, acc(b)(2).value, snapshot)
+    }
+    if (lineage.nonEmpty) storage.append(lineage.toDF(), s"$outDir/lineage")
     lineage.length
   }
 

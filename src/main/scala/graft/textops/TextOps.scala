@@ -510,11 +510,12 @@ object TextOps {
     val shk = sh0.join(exactKeepers(s, dir), Seq("doc_id"), "left_semi")
     val sig = minhashSignaturesFrom(shk)
     val r = NumHashes / NumBands
-    val bands = (0 until NumBands).map { b =>
-      val cols = (b * r until (b + 1) * r).map(i => col(s"m$i"))
-      sig.select(col("doc_id").as("id"), lit(b).as("band"),
-        md5(concat_ws(",", cols: _*)).as("key"))
-    }.reduce(_.unionByName(_))
+    // one row per (doc, band) from ONE signature aggregate: a per-band
+    // union would prune the aggregate to each band's mins and run it 4×
+    val keys = (0 until NumBands).map(b =>
+      md5(concat_ws(",", (b * r until (b + 1) * r).map(i => col(s"m$i")): _*)))
+    val bands = sig
+      .select(col("doc_id").as("id"), posexplode(array(keys: _*)).as(Seq("band", "key")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cand = bandPairs(bands, "t7").cache()
     // verify candidates with exact Jaccard computed per candidate PAIR:
@@ -597,21 +598,22 @@ object TextOps {
     var changed = true
     var rounds = 0
     val MaxRounds = 25 // pointer doubling: covers component diameters to 2^25
+    val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     while (changed && rounds < MaxRounds) {
       val neighborMin = edges
         .join(labels.withColumnRenamed("doc_id", "b").withColumnRenamed("label", "nl"), "b")
         .groupBy(col("a").as("doc_id"))
         .agg(min(col("nl")).as("nmin"))
-      // persisted (never unpersisted — bounded by O(log n) tiny frames
-      // per run; unpersist mid-loop invalidates dependent cached plans):
-      // the pointer-doubling self-join below reads stepped TWICE, and
-      // without materialization each side recomputes the whole
-      // neighbor-min join chain
+      // persisted until the loop ends (unpersist mid-loop invalidates
+      // dependent cached plans): the pointer-doubling self-join below
+      // reads stepped TWICE, and without materialization each side
+      // recomputes the whole neighbor-min join chain
       val stepped = labels.join(neighborMin, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
           (coalesce(col("nmin"), col("label")) < col("label")).as("chg1"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      steps += stepped
       // pointer doubling: label := label(label) — labels always point at
       // graph vertices, every vertex has a row, so the self-join is total.
       // The change flag rides INSIDE the materialized frame: convergence
@@ -630,6 +632,8 @@ object TextOps {
       labels = next.select("doc_id", "label")
       rounds += 1
     }
+    // labels is a local checkpoint, independent of the round frames
+    steps.foreach(_.unpersist(false))
     // a correctness-gated operator must fail loudly, never return
     // silently split groups (unreachable below 2^25-diameter components)
     require(!changed, s"connected components did not converge after $rounds rounds")
@@ -816,11 +820,10 @@ object TextOps {
   private def simhashDedupUncached(s: SparkSession, dir: String, maxHamming: Int): DataFrame = {
     val sh = simhashFrame(s, dir)
     val shk = sh.join(exactKeepers(s, dir), Seq("doc_id"), "left_semi")
-    val bands = (0 until SimhashBands).map { b =>
-      shk.select(col("doc_id").as("id"), lit(b).as("band"),
-        shiftright(col("simhash"), b * SimhashBandBits)
-          .bitwiseAND(lit((1L << SimhashBandBits) - 1)).as("key"))
-    }.reduce(_.unionByName(_))
+    val keys = (0 until SimhashBands).map(b =>
+      shiftright(col("simhash"), b * SimhashBandBits).bitwiseAND(lit((1L << SimhashBandBits) - 1)))
+    val bands = shk
+      .select(col("doc_id").as("id"), posexplode(array(keys: _*)).as(Seq("band", "key")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = verifiedPairs(bandPairs(bands, "t14"),
       sh.select(col("doc_id").as("id"), col("simhash").as("v")), "hamming")(

@@ -145,9 +145,8 @@ class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     })
     SparkEntry.queries("t7_minhash_lsh")(s, dir)
-    // the signature aggregates: mins over the shingle hash `h` (the
-    // optimizer prunes them to one aggregate per band)
-    def signatureAggs: Seq[SparkPlan] = plans.toArray(Array.empty[SparkPlan]).toSeq
+    // the signature aggregates: mins over the shingle hash `h`
+    def signatureAggs: Seq[BaseAggregateExec] = plans.toArray(Array.empty[SparkPlan]).toSeq
       .flatMap(subtree).collect {
         case a: BaseAggregateExec if a.aggregateExpressions.nonEmpty &&
             a.aggregateExpressions.forall(_.aggregateFunction match {
@@ -160,6 +159,8 @@ class SparkEntrySpec extends AnyFunSuite with BeforeAndAfterAll {
     val aggs = signatureAggs
     assert(aggs.nonEmpty, s"no signature aggregate in ${plans.size} captured plans")
     aggs.foreach { a =>
+      // one aggregate feeds every band: none is pruned to one band's mins
+      assert(a.aggregateExpressions.size == graft.textops.TextOps.NumHashes, a.treeString)
       assert(subtree(a).exists {
         case j: BaseJoinExec => j.joinType == LeftSemi
         case _ => false

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.DocGen
 import graft.SparkEntry
 import graft.util.Harness
+import org.apache.spark.sql.SpecAccess
 
 /** End-to-end pipeline + lineage/resume tests (FIXTURES.md §4.7) over
   * the deterministic corpus at sf0.001.
@@ -84,8 +85,9 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
   }
 
-  private def lineageTriples(outDir: String): Map[Int, (Long, Long, Long)] = {
+  private def lineageTriples(outDir: String, snapshot: String): Map[Int, (Long, Long, Long)] = {
     val rows = ResumableJob.readLineage(spark, outDir)
+      .filter(org.apache.spark.sql.functions.col("source_snapshot") === snapshot)
       .select("bucket", "doc_count", "span_count", "fail_count").collect()
     assert(rows.map(_.getInt(0)).distinct.length === rows.length, "one lineage row per bucket")
     rows.map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
@@ -103,12 +105,12 @@ class PipelineSpec extends AnyFunSuite {
     val n1 = ResumableJob.runResumable(spark, partial, tmp, buckets, "snap1")
     assert(n1 === buckets - 1)
     // lineage certifies exactly what was committed
-    assert(lineageTriples(tmp) === dataTriples(tmp))
+    assert(lineageTriples(tmp, "snap1") === dataTriples(tmp))
     // resume with the FULL input: only bucket 3 is recomputed
     val n2 = ResumableJob.runResumable(spark, raw, tmp, buckets, "snap1")
     assert(n2 === 1)
     assert(ResumableJob.readData(spark, tmp).count() === raw.count())
-    assert(lineageTriples(tmp) === dataTriples(tmp))
+    assert(lineageTriples(tmp, "snap1") === dataTriples(tmp))
     // lineage rows carry per-partition metrics
     val lin = ResumableJob.readLineage(spark, tmp)
     assert(lin.columns.toSet ===
@@ -124,6 +126,30 @@ class PipelineSpec extends AnyFunSuite {
     }
     // idempotent: a third run computes nothing
     assert(ResumableJob.runResumable(spark, raw, tmp, buckets, "snap1") === 0)
+    // a new snapshot without bucket 3: lineage holds exactly the 7 buckets
+    // it computed, and bucket 3's data from snap1 stays
+    val before = dataTriples(tmp)
+    assert(ResumableJob.runResumable(spark, partial, tmp, buckets, "snap2") === buckets - 1)
+    val after = dataTriples(tmp)
+    assert(after(3) === before(3))
+    assert(lineageTriples(tmp, "snap2") === after - 3)
+  }
+
+  test("a first resumable run is the fused write plus the lineage append: at most 4 jobs") {
+    val raw = DocGen.rawDocs(spark, sfDir)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-resume-jobs").toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    SpecAccess.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(ResumableJob.runResumable(spark, raw, tmp, 8, "snap1") === 8)
+      SpecAccess.drain(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get <= 4, s"${jobs.get} Spark jobs")
   }
 
   test("resume fails loudly on an unreadable lineage table instead of recomputing") {
@@ -153,19 +179,6 @@ class PipelineSpec extends AnyFunSuite {
           s"p = $p: partition $i holds buckets ${parts.get(i).map(_.distinct.toSeq)}")
       }
     }
-  }
-
-  test("P3 observe: corpus metrics ride along with the job") {
-    import org.apache.spark.sql.Observation
-    val raw = DocGen.rawDocs(spark, sfDir)
-    val obs = Observation("graft")
-    val out = ExtractionPipeline.withMetrics(ExtractionPipeline.run(spark, raw), obs)
-    val total = out.count()
-    val m = obs.get
-    assert(m("docs") === total)
-    assert(m("rejects").asInstanceOf[Long] >= 0L)
-    assert(m("spans").asInstanceOf[Long] > 0L)
-    assert(m("entities").asInstanceOf[Long] > 0L)
   }
 
   test("a deeply nested page is a reject row naming StackOverflowError, not a dead executor") {

@@ -1,12 +1,13 @@
 package graft.textops
 
 import graft.util.Harness
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SpecAccess}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** t10 connected components: min-label propagation must traverse chains
-  * (multiple rounds), keep disjoint components apart, and converge.
+  * (multiple rounds), keep disjoint components apart, converge, and
+  * leave no persisted round frame behind.
   */
 class DupGroupsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -20,8 +21,10 @@ class DupGroupsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // component B: pair 10-11; component C: triangle 20-21-22
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L)).toDF("a", "b")
+    val cached = SpecAccess.cachedPlans(spark)
     val comp = TextOps.connectedComponents(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(SpecAccess.cachedPlans(spark) <= cached, "the rounds' persisted frames are released")
     assert((1L to 5L).forall(comp(_) == 1L), s"chain: $comp")
     assert(comp(10L) == 10L && comp(11L) == 10L)
     assert((20L to 22L).forall(comp(_) == 20L))
