@@ -60,8 +60,9 @@ object SparkEntry {
   /** Gazetteer realism tier: the full pipeline re-run under a
     * 430k-pattern corpus bundle (the reference's name-corpus scale,
     * `knowledge/corpus/foundation_data/`: 429K first / 99K last names),
-    * exercising generate → persist parquet → loadVersioned
-    * (snapshot-hash) → broadcast → per-JVM automaton build end-to-end.
+    * exercising generate → loadVersioned (snapshot-hash) → broadcast →
+    * per-JVM automaton build end-to-end (CorpusTableSpec covers the
+    * parquet round trip of a corpus table).
     * The tier is hermetic w.r.t. the synthesis fixtures (pinned by
     * CorpusTableSpec), so the SAME reconstruction oracles gate this
     * run — installing 430k patterns must change nothing on fixture
@@ -72,28 +73,8 @@ object SparkEntry {
   private def bigExtracted(s: SparkSession, dir: String): Dataset[ExtractedDoc] =
     runs.getOrElseUpdate(s, s"big:$dir") {
       import s.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graft-corpus-big")
-      graft.matching.CorpusGen.rowsAt(BigTierTarget).toDF("kind", "value", "meta")
-        .write.mode("overwrite").parquet(s"$tmp/corpus.parquet")
       val bundle = graft.matching.CorpusTable.loadVersioned(
-        s, s.read.parquet(s"$tmp/corpus.parquet"))
-      // loadVersioned collected the table; the on-disk copy has no
-      // further reader — delete it rather than leak one 430k-row
-      // parquet per (session, dir) bench run. The walk stream must be
-      // closed (it holds directory handles), and a failed delete is
-      // logged rather than swallowed — a silent failure IS the leak
-      // this block exists to prevent
-      locally {
-        import scala.jdk.CollectionConverters._
-        val leftover = scala.util.Using.resource(java.nio.file.Files.walk(tmp)) {
-          _.iterator().asScala.toSeq.reverse.filterNot { p =>
-            try { java.nio.file.Files.deleteIfExists(p); true }
-            catch { case _: java.io.IOException => false }
-          }
-        }
-        if (leftover.nonEmpty)
-          System.err.println(s"[graft] big-corpus temp cleanup left ${leftover.size} paths under $tmp")
-      }
+        s, graft.matching.CorpusGen.rowsAt(BigTierTarget).toDF("kind", "value", "meta"))
       // run() captures the driver's active bundle eagerly, so the
       // install/restore window only needs to span the run() call; the
       // broadcast keeps the big bundle alive for lazy task execution

@@ -111,21 +111,12 @@ object Core8Extractor {
   def preferRanges(ranges: Seq[EntityMention], singles: Seq[EntityMention]): Seq[EntityMention] =
     ranges ++ singles.filter(s => !ranges.exists(r => s.start >= r.start && s.end <= r.end))
 
-  /** E17: canonical overlap resolver — sort by span length desc then
-    * start asc; drop already-seen values (case-insensitive) and any
-    * overlap with accepted spans (`service_processor.py:1380-1421`).
+  /** E17: the canonical overlap resolver, [[AhoCorasick.longestFirst]],
+    * keyed on the case-insensitive value: a mention is dropped when it
+    * overlaps an accepted span or repeats an accepted value.
     */
-  def dedupLongestFirst(entities: Seq[EntityMention]): Seq[EntityMention] = {
-    val sorted = entities.sortBy(e => (-(e.end - e.start), e.start))
-    val seen = scala.collection.mutable.HashSet.empty[String]
-    val taken = new ArrayBuffer[EntityMention]
-    sorted.foreach { e =>
-      val key = e.value.toLowerCase
-      val overlaps = taken.exists(t => e.start < t.end && t.start < e.end)
-      if (!seen.contains(key) && !overlaps) { seen += key; taken += e }
-    }
-    taken.sortBy(_.start).toSeq
-  }
+  def dedupLongestFirst(entities: Seq[EntityMention]): Seq[EntityMention] =
+    AhoCorasick.longestFirst(entities)(_.start, _.end, _.value.toLowerCase)
 
   // -------------------------------------------------------------- person
 

@@ -37,8 +37,19 @@ object SpoExtractor {
       objectGroup: Int,
       triggers: Seq[Seq[String]])
 
-  /** A versioned pattern set — the unit that gets broadcast/installed. */
-  final case class SpoPatternSet(version: String, patterns: Seq[SpoPatternConfig])
+  /** A versioned pattern set — the unit that gets broadcast/installed.
+    * It compiles its own rows, once per instance: on first use in the
+    * driver, and on first use of each deserialized copy in an executor
+    * JVM (a broadcast set is one copy per executor). The compiled form
+    * belongs to these rows, so two sets that share a version string but
+    * differ in rows can never serve each other's patterns.
+    */
+  final case class SpoPatternSet(version: String, patterns: Seq[SpoPatternConfig]) {
+    @transient private[SpoExtractor] lazy val compiled: Seq[FactPattern] =
+      patterns.map(c => FactPattern(
+        java.util.regex.Pattern.compile(c.regex), c.factType, c.predicate,
+        c.base, c.actionable, c.subjectGroup, c.objectGroup, c.triggers))
+  }
 
   /** Trigger-clause wire format for config tables: clauses joined by
     * ';', alternatives by '|' ("fine|penalt;$" = (fine OR penalt) AND $).
@@ -57,8 +68,7 @@ object SpoExtractor {
       SpoPatternConfig(n, rx, ft, pr, b, a, sg, og, parseTriggers(tr))
     })
 
-  // compiled form, cached per JVM keyed by set version (executors
-  // compile a broadcast set once, not per task)
+  // the compiled form of one pattern row
   private final case class FactPattern(
       rx: java.util.regex.Pattern,
       factType: String,
@@ -68,24 +78,6 @@ object SpoExtractor {
       subjectGroup: Int,
       objectGroup: Int,
       triggers: Seq[Seq[String]])
-
-  private val compiledCache =
-    scala.collection.concurrent.TrieMap.empty[Seq[SpoPatternConfig], Seq[FactPattern]]
-
-  private def compiled(set: SpoPatternSet): Seq[FactPattern] = {
-    // keyed by the pattern rows THEMSELVES (structural equality), not the
-    // version string or a 32-bit hash of the rows: two fromRows() calls
-    // reusing a version with different rows must compile their own sets,
-    // never silently serve the first set's patterns — and a hash key
-    // would only make that collision improbable, not impossible
-    val key = set.patterns
-    compiledCache.getOrElseUpdate(key, {
-      if (compiledCache.size > 8) compiledCache.clear() // bound test churn
-      set.patterns.map(c => FactPattern(
-        java.util.regex.Pattern.compile(c.regex), c.factType, c.predicate,
-        c.base, c.actionable, c.subjectGroup, c.objectGroup, c.triggers))
-    })
-  }
 
   /** The built-in set: the DocTest-fixture semantics, now expressed as
     * the default CONFIG rather than compiled-in behavior.
@@ -218,11 +210,11 @@ object SpoExtractor {
   /** Extract facts from clean (normalized) markdown. Context = the
     * containing sentence; span = match offsets in the clean text. The
     * pattern table is DATA (broadcast a non-default SpoPatternSet to
-    * change fact coverage without recompiling); compiled per JVM.
+    * change fact coverage without recompiling); each set compiles once.
     */
   def extract(cleanText: String, patternSet: SpoPatternSet = defaultPatterns): Seq[Fact] = {
     val sentences = Core8Extractor.splitSentences(cleanText)
-    val pats = compiled(patternSet)
+    val pats = patternSet.compiled
     val out = new ArrayBuffer[Fact]
     sentences.foreach { case (sentence, sentStart) =>
       // the gate string folds ALL whitespace to plain spaces: sentences

@@ -1,6 +1,7 @@
 package graft.html
 
 import scala.collection.mutable.ArrayBuffer
+import scala.runtime.IntRef
 
 /** From-scratch, dependency-free HTML lexer + lenient DOM-lite builder.
   *
@@ -59,27 +60,38 @@ object HtmlParser {
     val root = Node.elem("#root", Map.empty)
     val stack = new ArrayBuffer[Node]
     stack += root
+    // open elements per tag name, each element's counter kept beside it
+    // in `counts`: an unmatched close tag costs one lookup, and a matched
+    // one pops exactly what it scans
+    val openCount = new java.util.HashMap[String, IntRef]
+    val counts = new ArrayBuffer[IntRef]
+    val none = new IntRef(0)
     def top = stack(stack.length - 1)
-    def text(t: String): Unit = top.children += Node.textNode(t)
-    def close(name: String): Unit = { // unmatched close tags are ignored
-      var idx = -1
-      var k = stack.length - 1
-      while (k >= 1 && idx < 0) { if (stack(k).tag == name) idx = k; k -= 1 }
-      if (idx >= 0) stack.remove(idx, stack.length - idx)
+    def pop(): String = {
+      counts.remove(counts.length - 1).elem -= 1
+      stack.remove(stack.length - 1).tag
     }
+    def text(t: String): Unit = top.children += Node.textNode(t)
+    def close(name: String): Unit = // unmatched close tags are ignored
+      if (top.tag == name || openCount.getOrDefault(name, none).elem > 0) while (pop() != name) {}
     def open(name: String, attrs: Map[String, String], selfClosing: Boolean): Unit = {
       // implied closes (lenient HTML recovery)
-      if (closesP.contains(name) && top.tag == "p") stack.remove(stack.length - 1)
-      if (name == "li" && top.tag == "li") stack.remove(stack.length - 1)
-      if ((name == "td" || name == "th") && (top.tag == "td" || top.tag == "th"))
-        stack.remove(stack.length - 1)
+      if (closesP.contains(name) && top.tag == "p") pop()
+      if (name == "li" && top.tag == "li") pop()
+      if ((name == "td" || name == "th") && (top.tag == "td" || top.tag == "th")) pop()
       if (name == "tr") {
-        if (top.tag == "td" || top.tag == "th") stack.remove(stack.length - 1)
-        if (top.tag == "tr") stack.remove(stack.length - 1)
+        if (top.tag == "td" || top.tag == "th") pop()
+        if (top.tag == "tr") pop()
       }
       val node = Node.elem(name, attrs)
       top.children += node
-      if (!selfClosing && !voidElems.contains(name)) stack += node
+      if (!selfClosing && !voidElems.contains(name)) {
+        var count = openCount.get(name)
+        if (count == null) { count = new IntRef(0); openCount.put(name, count) }
+        count.elem += 1
+        stack += node
+        counts += count
+      }
     }
 
     val n = s.length

@@ -95,7 +95,7 @@ object MarkdownEmitter {
           else sb.append(txt)
         case "img" =>
           val src = ch.attr("src")
-          val alt = collapseWs(Entities.unescape(ch.attr("alt")))
+          val alt = collapseWs(ch.attr("alt"))
           if (src.nonEmpty) { flush(); ctx.emit(K.ImageRef, alt, resolveUrl(ctx.baseUrl, src)) }
           else sb.append("[Image: ").append(alt).append("]")
         case "br" => sb.append(' ')
@@ -204,7 +204,7 @@ object MarkdownEmitter {
         case "hr" => ctx.emit(K.Rule, "---")
         case "img" =>
           val src = ch.attr("src")
-          val alt = collapseWs(Entities.unescape(ch.attr("alt")))
+          val alt = collapseWs(ch.attr("alt"))
           if (src.nonEmpty) ctx.emit(K.ImageRef, alt, resolveUrl(ctx.baseUrl, src))
           else ctx.emit(K.Text, s"[Image: $alt]")
         case "figure" =>

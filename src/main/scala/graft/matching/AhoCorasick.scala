@@ -71,21 +71,35 @@ final class AhoCorasick private (
       (h.end == text.length || !isWordChar(text.charAt(h.end)))
     }
 
-  /** Longest-match-wins, left-to-right, non-overlapping selection —
-    * the canonical overlap resolver (reference dedup semantics,
-    * `service_processor.py:1380-1421`: length desc, then start asc).
+  /** Longest-match-wins, left-to-right, non-overlapping whole-word
+    * matches: [[AhoCorasick.longestFirst]] over `findWholeWords`.
     */
-  def findLongestNonOverlapping(text: String): IndexedSeq[Hit] = {
-    val hits = findWholeWords(text).sortBy(h => (-(h.end - h.start), h.start))
-    val taken = new ArrayBuffer[Hit]
-    hits.foreach { h =>
-      if (!taken.exists(t => h.start < t.end && t.start < h.end)) taken += h
-    }
-    taken.sortBy(_.start).toIndexedSeq
-  }
+  def findLongestNonOverlapping(text: String): IndexedSeq[Hit] =
+    AhoCorasick.longestFirst(findWholeWords(text))(_.start, _.end)
 }
 
 object AhoCorasick {
+
+  /** The one overlap resolver (reference dedup semantics,
+    * `service_processor.py:1380-1421`): visit the items by length desc,
+    * then start asc (equal ones in input order), and keep an item when
+    * its [start, end) overlaps no kept item and its key equals no kept
+    * item's key. The key defaults to the item itself. Returns the kept
+    * items sorted by start. The overlap test scans the kept items, so
+    * the cost is O(n × kept).
+    */
+  def longestFirst[T](items: Seq[T])(start: T => Int, end: T => Int,
+      key: T => Any = (t: T) => t): IndexedSeq[T] = {
+    val taken = new ArrayBuffer[T]
+    val keys = scala.collection.mutable.HashSet.empty[Any]
+    items.sortBy(t => (start(t) - end(t), start(t))).foreach { t =>
+      val k = key(t)
+      if (!keys.contains(k) && !taken.exists(o => start(t) < end(o) && start(o) < end(t))) {
+        keys += k; taken += t
+      }
+    }
+    taken.sortBy(start).toIndexedSeq
+  }
 
   def build(patternsIn: Seq[String]): AhoCorasick = {
     val patterns = patternsIn.map(_.toLowerCase).toArray

@@ -116,14 +116,19 @@ object Normalizer {
     }
   }
 
-  def sameOrg(a: String, b: String): Boolean = {
-    def core(s: String) = {
-      val t = normalizeOrgName(s).toLowerCase
-      legalSuffixNorm.keysIterator.foldLeft(t)((acc, suf) => acc.stripSuffix(" " + suf))
-        .stripSuffix(" inc").stripSuffix(" corp").stripSuffix(" ltd").stripSuffix(" co").trim
-    }
-    core(a) == core(b) || trigramSimilarity(a, b) >= 0.6
+  /** An ORG name's comparison form: (core, name), where the core is the
+    * lowercased normalized name without its legal suffix.
+    */
+  private def orgForm(name: String): (String, String) = {
+    val t = normalizeOrgName(name).toLowerCase
+    val core = legalSuffixNorm.keysIterator.foldLeft(t)((acc, suf) => acc.stripSuffix(" " + suf))
+      .stripSuffix(" inc").stripSuffix(" corp").stripSuffix(" ltd").stripSuffix(" co").trim
+    (core, name)
   }
+
+  /** Same organization: equal cores, or trigram similarity ≥ 0.6. */
+  private def sameOrg(a: (String, String), b: (String, String)): Boolean =
+    a._1 == b._1 || trigramSimilarity(a._2, b._2) >= 0.6
 
   // --------------------------------------------------------- value types
 
@@ -224,30 +229,31 @@ object Normalizer {
     (canonical, v, cur)
   }
 
+  private val toMeters = Map(
+    "feet" -> 0.3048, "foot" -> 0.3048, "ft" -> 0.3048,
+    "inches" -> 0.0254, "inch" -> 0.0254,
+    "yards" -> 0.9144, "yard" -> 0.9144, "yd" -> 0.9144,
+    "miles" -> 1609.344, "mile" -> 1609.344, "mi" -> 1609.344,
+    "meters" -> 1.0, "meter" -> 1.0, "metres" -> 1.0, "metre" -> 1.0, "m" -> 1.0,
+    "centimeters" -> 0.01, "centimeter" -> 0.01, "cm" -> 0.01,
+    "millimeters" -> 0.001, "millimeter" -> 0.001, "mm" -> 0.001,
+    "kilometers" -> 1000.0, "kilometer" -> 1000.0, "km" -> 1000.0)
+  private val toKg = Map(
+    "pounds" -> 0.45359237, "pound" -> 0.45359237, "lbs" -> 0.45359237, "lb" -> 0.45359237,
+    "ounces" -> 0.028349523125, "ounce" -> 0.028349523125, "oz" -> 0.028349523125,
+    "kilograms" -> 1.0, "kilogram" -> 1.0, "kg" -> 1.0,
+    "grams" -> 0.001, "gram" -> 0.001, "g" -> 0.001,
+    "tons" -> 907.18474, "ton" -> 907.18474, "tonnes" -> 1000.0, "tonne" -> 1000.0)
+  private val measurementRx = java.util.regex.Pattern.compile(
+    "(?i)(\\d+(?:\\.\\d+)?)(?:\\s*(?:-|–|to|through)\\s*(\\d+(?:\\.\\d+)?))?\\s*([a-z°%]+)")
+
   /** N8: MEASUREMENT → metric (length→meters, weight→kg, temp→°C),
     * range-aware (`entity_normalizer.py:956-1102,1881-1965`).
     * Returns (canonical metric string, value, unit) — non-convertible
     * units pass through.
     */
   def normalizeMeasurement(s: String): (String, Double, String) = {
-    val toMeters = Map(
-      "feet" -> 0.3048, "foot" -> 0.3048, "ft" -> 0.3048,
-      "inches" -> 0.0254, "inch" -> 0.0254,
-      "yards" -> 0.9144, "yard" -> 0.9144, "yd" -> 0.9144,
-      "miles" -> 1609.344, "mile" -> 1609.344, "mi" -> 1609.344,
-      "meters" -> 1.0, "meter" -> 1.0, "metres" -> 1.0, "metre" -> 1.0, "m" -> 1.0,
-      "centimeters" -> 0.01, "centimeter" -> 0.01, "cm" -> 0.01,
-      "millimeters" -> 0.001, "millimeter" -> 0.001, "mm" -> 0.001,
-      "kilometers" -> 1000.0, "kilometer" -> 1000.0, "km" -> 1000.0)
-    val toKg = Map(
-      "pounds" -> 0.45359237, "pound" -> 0.45359237, "lbs" -> 0.45359237, "lb" -> 0.45359237,
-      "ounces" -> 0.028349523125, "ounce" -> 0.028349523125, "oz" -> 0.028349523125,
-      "kilograms" -> 1.0, "kilogram" -> 1.0, "kg" -> 1.0,
-      "grams" -> 0.001, "gram" -> 0.001, "g" -> 0.001,
-      "tons" -> 907.18474, "ton" -> 907.18474, "tonnes" -> 1000.0, "tonne" -> 1000.0)
-    val rx = java.util.regex.Pattern.compile(
-      "(?i)(\\d+(?:\\.\\d+)?)(?:\\s*(?:-|–|to|through)\\s*(\\d+(?:\\.\\d+)?))?\\s*([a-z°%]+)")
-    val m = rx.matcher(s)
+    val m = measurementRx.matcher(s)
     if (!m.find()) return (s, 0.0, "")
     val v1 = m.group(1).toDouble
     val v2o = Option(m.group(2)).map(_.toDouble)
@@ -280,18 +286,19 @@ object Normalizer {
     else s
   }
 
+  private val agencyByTitle: Map[(Int, String), String] = Map(
+    (29, "CFR") -> "OSHA", (40, "CFR") -> "EPA", (21, "CFR") -> "FDA",
+    (49, "CFR") -> "DOT", (17, "CFR") -> "SEC", (26, "USC") -> "IRS",
+    (29, "USC") -> "DOL", (42, "USC") -> "HHS")
+  private val regulationRx = java.util.regex.Pattern.compile(
+    "(\\d+)\\s+(CFR|USC|C\\.F\\.R\\.|U\\.S\\.C\\.)\\s*(?:Part\\s+)?§?\\s*(\\d+)(?:\\.(\\d+))?")
+
   /** N10: REGULATION structure (agency map 29 CFR→OSHA etc.,
     * `entity_normalizer.py:1142-1180,1605-1715`).
     * Returns (agency, title, part, section).
     */
   def parseRegulation(s: String): (String, Int, String, String) = {
-    val agencyByTitle: Map[(Int, String), String] = Map(
-      (29, "CFR") -> "OSHA", (40, "CFR") -> "EPA", (21, "CFR") -> "FDA",
-      (49, "CFR") -> "DOT", (17, "CFR") -> "SEC", (26, "USC") -> "IRS",
-      (29, "USC") -> "DOL", (42, "USC") -> "HHS")
-    val rx = java.util.regex.Pattern.compile(
-      "(\\d+)\\s+(CFR|USC|C\\.F\\.R\\.|U\\.S\\.C\\.)\\s*(?:Part\\s+)?§?\\s*(\\d+)(?:\\.(\\d+))?")
-    val m = rx.matcher(s)
+    val m = regulationRx.matcher(s)
     if (!m.find()) return ("", 0, "", "")
     val title = m.group(1).toInt
     val code = m.group(2).replace(".", "") match {
@@ -310,44 +317,51 @@ object Normalizer {
     case "MONEY" => normalizeMoney(value)._1
     case "MEASUREMENT" => normalizeMeasurement(value)._1
     case "PHONE" => normalizePhone(value)
-    case "ORG" => normalizeOrgName(value)
-    case "PERSON" => cleanPersonName(value)
     case "EMAIL" | "URL" => value.toLowerCase
     case _ => value
   }
 
+  /** First-match grouping for PERSON and ORG, whose equivalence is not
+    * transitive: a mention joins the first group whose head's form it
+    * matches. `form` runs once per mention, not once per comparison.
+    */
+  private def firstMatch[F](ordered: Seq[EntityMention], form: String => F)(
+      same: (F, F) => Boolean): Seq[ArrayBuffer[EntityMention]] = {
+    val groups = new ArrayBuffer[(F, ArrayBuffer[EntityMention])]
+    ordered.foreach { e =>
+      val f = form(e.value)
+      groups.find(g => same(g._1, f)) match {
+        case Some((_, grp)) => grp += e
+        case None => groups += ((f, ArrayBuffer(e)))
+      }
+    }
+    groups.map(_._2).toSeq
+  }
+
   /** N1-N4: group mentions of one type into canonical entities, allocate
-    * ids in first-mention order (p001, p002, …).
+    * ids in first-mention order (p001, p002, …). PERSON and ORG group by
+    * first match (`sameperson`, `sameOrg`); every other type groups by
+    * its normalized form, computed once per mention, and that form is
+    * the group's `normalized` value.
     */
   def canonicalize(entities: Seq[EntityMention]): Seq[CanonicalEntity] = {
     val out = new ArrayBuffer[CanonicalEntity]
     entities.groupBy(_.`type`).toSeq.sortBy(_._1).foreach { case (tpe, ents) =>
       val ordered = ents.sortBy(_.start)
-      // group-by equivalence
-      val groups = new ArrayBuffer[ArrayBuffer[EntityMention]]
-      ordered.foreach { e =>
-        val g = groups.find { grp =>
-          tpe match {
-            case "PERSON" =>
-              sameperson(cleanPersonName(grp.head.value), cleanPersonName(e.value))
-            case "ORG" => sameOrg(grp.head.value, e.value)
-            case _ =>
-              normalizedFormOf(tpe, grp.head.value) == normalizedFormOf(tpe, e.value)
-          }
-        }
-        g match {
-          case Some(grp) => grp += e
-          case None => groups += ArrayBuffer(e)
-        }
+      // (normalized, mentions) per group, in first-mention order
+      val groups: Seq[(String, ArrayBuffer[EntityMention])] = tpe match {
+        case "PERSON" => firstMatch(ordered, cleanPersonName)(sameperson).map(grp =>
+          (canonicalPersonForm(grp.map(e => cleanPersonName(e.value)).toSeq), grp))
+        case "ORG" => firstMatch(ordered, orgForm)(sameOrg).map(grp =>
+          (normalizeOrgName(grp.map(_.value).maxBy(_.length)), grp))
+        case _ =>
+          val byForm = new LinkedHashMap[String, ArrayBuffer[EntityMention]]
+          ordered.foreach(e => byForm.getOrElseUpdate(normalizedFormOf(tpe, e.value), new ArrayBuffer) += e)
+          byForm.toSeq
       }
       val prefix = idPrefix.getOrElse(tpe, tpe.toLowerCase.take(2))
-      groups.zipWithIndex.foreach { case (grp, gi) =>
+      groups.zipWithIndex.foreach { case ((normalized, grp), gi) =>
         val variants = grp.map(_.value).distinct.toSeq
-        val normalized = tpe match {
-          case "PERSON" => canonicalPersonForm(variants.map(cleanPersonName))
-          case "ORG" => normalizeOrgName(variants.maxBy(_.length))
-          case _ => normalizedFormOf(tpe, grp.head.value)
-        }
         out += CanonicalEntity(
           id = f"$prefix${gi + 1}%03d",
           `type` = tpe,
@@ -379,28 +393,19 @@ object Normalizer {
         }
       }
     }
-    val pats = patterns.keys.toSeq
-    val ac = AhoCorasick.build(pats)
-    val hits = ac.findAll(text)
+    val hits = AhoCorasick.build(patterns.keys.toSeq).findAll(text)
       .filter { h => // word-boundary on the inner text (wrappers are non-word anyway)
         (h.start == 0 || !Character.isLetterOrDigit(text.charAt(h.start - 1)) ||
           !Character.isLetterOrDigit(text.charAt(h.start))) &&
         (h.end == text.length || !Character.isLetterOrDigit(text.charAt(h.end)) ||
           !Character.isLetterOrDigit(text.charAt(h.end - 1)))
       }
-      .sortBy(h => (-(h.end - h.start), h.start))
-    val taken = new ArrayBuffer[(Int, Int, String)] // start, end, replacement
-    hits.foreach { h =>
-      if (!taken.exists(t => h.start < t._2 && t._1 < h.end)) {
-        val (canon, id) = patterns(h.pattern)
-        taken += ((h.start, h.end, s"‖$canon‖$id‖"))
-      }
-    }
     val sb = new java.lang.StringBuilder
     var pos = 0
-    taken.sortBy(_._1).foreach { case (s, e, rep) =>
-      sb.append(text, pos, s).append(rep)
-      pos = e
+    AhoCorasick.longestFirst(hits)(_.start, _.end).foreach { h =>
+      val (canon, id) = patterns(h.pattern)
+      sb.append(text, pos, h.start).append(s"‖$canon‖$id‖")
+      pos = h.end
     }
     sb.append(text.substring(pos))
     sb.toString

@@ -166,17 +166,28 @@ object ExtractionPipeline {
   }
 
   /** The one fused stage of `run` and `runCounting`: the `doc_id`
-    * shuffle, then `f` over each partition. The driver's active corpus
-    * bundle (built-in or table-loaded) ships to every executor as one
-    * broadcast, installed idempotently per JVM per version at partition
-    * start (no-op when already current).
+    * shuffle, then `f` over each partition with the corpus shipped.
     */
   private def fused[T: Encoder](spark: SparkSession, raw: Dataset[RawDoc],
       partitions: Int)(f: Iterator[RawDoc] => Iterator[T]): Dataset[T] = {
+    val p = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism * 2
+    withCorpus(spark, salted(raw, p))(f)
+  }
+
+  /** `f` over each partition of `docs`, with the driver's active corpus
+    * bundle (built-in or table-loaded) shipped to every executor as one
+    * broadcast and installed idempotently per JVM per version at
+    * partition start (no-op when already current). Batch and streaming
+    * extraction both go through here: a path that skipped it would apply
+    * a table-loaded gazetteer on one side only, a divergence invisible
+    * in local mode (driver and executors share a JVM) and to span-level
+    * parity gates (spans are bundle-blind).
+    */
+  private[graft] def withCorpus[T: Encoder](spark: SparkSession, docs: Dataset[RawDoc])(
+      f: Iterator[RawDoc] => Iterator[T]): Dataset[T] = {
     val installCorpus = graft.matching.CorpusTable.broadcastInstaller(
       spark, graft.matching.Corpora.bundle)
-    val p = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism * 2
-    salted(raw, p).mapPartitions { it => installCorpus(); f(it) }
+    docs.mapPartitions { it => installCorpus(); f(it) }
   }
 
   /** Throughput-measurement variant: run the fused stage and fold

@@ -24,19 +24,9 @@ object DocStream {
   def extract(spark: SparkSession, raw: Dataset[RawDoc],
       config: ExtractionPipeline.PipelineConfig = ExtractionPipeline.PipelineConfig()): Dataset[ExtractedDoc] = {
     import spark.implicits._
-    // ship the driver's active corpus bundle exactly like the batch path
-    // (ExtractionPipeline.run): one broadcast, an idempotent install per
-    // executor JVM. Without this, a table-loaded gazetteer would apply to
-    // batch extraction but not to streamed docs — a silent stream/batch
-    // divergence invisible in local mode (driver and executors share a
-    // JVM) and on the span-level parity gate (spans are bundle-blind).
-    // The config param mirrors run()'s for the same reason: a deployment
-    // that batches with html2text must be able to stream with it too.
-    val installCorpus = graft.matching.CorpusTable.broadcastInstaller(
-      spark, graft.matching.Corpora.bundle)
-    raw.mapPartitions { it =>
-      installCorpus(); it.map(ExtractionPipeline.processDoc(_, config))
-    }
+    // the config param mirrors run()'s: a deployment that batches with
+    // html2text must be able to stream with it too
+    ExtractionPipeline.withCorpus(spark, raw)(_.map(ExtractionPipeline.processDoc(_, config)))
   }
 
   /** Stream/batch parity replay harness (the q18 pattern): drive the raw

@@ -3,7 +3,8 @@ package graft
 import graft.extract.Core8Extractor
 import graft.html.{Boilerplate, HtmlExtractor, HtmlParser}
 import graft.html.HtmlParser.Node
-import graft.model.{PdfBlock, Span}
+import graft.matching.AhoCorasick
+import graft.model.{CanonicalEntity, EntityMention, Mention, PdfBlock, Span}
 import graft.normalize.Normalizer
 import graft.pdf.PdfExtractor
 import graft.pipeline.ExtractionPipeline
@@ -11,6 +12,7 @@ import graft.sources.DocGen
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable.ArrayBuffer
 
 /** Property tests for the engine's core invariants (SURVEY.md §5):
   * span offsets strictly monotone, entity spans in-bounds and
@@ -234,6 +236,268 @@ class PropertySpec extends AnyFunSuite {
       val spans = graft.extract.UniversalFallback.extract(s"f$i", content)
       assert(spans.nonEmpty, s"no span for seed $i")
       assert(spans.forall(_.text.nonEmpty))
+    }
+  }
+
+  // P10's reference: the canonicalizer as it was before each mention was
+  // keyed once. Every (mention, group) pair recomputes both sides' forms.
+  private val refIdPrefix: Map[String, String] = Map(
+    "PERSON" -> "p", "ORG" -> "o", "GPE" -> "g", "LOC" -> "l",
+    "DATE" -> "d", "TIME" -> "t", "MONEY" -> "m", "MEASUREMENT" -> "ms",
+    "PHONE" -> "ph", "EMAIL" -> "em", "URL" -> "ur", "REGULATION" -> "rg")
+  private val refLegalSuffixNorm = Map(
+    "incorporated" -> "Inc", "inc" -> "Inc", "inc." -> "Inc",
+    "corporation" -> "Corp", "corp" -> "Corp", "corp." -> "Corp",
+    "limited" -> "Ltd", "ltd" -> "Ltd", "ltd." -> "Ltd",
+    "llc" -> "LLC", "llp" -> "LLP", "company" -> "Co", "co." -> "Co")
+
+  private def refSameOrg(a: String, b: String): Boolean = {
+    def core(s: String) = {
+      val t = Normalizer.normalizeOrgName(s).toLowerCase
+      refLegalSuffixNorm.keysIterator.foldLeft(t)((acc, suf) => acc.stripSuffix(" " + suf))
+        .stripSuffix(" inc").stripSuffix(" corp").stripSuffix(" ltd").stripSuffix(" co").trim
+    }
+    core(a) == core(b) || Normalizer.trigramSimilarity(a, b) >= 0.6
+  }
+
+  private def refNormalizedFormOf(tpe: String, value: String): String = tpe match {
+    case "DATE" => Normalizer.normalizeDate(value)._1
+    case "TIME" => Normalizer.normalizeTime(value)
+    case "MONEY" => Normalizer.normalizeMoney(value)._1
+    case "MEASUREMENT" => Normalizer.normalizeMeasurement(value)._1
+    case "PHONE" => Normalizer.normalizePhone(value)
+    case "ORG" => Normalizer.normalizeOrgName(value)
+    case "PERSON" => Normalizer.cleanPersonName(value)
+    case "EMAIL" | "URL" => value.toLowerCase
+    case _ => value
+  }
+
+  private def pairwiseCanonicalize(entities: Seq[EntityMention]): Seq[CanonicalEntity] = {
+    import Normalizer.{canonicalPersonForm, cleanPersonName, normalizeOrgName, sameperson}
+    val out = new ArrayBuffer[CanonicalEntity]
+    entities.groupBy(_.`type`).toSeq.sortBy(_._1).foreach { case (tpe, ents) =>
+      val ordered = ents.sortBy(_.start)
+      val groups = new ArrayBuffer[ArrayBuffer[EntityMention]]
+      ordered.foreach { e =>
+        val g = groups.find { grp =>
+          tpe match {
+            case "PERSON" =>
+              sameperson(cleanPersonName(grp.head.value), cleanPersonName(e.value))
+            case "ORG" => refSameOrg(grp.head.value, e.value)
+            case _ =>
+              refNormalizedFormOf(tpe, grp.head.value) == refNormalizedFormOf(tpe, e.value)
+          }
+        }
+        g match {
+          case Some(grp) => grp += e
+          case None => groups += ArrayBuffer(e)
+        }
+      }
+      val prefix = refIdPrefix.getOrElse(tpe, tpe.toLowerCase.take(2))
+      groups.zipWithIndex.foreach { case (grp, gi) =>
+        val variants = grp.map(_.value).distinct.toSeq
+        val normalized = tpe match {
+          case "PERSON" => canonicalPersonForm(variants.map(cleanPersonName))
+          case "ORG" => normalizeOrgName(variants.maxBy(_.length))
+          case _ => refNormalizedFormOf(tpe, grp.head.value)
+        }
+        out += CanonicalEntity(
+          id = f"$prefix${gi + 1}%03d",
+          `type` = tpe,
+          normalized = normalized,
+          aliases = variants,
+          count = grp.length,
+          mentions = grp.map(e => Mention(e.text, e.start, e.end)).toSeq)
+      }
+    }
+    out.toSeq
+  }
+
+  // mention values per type: fixed variants that group (or nearly group)
+  // with each other, plus generated ones for lists that reach the caps
+  private def valueGen(tpe: String): Gen[String] = {
+    val fixed = tpe match {
+      case "PERSON" => Seq("John Smith", "Mr. Smith", "John A. Smith", "J. Smith", "Smith",
+        "Jane Garcia", "Dr. Jane Garcia", "Garcia", "Jon Smyth", "M. Lopez", "Robert Brown Jr.")
+      case "ORG" => Seq("Acme Corp", "Acme Corporation", "Acme Inc", "Acme Co.", "ACME LTD",
+        "OSHA", "osha", "Occupational Safety and Health Administration", "EPA",
+        "Birchwood Holdings LLC", "Birchwood Holdings", "Birchwood Holding Co")
+      case "GPE" => Seq("Chicago", "chicago", "Texas")
+      case "LOC" => Seq("Lake Michigan", "lake michigan")
+      case "DATE" => Seq("March 15, 2024", "2024-03-15", "3/15/2024", "15 March 2024",
+        "March 15", "01/02/03", "Jan 2, 2003", "May")
+      case "TIME" => Seq("2:30 PM", "14:30", "2:30 pm", "12:05 am", "9 AM", "noon")
+      case "MONEY" => Seq("$2.5M", "$2,500,000", "$500", "3 billion dollars", "€1,000", "$500.00")
+      case "MEASUREMENT" => Seq("6 feet", "72 inches", "30-37 inches", "10 lbs", "4.536 kg", "45 db")
+      case "PHONE" => Seq("(555) 123-4567", "555.123.4567", "+1 555 123 4567", "911")
+      case "EMAIL" => Seq("Safety@Acme.com", "safety@acme.com", "info@x.org")
+      case "URL" => Seq("https://X.com/a", "https://x.com/a", "https://y.org")
+      case _ => Seq("29 CFR 1910.95", "29 C.F.R. 1910.95", "40 CFR 261")
+    }
+    val generated: Gen[String] = tpe match {
+      case "PERSON" => for {
+        f <- Gen.oneOf("John", "J.", "Jane", "Mr.", "Dr.", "Maria")
+        l <- Gen.oneOf("Smith", "Smyth", "Garcia", "Lopez", "Brown", "Browne")
+      } yield s"$f $l"
+      case "ORG" => for {
+        n <- Gen.oneOf("Acme", "Birchwood", "Acme Holdings", "Apex")
+        suf <- Gen.oneOf("Corp", "Corporation", "Inc", "LLC", "Co.", "Company", "Group")
+      } yield s"$n $suf"
+      case "DATE" => Gen.choose(1, 28).map(d => if (d % 2 == 0) s"March $d, 2024" else f"2024-03-$d%02d")
+      case "MONEY" => Gen.choose(1, 60).map(n => if (n % 3 == 0) s"$$${n}k" else s"$$${n * 1000}")
+      case "MEASUREMENT" => Gen.choose(1, 60).map(n => if (n % 4 == 0) s"$n inches" else s"$n feet")
+      case _ => Gen.oneOf(fixed)
+    }
+    Gen.frequency((1, Gen.oneOf(fixed)), (1, generated))
+  }
+
+  private val mentionTypes = Seq("PERSON", "ORG", "GPE", "LOC", "DATE", "TIME", "MONEY",
+    "MEASUREMENT", "PHONE", "EMAIL", "URL", "REGULATION")
+
+  private def mentionGen(tpe: String): Gen[EntityMention] = for {
+    v <- valueGen(tpe)
+    start <- Gen.choose(0, 400)
+  } yield EntityMention(v, v, tpe, start, start + v.length)
+
+  private val mentionListGen: Gen[Seq[EntityMention]] = Gen.frequency(
+    (3, Gen.resize(40, Gen.listOf(Gen.oneOf(mentionTypes).flatMap(mentionGen)))),
+    // one type at the 50-mention cap beside a few others
+    (1, for {
+      tpe <- Gen.oneOf("PERSON", "ORG", "DATE", "MONEY", "MEASUREMENT")
+      capped <- Gen.listOfN(50, mentionGen(tpe))
+      rest <- Gen.listOfN(10, Gen.oneOf(mentionTypes).flatMap(mentionGen))
+    } yield capped ++ rest))
+
+  test("P10: canonicalize groups exactly as the pairwise canonicalizer it replaced") {
+    forAll(mentionListGen, 150) { ents =>
+      assert(Normalizer.canonicalize(ents) == pairwiseCanonicalize(ents), ents)
+    }
+  }
+
+  // P11's references: the three overlap loops that AhoCorasick.longestFirst
+  // replaced, as they were (findLongestNonOverlapping's, dedupLongestFirst's
+  // and Normalizer.replaceAll's), over (start, end, id) triples
+  private def acLoop[T](hits: Seq[T])(start: T => Int, end: T => Int): IndexedSeq[T] = {
+    val sorted = hits.sortBy(h => (-(end(h) - start(h)), start(h)))
+    val taken = new ArrayBuffer[T]
+    sorted.foreach { h =>
+      if (!taken.exists(t => start(h) < end(t) && start(t) < end(h))) taken += h
+    }
+    taken.sortBy(start).toIndexedSeq
+  }
+
+  private def dedupLoop(entities: Seq[EntityMention]): Seq[EntityMention] = {
+    val sorted = entities.sortBy(e => (-(e.end - e.start), e.start))
+    val seen = scala.collection.mutable.HashSet.empty[String]
+    val taken = new ArrayBuffer[EntityMention]
+    sorted.foreach { e =>
+      val key = e.value.toLowerCase
+      val overlaps = taken.exists(t => e.start < t.end && t.start < e.end)
+      if (!seen.contains(key) && !overlaps) { seen += key; taken += e }
+    }
+    taken.sortBy(_.start).toSeq
+  }
+
+  private def replaceLoop(hits: Seq[(Int, Int, Int)]): Seq[(Int, Int, String)] = {
+    val taken = new ArrayBuffer[(Int, Int, String)] // start, end, replacement
+    hits.sortBy(h => (-(h._2 - h._1), h._1)).foreach { h =>
+      if (!taken.exists(t => h._1 < t._2 && t._1 < h._2)) taken += ((h._1, h._2, s"r${h._3}"))
+    }
+    taken.sortBy(_._1).toSeq
+  }
+
+  test("P11: longestFirst keeps exactly what the three loops it replaced kept") {
+    // narrow ranges, so equal lengths and equal starts tie often
+    val intervals = Gen.listOf(Gen.zip(Gen.choose(0, 40), Gen.choose(1, 8)))
+      .map(_.zipWithIndex.map { case ((s, len), id) => (s, s + len, id) })
+    forAll(intervals) { hits =>
+      val kept = AhoCorasick.longestFirst(hits)(_._1, _._2)
+      assert(kept == acLoop(hits)(_._1, _._2))
+      assert(kept.map(h => (h._1, h._2, s"r${h._3}")) == replaceLoop(hits))
+    }
+    val mentions = Gen.listOf(for {
+      s <- Gen.choose(0, 40)
+      len <- Gen.choose(0, 8)
+      v <- Gen.oneOf("osha", "OSHA", "Acme", "acme", "x")
+    } yield EntityMention(v, v, "ORG", s, s + len))
+    forAll(mentions)(es => assert(Core8Extractor.dedupLongestFirst(es) == dedupLoop(es)))
+    val ac = AhoCorasick.build(Seq("ab", "abc", "bc", "b", "cab", "ab ab", "c"))
+    forAll(Gen.listOf(Gen.oneOf('a', 'b', 'c', ' ')).map(_.mkString)) { text =>
+      assert(ac.findLongestNonOverlapping(text) ==
+        acLoop(ac.findWholeWords(text))(_.start, _.end), text)
+    }
+  }
+
+  // P12's reference: the soup grammar (`<name attrs>`, `</name>`, text)
+  // fed to the tree builder as it was before open elements were counted,
+  // whose every close tag scans the whole open-element stack
+  private def stackScanParse(html: String): Node = {
+    val root = Node.elem("#root", Map.empty)
+    val stack = ArrayBuffer(root)
+    def top = stack(stack.length - 1)
+    def text(t: String): Unit = top.children += Node.textNode(t)
+    def close(name: String): Unit = { // unmatched close tags are ignored
+      var idx = -1
+      var k = stack.length - 1
+      while (k >= 1 && idx < 0) { if (stack(k).tag == name) idx = k; k -= 1 }
+      if (idx >= 0) stack.remove(idx, stack.length - idx)
+    }
+    val closesP = Set(
+      "p", "div", "ul", "ol", "li", "table", "h1", "h2", "h3", "h4", "h5", "h6",
+      "blockquote", "pre", "section", "article", "nav", "header", "footer",
+      "aside", "main", "hr", "form", "figure")
+    def open(name: String, attrs: Map[String, String]): Unit = {
+      if (closesP.contains(name) && top.tag == "p") stack.remove(stack.length - 1)
+      if (name == "li" && top.tag == "li") stack.remove(stack.length - 1)
+      if ((name == "td" || name == "th") && (top.tag == "td" || top.tag == "th"))
+        stack.remove(stack.length - 1)
+      if (name == "tr") {
+        if (top.tag == "td" || top.tag == "th") stack.remove(stack.length - 1)
+        if (top.tag == "tr") stack.remove(stack.length - 1)
+      }
+      val node = Node.elem(name, attrs)
+      top.children += node
+      if (!HtmlParser.voidElems.contains(name)) stack += node
+    }
+    val attrRx = "([a-z]+)=\"([^\"]*)\"".r
+    var i = 0
+    while (i < html.length) {
+      if (html.charAt(i) == '<') {
+        val gt = html.indexOf('>', i)
+        val body = html.substring(i + 1, gt)
+        i = gt + 1
+        if (body.startsWith("/")) close(body.drop(1))
+        else {
+          val name = body.takeWhile(_ != ' ')
+          open(name, attrRx.findAllMatchIn(body).map(m => m.group(1) -> m.group(2)).toMap)
+          if (name == "script") { // raw text up to the next </script, or to the end
+            val end = html.indexOf("</script", i)
+            if (end < 0) { text(html.substring(i)); close(name); i = html.length }
+            else {
+              if (end > i) text(html.substring(i, end))
+              close(name)
+              i = html.indexOf('>', end) + 1
+            }
+          }
+        }
+      } else {
+        val lt = html.indexOf('<', i)
+        val e = if (lt < 0) html.length else lt
+        text(html.substring(i, e))
+        i = e
+      }
+    }
+    root
+  }
+
+  test("P12: counting open elements builds the tree a full stack scan builds") {
+    // the soup plus runs of implied closes (`<li>` closes an open `<li>`)
+    // and of close tags that match nothing, or something far down
+    val recovery = Gen.oneOf("<li>", "<td>", "<th>", "<tr>", "<p>", "x",
+      "</q>", "</td>", "</th>", "</tr>", "</li>", "</p>", "</span>", "</script>", "</title>")
+    val chunk = Gen.oneOf(soupGen, Gen.listOf(recovery).map(_.mkString))
+    forAll(Gen.listOfN(4, chunk).map(_.mkString)) { html =>
+      assert(dump(HtmlParser.parse(html)) == dump(stackScanParse(html)), html)
     }
   }
 }
