@@ -188,7 +188,7 @@ object SparkEntry {
     ds.select(col("doc_id"), col("spans.text").as("texts"), col("entities"))
       .as[(String, Seq[String], Seq[graft.model.EntityMention])]
       .map { case (id, texts, entities) =>
-        val r = graft.normalize.Normalizer.run(Core8Extractor.cleanText(texts.mkString("\n")), entities)
+        val r = graft.normalize.Normalizer.run(Core8Extractor.cleanTextOf(texts), entities)
         (id, r.mentionCount.toLong, r.canonicalCount.toLong, r.reductionPct,
           r.normalizedText.length.toLong)
       }
@@ -353,7 +353,7 @@ object SparkEntry {
         .select(col("doc_id"), col("spans.text").as("texts"))
         .as[(String, Seq[String])]
         .flatMap { case (id, texts) =>
-          graft.facts.SpoExtractor.extract(Core8Extractor.cleanText(texts.mkString("\n")),
+          graft.facts.SpoExtractor.extract(Core8Extractor.cleanTextOf(texts),
             graft.facts.SpoExtractor.typedPatterns)
             .filter(f => graft.facts.SpoExtractor.typedFactTypes.contains(f.fact_type))
             .map(f => (id, f.fact_type, f.subject, f.predicate,

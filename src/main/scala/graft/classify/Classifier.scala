@@ -39,21 +39,21 @@ object Classifier {
   private def domainAc = AhoCorasick.cached("classify.domain", domainPatterns)
   private def doctypeAc = AhoCorasick.cached("classify.doctype", doctypePatterns)
 
-  /** Score one keyword family. Returns percent-normalized map sorted by
-    * (-score, name) with 2-decimal rounding for stable fixtures.
+  /** Score one keyword family: each hit adds its keyword weight to its
+    * class (every domain weight is 1). Returns percent-normalized map
+    * sorted by (-score, name) with 2-decimal rounding for stable fixtures.
     */
   private def scoreFamily(
       text: String,
       ac: AhoCorasick,
       byKw: Map[String, Seq[(String, Double)]],
-      weights: String => Double,
       default: String): Map[String, Double] = {
     val hits = ac.findWholeWords(text)
     if (hits.isEmpty) return Map(default -> 100.0)
     val raw = scala.collection.mutable.HashMap.empty[String, Double]
     hits.foreach { h =>
       byKw.getOrElse(h.pattern, Nil).foreach { case (dom, kwWeight) =>
-        raw(dom) = raw.getOrElse(dom, 0.0) + kwWeight * weights(dom)
+        raw(dom) = raw.getOrElse(dom, 0.0) + kwWeight
       }
     }
     val total = raw.valuesIterator.sum
@@ -91,8 +91,8 @@ object Classifier {
   }
 
   def classify(text: String): Classification = {
-    val domains = scoreFamily(text, domainAc, domainByKw, _ => 1.0, "general")
-    val doctypes = scoreFamily(text, doctypeAc, doctypeByKw, _ => 1.0, "document")
+    val domains = scoreFamily(text, domainAc, domainByKw, "general")
+    val doctypes = scoreFamily(text, doctypeAc, doctypeByKw, "document")
     val (pd, pdc) = domains.head
     val (pt, _) = doctypes.head
     // C3 routing exactly as `service_processor.py:1922-1927`: skip is

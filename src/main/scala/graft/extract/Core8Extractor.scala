@@ -365,6 +365,12 @@ object Core8Extractor {
     */
   def cleanText(markdown: String): String = truncate(cleanFormatting(markdown))
 
+  /** The clean text of a document from its span texts, joined as the
+    * pipeline joins them into markdown: the one string entity and fact
+    * offsets are valid against.
+    */
+  def cleanTextOf(spanTexts: Seq[String]): String = cleanText(spanTexts.mkString("\n"))
+
   /** Pipeline entry: markdown text → clean text → extract. */
   def run(markdown: String): Seq[EntityMention] = extractAll(cleanText(markdown))
 }

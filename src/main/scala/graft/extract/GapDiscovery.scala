@@ -113,7 +113,7 @@ object GapDiscovery {
         org.apache.spark.sql.functions.col("entities"))
       .as[(String, Seq[String], Seq[graft.model.EntityMention])]
       .flatMap { case (docId, texts, entities) =>
-        val clean = Core8Extractor.cleanText(texts.mkString("\n"))
+        val clean = Core8Extractor.cleanTextOf(texts)
         discover(clean, entities).map(x =>
           (docId, x.entity_type, x.text, x.confidence, x.start, x.end, x.pattern))
       }.toDF("doc_id", "type", "text", "confidence", "start", "end", "pattern")

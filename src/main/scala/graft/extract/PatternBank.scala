@@ -59,7 +59,7 @@ object PatternBank {
 
   /** Gated on CFR/USC substring before running (`service_processor.py:990-1000`). */
   val regulation: Pattern = Pattern.compile(
-    "\\b\\d+\\s+(?:CFR|USC|C\\.F\\.R\\.|U\\.S\\.C\\.)\\s*(?:Part\\s+)?§?\\s*\\d+(?:\\.\\d+)?(?:\\([a-z0-9]+\\))*")
+    "\\b\\d+\\s+(?:CFR|USC|C\\.F\\.R\\.|U\\.S\\.C\\.)\\s*(?:Part\\s+)?§?\\s*\\d+(?:\\.\\d+)?(?:\\([a-z0-9]+\\))*+")
 
   val rangeIndicator: Pattern = Pattern.compile(
     "(?i)\\b(?:up to|at least|no more than|between|from|to|through|thru)\\b")

@@ -105,7 +105,7 @@ object SpoExtractor {
       "financial_impact", "HAS_AMOUNT", 0.8, actionable = false, 1, 2, Seq(Seq("fine", "penalt", "cost", "fee", "budget", "damage"), Seq("$", "\u20ac", "\u00a3"))),
     // regulation citation: "in accordance with / pursuant to / under <reg>"
     SpoPatternConfig("reg_citation",
-      "(?i)(?:in accordance with|pursuant to|as required by|under)\\s+(\\d+\\s+(?:CFR|USC)\\s*§?\\s*[\\d.]+(?:\\([a-z0-9]+\\))*)",
+      "(?i)(?:in accordance with|pursuant to|as required by|under)\\s+(\\d+\\s+(?:CFR|USC)\\s*§?\\s*[\\d.]+(?:\\([a-z0-9]+\\))*+)",
       "regulation_citation", "CITES", 0.85, actionable = false, -1, 1, Seq(Seq("cfr", "usc"))),
     // "X is responsible for Y"
     SpoPatternConfig("responsibility",

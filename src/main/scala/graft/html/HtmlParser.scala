@@ -239,10 +239,10 @@ object Entities {
           val body = s.substring(i + 1, semi)
           if (body.startsWith("#x") || body.startsWith("#X")) {
             try { sb.appendCodePoint(Integer.parseInt(body.substring(2), 16)); i = semi + 1 }
-            catch { case _: NumberFormatException => sb.append(c); i += 1 }
+            catch { case _: IllegalArgumentException => sb.append(c); i += 1 }
           } else if (body.startsWith("#")) {
             try { sb.appendCodePoint(Integer.parseInt(body.substring(1))); i = semi + 1 }
-            catch { case _: NumberFormatException => sb.append(c); i += 1 }
+            catch { case _: IllegalArgumentException => sb.append(c); i += 1 }
           } else named.get(body) match {
             case Some(rep) => sb.append(rep); i = semi + 1
             case None => sb.append(c); i += 1

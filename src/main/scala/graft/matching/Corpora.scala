@@ -103,8 +103,6 @@ object Corpora {
       "abstract" -> 2.5, "introduction" -> 1.5, "references" -> 2.0,
       "et al" -> 2.5, "doi" -> 3.0, "published" -> 1.5))
 
-  val domainWeights: Map[String, Double] = domainKeywords.keys.map(_ -> 1.0).toMap
-
   /** GPE gazetteer subset (countries / US states / major cities / agencies)
     * — `knowledge/corpus/foundation_data/gpe/` shape with subcategories.
     */

@@ -117,7 +117,7 @@ object Disambiguator {
       .select(col("doc_id"), col("spans.text").as("texts"), col("canonical_entities"))
       .as[(String, Seq[String], Seq[graft.model.CanonicalEntity])]
       .flatMap { case (docId, texts, canonical) =>
-        val clean = Core8Extractor.cleanText(texts.mkString("\n"))
+        val clean = Core8Extractor.cleanTextOf(texts)
         val sents = Core8Extractor.splitSentences(clean)
         // all sentences OVERLAPPING the mention span, joined — a mention
         // whose title prefix lands in a dropped short fragment ("Mr.")

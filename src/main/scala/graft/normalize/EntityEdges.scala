@@ -48,7 +48,7 @@ object EntityEdges {
     val spark = extracted.sparkSession
     import spark.implicits._
     pruned(extracted).flatMap { case (docId, texts, canonical) =>
-      val clean = Core8Extractor.cleanText(texts.mkString("\n"))
+      val clean = Core8Extractor.cleanTextOf(texts)
       canonical.flatMap { c =>
         c.mentions.map { m =>
           val s = math.min(math.max(0, m.start), clean.length)
@@ -71,7 +71,7 @@ object EntityEdges {
     val spark = extracted.sparkSession
     import spark.implicits._
     pruned(extracted).flatMap { case (docId, texts, canonical) =>
-      val clean = Core8Extractor.cleanText(texts.mkString("\n"))
+      val clean = Core8Extractor.cleanTextOf(texts)
       val sents = Core8Extractor.splitSentences(clean)
       // a canonical entity sits in a sentence iff any of its mentions
       // overlaps the sentence span

@@ -544,113 +544,66 @@ object TextOps {
   // --------------------------------------------------------- dup groups
 
   /** Connected components over near-dup pairs — dedup needs GROUPS (one
-    * keeper per component), not pairwise edges. Min-label propagation
-    * with POINTER DOUBLING: each round a vertex takes the min label
-    * among its neighbors' labels, then jumps to its label's label
-    * (path halving) — O(log n) rounds even on chain-shaped components,
-    * where plain propagation needs O(diameter) rounds (a 100-round
-    * crawl on a chained corpus). Every round is two equi-join shuffles
-    * over the PAIR set (bounded by LSH collisions), never the corpus;
-    * the frames are tiny, so they run at a small fixed parallelism
-    * instead of the session-wide shuffle width. The driver loop holds
-    * only a changed-count.
+    * keeper per component), not pairwise edges. Returns (doc_id, label),
+    * where the label is the component's minimum id. See `components`.
     */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
-    val parent = pairs.sparkSession
-    val p = 8
-    // the loop's frames are pair-set-sized (LSH-bounded), so EVERY
-    // exchange in the round — the groupBy and join shuffles, not just
-    // the explicit repartitions — should run at the small fixed width,
-    // not the session-wide shuffle width: at 32 session partitions the
-    // per-round cost is ~6× pure task scheduling. The loop runs in a
-    // CHILD session with its own conf (the streaming-replay pattern),
-    // never mutating — or racing on — the caller's session conf. The
-    // pair frame crosses sessions via an eager localCheckpoint (RDDs
-    // are context-level), and the result crosses back the same way.
-    val loop = parent.newSession()
-    loop.conf.set("spark.sql.shuffle.partitions", p.toString)
-    val pairs0 = pairs.select(col("a"), col("b")).localCheckpoint()
-    val pairsInLoop = loop.createDataFrame(pairs0.rdd, pairs0.schema)
-    val labels = connectedComponentsAt(pairsInLoop, p)
-    parent.createDataFrame(labels.rdd, labels.schema)
-  }
-
-  private def connectedComponentsAt(pairs: DataFrame, p: Int): DataFrame = {
-    // localCheckpoint, NOT cache: a cache keeps the upstream LOGICAL
-    // plan (for t10 that is the entire shingle→signature→band→verify
-    // tree) inside every round's query tree, and the analyzer/optimizer
-    // re-walks it on every action — measured at seconds per round at
-    // sf0.1. Checkpointing replaces it with a leaf RDD scan, so each
-    // round plans over two tiny leaves.
-    val edges = pairs.select(col("a"), col("b"))
-      .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .repartition(p, col("b"))
-      .localCheckpoint()
-    // localCheckpoint (not cache+unpersist): each round's labels must
-    // TRUNCATE lineage — unpersisting the previous round's frame would
-    // invalidate every dependent cached plan (Spark re-caches by plan)
-    // and silently recompute the whole upstream pipeline per round
-    var labels = edges.select(col("a").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id"))
-      .repartition(p, col("doc_id"))
-      .localCheckpoint()
-    var changed = true
-    var rounds = 0
-    val MaxRounds = 25 // pointer doubling: covers component diameters to 2^25
-    val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    while (changed && rounds < MaxRounds) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("doc_id", "b").withColumnRenamed("label", "nl"), "b")
-        .groupBy(col("a").as("doc_id"))
-        .agg(min(col("nl")).as("nmin"))
-      // persisted until the loop ends (unpersist mid-loop invalidates
-      // dependent cached plans): the pointer-doubling self-join below
-      // reads stepped TWICE, and without materialization each side
-      // recomputes the whole neighbor-min join chain
-      val stepped = labels.join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("label"), coalesce(col("nmin"), col("label"))).as("label"),
-          (coalesce(col("nmin"), col("label")) < col("label")).as("chg1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      steps += stepped
-      // pointer doubling: label := label(label) — labels always point at
-      // graph vertices, every vertex has a row, so the self-join is total.
-      // The change flag rides INSIDE the materialized frame: convergence
-      // detection is then an isEmpty scan of the checkpointed partitions
-      // instead of r2's extra join+count job — 2 driver barriers per
-      // round (eager checkpoint + flag scan), not 3, and one less
-      // shuffle join per round.
-      val next = stepped.as("x")
-        .join(stepped.select(col("doc_id").as("p_id"), col("label").as("p_label")),
-          col("x.label") === col("p_id"))
-        .select(col("x.doc_id").as("doc_id"), col("p_label").as("label"),
-          (col("x.chg1") || col("p_label") =!= col("x.label")).as("chg"))
-        .repartition(p, col("doc_id"))
-        .localCheckpoint()
-      changed = !next.where(col("chg")).isEmpty
-      labels = next.select("doc_id", "label")
-      rounds += 1
-    }
-    // labels is a local checkpoint, independent of the round frames
-    steps.foreach(_.unpersist(false))
-    // a correctness-gated operator must fail loudly, never return
-    // silently split groups (unreachable below 2^25-diameter components)
-    require(!changed, s"connected components did not converge after $rounds rounds")
-    labels
-  }
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    components(pairs).select(col("id").as("doc_id"), col("group_id").as("label"))
 
   /** The one grouping step of the near-dup families: every id in some
     * verified pair (a, b), its component id (min id in the component)
-    * and the component size, sorted by `idName` and checkpointed.
+    * and the component size, in `idName` order.
     */
-  private[graft] def groupsOf(pairs: DataFrame, idName: String): DataFrame = {
-    val comp = connectedComponents(pairs.select("a", "b"))
-    val sizes = comp.groupBy(col("label")).agg(count(lit(1)).as("group_size"))
-    comp.join(sizes, "label")
-      .select(col("doc_id").as(idName), col("label").as("group_id"), col("group_size"))
-      .orderBy(idName)
+  private[graft] def groupsOf(pairs: DataFrame, idName: String): DataFrame =
+    components(pairs).withColumnRenamed("id", idName)
+
+  /** (id, group_id, group_size) for every vertex of the pair graph, in id
+    * order: one exchange brings the pairs to a single partition, and that
+    * task runs a union-find over the edges as the shuffle reader streams
+    * them (see `unionFind`).
+    *
+    * Precondition: the vertex set of the verified pair graph fits in one
+    * task. The capped band join bounds the candidates by Σ min(bsz, cap)²
+    * (MaxBandBucket), and the verified pairs are a subset of those. At
+    * sf0.1 the largest graph is t14's SimHash pairs, 5,397 edges over
+    * 2,368 vertices; t7's MinHash pairs are 241 edges over 468 vertices
+    * and t9's embedding pairs 700 over 976.
+    *
+    * The result is localCheckpointed, not cached: a cache keeps the
+    * upstream logical plan (for t10 the whole shingle → signature → band
+    * → verify tree) inside every consumer's plan, and the analyzer
+    * re-walks it on every action. A checkpoint is a leaf RDD scan.
+    */
+  private def components(pairs: DataFrame): DataFrame = {
+    import pairs.sparkSession.implicits._
+    pairs.select(col("a"), col("b")).as[(Long, Long)]
+      .repartition(1)
+      .mapPartitions(unionFind)
+      .toDF("id", "group_id", "group_size")
       .localCheckpoint()
+  }
+
+  /** Union by the smaller id, so each root is its component's minimum id,
+    * with path compression. Holds only the vertex → parent map.
+    */
+  private def unionFind(edges: Iterator[(Long, Long)]): Iterator[(Long, Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val ids = parent.keys.toArray.sorted
+    val roots = ids.map(find)
+    val size = scala.collection.mutable.LongMap.empty[Long]
+    roots.foreach(r => size(r) = size.getOrElse(r, 0L) + 1)
+    ids.indices.iterator.map(i => (ids(i), roots(i), size(roots(i))))
   }
 
   /** t10: duplicate groups from the MinHash-LSH verified pairs.
@@ -833,7 +786,7 @@ object TextOps {
   }
 
   /** t15: duplicate groups over the hamming-verified pairs — the same
-    * pointer-doubling components as t10, one keeper per cluster.
+    * union-find components as t10, one keeper per cluster.
     */
   private val simhashGroupCache = new graft.util.SessionCache[DataFrame]
 

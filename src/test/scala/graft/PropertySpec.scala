@@ -9,8 +9,12 @@ import graft.normalize.Normalizer
 import graft.pdf.PdfExtractor
 import graft.pipeline.ExtractionPipeline
 import graft.sources.DocGen
+import graft.textops.TextOps
+import graft.util.Harness
+import org.apache.spark.sql.SparkSession
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.mutable.ArrayBuffer
 
@@ -21,7 +25,12 @@ import scala.collection.mutable.ArrayBuffer
   * a fixed seed (no scalatestplus bridge in the offline cache) — 200
   * deterministic samples per property.
   */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  // only P13 runs Spark
+  lazy val spark: SparkSession = Harness.session(2)
+
+  override def afterAll(): Unit = spark.stop()
 
   private def forAll[A](gen: Gen[A], n: Int = 200)(f: A => Unit): Unit = {
     var seed = Seed(42L)
@@ -498,6 +507,78 @@ class PropertySpec extends AnyFunSuite {
     val chunk = Gen.oneOf(soupGen, Gen.listOf(recovery).map(_.mkString))
     forAll(Gen.listOfN(4, chunk).map(_.mkString)) { html =>
       assert(dump(HtmlParser.parse(html)) == dump(stackScanParse(html)), html)
+    }
+  }
+
+  // P13's reference: the min-label loop with pointer doubling that the
+  // one-task union-find replaced, round for round, over in-memory maps.
+  // Each round a vertex takes the min of its own and its neighbours'
+  // labels (`stepped`), then the stepped label of that label (`next`),
+  // until no label changes. The Spark loop failed after 25 rounds, and a
+  // 1,000-vertex chain with shuffled ids needs a few hundred, so this
+  // copy runs to the fixed point.
+  private def pointerDoubling(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val neighbours = (pairs ++ pairs.map(_.swap)).distinct.groupMap(_._1)(_._2)
+    var labels = neighbours.keys.map(v => v -> v).toMap
+    var changed = true
+    while (changed) {
+      val stepped = labels.map { case (v, l) => v -> neighbours(v).map(labels).foldLeft(l)(math.min) }
+      val next = stepped.map { case (v, l) => v -> stepped(l) }
+      changed = next != labels
+      labels = next
+    }
+    labels
+  }
+
+  // one pair set holding, over disjoint shuffled ids (negative ones too):
+  // random graphs, a chain of >= 1,000 vertices, a star and a clique, with
+  // some pairs reversed, some duplicated and some self pairs added
+  private val pairGraphGen: Gen[Seq[(Long, Long)]] = {
+    val randomGraph = for {
+      n <- Gen.choose(2, 60)
+      m <- Gen.choose(1, 2 * n)
+      es <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1), Gen.choose(0, n - 1)))
+    } yield (n, es)
+    for {
+      randoms <- Gen.listOfN(8, randomGraph)
+      chainN <- Gen.choose(1000, 1500)
+      starN <- Gen.choose(2, 200)
+      cliqueN <- Gen.choose(2, 25)
+      seed <- Gen.long
+    } yield {
+      val shapes = randoms ++ Seq(
+        (chainN, (0 until chainN - 1).map(i => (i, i + 1))),
+        (starN, (1 until starN).map(i => (0, i))),
+        (cliqueN, for (i <- 0 until cliqueN; j <- i + 1 until cliqueN) yield (i, j)))
+      val rnd = new scala.util.Random(seed)
+      val total = shapes.map(_._1).sum
+      val ids = rnd.shuffle((0 until total).map(k => (k - total / 2) * 1000003L))
+      val offsets = shapes.scanLeft(0)(_ + _._1)
+      val pairs = shapes.zip(offsets).flatMap { case ((_, es), off) =>
+        es.flatMap { case (u, v) =>
+          val (a, b) = (ids(off + u), ids(off + v))
+          val pair = if (rnd.nextInt(4) == 0) (b, a) else (a, b)
+          if (rnd.nextInt(5) == 0) Seq(pair, pair) else Seq(pair)
+        }
+      }
+      val selfs = Seq.fill(20)(ids(rnd.nextInt(total))).map(x => (x, x))
+      rnd.shuffle(pairs ++ selfs)
+    }
+  }
+
+  test("P13: one-task components equal the pointer-doubling loop they replaced") {
+    val s = spark
+    import s.implicits._
+    forAll(pairGraphGen, 12) { pairs =>
+      val expected = pointerDoubling(pairs)
+      val df = pairs.toDF("a", "b")
+      val comp = TextOps.connectedComponents(df).collect().map(r => r.getLong(0) -> r.getLong(1))
+      assert(comp.toMap == expected)
+      // groups: the same labels, each with its component's size, in id order
+      val groups = TextOps.groupsOf(df, "id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      val sizes = expected.values.groupBy(identity).map { case (l, ls) => l -> ls.size.toLong }
+      assert(groups == expected.toSeq.sorted.map { case (id, l) => (id, l, sizes(l)) })
     }
   }
 }

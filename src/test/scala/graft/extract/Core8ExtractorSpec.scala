@@ -24,6 +24,47 @@ class Core8ExtractorSpec extends AnyFunSuite {
     assert(ofType(t, "URL") === Seq("https://osha.gov/rules."))
   }
 
+  test("a 36 KB regulation suffix run matches on a 1 MB stack, and the doc converts") {
+    val text = "under 29 CFR 1910" + "(a)" * 12000
+    @volatile var result: Either[Throwable, graft.model.ExtractedDoc] = null
+    // the suffix run once recursed per repetition: a small stack overflowed
+    val t = new Thread(null, () => {
+      result =
+        try Right(graft.pipeline.ExtractionPipeline.processDoc(graft.model.RawDoc(
+          "reg", "text", "", Seq.empty, text, text.length.toLong, 1)))
+        catch { case e: Throwable => Left(e) }
+    }, "small-stack", 1L << 20)
+    t.start()
+    t.join()
+    val doc = result.fold(throw _, identity)
+    assert(doc.success, s"rejected: ${doc.error}")
+    assert(doc.entities.count(_.`type` == "REGULATION") === 1)
+  }
+
+  test("possessive regulation suffix runs match exactly what the backtracking runs matched") {
+    val oldRegulation = java.util.regex.Pattern.compile(
+      "\\b\\d+\\s+(?:CFR|USC|C\\.F\\.R\\.|U\\.S\\.C\\.)\\s*(?:Part\\s+)?§?\\s*\\d+(?:\\.\\d+)?(?:\\([a-z0-9]+\\))*")
+    val oldCitation = java.util.regex.Pattern.compile(
+      "(?i)(?:in accordance with|pursuant to|as required by|under)\\s+(\\d+\\s+(?:CFR|USC)\\s*§?\\s*[\\d.]+(?:\\([a-z0-9]+\\))*)")
+    val citation = java.util.regex.Pattern.compile(graft.facts.SpoExtractor.defaultPatterns
+      .patterns.find(_.name == "reg_citation").get.regex)
+    def matches(p: java.util.regex.Pattern, s: String): Seq[(Int, Int)] = {
+      val m = p.matcher(s)
+      Iterator.continually(m.find()).takeWhile(identity).map(_ => (m.start, m.end)).toSeq
+    }
+    val rnd = new scala.util.Random(7)
+    val heads = Seq("29 CFR 1910", "40 C.F.R. Part 60.5", "42 USC § 7401", "29 CFR 1926.95",
+      "under 29 CFR 1910.1", "pursuant to 40 usc 12")
+    val parts = Seq("(a)", "(1)", "(iv)", "(B)", "(b2)", "()", "(a", " (c)", ".", "(a)(")
+    (0 until 300).foreach { i =>
+      val reps = if (i % 50 == 0) 500 else rnd.nextInt(40)
+      val s = "see " + heads(rnd.nextInt(heads.size)) +
+        Seq.fill(reps)(parts(rnd.nextInt(parts.size))).mkString + " and 7 USC 2(x) end"
+      assert(matches(PatternBank.regulation, s) === matches(oldRegulation, s), s)
+      assert(matches(citation, s) === matches(oldCitation, s), s)
+    }
+  }
+
   test("ranges_simple: 30-37 inches is ONE measurement, not two") {
     val t = "Handrail height must be 30-37 inches above the surface."
     assert(ofType(t, "MEASUREMENT") === Seq("30-37 inches"))

@@ -176,6 +176,17 @@ class HtmlExtractorSpec extends AnyFunSuite {
       Span(K.Text, "[Image: AT&amp;T]", "", 2)))
   }
 
+  test("an out-of-range numeric entity stays literal text, in text and in alt, and the page converts") {
+    val html = """<article><p>Code &#1114112; or &#x110000; or &#-5; here</p>""" +
+      """<img alt="bad &#x110000; ref"></article>"""
+    assert(HtmlExtractor.extract(html) === Seq(
+      Span(K.Text, "Code &#1114112; or &#x110000; or &#-5; here", "", 0),
+      Span(K.Text, "[Image: bad &#x110000; ref]", "", 1)))
+    val doc = graft.pipeline.ExtractionPipeline.processDoc(
+      graft.model.RawDoc("ent", "html", html, Seq.empty, "", html.length.toLong, 1))
+    assert(doc.success, s"rejected: ${doc.error}")
+  }
+
   test("unmatched close tags cost O(1): 20,000 open divs and 40,000 stray </q> parse in under 0.5 s") {
     HtmlParser.parse("<div>" * 2000 + "</q>" * 4000) // warm-up
     val html = "<div>" * 20000 + "</q>" * 40000

@@ -5,9 +5,9 @@ import org.apache.spark.sql.{SparkSession, SpecAccess}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** t10 connected components: min-label propagation must traverse chains
-  * (multiple rounds), keep disjoint components apart, converge, and
-  * leave no persisted round frame behind.
+/** t10 connected components: chains collapse to their minimum id,
+  * disjoint components stay apart, nothing stays persisted, and the one
+  * components task costs a fixed number of Spark jobs.
   */
 class DupGroupsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -36,5 +36,29 @@ class DupGroupsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val comp = TextOps.connectedComponents(Seq((9L, 3L), (3L, 7L)).toDF("a", "b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(comp.values.toSet === Set(3L))
+  }
+
+  test("components take at most 3 Spark jobs, the collect included") {
+    import spark.implicits._
+    // the chains case's graph
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
+      (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L)).toDF("a", "b")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    SpecAccess.drain(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(TextOps.connectedComponents(pairs).collect().length === 10)
+      SpecAccess.drain(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get <= 3, s"${jobs.get} Spark jobs")
+  }
+
+  test("an empty pair set has no components") {
+    import spark.implicits._
+    assert(TextOps.connectedComponents(Seq.empty[(Long, Long)].toDF("a", "b")).isEmpty)
   }
 }
