@@ -1,5 +1,7 @@
 package graft
 
+import graft.extract.GapDiscovery
+import graft.sim.Similarity.{NumQueries, TopK}
 import graft.textops.TextOps
 
 /** DuckDB-dialect oracle SQL for the text/similarity operators —
@@ -162,7 +164,7 @@ object OracleSql {
     * = 0) shingle vocabulary — membership, not pair similarity, so the
     * reconstruction is two aggregations over the shared shingle CTE.
     */
-  def contamination(threshold: Double): String =
+  val contamination: String =
     s"""WITH $shinglesCte,
        |bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id % 10 = 0),
        |train AS (SELECT doc_id, sh FROM sh WHERE doc_id % 10 <> 0),
@@ -172,11 +174,16 @@ object OracleSql {
        |SELECT s.doc_id, s.n_shingles::BIGINT AS n_shingles,
        | coalesce(h.n_contaminated, 0)::BIGINT AS n_contaminated,
        | round(coalesce(h.n_contaminated, 0)::DOUBLE / s.n_shingles, 4) AS contamination,
-       | round(coalesce(h.n_contaminated, 0)::DOUBLE / s.n_shingles, 4) >= $threshold::DOUBLE AS is_contaminated
+       | round(coalesce(h.n_contaminated, 0)::DOUBLE / s.n_shingles, 4) >= ${TextOps.ContaminationThreshold}::DOUBLE AS is_contaminated
        |FROM sizes s LEFT JOIN hits h ON s.doc_id = h.doc_id
        |ORDER BY s.doc_id""".stripMargin
 
-  def ngramJaccard(threshold: Double): String =
+  val ngramJaccard: String = ngramPairsAt(TextOps.NgramThreshold)
+
+  /** The t6 pairs at Jaccard ≥ `cut`: t6 cuts at NgramThreshold, t12's
+    * truth at JaccardThreshold.
+    */
+  private def ngramPairsAt(cut: Double): String =
     s"""WITH $shinglesCte,
        |keep AS (SELECT sh FROM (SELECT sh, count(*) AS df FROM sh GROUP BY 1)
        | WHERE df <= ${TextOps.MaxShingleDf}),
@@ -186,10 +193,10 @@ object OracleSql {
        | FROM shf x JOIN shf y ON x.sh = y.sh AND x.doc_id < y.doc_id GROUP BY 1, 2)
        |SELECT a, b, round(i::DOUBLE / (sa.n + sb.n - i), 4) AS jaccard
        |FROM inter JOIN sizes sa ON sa.doc_id = a JOIN sizes sb ON sb.doc_id = b
-       |WHERE round(i::DOUBLE / (sa.n + sb.n - i), 4) >= $threshold
+       |WHERE round(i::DOUBLE / (sa.n + sb.n - i), 4) >= $cut
        |ORDER BY a, b""".stripMargin
 
-  def minhashLsh(threshold: Double): String = {
+  val minhashLsh: String = {
     import TextOps.{MinhashP => p, NumHashes, NumBands, hashA, hashB}
     val r = NumHashes / NumBands
     val mins = (0 until NumHashes).map(i =>
@@ -220,7 +227,7 @@ object OracleSql {
        |SELECT c.a AS a, c.b AS b, round(i::DOUBLE / (sa.n + sb.n - i), 4) AS jaccard
        |FROM cand c JOIN inter ON inter.a = c.a AND inter.b = c.b
        |JOIN sizes sa ON sa.doc_id = c.a JOIN sizes sb ON sb.doc_id = c.b
-       |WHERE round(i::DOUBLE / (sa.n + sb.n - i), 4) >= $threshold
+       |WHERE round(i::DOUBLE / (sa.n + sb.n - i), 4) >= ${TextOps.JaccardThreshold}
        |ORDER BY c.a, c.b""".stripMargin
   }
 
@@ -228,8 +235,8 @@ object OracleSql {
     * recursive CTE, min label per component (the pair set is tiny, so
     * full reachability is cheap in DuckDB).
     */
-  def dupGroups(threshold: Double): String = {
-    val inner = minhashLsh(threshold).stripSuffix("ORDER BY c.a, c.b").trim
+  val dupGroups: String = {
+    val inner = minhashLsh.stripSuffix("ORDER BY c.a, c.b").trim
     s"""WITH RECURSIVE pairs AS (SELECT a, b FROM ($inner)),
        |dedges AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
        |verts AS (SELECT DISTINCT a AS v FROM dedges),
@@ -247,17 +254,17 @@ object OracleSql {
   /** t11 oracle: the curation decision composed from the same lang /
     * quality / exact-dup / dup-group SQL the individual ops use.
     */
-  def corpusSelect(minQuality: Double, threshold: Double): String =
+  val corpusSelect: String =
     s"""WITH lang AS (SELECT doc_id, lang_pred FROM ($langId)),
        |qual AS (SELECT doc_id, quality_score FROM ($qualityScore)),
        |ex AS (SELECT doc_id, rn FROM ($dedupExact)),
-       |nd AS (SELECT doc_id, group_id FROM (${dupGroups(threshold)}))
+       |nd AS (SELECT doc_id, group_id FROM ($dupGroups))
        |SELECT d.doc_id,
        | (lang_pred = 'en') AS lang_ok,
-       | (quality_score >= $minQuality) AS quality_ok,
+       | (quality_score >= ${TextOps.MinQuality}) AS quality_ok,
        | (rn > 1) AS exact_dup,
        | (nd.group_id IS NOT NULL AND nd.group_id <> d.doc_id) AS near_dup_loser,
-       | ((lang_pred = 'en') AND (quality_score >= $minQuality) AND NOT (rn > 1)
+       | ((lang_pred = 'en') AND (quality_score >= ${TextOps.MinQuality}) AND NOT (rn > 1)
        |  AND NOT (nd.group_id IS NOT NULL AND nd.group_id <> d.doc_id)) AS keep
        |FROM documents d
        |JOIN lang USING (doc_id) JOIN qual USING (doc_id) JOIN ex USING (doc_id)
@@ -268,23 +275,22 @@ object OracleSql {
     * as subqueries (the t11 pattern), so every flag is independently
     * reconstructed rather than copied from the engine's stage outputs.
     */
-  def curationFunnel(minQuality: Double, threshold: Double,
-      contThreshold: Double): String =
+  val curationFunnel: String =
     s"""WITH qual AS (SELECT doc_id, quality_score FROM ($qualityScore)),
        |ex AS (SELECT doc_id, rn FROM ($dedupExact)),
-       |nd AS (SELECT doc_id, group_id FROM (${dupGroups(threshold)})),
-       |cont AS (SELECT doc_id, is_contaminated FROM (${contamination(contThreshold)})),
+       |nd AS (SELECT doc_id, group_id FROM ($dupGroups)),
+       |cont AS (SELECT doc_id, is_contaminated FROM ($contamination)),
        |bud AS (SELECT doc_id, kept FROM ($tokenBudget)),
        |rep AS (SELECT doc_id, repetitive FROM ($repetition))
        |SELECT d.doc_id,
        | (d.doc_id % 10 <> 0) AS is_train,
-       | (quality_score >= $minQuality) AS quality_ok,
+       | (quality_score >= ${TextOps.MinQuality}) AS quality_ok,
        | (rn > 1) AS exact_dup,
        | (nd.group_id IS NOT NULL AND nd.group_id <> d.doc_id) AS near_dup_loser,
        | coalesce(cont.is_contaminated, FALSE) AS contaminated,
        | bud.kept AS budget_kept,
        | rep.repetitive AS repetitive,
-       | ((d.doc_id % 10 <> 0) AND (quality_score >= $minQuality) AND NOT (rn > 1)
+       | ((d.doc_id % 10 <> 0) AND (quality_score >= ${TextOps.MinQuality}) AND NOT (rn > 1)
        |  AND NOT (nd.group_id IS NOT NULL AND nd.group_id <> d.doc_id)
        |  AND NOT coalesce(cont.is_contaminated, FALSE) AND bud.kept
        |  AND NOT rep.repetitive) AS keep_final
@@ -297,9 +303,9 @@ object OracleSql {
   /** t12 oracle: compose the exact-Jaccard and LSH pair SQL. Truth is
     * restricted to exact-dedup keepers, matching TextOps.lshRecall.
     */
-  def lshRecall(threshold: Double): String = {
-    val truth = ngramJaccard(threshold).stripSuffix("ORDER BY a, b").trim
-    val lsh = minhashLsh(threshold).stripSuffix("ORDER BY c.a, c.b").trim
+  val lshRecall: String = {
+    val truth = ngramPairsAt(TextOps.JaccardThreshold).stripSuffix("ORDER BY a, b").trim
+    val lsh = minhashLsh.stripSuffix("ORDER BY c.a, c.b").trim
     s"""WITH tkeep AS (SELECT min(doc_id) AS doc_id
        | FROM (SELECT doc_id, $fpExpr AS fp FROM documents) GROUP BY fp),
        |truth AS (SELECT a, b FROM ($truth)
@@ -345,8 +351,8 @@ object OracleSql {
     * / verify structure as minhashLsh, generated from the same band and
     * threshold constants the Spark plan uses.
     */
-  def simhashDedup(maxHamming: Int): String = {
-    import TextOps.{SimhashBands, SimhashBandBits, MaxBandBucket}
+  val simhashDedup: String = {
+    import TextOps.{SimhashBands, SimhashBandBits, MaxBandBucket, HammingMax}
     val mask = (1L << SimhashBandBits) - 1
     val bandSelects = (0 until SimhashBands).map { b =>
       s"SELECT doc_id, $b AS band, (simhash >> ${b * SimhashBandBits}) & $mask AS bv FROM shk"
@@ -366,15 +372,15 @@ object OracleSql {
        |SELECT c.a AS a, c.b AS b,
        | bit_count(xor(sa.simhash, sb.simhash))::BIGINT AS hamming
        |FROM cand c JOIN simq sa ON sa.doc_id = c.a JOIN simq sb ON sb.doc_id = c.b
-       |WHERE bit_count(xor(sa.simhash, sb.simhash)) <= $maxHamming
+       |WHERE bit_count(xor(sa.simhash, sb.simhash)) <= $HammingMax
        |ORDER BY a, b""".stripMargin
   }
 
   /** t15 oracle: recursive components over the t14 pairs (the dupGroups
     * pattern).
     */
-  def simhashGroups(maxHamming: Int): String = {
-    val inner = simhashDedup(maxHamming).stripSuffix("ORDER BY a, b").trim
+  val simhashGroups: String = {
+    val inner = simhashDedup.stripSuffix("ORDER BY a, b").trim
     s"""WITH RECURSIVE pairs AS (SELECT a, b FROM ($inner)),
        |dedges AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
        |verts AS (SELECT DISTINCT a AS v FROM dedges),
@@ -1523,9 +1529,10 @@ object OracleSql {
        !FROM rows0 ORDER BY doc_id, start""".stripMargin('!')
 
   /** E15 learning-loop oracle: the corpus-level aggregation of the same
-    * discovery rows — groupBy (type, text), n_docs ≥ 2 and mean
-    * confidence ≥ 0.85, emitted as the (kind, value, meta) corpus rows
-    * CorpusTable.load ingests (single-token PERSON → last_name).
+    * discovery rows — groupBy (type, text), n_docs ≥ LearnMinDocs and
+    * mean confidence ≥ LearnThreshold, emitted as the (kind, value,
+    * meta) corpus rows CorpusTable.load ingests (single-token PERSON →
+    * last_name).
     */
   val xDiscoveryLearnCore: String =
     s"""WITH $docSynthCte,
@@ -1540,7 +1547,7 @@ object OracleSql {
        !  SELECT d['type'] AS type, d['text'] AS text,
        !    count(DISTINCT did) AS n_docs, round(avg(d['conf']), 4) AS mean_conf
        !  FROM rows0 GROUP BY 1, 2),
-       !flt AS (SELECT * FROM agg WHERE n_docs >= 2 AND mean_conf >= 0.85)
+       !flt AS (SELECT * FROM agg WHERE n_docs >= ${GapDiscovery.LearnMinDocs} AND mean_conf >= ${GapDiscovery.LearnThreshold})
        !SELECT DISTINCT
        !  CASE WHEN type = 'ORG' THEN 'org' WHEN type = 'LOC' THEN 'loc'
        !   ELSE 'last_name' END AS kind,
@@ -1771,14 +1778,14 @@ object OracleSql {
        | / (sqrt(list_reduce(list_transform(range(len($a)), i -> $a[i+1]::DOUBLE * $a[i+1]::DOUBLE), (x, y) -> x + y))
        |  * sqrt(list_reduce(list_transform(range(len($b)), i -> $b[i+1]::DOUBLE * $b[i+1]::DOUBLE), (x, y) -> x + y))))""".stripMargin
 
-  def cosineTopK(nQueries: Int, k: Int, src: String = "embeddings"): String =
-    s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM $src WHERE vec_id < $nQueries),
+  def cosineTopK(src: String = "embeddings"): String =
+    s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM $src WHERE vec_id < $NumQueries),
        |j AS (SELECT q_id, vec_id,
        |  round(${cosineSql("q_emb", "embedding")}, 4) AS cos
        | FROM $src, q WHERE vec_id <> q_id),
        |r AS (SELECT q_id, vec_id, cos,
        |  row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank FROM j)
-       |SELECT q_id, rank, vec_id, cos FROM r WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+       |SELECT q_id, rank, vec_id, cos FROM r WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin
 
   /** Sign-LSH bucket rows (one per table per vector) — mirrors
     * Similarity.lshBuckets' md5-derived plane signs.
@@ -1798,24 +1805,24 @@ object OracleSql {
     }.mkString("\n UNION ALL\n ")
   }
 
-  def lshTopK(nQueries: Int, k: Int): String = {
+  val lshTopK: String = {
     val bucketRows = lshBucketRowsSql
     s"""WITH b AS (
        | $bucketRows),
-       |qb AS (SELECT vec_id AS q_id, tbl AS q_tbl, bucket AS q_bucket FROM b WHERE vec_id < $nQueries),
+       |qb AS (SELECT vec_id AS q_id, tbl AS q_tbl, bucket AS q_bucket FROM b WHERE vec_id < $NumQueries),
        |pairs AS (SELECT DISTINCT q_id, vec_id
        | FROM b JOIN qb ON tbl = q_tbl AND bucket = q_bucket AND vec_id <> q_id),
-       |qe AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < $nQueries),
+       |qe AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < $NumQueries),
        |j AS (SELECT p.q_id, p.vec_id,
        |  round(${cosineSql("q_emb", "embedding")}, 4) AS cos
        | FROM pairs p JOIN embeddings e ON e.vec_id = p.vec_id
        | JOIN qe ON qe.q_id = p.q_id),
        |r AS (SELECT q_id, vec_id, cos,
        |  row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank FROM j)
-       |SELECT q_id, rank, vec_id, cos FROM r WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+       |SELECT q_id, rank, vec_id, cos FROM r WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin
   }
 
-  def embeddingDedup(threshold: Double): String = {
+  val embeddingDedup: String = {
     val bucketRows = lshBucketRowsSql
     s"""WITH b AS (
        | $bucketRows),
@@ -1831,12 +1838,12 @@ object OracleSql {
        |  round(${cosineSql("ea.embedding", "eb.embedding")}, 4) AS cos
        | FROM pairs p JOIN embeddings ea ON ea.vec_id = p.a
        | JOIN embeddings eb ON eb.vec_id = p.b)
-       |SELECT a, b, cos FROM j WHERE cos >= $threshold ORDER BY a, b""".stripMargin
+       |SELECT a, b, cos FROM j WHERE cos >= ${graft.sim.Similarity.CosineThreshold} ORDER BY a, b""".stripMargin
   }
 
   /** s5 oracle: recursive components over the embedding dedup pairs. */
-  def embeddingGroups(threshold: Double): String = {
-    val inner = embeddingDedup(threshold).stripSuffix("ORDER BY a, b").trim
+  val embeddingGroups: String = {
+    val inner = embeddingDedup.stripSuffix("ORDER BY a, b").trim
     s"""WITH RECURSIVE pairs AS (SELECT a, b FROM ($inner)),
        |dedges AS (SELECT a, b FROM pairs UNION SELECT b, a FROM pairs),
        |verts AS (SELECT DISTINCT a AS v FROM dedges),
@@ -1857,7 +1864,7 @@ object OracleSql {
        | / (sqrt(list_reduce(list_transform(range(len($a)), i -> $a[i+1]::DOUBLE * $a[i+1]::DOUBLE), (x, y) -> x + y))
        |  * sqrt(list_reduce(list_transform(range(len($c)), i -> $c[i+1] * $c[i+1]), (x, y) -> x + y))))""".stripMargin
 
-  def ivfTopK(nQueries: Int, k: Int, src: String = "embeddings"): String = {
+  def ivfTopK(src: String = "embeddings"): String = {
     import graft.sim.Similarity.NProbe
     s"""WITH exp AS (SELECT label, unnest(embedding) AS v,
        |  generate_subscripts(embedding, 1) - 1 AS dim FROM $src),
@@ -1872,21 +1879,21 @@ object OracleSql {
        | FROM asg0) WHERE rn = 1),
        |probes AS (SELECT vec_id AS q_id, embedding AS q_emb, c_label AS probe_cell FROM (
        | SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY cos_c DESC, c_label) AS rn
-       | FROM asg0 WHERE vec_id < $nQueries) WHERE rn <= $NProbe),
+       | FROM asg0 WHERE vec_id < $NumQueries) WHERE rn <= $NProbe),
        |j AS (SELECT q_id, vec_id, round(${cosineSql("q_emb", "embedding")}, 4) AS cos
        | FROM asg JOIN probes ON cell = probe_cell AND vec_id <> q_id),
        |r AS (SELECT q_id, vec_id, cos,
        | row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank FROM j)
-       |SELECT q_id, rank, vec_id, cos FROM r WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
+       |SELECT q_id, rank, vec_id, cos FROM r WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin
   }
 
   /** s6 oracle: compose the brute-force and IVF top-k SQL; recall =
     * |ivf ∩ truth| / |truth| over (q_id, vec_id) pairs — both sides use
     * the same deterministic tie-break, so the sets are well-defined.
     */
-  def ivfRecall(nQueries: Int, k: Int): String = {
+  val ivfRecall: String = {
     import graft.sim.Similarity.NProbe
-    annRecallSql(cosineTopK(nQueries, k), ivfTopK(nQueries, k),
+    annRecallSql(cosineTopK(), ivfTopK(),
       "nprobe", NProbe.toLong, "n_ivf")
   }
 
@@ -1896,14 +1903,14 @@ object OracleSql {
     * the shared md5-head-8 idiom, then the identical truth/IVF/recall
     * SQL with the synthesized subquery as the source table.
     */
-  def ivfRecallClustered(nQueries: Int, k: Int): String = {
+  val ivfRecallClustered: String = {
     import graft.sim.Similarity.{ClusterDim, ClusterSep, NProbe}
     val src =
       s"""(SELECT vec_id, label, list_transform(range($ClusterDim), d ->
          |  ((('0x' || substr(md5(vec_id || '_' || d), 1, 8))::BIGINT % 1000)::DOUBLE / 1000.0 - 0.5
          |   + (CASE WHEN label % $ClusterDim = d THEN $ClusterSep ELSE 0.0 END))::FLOAT) AS embedding
          | FROM embeddings)""".stripMargin
-    annRecallSql(cosineTopK(nQueries, k, src), ivfTopK(nQueries, k, src),
+    annRecallSql(cosineTopK(src), ivfTopK(src),
       "nprobe", NProbe.toLong, "n_ivf")
   }
 
@@ -1930,9 +1937,9 @@ object OracleSql {
   /** s7 oracle: same composition as s6 with the sign-LSH path under
     * test — truth and candidate top-k re-derived, compared in SQL.
     */
-  def lshAnnRecall(nQueries: Int, k: Int): String = {
+  val lshAnnRecall: String = {
     import graft.sim.Similarity.NumTables
-    annRecallSql(cosineTopK(nQueries, k), lshTopK(nQueries, k),
+    annRecallSql(cosineTopK(), lshTopK,
       "n_tables", NumTables.toLong, "n_lsh")
   }
 

@@ -249,14 +249,14 @@ object SparkEntry {
       timed("warm:stream_replay") { streamExtracted(s, dir).count() },
       timed("warm:tokens") { graft.textops.TextOps.tokenBudget(s, dir).count() },
       timed("warm:shingles") { graft.textops.TextOps.shingles(s, dir).count() },
-      timed("warm:ngram_pairs") { graft.textops.TextOps.ngramJaccard(s, dir, 0.2).count() },
-      timed("warm:lsh_pairs") { graft.textops.TextOps.minhashLsh(s, dir, 0.5).count() },
+      timed("warm:ngram_pairs") { graft.textops.TextOps.ngramJaccard(s, dir).count() },
+      timed("warm:lsh_pairs") { graft.textops.TextOps.minhashLsh(s, dir).count() },
       timed("warm:dup_groups") { graft.textops.TextOps.dupGroups(s, dir).count() },
       timed("warm:simhash_pairs") { graft.textops.TextOps.simhashDedup(s, dir).count() },
       timed("warm:simhash_groups") { graft.textops.TextOps.simhashGroups(s, dir).count() },
       timed("warm:emb_buckets") { graft.sim.Similarity.lshBuckets(s, dir).count() },
-      timed("warm:emb_pairs") { graft.sim.Similarity.embeddingDedup(s, dir, 0.40).count() },
-      timed("warm:emb_groups") { graft.sim.Similarity.embeddingGroups(s, dir, 0.40).count() },
+      timed("warm:emb_pairs") { graft.sim.Similarity.embeddingDedup(s, dir).count() },
+      timed("warm:emb_groups") { graft.sim.Similarity.embeddingGroups(s, dir).count() },
       timed("warm:centroids") { graft.sim.Similarity.warmCentroids(s, dir) })
   }
 
@@ -374,8 +374,7 @@ object SparkEntry {
         .orderBy(col("doc_id"), col("start"))),
     "x_discovery_learn_core" -> ((s, dir) =>
       graft.extract.GapDiscovery.learningCandidates(
-        graft.extract.GapDiscovery.discoverAll(core(s, dir)),
-        threshold = 0.85, minDocs = 2)
+        graft.extract.GapDiscovery.discoverAll(core(s, dir)))
         .orderBy(col("kind"), col("value"))),
     "x_domain_entities" -> ((s, dir) =>
       extracted(s, dir)
@@ -495,8 +494,8 @@ object SparkEntry {
     "t3_lang_id" -> ((s, dir) => graft.textops.TextOps.langId(s, dir)),
     "t4_fingerprint" -> ((s, dir) => graft.textops.TextOps.fingerprint(s, dir)),
     "t5_dedup_exact" -> ((s, dir) => graft.textops.TextOps.dedupExact(s, dir)),
-    "t6_ngram_jaccard" -> ((s, dir) => graft.textops.TextOps.ngramJaccard(s, dir, 0.2)),
-    "t7_minhash_lsh" -> ((s, dir) => graft.textops.TextOps.minhashLsh(s, dir, 0.5)),
+    "t6_ngram_jaccard" -> ((s, dir) => graft.textops.TextOps.ngramJaccard(s, dir)),
+    "t7_minhash_lsh" -> ((s, dir) => graft.textops.TextOps.minhashLsh(s, dir)),
     "t8_simhash" -> ((s, dir) => graft.textops.TextOps.simhash(s, dir)),
     "t10_dup_groups" -> ((s, dir) => graft.textops.TextOps.dupGroups(s, dir)),
     "t11_corpus_select" -> ((s, dir) => graft.textops.TextOps.corpusSelect(s, dir)),
@@ -535,23 +534,22 @@ object SparkEntry {
     "m5_audio_features" -> ((s, dir) => graft.media.MediaOps.audioFeatures(s, dir)),
 
     // ---- similarity search over embeddings (DuckDB-verified)
-    "s1_cosine_topk" -> ((s, dir) => graft.sim.Similarity.cosineTopK(s, dir, 10, 5)),
-    "s2_lsh_topk" -> ((s, dir) => graft.sim.Similarity.lshTopK(s, dir, 10, 5)),
+    "s1_cosine_topk" -> ((s, dir) => graft.sim.Similarity.cosineTopK(s, dir)),
+    "s2_lsh_topk" -> ((s, dir) => graft.sim.Similarity.lshTopK(s, dir)),
     "s3_label_centroids" -> ((s, dir) => graft.sim.Similarity.labelCentroids(s, dir)),
-    "s4_ivf_topk" -> ((s, dir) => graft.sim.Similarity.ivfTopK(s, dir, 10, 5)),
-    "s6_ivf_recall" -> ((s, dir) => graft.sim.Similarity.ivfRecall(s, dir, 10, 5)),
+    "s4_ivf_topk" -> ((s, dir) => graft.sim.Similarity.ivfTopK(s, dir)),
+    "s6_ivf_recall" -> ((s, dir) => graft.sim.Similarity.ivfRecall(s, dir)),
     // the same measurement on the label-correlated clustered family:
     // recall at fixed nprobe as a function of cluster purity (s6's
     // near-uniform corpus is the probed-mass worst case)
-    "s8_ivf_recall_clustered" -> ((s, dir) =>
-      graft.sim.Similarity.ivfRecallClustered(s, dir, 10, 5)),
+    "s8_ivf_recall_clustered" -> ((s, dir) => graft.sim.Similarity.ivfRecallClustered(s, dir)),
     // int8 quantization with MEASURED reconstruction quality — the
     // vector-payload memory-footprint path (codes 4x smaller; exact
     // re-rank stays on the originals)
     "s9_quantize_int8" -> ((s, dir) => graft.sim.Similarity.quantizeInt8(s, dir)),
-    "s7_lsh_ann_recall" -> ((s, dir) => graft.sim.Similarity.lshAnnRecall(s, dir, 10, 5)),
-    "t9_embedding_dedup" -> ((s, dir) => graft.sim.Similarity.embeddingDedup(s, dir, 0.40)),
-    "s5_embedding_groups" -> ((s, dir) => graft.sim.Similarity.embeddingGroups(s, dir, 0.40))
+    "s7_lsh_ann_recall" -> ((s, dir) => graft.sim.Similarity.lshAnnRecall(s, dir)),
+    "t9_embedding_dedup" -> ((s, dir) => graft.sim.Similarity.embeddingDedup(s, dir)),
+    "s5_embedding_groups" -> ((s, dir) => graft.sim.Similarity.embeddingGroups(s, dir))
   )
 
   def oracleSql: Map[String, String] = Map(
@@ -720,19 +718,18 @@ object SparkEntry {
     "t3_lang_id" -> OracleSql.langId,
     "t4_fingerprint" -> OracleSql.fingerprint,
     "t5_dedup_exact" -> OracleSql.dedupExact,
-    "t6_ngram_jaccard" -> OracleSql.ngramJaccard(0.2),
-    "t7_minhash_lsh" -> OracleSql.minhashLsh(0.5),
+    "t6_ngram_jaccard" -> OracleSql.ngramJaccard,
+    "t7_minhash_lsh" -> OracleSql.minhashLsh,
     "t8_simhash" -> OracleSql.simhash,
-    "t10_dup_groups" -> OracleSql.dupGroups(0.5),
-    "t11_corpus_select" -> OracleSql.corpusSelect(0.5, 0.5),
-    "t12_lsh_recall" -> OracleSql.lshRecall(0.5),
+    "t10_dup_groups" -> OracleSql.dupGroups,
+    "t11_corpus_select" -> OracleSql.corpusSelect,
+    "t12_lsh_recall" -> OracleSql.lshRecall,
     "t13_rolling_fp" -> OracleSql.rollingFingerprint,
-    "t14_simhash_dedup" -> OracleSql.simhashDedup(graft.textops.TextOps.HammingMax),
-    "t15_simhash_groups" -> OracleSql.simhashGroups(graft.textops.TextOps.HammingMax),
-    "t16_contamination" -> OracleSql.contamination(graft.textops.TextOps.ContaminationThreshold),
+    "t14_simhash_dedup" -> OracleSql.simhashDedup,
+    "t15_simhash_groups" -> OracleSql.simhashGroups,
+    "t16_contamination" -> OracleSql.contamination,
     "t17_token_budget" -> OracleSql.tokenBudget,
-    "t18_curation_funnel" -> OracleSql.curationFunnel(0.5, 0.5,
-      graft.textops.TextOps.ContaminationThreshold),
+    "t18_curation_funnel" -> OracleSql.curationFunnel,
     "t19_stream_dedup" -> OracleSql.streamDedup,
     "t20_stream_dedup_bounded" -> OracleSql.streamDedupBounded,
     "t21_repetition" -> OracleSql.repetition,
@@ -741,15 +738,15 @@ object SparkEntry {
     "m3_frame_sample" -> OracleSql.frameSample,
     "m4_resize_plan" -> OracleSql.resizePlan,
     "m5_audio_features" -> OracleSql.audioFeatures,
-    "s1_cosine_topk" -> OracleSql.cosineTopK(10, 5),
-    "s2_lsh_topk" -> OracleSql.lshTopK(10, 5),
+    "s1_cosine_topk" -> OracleSql.cosineTopK(),
+    "s2_lsh_topk" -> OracleSql.lshTopK,
     "s3_label_centroids" -> OracleSql.labelCentroids,
-    "s4_ivf_topk" -> OracleSql.ivfTopK(10, 5),
-    "s6_ivf_recall" -> OracleSql.ivfRecall(10, 5),
-    "s8_ivf_recall_clustered" -> OracleSql.ivfRecallClustered(10, 5),
+    "s4_ivf_topk" -> OracleSql.ivfTopK(),
+    "s6_ivf_recall" -> OracleSql.ivfRecall,
+    "s8_ivf_recall_clustered" -> OracleSql.ivfRecallClustered,
     "s9_quantize_int8" -> OracleSql.quantizeInt8,
-    "s7_lsh_ann_recall" -> OracleSql.lshAnnRecall(10, 5),
-    "t9_embedding_dedup" -> OracleSql.embeddingDedup(0.40),
-    "s5_embedding_groups" -> OracleSql.embeddingGroups(0.40)
+    "s7_lsh_ann_recall" -> OracleSql.lshAnnRecall,
+    "t9_embedding_dedup" -> OracleSql.embeddingDedup,
+    "s5_embedding_groups" -> OracleSql.embeddingGroups
   )
 }

@@ -336,7 +336,7 @@ object Core8Extractor {
       cap("REGULATION", dedupLongestFirst(regs)) ++
       cap("RANGE_INDICATOR", dedupLongestFirst(rangeInds)) ++
       cap("PERSON", dedupLongestFirst(persons)) ++
-      cap("ORG", orgs.take(PatternBank.caps("ORG"))) ++
+      cap("ORG", orgs) ++
       cap("GPE", gpes) ++
       cap("LOC", locs)
 

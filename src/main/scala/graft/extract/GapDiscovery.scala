@@ -119,18 +119,23 @@ object GapDiscovery {
       }.toDF("doc_id", "type", "text", "confidence", "start", "end", "pattern")
   }
 
-  /** The distributed learning step: discoveries seen in >= minDocs
-    * documents with mean confidence >= threshold become corpus rows
+  /** A discovery is learned once LearnMinDocs documents show it with a
+    * mean confidence of at least LearnThreshold.
+    */
+  val LearnThreshold = 0.85
+  val LearnMinDocs = 2
+
+  /** The distributed learning step: discoveries seen in >= LearnMinDocs
+    * documents with mean confidence >= LearnThreshold become corpus rows
     * (kind, value, meta) for CorpusTable.load — corpus-frequency
     * evidence replaces the reference's per-doc learning threshold.
     */
-  def learningCandidates(discoveries: DataFrame, threshold: Double = 0.85,
-      minDocs: Int = 2): DataFrame =
+  def learningCandidates(discoveries: DataFrame): DataFrame =
     discoveries
       .groupBy(col("type"), col("text"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         round(avg(col("confidence")), 4).as("mean_conf"))
-      .filter(col("n_docs") >= minDocs && col("mean_conf") >= threshold)
+      .filter(col("n_docs") >= LearnMinDocs && col("mean_conf") >= LearnThreshold)
       // PERSON names must land as the single TOKENS the person extractor
       // scores against (first token -> first_name, last token ->
       // last_name; single-token discoveries are surnames from the title

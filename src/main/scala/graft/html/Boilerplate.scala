@@ -25,38 +25,41 @@ import HtmlParser.Node
   */
 object Boilerplate {
 
-  private val stripTags = Set("script", "noscript", "style", "nav", "footer", "header", "aside")
-  private val scorable = Set("div", "section", "ul", "table")
-  private val protectedTags = Set("article", "main")
+  /** Tag class, one lookup per child element: 's' is dropped unwalked
+    * (phase 1), 'h' kept unwalked (`title` only below depth 1), 'l' is a
+    * `link` (dropped when a stylesheet or rel-less), 'd' a density-scored
+    * container and 'p' protects its subtree. Other tags are walked.
+    */
+  private val tagClass: Map[String, Char] = Map(
+    's' -> "script noscript style nav footer header aside", 'h' -> "meta base title",
+    'l' -> "link", 'd' -> "div section ul table", 'p' -> "article main")
+    .flatMap { case (c, tags) => tags.split(' ').map(_ -> c) }
 
   final case class Score(textChars: Int, linkChars: Int, elemCount: Int) {
     def linkDensity: Double = if (textChars == 0) 0.0 else linkChars.toDouble / textChars
-    def textDensity: Double = {
-      val t = textChars.toDouble
-      if (t + 40.0 * elemCount == 0) 0.0 else t / (t + 40.0 * elemCount)
-    }
-    /** This score with a child subtree's added; under an `<a>` all of
-      * the child's text is link text.
-      */
-    def plus(child: Score, inLink: Boolean): Score =
-      Score(textChars + child.textChars,
-        linkChars + (if (inLink) child.textChars else child.linkChars),
-        elemCount + child.elemCount)
+    def textDensity: Double =
+      if (textChars + 40.0 * elemCount == 0) 0.0 else textChars / (textChars + 40.0 * elemCount)
   }
 
-  /** Text/link/element counts for a subtree (whitespace-squashed length). */
-  def score(node: Node): Score =
-    if (node.isText) Score(squashedLen(node.text), 0, 0)
-    else node.children.foldLeft(Score(0, 0, 1))((s, ch) => s.plus(score(ch), node.tag == "a"))
+  /** Text/link/element counts for a subtree (whitespace-squashed length);
+    * under an `<a>` all text is link text.
+    */
+  def score(node: Node): Score = {
+    var text, link, elems = 0
+    def add(n: Node, inLink: Boolean): Unit =
+      if (n.isText) { val t = squashedLen(n.text); text += t; if (inLink) link += t }
+      else { elems += 1; n.children.foreach(add(_, inLink || n.tag == "a")) }
+    add(node, inLink = false)
+    Score(text, link, elems)
+  }
 
   private def squashedLen(s: String): Int = {
-    var count = 0
+    var count, i = 0
     var prevWs = true
-    var i = 0
     while (i < s.length) {
       val ws = Character.isWhitespace(s.charAt(i))
-      if (!ws) { count += 1; prevWs = false }
-      else if (!prevWs) { count += 1; prevWs = true }
+      if (!ws || !prevWs) count += 1
+      prevWs = ws
       i += 1
     }
     if (prevWs && count > 0) count - 1 else count
@@ -71,29 +74,32 @@ object Boilerplate {
     * buffers; the input tree is consumed).
     */
   def clean(root: Node): Node = {
-    // prunes n's subtree; returns n's unpruned score
-    def walk(n: Node, depth: Int, inProtected: Boolean): Score = {
-      var total = Score(0, 0, 1)
-      n.children.filterInPlace { ch =>
-        val (sc, keep) =
-          if (ch.isText || ch.tag == "meta" || ch.tag == "base" || ch.tag == "title" && depth > 1)
-            (score(ch), true)
-          else if (stripTags.contains(ch.tag) || ch.tag == "link" &&
-                   (ch.attr("rel").toLowerCase.contains("stylesheet") || ch.attr("rel").isEmpty))
-            (score(ch), false) // phase 1: dropped without a walk
-          else {
-            val prot = inProtected || protectedTags.contains(ch.tag)
-            val sub = walk(ch, depth + 1, prot)
-            val drop = !prot && scorable.contains(ch.tag) &&
-              sub.textChars > 0 && boilerplateScore(sub, depth) > threshold
-            (sub, !drop)
-          }
-        total = total.plus(sc, n.tag == "a")
-        keep
+    // prunes n's subtree; returns its unpruned score when `counted` (n or
+    // a container above it is density-scored). Elsewhere nothing reads
+    // the counts, so text and unwalked subtrees (the head's scripts) add 0.
+    def walk(n: Node, depth: Int, inProtected: Boolean, counted: Boolean): Score = {
+      val inLink = n.tag == "a"
+      var text, link, elems, kept, i = 0
+      while (i < n.children.length) {
+        val ch = n.children(i)
+        val cls = if (ch.isText) 't' else tagClass.getOrElse(ch.tag, 'w')
+        val strip = cls == 's' || cls == 'l' &&
+          (ch.attr("rel").toLowerCase.contains("stylesheet") || ch.attr("rel").isEmpty)
+        val scored = cls == 'd' && !inProtected
+        val sub =
+          if (!strip && cls != 't' && (cls != 'h' || depth <= 1 && ch.tag == "title"))
+            walk(ch, depth + 1, inProtected || cls == 'p', counted || scored)
+          else if (counted) score(ch) else Score(0, 0, 0)
+        text += sub.textChars; link += (if (inLink) sub.textChars else sub.linkChars)
+        elems += sub.elemCount
+        val keep = !strip && !(scored && sub.textChars > 0 && boilerplateScore(sub, depth) > threshold)
+        if (keep) { n.children(kept) = ch; kept += 1 }
+        i += 1
       }
-      total
+      if (kept < i) n.children.dropRightInPlace(i - kept)
+      Score(text, link, elems + 1)
     }
-    walk(root, 0, inProtected = false)
+    walk(root, 0, inProtected = false, counted = false)
     root
   }
 }

@@ -99,8 +99,6 @@ object MarkdownEmitter {
           if (src.nonEmpty) { flush(); ctx.emit(K.ImageRef, alt, resolveUrl(ctx.baseUrl, src)) }
           else sb.append("[Image: ").append(alt).append("]")
         case "br" => sb.append(' ')
-        case "span" | "u" | "small" | "sub" | "sup" | "abbr" | "mark" | "time" | "cite" | "q" | "label" =>
-          renderInline(ch, ctx, sb, flushKind)
         case _ => renderInline(ch, ctx, sb, flushKind)
       }
     }

@@ -123,8 +123,12 @@ object Assembly {
     sb.toString
   }
 
-  /** JSON string escape (control chars, quote, backslash). */
-  private def js(s: String): String = {
+  /** A quoted JSON string: escapes the quote, the backslash and every
+    * control char below 0x20. The knowledge JSON and Verify's
+    * oracle_sql.json both use it, so a tab in an oracle's SQL cannot
+    * break the dump's JSON.
+    */
+  private[graft] def js(s: String): String = {
     val sb = new StringBuilder("\"")
     s.foreach {
       case '"' => sb ++= "\\\""

@@ -28,42 +28,48 @@ object Similarity {
     */
   private def cosine(a: Column, b: Column) = call_function("cosine_sim", a, b)
 
+  /** Every top-k search (s1, s2, s4, s6-s8) asks for the TopK nearest
+    * neighbors of each of the first NumQueries vec_ids.
+    */
+  val NumQueries = 10
+  val TopK = 5
+
   private val topkCache = new graft.util.SessionCache[DataFrame]
 
-  /** Brute-force cosine top-k: the first `nQueries` vec_ids against the
-    * whole table; top `k` neighbors each (self excluded). Memoized +
-    * checkpointed per (session, dir, nQueries, k): this is the ground
-    * truth s6 and s7 both compare against, and the O(n·q) scan must not
-    * re-run per consumer.
+  /** Brute-force cosine top-k: the query vec_ids against the whole table;
+    * top TopK neighbors each (self excluded). Memoized + checkpointed per
+    * (session, dir): this is the ground truth s6 and s7 both compare
+    * against, and the O(n·q) scan must not re-run per consumer.
     */
-  def cosineTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5): DataFrame =
-    topkCache.getOrElseUpdate(s, s"$dir#$nQueries#$k") {
-      cosineTopKOn(embeddings(s, dir), nQueries, k).localCheckpoint()
+  def cosineTopK(s: SparkSession, dir: String): DataFrame =
+    topkCache.getOrElseUpdate(s, dir) {
+      cosineTopKOn(embeddings(s, dir)).localCheckpoint()
     }
 
   /** Brute-force top-k over an arbitrary (vec_id, embedding) frame —
     * the table-reading wrapper above and the s8 clustered family share
     * this one definition.
     */
-  private def cosineTopKOn(emb: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    val queries = broadcast(
-      emb.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
-    rankTopK(emb.join(queries, col("vec_id") =!= col("q_id")), k)
-  }
+  private def cosineTopKOn(emb: DataFrame): DataFrame =
+    rankTopK(emb.join(broadcast(queryRows(emb)), col("vec_id") =!= col("q_id")))
+
+  /** (q_id, q_emb) of the NumQueries query vectors. */
+  private def queryRows(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < NumQueries)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
 
   /** The one exact re-rank of every top-k path (s1, s2, s4, s8): cosine
     * of each (q_id, q_emb) × (vec_id, embedding) candidate row, then the
-    * top `k` per query by (cos desc, vec_id) — the oracles' tie-break.
+    * top TopK per query by (cos desc, vec_id) — the oracles' tie-break.
     */
-  private def rankTopK(cand: DataFrame, k: Int): DataFrame = {
+  private def rankTopK(cand: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.ensureRegistered(cand.sparkSession)
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
     cand
       .withColumn("cos", round(cosine(col("q_emb"), col("embedding")), 4))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= TopK)
       .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
       .orderBy(col("q_id"), col("rank"))
   }
@@ -129,11 +135,11 @@ object Similarity {
     * O(n·q) scan; embeddings are re-attached AFTER dedup so the shuffle
     * carries (q_id, vec_id) pairs, not vectors.
     */
-  def lshTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5): DataFrame = {
+  def lshTopK(s: SparkSession, dir: String): DataFrame = {
     val emb = embeddings(s, dir)
     val buckets = lshBuckets(s, dir)
     val qBuckets = broadcast(
-      buckets.filter(col("vec_id") < nQueries)
+      buckets.filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("q_id"), col("tbl").as("q_tbl"), col("bucket").as("q_bucket")))
     val pairs = buckets
       .join(qBuckets,
@@ -141,10 +147,7 @@ object Similarity {
           col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
       .distinct()
-    val qEmb = broadcast(
-      emb.filter(col("vec_id") < nQueries)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb")))
-    rankTopK(pairs.join(emb, "vec_id").join(qEmb, "q_id"), k)
+    rankTopK(pairs.join(emb, "vec_id").join(broadcast(queryRows(emb)), "q_id"))
   }
 
   /** Centroid (mean vector) per label — the IVF coarse-quantizer step:
@@ -185,18 +188,21 @@ object Similarity {
       .map { case (lbl, rows) => (lbl, rows.sortBy(_._2).map(_._3)) }
       .sortBy(_._1)
 
+  /** The cosine cut of embedding near-dup pairs (t9, s5). */
+  val CosineThreshold = 0.40
+
   /** Embedding-cosine near-duplicate detection: candidate pairs from the
     * multi-table LSH layout (no O(n²) scan; the shared TextOps.bandPairs
     * join and MaxBandBucket cap, one band per hash table), verified with
-    * exact cosine, kept at ≥ threshold. The dedup twin of lshTopK — at
-    * 10^9 vectors this is the "collapse same-content embeddings" pass of
-    * a training pipeline. Verified pairs are memoized per (session, dir,
-    * threshold): t9 and the s5 grouping share one computation.
+    * exact cosine, kept at ≥ CosineThreshold. The dedup twin of lshTopK —
+    * at 10^9 vectors this is the "collapse same-content embeddings" pass
+    * of a training pipeline. Verified pairs are memoized per (session,
+    * dir): t9 and the s5 grouping share one computation.
     */
   private val dedupPairCache = new graft.util.SessionCache[DataFrame]
 
-  def embeddingDedup(s: SparkSession, dir: String, threshold: Double = 0.40): DataFrame =
-    dedupPairCache.getOrElseUpdate(s, s"$dir#$threshold") {
+  def embeddingDedup(s: SparkSession, dir: String): DataFrame =
+    dedupPairCache.getOrElseUpdate(s, dir) {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val emb = embeddings(s, dir)
       // exact-dedup-first: byte-equal embeddings collapse before bucket
@@ -205,7 +211,7 @@ object Similarity {
         .select(col("vec_id").as("id"), col("tbl").as("band"), col("bucket").as("key"))
       TextOps.verifiedPairs(TextOps.bandPairs(bands, "t9"),
         emb.select(col("vec_id").as("id"), col("embedding").as("v")), "cos")(
-        (ea, eb) => round(cosine(ea, eb), 4), _ >= threshold)
+        (ea, eb) => round(cosine(ea, eb), 4), _ >= CosineThreshold)
     }
 
   /** Exact-dedup keepers: one min vec_id per byte-identical vector,
@@ -236,14 +242,14 @@ object Similarity {
 
   /** s5: embedding near-dup GROUPS — connected components over the
     * cosine-verified pairs (the text-side t10 grouping), one keeper id
-    * per cluster of same-content embeddings. Memoized per (session,
-    * dir, threshold) like dupGroups.
+    * per cluster of same-content embeddings. Memoized per (session, dir)
+    * like dupGroups.
     */
   private val embGroupCache = new graft.util.SessionCache[DataFrame]
 
-  def embeddingGroups(s: SparkSession, dir: String, threshold: Double = 0.40): DataFrame =
-    embGroupCache.getOrElseUpdate(s, s"$dir#$threshold") {
-      TextOps.groupsOf(embeddingDedup(s, dir, threshold), "vec_id")
+  def embeddingGroups(s: SparkSession, dir: String): DataFrame =
+    embGroupCache.getOrElseUpdate(s, dir) {
+      TextOps.groupsOf(embeddingDedup(s, dir), "vec_id")
     }
 
   /** Mixed-type cosine (float[] column vs literal double[] centroid) as
@@ -277,28 +283,25 @@ object Similarity {
     * n×k embedding-carrying rows; both current strategies assign cells
     * without that shuffle (see literalCells/joinCells).
     */
-  def ivfTopK(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
-      nProbe: Int = NProbe): DataFrame = {
+  def ivfTopK(s: SparkSession, dir: String, nProbe: Int = NProbe): DataFrame = {
     val cents = collectedCentroids(s, dir)
     val dim = cents.headOption.map(_._2.length).getOrElse(0)
     val (assigned, probes) =
-      if (cents.length * dim <= LiteralCentroidBudget) literalCells(s, dir, nQueries, nProbe)
-      else joinCells(s, dir, nQueries, nProbe)
-    topKWithin(assigned, probes, k)
+      if (cents.length * dim <= LiteralCentroidBudget)
+        literalCells(embeddings(s, dir), cents, nProbe)
+      else joinCells(s, dir, nProbe)
+    topKWithin(assigned, probes)
   }
 
   /** s6: measured IVF quality — recall of the nProbe-cell search against
-    * the s1 brute-force truth at the same (nQueries, k). The probe/recall
-    * trade-off is the entire point of IVF, so it gets the same treatment
-    * t12 gives LSH: both frames reuse the memoized centroid collection,
-    * and the compare is ONE action (full-outer join over two tiny top-k
-    * frames). Precision is reported too, though for a fixed-k ANN it
+    * the s1 brute-force truth. The probe/recall trade-off is the entire
+    * point of IVF, so it gets the same treatment t12 gives LSH: both
+    * frames reuse the memoized centroid collection, and the compare is
+    * ONE action (full-outer join over two tiny top-k frames). Precision is reported too, though for a fixed-k ANN it
     * only drops below recall when probed cells run short of k matches.
     */
-  def ivfRecall(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
-      nProbe: Int = NProbe): DataFrame =
-    annRecall(s, cosineTopK(s, dir, nQueries, k),
-      ivfTopK(s, dir, nQueries, k, nProbe), "nprobe", nProbe.toLong, "n_ivf")
+  def ivfRecall(s: SparkSession, dir: String, nProbe: Int = NProbe): DataFrame =
+    annRecall(s, cosineTopK(s, dir), ivfTopK(s, dir, nProbe), "nprobe", nProbe.toLong, "n_ivf")
 
   // --------------------------------------- s8: clustered-corpus recall
 
@@ -372,16 +375,12 @@ object Similarity {
     * at fixed nprobe is a function of cluster purity, not of the
     * operator.
     */
-  def ivfRecallClustered(s: SparkSession, dir: String, nQueries: Int = 10,
-      k: Int = 5, nProbe: Int = NProbe): DataFrame = {
+  def ivfRecallClustered(s: SparkSession, dir: String): DataFrame = {
     val emb = clusteredCache.getOrElseUpdate(s, dir) {
       clusteredEmbeddings(s, dir).localCheckpoint()
     }
-    val cents = centroidsOf(labelCentroidsOf(emb))
-    val truth = cosineTopKOn(emb, nQueries, k)
-    val (assigned, probes) = literalCellsOn(emb, cents, nQueries, nProbe)
-    val cand = topKWithin(assigned, probes, k)
-    annRecall(s, truth, cand, "nprobe", nProbe.toLong, "n_ivf")
+    val (assigned, probes) = literalCells(emb, centroidsOf(labelCentroidsOf(emb)), NProbe)
+    annRecall(s, cosineTopKOn(emb), topKWithin(assigned, probes), "nprobe", NProbe.toLong, "n_ivf")
   }
 
   /** s6, s7 and s8's row: TextOps.recallOf of the candidate top-k
@@ -403,10 +402,8 @@ object Similarity {
     * truth top-k is memoized (shared with s1/s6) and the candidate side
     * reuses the persisted bucket memo; the compare is one action.
     */
-  def lshAnnRecall(s: SparkSession, dir: String, nQueries: Int = 10,
-      k: Int = 5): DataFrame =
-    annRecall(s, cosineTopK(s, dir, nQueries, k),
-      lshTopK(s, dir, nQueries, k), "n_tables", NumTables.toLong, "n_lsh")
+  def lshAnnRecall(s: SparkSession, dir: String): DataFrame =
+    annRecall(s, cosineTopK(s, dir), lshTopK(s, dir), "n_tables", NumTables.toLong, "n_lsh")
 
   /** Shuffle-free cell assignment: centroids baked as literal arrays,
     * argmax via array_max over struct(cos_c, -label) (max cosine, ties
@@ -414,12 +411,8 @@ object Similarity {
     * Valid while k·dim fits the literal budget; the only exchange left
     * in the whole query is the final top-k window.
     */
-  private def literalCells(s: SparkSession, dir: String, nQueries: Int,
-      nProbe: Int = NProbe): (DataFrame, DataFrame) =
-    literalCellsOn(embeddings(s, dir), collectedCentroids(s, dir), nQueries, nProbe)
-
-  private def literalCellsOn(emb: DataFrame, cents: Array[(Int, Array[Double])],
-      nQueries: Int, nProbe: Int): (DataFrame, DataFrame) = {
+  private def literalCells(emb: DataFrame, cents: Array[(Int, Array[Double])],
+      nProbe: Int): (DataFrame, DataFrame) = {
     val cands = array(cents.map { case (lbl, vec) =>
       val cvec = array(vec.map(lit(_)): _*)
       struct(cosineMixedCol(col("embedding"), cvec).as("cos_c"),
@@ -432,7 +425,7 @@ object Similarity {
     val cellsDesc = array_sort(cands,
       (l, r) => when(l > r, lit(-1)).when(l < r, lit(1)).otherwise(lit(0)))
     val probes = broadcast(
-      emb.filter(col("vec_id") < nQueries)
+      emb.filter(col("vec_id") < NumQueries)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
           explode(slice(cellsDesc, 1, nProbe)).as("pc"))
         .withColumn("probe_cell", -col("pc").getField("neg_label"))
@@ -447,8 +440,7 @@ object Similarity {
     * carries small rows, never the n×k embedding-carrying join output
     * (the r2 window-ranking plan this family replaced).
     */
-  private def joinCells(s: SparkSession, dir: String, nQueries: Int,
-      nProbe: Int = NProbe): (DataFrame, DataFrame) = {
+  private def joinCells(s: SparkSession, dir: String, nProbe: Int): (DataFrame, DataFrame) = {
     import s.implicits._
     val emb = embeddings(s, dir)
     val centDf = broadcast(
@@ -462,7 +454,7 @@ object Similarity {
       .join(emb, "vec_id")
       .select(col("vec_id"), col("embedding"), col("cell"))
     val probes = broadcast(
-      scored.filter(col("vec_id") < nQueries)
+      scored.filter(col("vec_id") < NumQueries)
         .groupBy(col("vec_id").as("q_id"))
         // ascending sort of (-cos, label) = cosine desc, label asc
         .agg(slice(array_sort(collect_list(struct((-col("cos_c")).as("nc"),
@@ -474,13 +466,13 @@ object Similarity {
     (assigned, probes)
   }
 
-  private def topKWithin(assigned: DataFrame, probes: DataFrame, k: Int): DataFrame =
+  private def topKWithin(assigned: DataFrame, probes: DataFrame): DataFrame =
     rankTopK(assigned.join(probes,
-      col("cell") === col("probe_cell") && col("vec_id") =!= col("q_id")), k)
+      col("cell") === col("probe_cell") && col("vec_id") =!= col("q_id")))
 
   /** Test hook: the join-path variant regardless of budget. */
-  private[sim] def ivfTopKJoinPath(s: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5): DataFrame = {
-    val (assigned, probes) = joinCells(s, dir, nQueries)
-    topKWithin(assigned, probes, k)
+  private[sim] def ivfTopKJoinPath(s: SparkSession, dir: String): DataFrame = {
+    val (assigned, probes) = joinCells(s, dir, NProbe)
+    topKWithin(assigned, probes)
   }
 }

@@ -215,15 +215,20 @@ object TextOps {
     sh.join(keep, Seq("sh"), "left_semi")
   }
 
+  /** t6's Jaccard cut: the n-gram baseline keeps pairs at ≥ 0.2, a
+    * superset of the ≥ JaccardThreshold pairs t12 measures LSH against.
+    */
+  val NgramThreshold = 0.2
+
   /** N-gram Jaccard near-dup baseline: pairs sharing a shingle →
-    * |∩| / |∪| ≥ threshold. Join on shingle (equi-join shuffle), never a
-    * cross join — candidate pairs are bounded by shingle co-occurrence,
-    * and the DF cap above bounds the per-key blowup.
+    * |∩| / |∪| ≥ NgramThreshold. Join on shingle (equi-join shuffle),
+    * never a cross join — candidate pairs are bounded by shingle
+    * co-occurrence, and the DF cap above bounds the per-key blowup.
     */
   private val ngramPairCache = new graft.util.SessionCache[DataFrame]
 
-  def ngramJaccard(s: SparkSession, dir: String, threshold: Double = 0.2): DataFrame =
-    ngramPairCache.getOrElseUpdate(s, s"$dir#$threshold") {
+  def ngramJaccard(s: SparkSession, dir: String): DataFrame =
+    ngramPairCache.getOrElseUpdate(s, dir) {
       // localCheckpoint, not persist: the pair frame is tiny but its
       // logical tree is the whole shingle pipeline — a persist keeps
       // that tree in every consumer's plan and the optimizer re-walks
@@ -234,10 +239,10 @@ object TextOps {
       // for reliable checkpointing (sparkContext.setCheckpointDir +
       // .checkpoint()), which keeps the lineage truncation and adds
       // durable storage; the memo pattern is unchanged.
-      ngramJaccardUncached(s, dir, threshold).localCheckpoint()
+      ngramJaccardUncached(s, dir).localCheckpoint()
     }
 
-  private def ngramJaccardUncached(s: SparkSession, dir: String, threshold: Double): DataFrame = {
+  private def ngramJaccardUncached(s: SparkSession, dir: String): DataFrame = {
     val sh = cappedShingles(shingles(s, dir), MaxShingleDf)
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
     val inter = sh.as("x").join(sh.as("y"),
@@ -249,7 +254,7 @@ object TextOps {
       .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("n", "nb"), "b")
       .withColumn("jaccard", round(col("i").cast("double") /
         (col("na") + col("nb") - col("i")), 4))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= NgramThreshold)
       .select("a", "b", "jaccard")
       .orderBy("a", "b")
   }
@@ -269,12 +274,9 @@ object TextOps {
     * second corpus. Reuses the memoized shingle frame, so the scan cost
     * is shared with t5-t7.
     */
-  def contamination(s: SparkSession, dir: String,
-      threshold: Double = ContaminationThreshold): DataFrame = {
+  def contamination(s: SparkSession, dir: String): DataFrame = {
     val sh = shingles(s, dir)
-    contaminationFrom(
-      sh.filter(col("doc_id") % 10 =!= 0),
-      sh.filter(col("doc_id") % 10 === 0), threshold)
+    contaminationFrom(sh.filter(col("doc_id") % 10 =!= 0), sh.filter(col("doc_id") % 10 === 0))
   }
 
   /** Core: per train doc, the fraction of its distinct shingles found
@@ -293,8 +295,7 @@ object TextOps {
     * and inflate the fraction. The bench side is deduped here because
     * vocabulary membership is inherently a set question.
     */
-  def contaminationFrom(train: DataFrame, bench: DataFrame,
-      threshold: Double): DataFrame = {
+  def contaminationFrom(train: DataFrame, bench: DataFrame): DataFrame = {
     val vocab = bench.select("sh").distinct()
     val hits = train.join(vocab, Seq("sh"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_contaminated"))
@@ -303,12 +304,15 @@ object TextOps {
       .withColumn("n_contaminated", coalesce(col("n_contaminated"), lit(0L)))
       .withColumn("contamination",
         round(col("n_contaminated").cast("double") / col("n_shingles"), 4))
-      .withColumn("is_contaminated", col("contamination") >= threshold)
+      .withColumn("is_contaminated", col("contamination") >= ContaminationThreshold)
       .select("doc_id", "n_shingles", "n_contaminated", "contamination", "is_contaminated")
       .orderBy("doc_id")
   }
 
   // ------------------------------------------------- curation funnel
+
+  /** The quality-score floor of the t11 and t18 keep decisions. */
+  val MinQuality = 0.5
 
   /** Full curation funnel (t18): the end-to-end per-document keep
     * decision a training-data pipeline materializes once per corpus —
@@ -321,8 +325,7 @@ object TextOps {
     * each stage frame is written once and the funnel is the join of
     * those decision tables.
     */
-  def curationFunnel(s: SparkSession, dir: String,
-      minQuality: Double = 0.5): DataFrame = {
+  def curationFunnel(s: SparkSession, dir: String): DataFrame = {
     val q = qualityScore(s, dir).select(col("doc_id"), col("quality_score"))
     val ex = dedupExact(s, dir).select(col("doc_id"), col("rn"))
     val nd = dupGroups(s, dir).select(col("doc_id"), col("group_id"))
@@ -338,7 +341,7 @@ object TextOps {
       .join(bud, "doc_id")
       .join(rep, "doc_id")
       .withColumn("is_train", col("doc_id") % 10 =!= 0)
-      .withColumn("quality_ok", col("quality_score") >= minQuality)
+      .withColumn("quality_ok", col("quality_score") >= MinQuality)
       .withColumn("exact_dup", col("rn") > 1)
       .withColumn("near_dup_loser",
         col("group_id").isNotNull && col("group_id") =!= col("doc_id"))
@@ -485,25 +488,28 @@ object TextOps {
       .orderBy("a", "b")
       .localCheckpoint()
 
+  /** The verified-Jaccard cut of the MinHash family (t7, t10-t12, t18). */
+  val JaccardThreshold = 0.5
+
   /** MinHash+LSH near-dup: band the signature (4 bands × 4 rows), bucket
     * by band hash, equi-join buckets for candidates, verify candidates
-    * with true Jaccard, keep ≥ threshold. The scale path: candidate
-    * generation is O(collisions), not O(n²). Exact dups are collapsed
-    * first and over-cap buckets dropped (see exactKeepers/MaxBandBucket).
-    * Verified pairs are memoized per (session, dir, threshold): t7, t10
-    * and t11 all consume them.
+    * with true Jaccard, keep ≥ JaccardThreshold. The scale path:
+    * candidate generation is O(collisions), not O(n²). Exact dups are
+    * collapsed first and over-cap buckets dropped (see
+    * exactKeepers/MaxBandBucket). Verified pairs are memoized per
+    * (session, dir): t7, t10 and t11 all consume them.
     */
   private val lshPairCache = new graft.util.SessionCache[DataFrame]
 
-  def minhashLsh(s: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
-    lshPairCache.getOrElseUpdate(s, s"$dir#$threshold") {
+  def minhashLsh(s: SparkSession, dir: String): DataFrame =
+    lshPairCache.getOrElseUpdate(s, dir) {
       // the builder checkpoints its own result (lineage truncation, same
       // reason as ngramJaccard above) so it can release its intermediate
       // band/candidate caches once the pairs are materialized
-      minhashLshUncached(s, dir, threshold)
+      minhashLshUncached(s, dir)
     }
 
-  private def minhashLshUncached(s: SparkSession, dir: String, threshold: Double): DataFrame = {
+  private def minhashLshUncached(s: SparkSession, dir: String): DataFrame = {
     // one shingle computation feeds BOTH the signatures and the verify
     // stage (persisted by the shingles() memo); candidates are tiny
     val sh0 = shingles(s, dir)
@@ -532,10 +538,10 @@ object TextOps {
     val out = verifiedPairs(cand, sets, "jaccard")((sa, sb) => {
       val i = size(array_intersect(sa, sb)).cast("long")
       round(i.cast("double") / (size(sa) + size(sb) - i), 4)
-    }, _ >= threshold)
+    }, _ >= JaccardThreshold)
     // the band/candidate caches have zero readers once the pairs are
     // checkpointed — release them instead of pinning storage memory for
-    // the session lifetime (one leak per (dir, threshold) memo key)
+    // the session lifetime (one leak per dir memo key)
     bands.unpersist(false)
     cand.unpersist(false)
     out
@@ -543,24 +549,12 @@ object TextOps {
 
   // --------------------------------------------------------- dup groups
 
-  /** Connected components over near-dup pairs — dedup needs GROUPS (one
-    * keeper per component), not pairwise edges. Returns (doc_id, label),
-    * where the label is the component's minimum id. See `components`.
-    */
-  def connectedComponents(pairs: DataFrame): DataFrame =
-    components(pairs).select(col("id").as("doc_id"), col("group_id").as("label"))
-
-  /** The one grouping step of the near-dup families: every id in some
-    * verified pair (a, b), its component id (min id in the component)
-    * and the component size, in `idName` order.
-    */
-  private[graft] def groupsOf(pairs: DataFrame, idName: String): DataFrame =
-    components(pairs).withColumnRenamed("id", idName)
-
-  /** (id, group_id, group_size) for every vertex of the pair graph, in id
-    * order: one exchange brings the pairs to a single partition, and that
-    * task runs a union-find over the edges as the shuffle reader streams
-    * them (see `unionFind`).
+  /** The one grouping step of the near-dup families — dedup needs GROUPS
+    * (one keeper per component), not pairwise edges: every id in some
+    * verified pair (a, b) as `idName`, its component id (min id in the
+    * component) and the component size, in id order. One exchange brings
+    * the pairs to a single partition, and that task runs a union-find
+    * over the edges as the shuffle reader streams them (see `unionFind`).
     *
     * Precondition: the vertex set of the verified pair graph fits in one
     * task. The capped band join bounds the candidates by Σ min(bsz, cap)²
@@ -574,12 +568,12 @@ object TextOps {
     * → verify tree) inside every consumer's plan, and the analyzer
     * re-walks it on every action. A checkpoint is a leaf RDD scan.
     */
-  private def components(pairs: DataFrame): DataFrame = {
+  private[graft] def groupsOf(pairs: DataFrame, idName: String): DataFrame = {
     import pairs.sparkSession.implicits._
     pairs.select(col("a"), col("b")).as[(Long, Long)]
       .repartition(1)
       .mapPartitions(unionFind)
-      .toDF("id", "group_id", "group_size")
+      .toDF(idName, "group_id", "group_size")
       .localCheckpoint()
   }
 
@@ -607,48 +601,44 @@ object TextOps {
   }
 
   /** t10: duplicate groups from the MinHash-LSH verified pairs.
-    * Memoized per (session, dir, threshold) — t11's curation reuses the
-    * same components.
+    * Memoized per (session, dir) — t11's curation reuses the same
+    * components.
     */
   private val dupGroupCache = new graft.util.SessionCache[DataFrame]
 
-  def dupGroups(s: SparkSession, dir: String, threshold: Double = 0.5): DataFrame =
-    dupGroupCache.getOrElseUpdate(s, s"$dir#$threshold") {
-      groupsOf(minhashLsh(s, dir, threshold), "doc_id")
+  def dupGroups(s: SparkSession, dir: String): DataFrame =
+    dupGroupCache.getOrElseUpdate(s, dir) {
+      groupsOf(minhashLsh(s, dir), "doc_id")
     }
 
   // --------------------------------------------------------- lsh recall
 
   /** t12: measured LSH quality — recall/precision of the banded MinHash
     * candidates against the exact shingle-Jaccard ground truth at the
-    * same threshold. Ground truth uses the DF-capped shingle space (the
-    * t6 baseline); LSH verification runs uncapped — near-threshold
-    * pairs can differ between the two spaces, which is part of what the
-    * metric reports. Truth pairs are restricted to exact-dedup keepers,
+    * same JaccardThreshold. Ground truth uses the DF-capped shingle
+    * space (the t6 baseline); LSH verification runs uncapped —
+    * near-threshold pairs can differ between the two spaces, which is
+    * part of what the metric reports. Truth pairs are restricted to exact-dedup keepers,
     * because t7 deliberately collapses exact dups before candidate
     * generation — the metric measures the banding MECHANISM, not that
     * policy. One row; the joins run over the two small pair frames,
     * both already memoized.
     */
-  def lshRecall(s: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
+  def lshRecall(s: SparkSession, dir: String): DataFrame = {
     // NO broadcast hint: keepers are O(corpus) rows (one per distinct
     // fingerprint), not dimension data — a forced broadcast would
     // collect the whole doc_id set on the driver at 10^9 docs. The
     // plain semi-joins shuffle doc_id pairs only.
     val keepers = exactKeepers(s, dir)
-    // the threshold only filters the final Jaccard ratio, so truth at
-    // any threshold >= t6's canonical 0.2 is a FILTER of the memoized
-    // t6 frame — reuse it instead of re-running the shingle self-join
-    // under a second memo key
-    val baseTruth =
-      if (threshold >= 0.2) ngramJaccard(s, dir, 0.2).filter(col("jaccard") >= threshold)
-      else ngramJaccard(s, dir, threshold)
-    val truth = baseTruth.select("a", "b")
+    // JaccardThreshold ≥ NgramThreshold, so the truth is a FILTER of the
+    // memoized t6 frame, not a second shingle self-join
+    val truth = ngramJaccard(s, dir).filter(col("jaccard") >= JaccardThreshold)
+      .select("a", "b")
       .join(keepers.withColumnRenamed("doc_id", "a"), Seq("a"), "left_semi")
       .join(keepers.withColumnRenamed("doc_id", "b"), Seq("b"), "left_semi")
       .select("a", "b")
     import s.implicits._
-    Seq(recallOf(truth, minhashLsh(s, dir, threshold), Seq("a", "b")))
+    Seq(recallOf(truth, minhashLsh(s, dir), Seq("a", "b")))
       .toDF("n_truth", "n_candidates", "n_hits", "recall", "precision")
   }
 
@@ -681,7 +671,7 @@ object TextOps {
     * doc_id equi-joins (co-partitioned after the first shuffle) plus a
     * left join against the tiny dup-group frame.
     */
-  def corpusSelect(s: SparkSession, dir: String, minQuality: Double = 0.5): DataFrame = {
+  def corpusSelect(s: SparkSession, dir: String): DataFrame = {
     val lang = langId(s, dir).select(col("doc_id"), col("lang_pred"))
     val q = qualityScore(s, dir).select(col("doc_id"), col("quality_score"))
     val ex = dedupExact(s, dir).select(col("doc_id"), col("rn"))
@@ -690,7 +680,7 @@ object TextOps {
       .join(lang, "doc_id").join(q, "doc_id").join(ex, "doc_id")
       .join(nd, Seq("doc_id"), "left")
       .withColumn("lang_ok", col("lang_pred") === "en")
-      .withColumn("quality_ok", col("quality_score") >= minQuality)
+      .withColumn("quality_ok", col("quality_score") >= MinQuality)
       .withColumn("exact_dup", col("rn") > 1)
       .withColumn("near_dup_loser",
         col("group_id").isNotNull && col("group_id") =!= col("doc_id"))
@@ -765,12 +755,12 @@ object TextOps {
     */
   private val simhashPairCache = new graft.util.SessionCache[DataFrame]
 
-  def simhashDedup(s: SparkSession, dir: String, maxHamming: Int = HammingMax): DataFrame =
-    simhashPairCache.getOrElseUpdate(s, s"$dir#$maxHamming") {
-      simhashDedupUncached(s, dir, maxHamming)
+  def simhashDedup(s: SparkSession, dir: String): DataFrame =
+    simhashPairCache.getOrElseUpdate(s, dir) {
+      simhashDedupUncached(s, dir)
     }
 
-  private def simhashDedupUncached(s: SparkSession, dir: String, maxHamming: Int): DataFrame = {
+  private def simhashDedupUncached(s: SparkSession, dir: String): DataFrame = {
     val sh = simhashFrame(s, dir)
     val shk = sh.join(exactKeepers(s, dir), Seq("doc_id"), "left_semi")
     val keys = (0 until SimhashBands).map(b =>
@@ -780,7 +770,7 @@ object TextOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = verifiedPairs(bandPairs(bands, "t14"),
       sh.select(col("doc_id").as("id"), col("simhash").as("v")), "hamming")(
-      (sa, sb) => bit_count(sa.bitwiseXOR(sb)).cast("long"), _ <= maxHamming)
+      (sa, sb) => bit_count(sa.bitwiseXOR(sb)).cast("long"), _ <= HammingMax)
     bands.unpersist(false)
     out
   }
@@ -790,9 +780,9 @@ object TextOps {
     */
   private val simhashGroupCache = new graft.util.SessionCache[DataFrame]
 
-  def simhashGroups(s: SparkSession, dir: String, maxHamming: Int = HammingMax): DataFrame =
-    simhashGroupCache.getOrElseUpdate(s, s"$dir#$maxHamming") {
-      groupsOf(simhashDedup(s, dir, maxHamming), "doc_id")
+  def simhashGroups(s: SparkSession, dir: String): DataFrame =
+    simhashGroupCache.getOrElseUpdate(s, dir) {
+      groupsOf(simhashDedup(s, dir), "doc_id")
     }
 
   // ------------------------------------------ t21: n-gram repetition

@@ -572,7 +572,7 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     forAll(pairGraphGen, 12) { pairs =>
       val expected = pointerDoubling(pairs)
       val df = pairs.toDF("a", "b")
-      val comp = TextOps.connectedComponents(df).collect().map(r => r.getLong(0) -> r.getLong(1))
+      val comp = TextOps.groupsOf(df, "doc_id").collect().map(r => r.getLong(0) -> r.getLong(1))
       assert(comp.toMap == expected)
       // groups: the same labels, each with its component's size, in id order
       val groups = TextOps.groupsOf(df, "id").collect()

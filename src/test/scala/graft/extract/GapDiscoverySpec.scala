@@ -67,7 +67,7 @@ class GapDiscoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     })
     val found = GapDiscovery.discoverAll(docs)
     assert(found.count() > 0)
-    val learned = GapDiscovery.learningCandidates(found, threshold = 0.85, minDocs = 2).collect()
+    val learned = GapDiscovery.learningCandidates(found).collect()
     val values = learned.map(r => (r.getString(0), r.getString(1))).toSet
     assert(values.contains(("org", "meridian technologies")), s"got $values")
     // PERSON discoveries land as the single tokens the person extractor
@@ -75,7 +75,7 @@ class GapDiscoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     val people = spark.createDataset((1L to 2L).map(i =>
       ("d" + i, "PERSON", "Zofia Kowalczyk", 0.9, "title_person")))
       .toDF("doc_id", "type", "text", "confidence", "pattern")
-    val prows = GapDiscovery.learningCandidates(people, threshold = 0.85, minDocs = 2)
+    val prows = GapDiscovery.learningCandidates(people)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(prows === Set(("first_name", "zofia"), ("last_name", "kowalczyk")), s"got $prows")
     // the corpus rows are loadable through the production table path

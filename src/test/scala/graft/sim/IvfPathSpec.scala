@@ -24,9 +24,9 @@ class IvfPathSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dim = cents.headOption.map(_._2.length).getOrElse(0)
     assert(cents.length * dim <= Similarity.LiteralCentroidBudget,
       "test corpus exceeds the literal budget; comparison would be vacuous")
-    val lit = Similarity.ivfTopK(spark, dir, 10, 5).collect()
+    val lit = Similarity.ivfTopK(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    val join = Similarity.ivfTopKJoinPath(spark, dir, 10, 5).collect()
+    val join = Similarity.ivfTopKJoinPath(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(lit.nonEmpty)
     assert(join.toSeq === lit.toSeq)

@@ -18,7 +18,7 @@ class IvfRecallSpec extends AnyFunSuite {
     val nLabels = Similarity.embeddings(spark, dir)
       .select("label").distinct().count().toInt
     val recalls = Seq(1, 2, 4, nLabels).map { np =>
-      val r = Similarity.ivfRecall(spark, dir, nQueries = 10, k = 5, nProbe = np).head()
+      val r = Similarity.ivfRecall(spark, dir, nProbe = np).head()
       np -> r.getDouble(4)
     }
     info(s"nprobe sweep at sf0.001: ${recalls.map { case (n, r) => s"$n -> $r" }.mkString(", ")}")

@@ -22,7 +22,7 @@ class ContaminationSpec extends AnyFunSuite with BeforeAndAfterAll {
       (3L, "a b c"), (3L, "q r s")              // 2 of 2 -> 1.0, flagged
     ).toDF("doc_id", "sh")
     val bench = Seq((10L, "a b c"), (10L, "q r s"), (20L, "a b c")).toDF("doc_id", "sh")
-    val out = TextOps.contaminationFrom(train, bench, 0.5).collect()
+    val out = TextOps.contaminationFrom(train, bench).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3), r.getBoolean(4))))
       .toMap
     assert(out(1L) == ((2L, 1L, 0.5, true)))   // >= threshold is inclusive
@@ -35,7 +35,7 @@ class ContaminationSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val train = Seq((1L, "a b c"), (1L, "d e f"), (1L, "g h i"), (1L, "j k l")).toDF("doc_id", "sh")
     val bench = Seq((10L, "a b c"), (11L, "a b c"), (12L, "a b c")).toDF("doc_id", "sh")
-    val row = TextOps.contaminationFrom(train, bench, 0.5).collect().head
+    val row = TextOps.contaminationFrom(train, bench).collect().head
     assert(row.getLong(2) == 1L)    // one distinct leaked shingle, not three
     assert(row.getDouble(3) == 0.25)
     assert(!row.getBoolean(4))

@@ -22,7 +22,7 @@ class DupGroupsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
       (10L, 11L), (20L, 21L), (21L, 22L), (20L, 22L)).toDF("a", "b")
     val cached = SpecAccess.cachedPlans(spark)
-    val comp = TextOps.connectedComponents(pairs).collect()
+    val comp = TextOps.groupsOf(pairs, "doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(SpecAccess.cachedPlans(spark) <= cached, "the rounds' persisted frames are released")
     assert((1L to 5L).forall(comp(_) == 1L), s"chain: $comp")
@@ -33,7 +33,7 @@ class DupGroupsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("edge direction does not matter") {
     import spark.implicits._
-    val comp = TextOps.connectedComponents(Seq((9L, 3L), (3L, 7L)).toDF("a", "b"))
+    val comp = TextOps.groupsOf(Seq((9L, 3L), (3L, 7L)).toDF("a", "b"), "doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(comp.values.toSet === Set(3L))
   }
@@ -51,7 +51,7 @@ class DupGroupsSpec extends AnyFunSuite with BeforeAndAfterAll {
     SpecAccess.drain(spark)
     spark.sparkContext.addSparkListener(listener)
     try {
-      assert(TextOps.connectedComponents(pairs).collect().length === 10)
+      assert(TextOps.groupsOf(pairs, "doc_id").collect().length === 10)
       SpecAccess.drain(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(jobs.get <= 3, s"${jobs.get} Spark jobs")
@@ -59,6 +59,6 @@ class DupGroupsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("an empty pair set has no components") {
     import spark.implicits._
-    assert(TextOps.connectedComponents(Seq.empty[(Long, Long)].toDF("a", "b")).isEmpty)
+    assert(TextOps.groupsOf(Seq.empty[(Long, Long)].toDF("a", "b"), "doc_id").isEmpty)
   }
 }

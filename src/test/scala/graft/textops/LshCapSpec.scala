@@ -43,7 +43,7 @@ class LshCapSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmp("lsh-identical")
     // 500 byte-identical docs + 3 distinct unrelated docs
     writeDocs(dir, Seq.fill(500)(words) ++ unrelated)
-    val pairs = TextOps.minhashLsh(spark, dir, 0.5)
+    val pairs = TextOps.minhashLsh(spark, dir)
     assert(pairs.count() === 0L,
       "identical docs must be collapsed by exact-dedup before candidate generation")
   }
@@ -56,7 +56,7 @@ class LshCapSpec extends AnyFunSuite with BeforeAndAfterAll {
     // one hot bucket of >MaxBandBucket docs -> dropped by the cap.
     // Deterministic md5-based hashing makes this reproducible.
     writeDocs(dir, (0 until 1100).map(i => s"$words unique$i"))
-    val pairs = TextOps.minhashLsh(spark, dir, 0.5)
+    val pairs = TextOps.minhashLsh(spark, dir)
     assert(pairs.count() === 0L,
       s"hot bucket over cap ${TextOps.MaxBandBucket} must be dropped from pairing")
   }
@@ -91,7 +91,7 @@ class LshCapSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map { case (v, i) => (i.toLong, v, i % 3) }
       .toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    val pairs = graft.sim.Similarity.embeddingDedup(spark, dir, 0.40)
+    val pairs = graft.sim.Similarity.embeddingDedup(spark, dir)
     assert(pairs.count() === 0L,
       "identical vectors must be collapsed by exact-dedup before bucket pairing")
   }
@@ -107,7 +107,7 @@ class LshCapSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0 until 1100).map(i => (i.toLong, mk(i), i % 3))
       .toDF("vec_id", "embedding", "label")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
-    val pairs = graft.sim.Similarity.embeddingDedup(spark, dir, 0.40)
+    val pairs = graft.sim.Similarity.embeddingDedup(spark, dir)
     assert(pairs.count() === 0L,
       s"hot sign bucket over cap ${TextOps.MaxBandBucket} must be dropped")
   }
