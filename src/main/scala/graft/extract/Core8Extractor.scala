@@ -2,6 +2,7 @@ package graft.extract
 
 import graft.model.EntityMention
 import graft.matching.{AhoCorasick, Corpora}
+import java.util.regex.Pattern
 import scala.collection.mutable.ArrayBuffer
 
 /** Core-8 entity enrichment (SURVEY.md §2.4, E1-E19): PERSON, ORG, GPE,
@@ -10,10 +11,13 @@ import scala.collection.mutable.ArrayBuffer
   *
   *  - 50KB truncation with marker (`service_processor.py:734-737`)
   *  - markdown-formatting cleanup before extraction (`:1168-1225`)
-  *  - regex pass with per-type caps (`:925-988`)
+  *  - pattern pass with per-type caps (`:925-988`), each pattern run
+  *    only at the candidate starts of its trigger classes
+  *    ([[PatternBank.candidates]])
   *  - parenthetical converted-unit filter (`:374-442`)
   *  - range preference over component matches (`:443-524`)
-  *  - REGULATION gated on CFR/USC substring (`:990-1000`)
+  *  - REGULATION gated on CFR/USC substring (`:990-1000`), read in the
+  *    same pre-pass
   *  - conflict resolution: FLPC types take priority; AC entities whose
   *    text is a substring of a priority entity's text are dropped (`:1101-1166`)
   *  - longest-match-first dedup (length desc, start asc; `:1380-1421`)
@@ -31,6 +35,12 @@ object Core8Extractor {
     if (text.length <= TruncateAt) text
     else text.substring(0, TruncateAt) + TruncationMarker
 
+  private val imageLink = Pattern.compile("!\\[([^\\]]*)\\]\\(([^)]*)\\)")
+  private val link = Pattern.compile("\\[([^\\]]*)\\]\\(([^)]*)\\)")
+  private val emphasis = Pattern.compile("(?<![\\w*])\\*([^*\\n]+)\\*(?![\\w*])")
+  private val heading = Pattern.compile("(?m)^#{1,6}\\s+")
+  private val quote = Pattern.compile("(?m)^>\\s+")
+
   /** E2: strip markdown formatting so dual detections don't occur.
     * `[text](url)` → text, `**x**`/`*x*`/`` `x` `` unwrapped, heading
     * hashes removed. Offsets of extracted entities refer to THIS cleaned
@@ -38,13 +48,13 @@ object Core8Extractor {
     */
   def cleanFormatting(text: String): String = {
     var t = text
-    t = t.replaceAll("!\\[([^\\]]*)\\]\\(([^)]*)\\)", "$1")
-    t = t.replaceAll("\\[([^\\]]*)\\]\\(([^)]*)\\)", "$1")
+    t = imageLink.matcher(t).replaceAll("$1")
+    t = link.matcher(t).replaceAll("$1")
     t = t.replace("**", "").replace("__", "")
-    t = t.replaceAll("(?<![\\w*])\\*([^*\\n]+)\\*(?![\\w*])", "$1")
+    t = emphasis.matcher(t).replaceAll("$1")
     t = t.replace("`", "")
-    t = t.replaceAll("(?m)^#{1,6}\\s+", "")
-    t = t.replaceAll("(?m)^>\\s+", "")
+    t = heading.matcher(t).replaceAll("")
+    t = quote.matcher(t).replaceAll("")
     t
   }
 
@@ -84,12 +94,27 @@ object Core8Extractor {
 
   // --------------------------------------------------------------- regex
 
-  private def regexAll(p: java.util.regex.Pattern, text: String, tpe: String): Seq[EntityMention] = {
-    val m = p.matcher(text)
+  /** The matches of `p` in `text` that `find()` reports, found by
+    * `lookingAt` at the candidates of `p`'s trigger classes alone, with
+    * the pattern its [[PatternBank.Scan]] names (transparent bounds, so
+    * `\b` and lookahead see the whole text). A candidate before the
+    * previous match's end is skipped, as `find()` resumes the search there.
+    */
+  private[graft] def regexAll(p: Pattern, text: String, c: PatternBank.Candidates,
+                              tpe: String): Seq[EntityMention] = {
+    val scan = PatternBank.triggers(p)
+    val m = scan.rx.matcher(text).useTransparentBounds(true)
     val out = new ArrayBuffer[EntityMention]
-    while (m.find()) {
-      val s = m.group()
-      out += EntityMention(s, s, tpe, m.start(), m.end())
+    var end = 0
+    var i = 0
+    while (i < c.starts.length) {
+      val s = c.starts(i)
+      if (s >= end && (c.classes(i) & scan.classes) != 0 && m.region(s, text.length).lookingAt()) {
+        val g = m.group()
+        out += EntityMention(g, g, tpe, s, m.end())
+        end = m.end()
+      }
+      i += 1
     }
     out.toSeq
   }
@@ -276,6 +301,7 @@ object Core8Extractor {
   // ---------------------------------------------------------- orchestrate
 
   private val priorityTypes = Set("DATE", "TIME", "MONEY", "MEASUREMENT")
+  private val gazetteerTypes = Set("PERSON", "ORG", "GPE", "LOC")
 
   /** E16: FLPC types take priority; drop AC entities (PERSON/ORG/LOC/GPE)
     * whose text is a substring of any priority entity's text.
@@ -286,8 +312,10 @@ object Core8Extractor {
     }
     entities.filter { e =>
       priorityTypes.contains(e.`type`) ||
-      !Set("PERSON", "ORG", "GPE", "LOC").contains(e.`type`) ||
-      !priorityTexts.exists(pt => pt.contains(e.text.toLowerCase))
+      !gazetteerTypes.contains(e.`type`) || {
+        val text = e.text.toLowerCase
+        !priorityTexts.exists(_.contains(text))
+      }
     }
   }
 
@@ -296,30 +324,37 @@ object Core8Extractor {
 
   /** Full Core-8 pass over already-cleaned, already-truncated text.
     * Returns entities sorted by (start, type) — the per-doc entity list.
+    *
+    * One linear pre-pass ([[PatternBank.candidates]]) finds the candidate
+    * starts of every trigger class; each pattern then runs only at the
+    * candidates of its classes ([[PatternBank.triggers]]). That equals
+    * a `find()` pass because every start a pattern can match at is such
+    * a candidate (the invariant, with the JDK 17 `\b` rule it rests on,
+    * is stated at `candidates`; PropertySpec P14 checks it).
     */
   def extractAll(cleanText: String): Seq[EntityMention] = {
     val t = cleanText
-    val dateRanges = regexAll(PatternBank.dateRange, t, "DATE")
-    val dates = preferRanges(dateRanges, regexAll(PatternBank.date, t, "DATE"))
-    val times = regexAll(PatternBank.time, t, "TIME")
+    val c = PatternBank.candidates(t)
+    def scan(p: Pattern, tpe: String) = regexAll(p, t, c, tpe)
+    val dateRanges = scan(PatternBank.dateRange, "DATE")
+    val dates = preferRanges(dateRanges, scan(PatternBank.date, "DATE"))
+    val times = scan(PatternBank.time, "TIME")
       // a time inside a matched date ("01/02/03" pathology) is dropped
       .filter(tm => !dates.exists(d => tm.start >= d.start && tm.end <= d.end))
-    val moneys = regexAll(PatternBank.money, t, "MONEY")
-    val measRanges = regexAll(PatternBank.measurementRange, t, "MEASUREMENT")
-    val meas0 = preferRanges(measRanges, regexAll(PatternBank.measurement, t, "MEASUREMENT"))
+    val moneys = scan(PatternBank.money, "MONEY")
+    val measRanges = scan(PatternBank.measurementRange, "MEASUREMENT")
+    val meas0 = preferRanges(measRanges, scan(PatternBank.measurement, "MEASUREMENT"))
       .filter(me => !dates.exists(d => me.start >= d.start && me.end <= d.end) &&
                     !times.exists(d => me.start >= d.start && me.end <= d.end) &&
                     !moneys.exists(d => me.start >= d.start && me.end <= d.end))
     val meas = dropParenthetical(meas0, t)
-    val phones = regexAll(PatternBank.phone, t, "PHONE")
-    val emails = regexAll(PatternBank.email, t, "EMAIL")
-    val urls = regexAll(PatternBank.url, t, "URL")
+    val phones = scan(PatternBank.phone, "PHONE")
+    val emails = scan(PatternBank.email, "EMAIL")
+    val urls = scan(PatternBank.url, "URL")
       .filter(u => !emails.exists(e => u.start < e.end && e.start < u.end))
-    val regs =
-      if (t.contains("CFR") || t.contains("USC") || t.contains("C.F.R") || t.contains("U.S.C"))
-        regexAll(PatternBank.regulation, t, "REGULATION")
-      else Nil
-    val rangeInds = regexAll(PatternBank.rangeIndicator, t, "RANGE_INDICATOR")
+    // regulation's CFR/USC gate is its `Cited` trigger class
+    val regs = scan(PatternBank.regulation, "REGULATION")
+    val rangeInds = scan(PatternBank.rangeIndicator, "RANGE_INDICATOR")
     val persons = extractPersons(t)
     val orgs = extractOrgs(t)
     val gpes = extractGpe(t)

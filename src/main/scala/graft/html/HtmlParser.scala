@@ -26,6 +26,34 @@ object HtmlParser {
     "br", "hr", "img", "meta", "link", "input", "area", "base",
     "col", "embed", "source", "track", "wbr")
 
+  /** One shared `String` per known tag name: every element of a known
+    * tag carries the same instance, so the tree walks (`Boilerplate.clean`,
+    * `MarkdownEmitter`) and the per-name open counters hash it once and
+    * compare it by reference first. An unknown name keeps its own string.
+    */
+  private val knownTags: java.util.HashMap[String, String] = {
+    val m = new java.util.HashMap[String, String]
+    Seq("a", "abbr", "address", "area", "article", "aside", "audio", "b", "base", "bdi", "bdo",
+      "blockquote", "body", "br", "button", "canvas", "caption", "center", "circle", "cite",
+      "code", "col", "colgroup", "dd", "defs", "del", "details", "dfn", "dialog", "div", "dl",
+      "dt", "em", "embed", "fieldset", "figcaption", "figure", "font", "footer", "form", "g",
+      "h1", "h2", "h3", "h4", "h5", "h6", "head", "header", "hgroup", "hr", "html", "i",
+      "iframe", "img", "input", "ins", "kbd", "label", "legend", "li", "line", "link", "main",
+      "map", "mark", "menu", "meta", "meter", "nav", "noscript", "object", "ol", "optgroup",
+      "option", "output", "p", "param", "path", "picture", "polygon", "pre", "progress", "q",
+      "rect", "s", "samp", "script", "section", "select", "small", "source", "span", "strike",
+      "strong", "style", "sub", "summary", "sup", "svg", "symbol", "table", "tbody", "td",
+      "template", "textarea", "tfoot", "th", "thead", "time", "title", "tr", "track", "tt", "u",
+      "ul", "use", "var", "video", "wbr").foreach(t => m.put(t, t))
+    m
+  }
+
+  /** The lower-cased tag name in `nm`, as its shared instance when known. */
+  private def tagName(nm: java.lang.StringBuilder): String = {
+    val name = nm.toString
+    knownTags.getOrDefault(name, name)
+  }
+
   private def isNameChar(c: Char): Boolean =
     (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
 
@@ -123,14 +151,14 @@ object HtmlParser {
           val nm = new java.lang.StringBuilder
           while (j < n && isNameChar(s.charAt(j))) { nm.append(Character.toLowerCase(s.charAt(j))); j += 1 }
           val e = s.indexOf('>', j)
-          if (nm.length > 0) close(nm.toString)
+          if (nm.length > 0) close(tagName(nm))
           i = if (e < 0) n else e + 1
         } else if (Character.isLetter(c1)) {
           flushText()
           var j = i + 1
           val nm = new java.lang.StringBuilder
           while (j < n && isNameChar(s.charAt(j))) { nm.append(Character.toLowerCase(s.charAt(j))); j += 1 }
-          val name = nm.toString
+          val name = tagName(nm)
           // attributes
           var attrs = Map.empty[String, String]
           var selfClosing = false

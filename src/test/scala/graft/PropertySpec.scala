@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.Core8Extractor
+import graft.extract.{Core8Extractor, PatternBank}
 import graft.html.{Boilerplate, HtmlExtractor, HtmlParser}
 import graft.html.HtmlParser.Node
 import graft.matching.AhoCorasick
@@ -27,7 +27,7 @@ import scala.collection.mutable.ArrayBuffer
   */
 class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  // only P13 runs Spark
+  // only P13 and P14 (to read the sf0.001 documents) run Spark
   lazy val spark: SparkSession = Harness.session(2)
 
   override def afterAll(): Unit = spark.stop()
@@ -580,5 +580,146 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       val sizes = expected.values.groupBy(identity).map { case (l, ls) => l -> ls.size.toLong }
       assert(groups == expected.toSeq.sorted.map { case (id, l) => (id, l, sizes(l)) })
     }
+  }
+
+  // P14's reference: the eleven PatternBank patterns as the full-pass
+  // `find()` extractor compiled them, byte for byte, by metric name
+  private val fullPassPatterns: Seq[(String, java.util.regex.Pattern)] = {
+    val months =
+      "january|february|march|april|may|june|july|august|september|october|november|december|" +
+      "jan|feb|mar|apr|jun|jul|aug|sep|sept|oct|nov|dec"
+    val units =
+      "feet|foot|ft|inches|inch|yards?|yd|miles?|mi|meters?|metres?|m|centimeters?|cm|" +
+      "millimeters?|mm|kilometers?|km|pounds?|lbs?|lb|ounces?|oz|kilograms?|kg|grams?|g|" +
+      "tons?|tonnes?|gallons?|gal|liters?|litres?|ml|seconds?|secs?|minutes?|mins?|" +
+      "hours?|hrs?|days?|weeks?|months?|years?|decibels?|db|degrees?|°f|°c|percent|%"
+    Seq(
+      "date_range" -> s"(?i)\\b($months)\\.?\\s+\\d{1,2}\\s*[-–]\\s*\\d{1,2},?\\s*\\d{4}\\b",
+      "date" -> (s"(?i)\\b($months)\\.?\\s+\\d{1,2}(?:st|nd|rd|th)?(?:,\\s*\\d{4})?\\b" +
+        s"|\\b\\d{1,2}\\s+($months)\\.?(?:,?\\s+\\d{4})?\\b" +
+        "|\\b\\d{4}-\\d{2}-\\d{2}\\b" +
+        "|\\b\\d{1,2}/\\d{1,2}/\\d{2,4}\\b"),
+      "time" -> ("(?i)\\b\\d{1,2}:\\d{2}(?::\\d{2})?\\s*(?:am|pm|a\\.m\\.|p\\.m\\.)?" +
+        "|\\b\\d{1,2}\\s*(?:am|pm)\\b"),
+      "money" -> ("(?i)[$€£¥]\\s?\\d{1,3}(?:,\\d{3})*(?:\\.\\d+)?(?:\\s?(?:k|m|bn|b|t|thousand|million|billion|trillion)\\b)?" +
+        "|\\b\\d{1,3}(?:,\\d{3})*(?:\\.\\d+)?\\s*(?:dollars|cents|usd|eur|gbp)\\b"),
+      "measurement_range" ->
+        s"(?i)\\b\\d+(?:\\.\\d+)?\\s*(?:-|–|to|through)\\s*\\d+(?:\\.\\d+)?\\s*(?:$units)\\b",
+      "measurement" -> s"(?i)\\b\\d+(?:\\.\\d+)?\\s*(?:$units)(?![a-z])",
+      "phone" -> "(?:\\+1[\\s.-]?)?(?:\\(\\d{3}\\)\\s?|\\b\\d{3}[\\s.-])\\d{3}[\\s.-]\\d{4}\\b",
+      "email" -> "\\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}\\b",
+      "url" -> "(?i)\\bhttps?://[^\\s<>()\\[\\]{}\"']+|\\bwww\\.[^\\s<>()\\[\\]{}\"']+",
+      "regulation" ->
+        "\\b\\d+\\s+(?:CFR|USC|C\\.F\\.R\\.|U\\.S\\.C\\.)\\s*(?:Part\\s+)?§?\\s*\\d+(?:\\.\\d+)?(?:\\([a-z0-9]+\\))*+",
+      "range_indicator" -> "(?i)\\b(?:up to|at least|no more than|between|from|to|through|thru)\\b"
+    ).map { case (name, rx) => name -> java.util.regex.Pattern.compile(rx) }
+  }
+
+  private val bankPatterns: Seq[java.util.regex.Pattern] = Seq(
+    PatternBank.dateRange, PatternBank.date, PatternBank.time, PatternBank.money,
+    PatternBank.measurementRange, PatternBank.measurement, PatternBank.phone, PatternBank.email,
+    PatternBank.url, PatternBank.regulation, PatternBank.rangeIndicator)
+
+  private def findAll(p: java.util.regex.Pattern, t: String, tpe: String): Seq[EntityMention] = {
+    val m = p.matcher(t)
+    val out = new ArrayBuffer[EntityMention]
+    while (m.find()) out += EntityMention(m.group(), m.group(), tpe, m.start(), m.end())
+    out.toSeq
+  }
+
+  // the full-pass extractAll: every pattern a `find()` pass over the text
+  private def fullPassExtractAll(t: String): Seq[EntityMention] = {
+    import Core8Extractor._
+    val p = fullPassPatterns.toMap
+    val dateRanges = findAll(p("date_range"), t, "DATE")
+    val dates = preferRanges(dateRanges, findAll(p("date"), t, "DATE"))
+    val times = findAll(p("time"), t, "TIME")
+      .filter(tm => !dates.exists(d => tm.start >= d.start && tm.end <= d.end))
+    val moneys = findAll(p("money"), t, "MONEY")
+    val measRanges = findAll(p("measurement_range"), t, "MEASUREMENT")
+    val meas0 = preferRanges(measRanges, findAll(p("measurement"), t, "MEASUREMENT"))
+      .filter(me => !dates.exists(d => me.start >= d.start && me.end <= d.end) &&
+                    !times.exists(d => me.start >= d.start && me.end <= d.end) &&
+                    !moneys.exists(d => me.start >= d.start && me.end <= d.end))
+    val meas = dropParenthetical(meas0, t)
+    val phones = findAll(p("phone"), t, "PHONE")
+    val emails = findAll(p("email"), t, "EMAIL")
+    val urls = findAll(p("url"), t, "URL")
+      .filter(u => !emails.exists(e => u.start < e.end && e.start < u.end))
+    val regs =
+      if (t.contains("CFR") || t.contains("USC") || t.contains("C.F.R") || t.contains("U.S.C"))
+        findAll(p("regulation"), t, "REGULATION")
+      else Nil
+    val rangeInds = findAll(p("range_indicator"), t, "RANGE_INDICATOR")
+    def cap(tpe: String, es: Seq[EntityMention]) = es.take(PatternBank.caps.getOrElse(tpe, 50))
+    val all =
+      cap("DATE", dedupLongestFirst(dates)) ++
+      cap("TIME", dedupLongestFirst(times)) ++
+      cap("MONEY", dedupLongestFirst(moneys)) ++
+      cap("MEASUREMENT", dedupLongestFirst(meas)) ++
+      cap("PHONE", dedupLongestFirst(phones)) ++
+      cap("EMAIL", dedupLongestFirst(emails)) ++
+      cap("URL", dedupLongestFirst(urls)) ++
+      cap("REGULATION", dedupLongestFirst(regs)) ++
+      cap("RANGE_INDICATOR", dedupLongestFirst(rangeInds)) ++
+      cap("PERSON", dedupLongestFirst(extractPersons(t))) ++
+      cap("ORG", extractOrgs(t)) ++
+      cap("GPE", extractGpe(t)) ++
+      cap("LOC", extractLoc(t))
+    resolveConflicts(all).sortBy(e => (e.start, e.`type`))
+  }
+
+  /** Every pattern's candidate scan reports `find()`'s (start, end) list,
+    * and `extractAll` equals the full-pass extractor, on `t`.
+    */
+  private def assertScanEqualsFind(t: String, hits: scala.collection.mutable.Map[String, Int]): Unit = {
+    val c = PatternBank.candidates(t)
+    bankPatterns.zip(fullPassPatterns).foreach { case (p, (name, _)) =>
+      val spans = (ms: Seq[EntityMention]) => ms.map(m => (m.start, m.end))
+      val found = spans(findAll(p, t, name))
+      assert(spans(Core8Extractor.regexAll(p, t, c, name)) == found, s"$name on ${t.take(300)}")
+      hits(name) = hits.getOrElse(name, 0) + found.size
+    }
+    assert(Core8Extractor.extractAll(t) == fullPassExtractAll(t), t.take(300))
+  }
+
+  // pieces that start, continue or break a match of some pattern, and the
+  // chars a trigger filter could misjudge: `é` (a word char to JDK 17's
+  // `\b`), the Kelvin sign (folds to `k` only under Unicode case), a
+  // combining acute, NUL and lone surrogates; and whole matches of each
+  // pattern, so every one matches somewhere in the set
+  private val triggerDense: Gen[String] = Gen.listOf(Gen.oneOf(
+    "0", "1", "7", "12", "555", "2024", "1,000", "3.5", "Jan", "jan", "JANUARY", "May", "Sept",
+    "sep", "ma", "Dec.", "august", "@", ".", "-", "_", "$", "€", "£", "¥", "(", ")", "+", "+1",
+    "/", ":", ",", " ", "  ", "\n", "%", "–", "http", "https://", "www.", "é", "\u212a",
+    "\u0301", "\u0000", "\ud800", "\udc00", "am", "pm", "p.m.", "k", "million", "dollars",
+    "feet", "in", "m", "kg", "°f", "to", "up to", "at least", "no more than", "between", "from",
+    "through", "thru", "CFR", "USC", "C.F.R.", "U.S.C.", "Part", "§", "a", "x", "example",
+    "com", "x.org", "(555) 123-4567", "+1 555.123.4567", "555-123-4567", "jo.e@example.com",
+    "Aug. 15 - 20, 2024", "15 March 2024", "2024-01-15", "3/4/24", "3:30 p.m.", "9 am",
+    "$1,000.50 million", "12 usd", "29 CFR 1910.95(a)(1)", "40 U.S.C. Part 5", "30-37 inches",
+    "6 feet", "http://x.org/a", "WWW.x.com")).map(_.mkString)
+
+  private val hostileTexts: Seq[String] = Seq(
+    "a." * 1000, "a." * 1000 + "@", "a." * 1000 + "@example.com", "7" * 2000, "$" * 2000,
+    "(" * 2000, "January" + " " * 2000)
+
+  test("P14: the trigger-anchored scan finds what find() finds, pattern by pattern") {
+    bankPatterns.zip(fullPassPatterns).foreach { case (p, (name, full)) =>
+      assert(p.pattern == full.pattern && p.flags == full.flags, s"$name changed")
+    }
+    val hits = scala.collection.mutable.Map.empty[String, Int]
+    forAll(triggerDense)(assertScanEqualsFind(_, hits))
+    info(s"matches in the random texts: ${hits.toSeq.sorted.mkString(", ")}")
+    assert(fullPassPatterns.forall { case (name, _) => hits(name) > 0 }, hits)
+    val s = spark
+    import s.implicits._
+    val cleanTexts = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+      .map { case (id, text) => ExtractionPipeline.processDoc(DocGen.synthesize(id, text)) }
+      .collect { case d if d.success => Core8Extractor.cleanTextOf(d.spans.map(_.text)) }
+    assert(cleanTexts.size > 400)
+    cleanTexts.foreach(assertScanEqualsFind(_, hits))
+    hostileTexts.foreach(assertScanEqualsFind(_, hits))
   }
 }

@@ -65,6 +65,59 @@ class Core8ExtractorSpec extends AnyFunSuite {
     }
   }
 
+  // Inputs on which a backtracking regex pass can go quadratic, by the
+  // length of their repeated part: the email local-part run with no `@`,
+  // a bare `@` and a real domain, digit, `$` and `(` runs, and a month
+  // word that `\s+` follows across the whole text.
+  private val hostile: Seq[(String, Int => String)] = Seq(
+    "a.a.a…" -> (n => "a." * (n / 2)),
+    "a.a.a…@" -> (n => "a." * (n / 2) + "@"),
+    "a.a.a…@example.com" -> (n => "a." * (n / 2) + "@example.com"),
+    "digit run" -> (n => "7" * n),
+    "$ run" -> (n => "$" * n),
+    "( run" -> (n => "(" * n),
+    "month word + spaces" -> (n => "January" + " " * n))
+
+  /** `rounds` timings (ms) of `extractAll` on each of `texts`, the texts
+    * taking turns in each round so a slow spell of the host hits all of
+    * them alike; a call over 1 s ends the sampling (the bound is lost).
+    */
+  private def timings(texts: Seq[String], rounds: Int): Seq[Seq[Double]] = {
+    val out = Seq.newBuilder[Seq[Double]]
+    var slow = false
+    var r = 0
+    while (r < rounds && !slow) {
+      val round = texts.map { t =>
+        val t0 = System.nanoTime()
+        Core8Extractor.extractAll(t)
+        (System.nanoTime() - t0) / 1e6
+      }
+      slow = round.exists(_ > 1000)
+      out += round
+      r += 1
+    }
+    out.result()
+  }
+
+  test("hostile 50 KB inputs: extractAll stays under 50 ms, and 20 KB -> 40 KB at most 2.5x") {
+    // JIT-warm on small copies of every shape first
+    for (_ <- 1 to 50; (_, mk) <- hostile) Core8Extractor.extractAll(mk(2000))
+    val results = hostile.map { case (name, mk) =>
+      val rounds = timings(Seq(mk(50000), mk(20000), mk(40000)), 11)
+      // best time at 50 KB; the 40/20 KB ratio of each round, and its median
+      val ratios = rounds.map(r => r(2) / r(1)).sorted
+      (name, rounds.map(_.head).min, ratios(ratios.size / 2))
+    }
+    val report = results.map { case (name, ms50, ratio) =>
+      f"$name: $ms50%.2f ms at 50 KB, 40 KB / 20 KB = $ratio%.2f"
+    }.mkString("; ")
+    info(report)
+    results.foreach { case (name, ms50, ratio) =>
+      assert(ms50 < 50, s"$name over 50 ms at 50 KB; $report")
+      assert(ratio <= 2.5, s"$name grows faster than linear; $report")
+    }
+  }
+
   test("ranges_simple: 30-37 inches is ONE measurement, not two") {
     val t = "Handrail height must be 30-37 inches above the surface."
     assert(ofType(t, "MEASUREMENT") === Seq("30-37 inches"))
