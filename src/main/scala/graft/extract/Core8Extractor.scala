@@ -12,8 +12,7 @@ import scala.collection.mutable.ArrayBuffer
   *  - 50KB truncation with marker (`service_processor.py:734-737`)
   *  - markdown-formatting cleanup before extraction (`:1168-1225`)
   *  - pattern pass with per-type caps (`:925-988`), each pattern run
-  *    only at the candidate starts of its trigger classes
-  *    ([[PatternBank.candidates]])
+  *    only at the candidate starts of its trigger classes ([[Scan]])
   *  - parenthetical converted-unit filter (`:374-442`)
   *  - range preference over component matches (`:443-524`)
   *  - REGULATION gated on CFR/USC substring (`:990-1000`), read in the
@@ -35,26 +34,33 @@ object Core8Extractor {
     if (text.length <= TruncateAt) text
     else text.substring(0, TruncateAt) + TruncationMarker
 
-  private val imageLink = Pattern.compile("!\\[([^\\]]*)\\]\\(([^)]*)\\)")
-  private val link = Pattern.compile("\\[([^\\]]*)\\]\\(([^)]*)\\)")
-  private val emphasis = Pattern.compile("(?<![\\w*])\\*([^*\\n]+)\\*(?![\\w*])")
-  private val heading = Pattern.compile("(?m)^#{1,6}\\s+")
-  private val quote = Pattern.compile("(?m)^>\\s+")
+  private val imageLink =
+    new Scan(Pattern.compile("!\\[([^\\]]*)\\]\\(([^)]*)\\)"), Scan.Bang, Scan.imageLinkEnd)
+  private val link =
+    new Scan(Pattern.compile("\\[([^\\]]*)\\]\\(([^)]*)\\)"), Scan.Bracket, Scan.bracketEnd)
+  private val emphasis = new Scan(Pattern.compile("(?<![\\w*])\\*([^*\\n]+)\\*(?![\\w*])"), Scan.Star)
+  private val heading = new Scan(Pattern.compile("(?m)^#{1,6}\\s+"), Scan.LineStart)
+  private val quote = new Scan(Pattern.compile("(?m)^>\\s+"), Scan.LineStart)
 
   /** E2: strip markdown formatting so dual detections don't occur.
     * `[text](url)` → text, `**x**`/`*x*`/`` `x` `` unwrapped, heading
     * hashes removed. Offsets of extracted entities refer to THIS cleaned
     * text (the reference extracts on its cleaned content too).
+    *
+    * Each pattern pass is a [[Scan.replaceAll]] over the previous pass's
+    * output, tried only at its trigger char (`!`, `[`, `*`) or at line
+    * starts; the link passes resume past a `[` run that no `](…)` closes
+    * ([[Scan.bracketEnd]]), so each pass is linear.
     */
   def cleanFormatting(text: String): String = {
     var t = text
-    t = imageLink.matcher(t).replaceAll("$1")
-    t = link.matcher(t).replaceAll("$1")
+    t = imageLink.replaceAll(t, _.group(1))
+    t = link.replaceAll(t, _.group(1))
     t = t.replace("**", "").replace("__", "")
-    t = emphasis.matcher(t).replaceAll("$1")
+    t = emphasis.replaceAll(t, _.group(1))
     t = t.replace("`", "")
-    t = heading.matcher(t).replaceAll("")
-    t = quote.matcher(t).replaceAll("")
+    t = heading.replaceAll(t, _ => "")
+    t = quote.replaceAll(t, _ => "")
     t
   }
 
@@ -88,33 +94,6 @@ object Core8Extractor {
     if (start < n) {
       val s = text.substring(start)
       if (s.trim.length >= 5) out += ((s, start))
-    }
-    out.toSeq
-  }
-
-  // --------------------------------------------------------------- regex
-
-  /** The matches of `p` in `text` that `find()` reports, found by
-    * `lookingAt` at the candidates of `p`'s trigger classes alone, with
-    * the pattern its [[PatternBank.Scan]] names (transparent bounds, so
-    * `\b` and lookahead see the whole text). A candidate before the
-    * previous match's end is skipped, as `find()` resumes the search there.
-    */
-  private[graft] def regexAll(p: Pattern, text: String, c: PatternBank.Candidates,
-                              tpe: String): Seq[EntityMention] = {
-    val scan = PatternBank.triggers(p)
-    val m = scan.rx.matcher(text).useTransparentBounds(true)
-    val out = new ArrayBuffer[EntityMention]
-    var end = 0
-    var i = 0
-    while (i < c.starts.length) {
-      val s = c.starts(i)
-      if (s >= end && (c.classes(i) & scan.classes) != 0 && m.region(s, text.length).lookingAt()) {
-        val g = m.group()
-        out += EntityMention(g, g, tpe, s, m.end())
-        end = m.end()
-      }
-      i += 1
     }
     out.toSeq
   }
@@ -295,9 +274,6 @@ object Core8Extractor {
   def extractGpe(text: String): Seq[EntityMention] = extractGazetteer(text, gpeAc, "GPE")
   def extractLoc(text: String): Seq[EntityMention] = extractGazetteer(text, locAc, "LOC")
 
-  def gpeSubcategory(value: String): String = Corpora.gpe.getOrElse(value.toLowerCase, "")
-  def locSubcategory(value: String): String = Corpora.loc.getOrElse(value.toLowerCase, "")
-
   // ---------------------------------------------------------- orchestrate
 
   private val priorityTypes = Set("DATE", "TIME", "MONEY", "MEASUREMENT")
@@ -325,17 +301,19 @@ object Core8Extractor {
   /** Full Core-8 pass over already-cleaned, already-truncated text.
     * Returns entities sorted by (start, type) — the per-doc entity list.
     *
-    * One linear pre-pass ([[PatternBank.candidates]]) finds the candidate
-    * starts of every trigger class; each pattern then runs only at the
-    * candidates of its classes ([[PatternBank.triggers]]). That equals
-    * a `find()` pass because every start a pattern can match at is such
-    * a candidate (the invariant, with the JDK 17 `\b` rule it rests on,
-    * is stated at `candidates`; PropertySpec P14 checks it).
+    * One linear pre-pass ([[Scan.candidates]]) finds the candidate
+    * starts of every trigger class of the eleven patterns; each pattern
+    * then runs only at the candidates of its classes, through the
+    * [[Scan]] [[PatternBank.triggers]] pairs it with. That equals a
+    * `find()` pass because every start a pattern can match at is such a
+    * candidate (the invariant, with the JDK 17 `\b` rule it rests on, is
+    * stated at `Scan.candidates`; PropertySpec P14 checks it), and
+    * money's digit-group runs cost one try each ([[Scan.digitGroupEnd]]).
     */
   def extractAll(cleanText: String): Seq[EntityMention] = {
     val t = cleanText
-    val c = PatternBank.candidates(t)
-    def scan(p: Pattern, tpe: String) = regexAll(p, t, c, tpe)
+    val c = Scan.candidates(t, PatternBank.classes)
+    def scan(p: Pattern, tpe: String) = PatternBank.triggers(p).mentions(c, tpe)
     val dateRanges = scan(PatternBank.dateRange, "DATE")
     val dates = preferRanges(dateRanges, scan(PatternBank.date, "DATE"))
     val times = scan(PatternBank.time, "TIME")
@@ -376,22 +354,6 @@ object Core8Extractor {
       cap("LOC", locs)
 
     resolveConflicts(all).sortBy(e => (e.start, e.`type`))
-  }
-
-  /** E13: range-flagging hybrid — an entity is range-modified when a
-    * RANGE_INDICATOR ends within 2 chars before its start (indicator
-    * before the number) or starts within 2 chars after its end
-    * (`service_processor.py:3042-3140`). Returns the set of flagged
-    * (start, end) keys.
-    */
-  def rangeAdjacent(entities: Seq[EntityMention]): Set[(Int, Int)] = {
-    val inds = entities.filter(_.`type` == "RANGE_INDICATOR")
-    entities.collect {
-      case e if e.`type` != "RANGE_INDICATOR" && inds.exists(i =>
-        (e.start - i.end >= 0 && e.start - i.end <= 2) ||
-        (i.start - e.end >= 0 && i.start - e.end <= 2)) =>
-        (e.start, e.end)
-    }.toSet
   }
 
   /** The extraction clean text: cleanup → truncate. Entity offsets

@@ -286,29 +286,6 @@ object Normalizer {
     else s
   }
 
-  private val agencyByTitle: Map[(Int, String), String] = Map(
-    (29, "CFR") -> "OSHA", (40, "CFR") -> "EPA", (21, "CFR") -> "FDA",
-    (49, "CFR") -> "DOT", (17, "CFR") -> "SEC", (26, "USC") -> "IRS",
-    (29, "USC") -> "DOL", (42, "USC") -> "HHS")
-  private val regulationRx = java.util.regex.Pattern.compile(
-    "(\\d+)\\s+(CFR|USC|C\\.F\\.R\\.|U\\.S\\.C\\.)\\s*(?:Part\\s+)?§?\\s*(\\d+)(?:\\.(\\d+))?")
-
-  /** N10: REGULATION structure (agency map 29 CFR→OSHA etc.,
-    * `entity_normalizer.py:1142-1180,1605-1715`).
-    * Returns (agency, title, part, section).
-    */
-  def parseRegulation(s: String): (String, Int, String, String) = {
-    val m = regulationRx.matcher(s)
-    if (!m.find()) return ("", 0, "", "")
-    val title = m.group(1).toInt
-    val code = m.group(2).replace(".", "") match {
-      case "CFR" => "CFR"; case "USC" => "USC"; case x => x
-    }
-    val part = m.group(3)
-    val section = Option(m.group(4)).getOrElse("")
-    (agencyByTitle.getOrElse((title, code), ""), title, part, section)
-  }
-
   // ------------------------------------------------------- canonicalize
 
   private def normalizedFormOf(tpe: String, value: String): String = tpe match {

@@ -210,16 +210,6 @@ object OfficeExtractor {
     case other => Left(s"unsupported office kind: $other")
   }
 
-  /** Reference page estimates (`mvp-hyper-core.py:490,585,693`). */
-  def pageEstimate(kind: String, parts: Seq[OfficePart]): Int = kind match {
-    case "docx" =>
-      parts.find(_.name == "word/document.xml")
-        .map(d => math.max(1, blockTexts(d.xml, "w:p", "w:t").length / 20)).getOrElse(1)
-    case "pptx" => math.max(1, numberedParts(parts, "ppt/slides/slide").length)
-    case "xlsx" => math.max(1, numberedParts(parts, "xl/worksheets/sheet").length)
-    case _ => 1
-  }
-
   private def toSpans(items: Seq[(String, String)]): Seq[Span] =
     items.iterator.zipWithIndex.map { case ((k, t), i) => Span(k, t, "", i) }.toSeq
 

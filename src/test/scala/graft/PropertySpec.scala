@@ -1,10 +1,10 @@
 package graft
 
-import graft.extract.{Core8Extractor, PatternBank}
+import graft.extract.{ContentFlagsScan, Core8Extractor, PatternBank, Scan}
 import graft.html.{Boilerplate, HtmlExtractor, HtmlParser}
 import graft.html.HtmlParser.Node
 import graft.matching.AhoCorasick
-import graft.model.{CanonicalEntity, EntityMention, Mention, PdfBlock, Span}
+import graft.model.{CanonicalEntity, ContentFlags, EntityMention, Mention, PdfBlock, Span, SpanKinds}
 import graft.normalize.Normalizer
 import graft.pdf.PdfExtractor
 import graft.pipeline.ExtractionPipeline
@@ -673,11 +673,11 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     * and `extractAll` equals the full-pass extractor, on `t`.
     */
   private def assertScanEqualsFind(t: String, hits: scala.collection.mutable.Map[String, Int]): Unit = {
-    val c = PatternBank.candidates(t)
+    val c = Scan.candidates(t, PatternBank.classes)
     bankPatterns.zip(fullPassPatterns).foreach { case (p, (name, _)) =>
       val spans = (ms: Seq[EntityMention]) => ms.map(m => (m.start, m.end))
       val found = spans(findAll(p, t, name))
-      assert(spans(Core8Extractor.regexAll(p, t, c, name)) == found, s"$name on ${t.take(300)}")
+      assert(spans(PatternBank.triggers(p).mentions(c, name)) == found, s"$name on ${t.take(300)}")
       hits(name) = hits.getOrElse(name, 0) + found.size
     }
     assert(Core8Extractor.extractAll(t) == fullPassExtractAll(t), t.take(300))
@@ -700,9 +700,30 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     "$1,000.50 million", "12 usd", "29 CFR 1910.95(a)(1)", "40 U.S.C. Part 5", "30-37 inches",
     "6 feet", "http://x.org/a", "WWW.x.com")).map(_.mkString)
 
+  // numbers next to every char class a Digit start's number may or may
+  // not go on with (`Scan.numberGoesOn`), and whole matches of each
+  // Digit pattern after a space
+  private val numberDense: Gen[String] = Gen.listOf(Gen.oneOf(
+    "1", "12", "123", "2024", "1,000", "[", "]", ")", "(", " ", "\t", "\n", "-", "–", "/", ":",
+    ",", ".", "°c", "°", "%", "_", "é", "\u212a", "am", "p.m.", "usd", "k", "feet", "to", "CFR",
+    "Jan", "#", "!", "*", "x", " 3/4/24", " 10:30", " 2024-01-15", " 555.123.4567", " 5 feet",
+    " 6%", " 30°c", " 12 usd", " 1,000 dollars", " 9 am", " 29 CFR 1910", " 3.5 kg", " 4 - 7 m",
+    " 2 March")).map(_.mkString)
+
   private val hostileTexts: Seq[String] = Seq(
     "a." * 1000, "a." * 1000 + "@", "a." * 1000 + "@example.com", "7" * 2000, "$" * 2000,
-    "(" * 2000, "January" + " " * 2000)
+    "(" * 2000, "January" + " " * 2000, "1" + ",111" * 500, "1" + ",111" * 500 + " usd",
+    "é1" + ",111" * 50 + " dollars", "1111,111 dollars", "1,1111,111 usd", "$1" + ",111" * 500, "[1" * 1000)
+
+  // the sf0.001 documents through the pipeline, the successful ones
+  private lazy val docGenDocs: Seq[graft.model.ExtractedDoc] = {
+    val s = spark
+    import s.implicits._
+    spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+      .map { case (id, text) => ExtractionPipeline.processDoc(DocGen.synthesize(id, text)) }
+      .filter(_.success)
+  }
 
   test("P14: the trigger-anchored scan finds what find() finds, pattern by pattern") {
     bankPatterns.zip(fullPassPatterns).foreach { case (p, (name, full)) =>
@@ -712,14 +733,109 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     forAll(triggerDense)(assertScanEqualsFind(_, hits))
     info(s"matches in the random texts: ${hits.toSeq.sorted.mkString(", ")}")
     assert(fullPassPatterns.forall { case (name, _) => hits(name) > 0 }, hits)
-    val s = spark
-    import s.implicits._
-    val cleanTexts = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text").as[(Long, String)].collect().toSeq
-      .map { case (id, text) => ExtractionPipeline.processDoc(DocGen.synthesize(id, text)) }
-      .collect { case d if d.success => Core8Extractor.cleanTextOf(d.spans.map(_.text)) }
+    val numberHits = scala.collection.mutable.Map.empty[String, Int]
+    forAll(numberDense)(assertScanEqualsFind(_, numberHits))
+    info(s"matches in the number texts: ${numberHits.toSeq.sorted.mkString(", ")}")
+    assert(Seq("date", "time", "money", "measurement", "phone").forall(numberHits.getOrElse(_, 0) > 0),
+      numberHits)
+    val cleanTexts = docGenDocs.map(d => Core8Extractor.cleanTextOf(d.spans.map(_.text)))
     assert(cleanTexts.size > 400)
     cleanTexts.foreach(assertScanEqualsFind(_, hits))
     hostileTexts.foreach(assertScanEqualsFind(_, hits))
+  }
+
+  // P14's clean and flags reference: cleanFormatting's replaceAll chain
+  // and ContentFlagsScan's three find() passes as the full-pass code ran
+  // them, byte for byte
+  private object fullPassMarkdown {
+    private val imageLink = java.util.regex.Pattern.compile("!\\[([^\\]]*)\\]\\(([^)]*)\\)")
+    private val link = java.util.regex.Pattern.compile("\\[([^\\]]*)\\]\\(([^)]*)\\)")
+    private val emphasis = java.util.regex.Pattern.compile("(?<![\\w*])\\*([^*\\n]+)\\*(?![\\w*])")
+    private val heading = java.util.regex.Pattern.compile("(?m)^#{1,6}\\s+")
+    private val quote = java.util.regex.Pattern.compile("(?m)^>\\s+")
+
+    def cleanFormatting(text: String): String = {
+      var t = text
+      t = imageLink.matcher(t).replaceAll("$1")
+      t = link.matcher(t).replaceAll("$1")
+      t = t.replace("**", "").replace("__", "")
+      t = emphasis.matcher(t).replaceAll("$1")
+      t = t.replace("`", "")
+      t = heading.matcher(t).replaceAll("")
+      t = quote.matcher(t).replaceAll("")
+      t
+    }
+
+    private val citationRx = java.util.regex.Pattern.compile(
+      "\\(\\d{4}\\)|\\bet al\\.|\\[\\d+\\]")
+    private val footnoteRx = java.util.regex.Pattern.compile(
+      "\\[\\^\\d+\\]|(?m)^\\s*\\d+\\.\\s+(?:see|cf\\.|ibid)", java.util.regex.Pattern.CASE_INSENSITIVE)
+    private val kvRx = java.util.regex.Pattern.compile("(?m)^[A-Za-z ]{2,30}:\\s+\\S")
+
+    def scan(spans: Seq[Span]): ContentFlags = {
+      import graft.model.{SpanKinds => K}
+      var tables, images, formulas, code, links, lists, headers, footnotes, citations = false
+      var kvLines = 0
+      spans.foreach { s =>
+        s.kind match {
+          case K.Table => tables = true
+          case K.ImageRef => images = true
+          case K.Formula => formulas = true
+          case K.Code => code = true
+          case K.ListItem => lists = true
+          case K.Heading => headers = true
+          case _ => ()
+        }
+        val t = s.text
+        if (!links && (t.contains("](http") || t.contains("http://") || t.contains("https://")))
+          links = true
+        if (!citations && citationRx.matcher(t).find()) citations = true
+        if (!footnotes && footnoteRx.matcher(t).find()) footnotes = true
+        val kv = kvRx.matcher(t)
+        while (kv.find()) kvLines += 1
+      }
+      val structured = tables || kvLines >= 3
+      ContentFlags(tables, images, formulas, code, links, lists, headers,
+        footnotes, citations, structured)
+    }
+  }
+
+  // the trigger chars of the clean and flags patterns, line terminators,
+  // spaces, digits and letters, and whole matches of each pattern
+  private val markdownDense: Gen[String] = Gen.listOf(Gen.frequency(
+    8 -> Gen.oneOf("[", "]", "(", ")", "!", "*", "#", ">", ":", "^", "\n", "\r", "\r\n", " ", "  ",
+      "\t", "\u000b", "\u2028", "\u0085", "0", "1", "12", "2024", "a", "x", "e", "_", "é", "ab",
+      "Key", "Name Here", "see", "cf.", "ibid", "et al.", "**", "__", "`", "##"),
+    1 -> Gen.oneOf("![alt](img.png)", "[text](http://x.org)", "[a](", "*em*", "\n# H", "\n> q",
+      "[^1]", "(2024)", "[12]", "\n1. see", "\n2.  Ibid", "\nKey: value", "\nName Here:  x"))
+  ).map(_.mkString)
+
+  private val markdownHostile: Seq[String] = Seq(
+    "[1" * 1000, "[" * 1998 + "]x", "![" * 1000, "[a](" * 500, "[a]" * 500, "![a](" * 400,
+    "*a" * 1000, "\n" * 2000, " \n" * 1000, "\r\n" * 1000, "\n" * 2000 + "1. see",
+    "#\n" * 1000, ">\n" * 1000, "ab:\n" * 1000, "1.\n" * 1000, "x\n\n[^1]",
+    "x\r\n 1. see", "x\r\n\r\n2. cf.", "x\u2028 1. ibid", "[a]" * 50 + "(b)", "![a]" * 50 + "(b)")
+
+  test("P14: the trigger scan cleans and flags text as the replaceAll and find() passes did") {
+    val hits = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    def check(spans: Seq[Span]): Unit = {
+      val flags = ContentFlagsScan.scan(spans)
+      val expected = fullPassMarkdown.scan(spans)
+      assert(flags == expected, spans.map(_.text.take(300)))
+      if (expected.has_citations) hits("citations") += 1
+      if (expected.has_footnotes) hits("footnotes") += 1
+      if (expected.has_structured_data) hits("structured") += 1
+      val md = spans.map(_.text).mkString("\n")
+      val clean = fullPassMarkdown.cleanFormatting(md)
+      assert(Core8Extractor.cleanFormatting(md) == clean, md.take(300))
+      if (clean != md) hits("cleaned") += 1
+    }
+    val texts = Gen.choose(1, 3).flatMap(k => Gen.listOfN(k, markdownDense))
+    forAll(texts)(ts => check(ts.map(t => Span(SpanKinds.Text, t, "", 0))))
+    info(s"random texts: ${hits.toSeq.sorted.mkString(", ")}")
+    assert(Seq("citations", "footnotes", "structured", "cleaned").forall(hits(_) > 20), hits)
+    assert(docGenDocs.size > 400)
+    docGenDocs.foreach(d => check(d.spans))
+    markdownHostile.foreach(t => check(Seq(Span(SpanKinds.Text, t, "", 0))))
   }
 }

@@ -1,6 +1,7 @@
 package graft.extract
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.matching.Corpora
 import graft.model.EntityMention
 
 /** Core-8 entity matrix per FIXTURES.md §4.4 — ranges, singles, edge
@@ -66,30 +67,46 @@ class Core8ExtractorSpec extends AnyFunSuite {
   }
 
   // Inputs on which a backtracking regex pass can go quadratic, by the
-  // length of their repeated part: the email local-part run with no `@`,
+  // length of their repeated part, each with the entry point it goes
+  // through. Through `extractAll`: the email local-part run with no `@`,
   // a bare `@` and a real domain, digit, `$` and `(` runs, and a month
-  // word that `\s+` follows across the whole text.
-  private val hostile: Seq[(String, Int => String)] = Seq(
-    "a.a.a…" -> (n => "a." * (n / 2)),
-    "a.a.a…@" -> (n => "a." * (n / 2) + "@"),
-    "a.a.a…@example.com" -> (n => "a." * (n / 2) + "@example.com"),
-    "digit run" -> (n => "7" * n),
-    "$ run" -> (n => "$" * n),
-    "( run" -> (n => "(" * n),
-    "month word + spaces" -> (n => "January" + " " * n))
+  // word that `\s+` follows across the whole text. Through `run` (the
+  // markdown cleanup first): `[` runs that no `]` or no `](…)` closes,
+  // `![` runs, and one digit-group run that money's `\b\d{1,3}(,\d{3})*`
+  // walks from every group. Through `ContentFlagsScan.scan` on one text
+  // span: line runs, where the footnote's `^\s*` walks from every line.
+  private val hostile: Seq[(String, Int => String, String)] = Seq(
+    ("a.a.a…", n => "a." * (n / 2), "extractAll"),
+    ("a.a.a…@", n => "a." * (n / 2) + "@", "extractAll"),
+    ("a.a.a…@example.com", n => "a." * (n / 2) + "@example.com", "extractAll"),
+    ("digit run", n => "7" * n, "extractAll"),
+    ("$ run", n => "$" * n, "extractAll"),
+    ("( run", n => "(" * n, "extractAll"),
+    ("month word + spaces", n => "January" + " " * n, "extractAll"),
+    ("[1[1…", n => "[1" * (n / 2), "run"),
+    ("[[[…[]x", n => "[" * (n - 2) + "]x", "run"),
+    ("![![…", n => "![" * (n / 2), "run"),
+    ("1,111,…", n => "1" + ",111" * (n / 4), "run"),
+    ("\\n run", n => "\n" * n, "scan"),
+    (" \\n run", n => " \n" * (n / 2), "scan"))
 
-  /** `rounds` timings (ms) of `extractAll` on each of `texts`, the texts
+  private val entryPoints: Map[String, String => Any] = Map(
+    "extractAll" -> Core8Extractor.extractAll,
+    "run" -> Core8Extractor.run,
+    "scan" -> (t => ContentFlagsScan.scan(Seq(graft.model.Span(graft.model.SpanKinds.Text, t, "", 0)))))
+
+  /** `rounds` timings (ms) of `entry` on each of `texts`, the texts
     * taking turns in each round so a slow spell of the host hits all of
     * them alike; a call over 1 s ends the sampling (the bound is lost).
     */
-  private def timings(texts: Seq[String], rounds: Int): Seq[Seq[Double]] = {
+  private def timings(entry: String => Any, texts: Seq[String], rounds: Int): Seq[Seq[Double]] = {
     val out = Seq.newBuilder[Seq[Double]]
     var slow = false
     var r = 0
     while (r < rounds && !slow) {
       val round = texts.map { t =>
         val t0 = System.nanoTime()
-        Core8Extractor.extractAll(t)
+        entry(t)
         (System.nanoTime() - t0) / 1e6
       }
       slow = round.exists(_ > 1000)
@@ -99,23 +116,35 @@ class Core8ExtractorSpec extends AnyFunSuite {
     out.result()
   }
 
-  test("hostile 50 KB inputs: extractAll stays under 50 ms, and 20 KB -> 40 KB at most 2.5x") {
+  /** Each hostile case through its entry point: under 50 ms at `big`
+    * chars (best of the rounds), and at most 2.5x from 20 KB to 40 KB
+    * (the median ratio of the rounds).
+    */
+  private def assertLinear(cases: Seq[(String, Int => String, String)], big: Int): Unit = {
     // JIT-warm on small copies of every shape first
-    for (_ <- 1 to 50; (_, mk) <- hostile) Core8Extractor.extractAll(mk(2000))
-    val results = hostile.map { case (name, mk) =>
-      val rounds = timings(Seq(mk(50000), mk(20000), mk(40000)), 11)
-      // best time at 50 KB; the 40/20 KB ratio of each round, and its median
+    for (_ <- 1 to 50; (_, mk, via) <- cases) entryPoints(via)(mk(2000))
+    val results = cases.map { case (name, mk, via) =>
+      val rounds = timings(entryPoints(via), Seq(mk(big), mk(20000), mk(40000)), 11)
       val ratios = rounds.map(r => r(2) / r(1)).sorted
       (name, rounds.map(_.head).min, ratios(ratios.size / 2))
     }
-    val report = results.map { case (name, ms50, ratio) =>
-      f"$name: $ms50%.2f ms at 50 KB, 40 KB / 20 KB = $ratio%.2f"
+    val kb = big / 1000
+    val report = results.map { case (name, ms, ratio) =>
+      f"$name: $ms%.2f ms at $kb KB, 40 KB / 20 KB = $ratio%.2f"
     }.mkString("; ")
     info(report)
-    results.foreach { case (name, ms50, ratio) =>
-      assert(ms50 < 50, s"$name over 50 ms at 50 KB; $report")
+    results.foreach { case (name, ms, ratio) =>
+      assert(ms < 50, s"$name over 50 ms at $kb KB; $report")
       assert(ratio <= 2.5, s"$name grows faster than linear; $report")
     }
+  }
+
+  test("hostile 50 KB inputs: extractAll stays under 50 ms, and 20 KB -> 40 KB at most 2.5x") {
+    assertLinear(hostile.filter(_._3 == "extractAll"), 50000)
+  }
+
+  test("hostile 40 KB markdown and line runs: run and ContentFlagsScan.scan stay under 50 ms, and 20 KB -> 40 KB at most 2.5x") {
+    assertLinear(hostile.filter(_._3 != "extractAll"), 40000)
   }
 
   test("ranges_simple: 30-37 inches is ONE measurement, not two") {
@@ -178,8 +207,8 @@ class Core8ExtractorSpec extends AnyFunSuite {
     val t = "Flooding along the Mississippi River affected Texas and the city of Houston."
     assert(ofType(t, "LOC") === Seq("Mississippi River"))
     assert(ofType(t, "GPE").toSet === Set("Texas", "Houston"))
-    assert(Core8Extractor.gpeSubcategory("texas") === "us_state")
-    assert(Core8Extractor.locSubcategory("mississippi river") === "river")
+    assert(Corpora.gpe("texas") === "us_state")
+    assert(Corpora.loc("mississippi river") === "river")
   }
 
   test("E1: truncation at 50KB with marker") {
@@ -216,15 +245,10 @@ class Core8ExtractorSpec extends AnyFunSuite {
     assert(Core8Extractor.dedupLongestFirst(es2).map(_.text) === Seq("OSHA Region 5", "osha"))
   }
 
-  test("E13: range indicators extracted and adjacency flags measurements") {
+  test("E13: range indicators extracted") {
     val t = "Guardrails must be up to 42 inches tall."
-    val ents = Core8Extractor.extractAll(t)
-    val inds = ents.filter(_.`type` == "RANGE_INDICATOR")
+    val inds = Core8Extractor.extractAll(t).filter(_.`type` == "RANGE_INDICATOR")
     assert(inds.map(_.value) == Seq("up to"), s"indicators: $inds")
-    val flagged = Core8Extractor.rangeAdjacent(ents)
-    val meas = ents.find(_.`type` == "MEASUREMENT").get
-    assert(flagged.contains((meas.start, meas.end)),
-      s"measurement after 'up to' not flagged: $ents / $flagged")
   }
 
   test("C4: domain entities only on deep-domain route, filtered to target domains") {

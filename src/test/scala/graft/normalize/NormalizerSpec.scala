@@ -69,12 +69,6 @@ class NormalizerSpec extends AnyFunSuite {
     assert(c4 === "45 db" && u4 === "db") // non-convertible passthrough
   }
 
-  test("N10: regulation structure with agency map") {
-    assert(Normalizer.parseRegulation("29 CFR 1926.95") === ("OSHA", 29, "1926", "95"))
-    assert(Normalizer.parseRegulation("40 CFR 261") === ("EPA", 40, "261", ""))
-    assert(Normalizer.parseRegulation("26 USC 501") === ("IRS", 26, "501", ""))
-  }
-
   test("N3b: ORG canonicalization — acronym expansion + legal suffix") {
     assert(Normalizer.normalizeOrgName("osha") ===
       "Occupational Safety and Health Administration")

@@ -55,14 +55,6 @@ class OfficeExtractorSpec extends AnyFunSuite {
       (K.Text, "helmet | 12")))
   }
 
-  test("page estimates match reference formulas") {
-    val paras = (1 to 45).map(i => s"<w:p><w:r><w:t>p$i</w:t></w:r></w:p>").mkString
-    val docx = Seq(OfficePart("word/document.xml", s"<w:document><w:body>$paras</w:body></w:document>"))
-    assert(OfficeExtractor.pageEstimate("docx", docx) === 2) // 45/20 = 2
-    val pptx = (1 to 3).map(i => OfficePart(s"ppt/slides/slide$i.xml", "<p:sld></p:sld>"))
-    assert(OfficeExtractor.pageEstimate("pptx", pptx) === 3)
-  }
-
   test("synthesized office docs run end-to-end through the fused pipeline") {
     // docx doc (id%3==0): one span per sentence incl. the safety sentence
     val d0 = ExtractionPipeline.processDoc(DocGen.synthesizeOffice(0, "alpha beta gamma"))
