@@ -5,7 +5,9 @@ import graft.matching.{AhoCorasick, Corpora}
 /** Domain / document-type classification (SURVEY.md §2.3 C1-C3).
   *
   * Weighted-AC semantics per reference `knowledge/aho_corasick_engine.py:175-248`:
-  * one automaton over all keywords; each whole-word hit contributes
+  * one automaton over all domain and doctype keywords, one whole-word
+  * scan of the text, and both families scored from its hits (a hit of a
+  * keyword that both list counts for both); each whole-word hit contributes
   * keyword_weight × domain_weight; scores normalize to percent of total,
   * sorted desc; empty-hit documents default to `general: 100`
   * (doctype default `document: 100`). Routing flags per
@@ -22,34 +24,31 @@ object Classifier {
       skipEntityExtraction: Boolean,         // primary confidence < 5.0
       enableDeepDomainExtraction: Boolean)   // primary confidence >= 60.0
 
-  private def keywordIndex(sets: Map[String, Map[String, Double]])
-      : (Seq[String], Map[String, Seq[(String, Double)]]) = {
-    val all = sets.valuesIterator.flatMap(_.keysIterator).toSeq.distinct.sorted
-    val byKeyword = all.map { kw =>
+  // keyword → (class, keyword weight) of every class that lists it
+  private def keywordIndex(sets: Map[String, Map[String, Double]]): Map[String, Seq[(String, Double)]] =
+    sets.valuesIterator.flatMap(_.keysIterator).toSeq.distinct.map { kw =>
       kw -> sets.toSeq.sortBy(_._1).collect {
         case (dom, kws) if kws.contains(kw) => (dom, kws(kw))
       }
     }.toMap
-    (all, byKeyword)
-  }
 
-  private lazy val (domainPatterns, domainByKw) = keywordIndex(Corpora.domainKeywords)
-  private lazy val (doctypePatterns, doctypeByKw) = keywordIndex(Corpora.doctypeKeywords)
+  private lazy val domainByKw = keywordIndex(Corpora.domainKeywords)
+  private lazy val doctypeByKw = keywordIndex(Corpora.doctypeKeywords)
 
-  private def domainAc = AhoCorasick.cached("classify.domain", domainPatterns)
-  private def doctypeAc = AhoCorasick.cached("classify.doctype", doctypePatterns)
+  // one automaton over the domain and doctype keywords
+  private def keywordAc =
+    AhoCorasick.cached("classify.keywords", (domainByKw.keys ++ doctypeByKw.keys).toSeq.distinct.sorted)
 
-  /** Score one keyword family: each hit adds its keyword weight to its
-    * class (every domain weight is 1). Returns percent-normalized map
-    * sorted by (-score, name) with 2-decimal rounding for stable fixtures.
+  /** Score one keyword family from the hits of both: each hit of one of
+    * its keywords adds the keyword weight to its class (every domain
+    * weight is 1). Returns percent-normalized map sorted by (-score,
+    * name) with 2-decimal rounding for stable fixtures, or `default` at
+    * 100 when none of the family's keywords is hit.
     */
   private def scoreFamily(
-      text: String,
-      ac: AhoCorasick,
+      hits: IndexedSeq[AhoCorasick#Hit],
       byKw: Map[String, Seq[(String, Double)]],
       default: String): Map[String, Double] = {
-    val hits = ac.findWholeWords(text)
-    if (hits.isEmpty) return Map(default -> 100.0)
     val raw = scala.collection.mutable.HashMap.empty[String, Double]
     hits.foreach { h =>
       byKw.getOrElse(h.pattern, Nil).foreach { case (dom, kwWeight) =>
@@ -75,7 +74,7 @@ object Classifier {
 
   private def entityAc = AhoCorasick.cached("classify.domainEntities", entityPatterns)
 
-  /** C4: domain entity extraction — third automaton over per-domain
+  /** C4: domain entity extraction — a second automaton over per-domain
     * entity lists, filtered to the target domains, whole-word validated,
     * order-preserving dedup, cap 30 (`aho_corasick_engine.py:250-280`).
     * Returns "domain/entity" strings in first-occurrence order.
@@ -91,8 +90,9 @@ object Classifier {
   }
 
   def classify(text: String): Classification = {
-    val domains = scoreFamily(text, domainAc, domainByKw, "general")
-    val doctypes = scoreFamily(text, doctypeAc, doctypeByKw, "document")
+    val hits = keywordAc.findWholeWords(text)
+    val domains = scoreFamily(hits, domainByKw, "general")
+    val doctypes = scoreFamily(hits, doctypeByKw, "document")
     val (pd, pdc) = domains.head
     val (pt, _) = doctypes.head
     // C3 routing exactly as `service_processor.py:1922-1927`: skip is

@@ -50,17 +50,19 @@ object Core8Extractor {
     * Each pattern pass is a [[Scan.replaceAll]] over the previous pass's
     * output, tried only at its trigger char (`!`, `[`, `*`) or at line
     * starts; the link passes resume past a `[` run that no `](…)` closes
-    * ([[Scan.bracketEnd]]), so each pass is linear.
+    * ([[Scan.bracketEnd]]), so each pass is linear. A pass runs only
+    * when its input holds the char every one of its matches contains
+    * (`!`, `[`, `*`, `#`, `>`): most texts hold none of several.
     */
   def cleanFormatting(text: String): String = {
     var t = text
-    t = imageLink.replaceAll(t, _.group(1))
-    t = link.replaceAll(t, _.group(1))
+    if (t.indexOf('!') >= 0) t = imageLink.replaceAll(t, _.group(1))
+    if (t.indexOf('[') >= 0) t = link.replaceAll(t, _.group(1))
     t = t.replace("**", "").replace("__", "")
-    t = emphasis.replaceAll(t, _.group(1))
+    if (t.indexOf('*') >= 0) t = emphasis.replaceAll(t, _.group(1))
     t = t.replace("`", "")
-    t = heading.replaceAll(t, _ => "")
-    t = quote.replaceAll(t, _ => "")
+    if (t.indexOf('#') >= 0) t = heading.replaceAll(t, _ => "")
+    if (t.indexOf('>') >= 0) t = quote.replaceAll(t, _ => "")
     t
   }
 
@@ -71,7 +73,18 @@ object Core8Extractor {
     * (`service_processor.py:1521-1577`).
     */
   def splitSentences(text: String): Seq[(String, Int)] = {
-    val out = new ArrayBuffer[(String, Int)]
+    val (starts, ends) = sentences(text)
+    starts.indices.map(k => (text.substring(starts(k), ends(k)), starts(k)))
+  }
+
+  /** The [start, end) bounds of the sentences [[splitSentences]] keeps.
+    * Kept sentences are disjoint, and each one is bounded by the start
+    * or end of the text, whitespace, or the first `\n` of a `\n\n` it
+    * ends at: no word (`wordRx`) and no whole-word hit crosses a bound.
+    */
+  private def sentences(text: String): (Array[Int], Array[Int]) = {
+    val starts, ends = new scala.collection.mutable.ArrayBuilder.ofInt
+    def keep(s: Int, e: Int): Unit = if (text.substring(s, e).trim.length >= 5) { starts += s; ends += e }
     var start = 0
     var i = 0
     val n = text.length
@@ -79,23 +92,18 @@ object Core8Extractor {
       val c = text.charAt(i)
       if ((c == '.' || c == '!' || c == '?') &&
           (i + 1 >= n || Character.isWhitespace(text.charAt(i + 1)))) {
-        val s = text.substring(start, i + 1)
-        if (s.trim.length >= 5) out += ((s, start))
+        keep(start, i + 1)
         start = i + 1
         while (start < n && Character.isWhitespace(text.charAt(start))) start = start + 1
         i = start
       } else if (c == '\n' && i + 1 < n && text.charAt(i + 1) == '\n') {
-        val s = text.substring(start, i)
-        if (s.trim.length >= 5) out += ((s, start))
+        keep(start, i)
         start = i + 1
         i += 1
       } else i += 1
     }
-    if (start < n) {
-      val s = text.substring(start)
-      if (s.trim.length >= 5) out += ((s, start))
-    }
-    out.toSeq
+    if (start < n) keep(start, n)
+    (starts.result(), ends.result())
   }
 
   /** E10: drop converted-unit duplicates in parentheses, keeping the
@@ -122,69 +130,95 @@ object Core8Extractor {
   def dedupLongestFirst(entities: Seq[EntityMention]): Seq[EntityMention] =
     AhoCorasick.longestFirst(entities)(_.start, _.end, _.value.toLowerCase)
 
-  // -------------------------------------------------------------- person
+  // ------------------------------------------------------ words and hits
 
   private val wordRx = java.util.regex.Pattern.compile("[A-Za-z][A-Za-z.'-]*")
+
+  /** The words of a text (`wordRx` matches) with their offsets, each
+    * lowercased once: the one tokenization the person and org walks read.
+    */
+  private final class Words(val word: Array[String], val lower: Array[String],
+                            val start: Array[Int], val end: Array[Int])
+
+  private def words(text: String): Words = {
+    val m = wordRx.matcher(text)
+    val word = Array.newBuilder[String]
+    val start, end = new scala.collection.mutable.ArrayBuilder.ofInt
+    while (m.find()) { word += m.group(); start += m.start(); end += m.end() }
+    val w = word.result()
+    new Words(w, w.map(_.toLowerCase), start.result(), end.result())
+  }
+
+  private type Hits = IndexedSeq[AhoCorasick#Hit]
+
+  /** The whole-word (ORG, GPE, LOC) hits of a text, from one scan of
+    * one automaton over the ORG corpus, the GPE keys and the LOC keys;
+    * a hit's kind is the range its pattern index falls in.
+    */
+  private def dictionary(text: String): (Hits, Hits, Hits) = {
+    // the bundle is snapshotted ONCE so the pattern list, the range
+    // sizes and the version key all come from the SAME bundle; the key
+    // ends in `.${version}`, which Corpora.install evicts by
+    val b = Corpora.bundle
+    val ac = AhoCorasick.cached(s"core8.gazetteer.${b.version}",
+      b.orgs.toSeq.sorted ++ b.gpe.keys.toSeq.sorted ++ b.loc.keys.toSeq.sorted)
+    val (org, place) = ac.findWholeWords(text).partition(_.patternIdx < b.orgs.size)
+    val (gpe, loc) = place.partition(_.patternIdx < b.orgs.size + b.gpe.size)
+    (org, gpe, loc)
+  }
+
+  // -------------------------------------------------------------- person
 
   /** E3: conservative PERSON extractor — capitalized sequences →
     * blacklist rejection → evidence scoring against name corpora with
     * title/suffix context, min confidence 0.7, cap 30
     * (`utils/person_entity_extractor.py:38-560`).
     */
-  def extractPersons(text: String): Seq[EntityMention] = {
-    // tokenize words with offsets
-    val m = wordRx.matcher(text)
-    val toks = new ArrayBuffer[(String, Int, Int)]
-    while (m.find()) toks += ((m.group(), m.start(), m.end()))
+  def extractPersons(text: String): Seq[EntityMention] = findPersons(text, words(text))
+
+  private def findPersons(text: String, w: Words): Seq[EntityMention] = {
+    val n = w.word.length
     val out = new ArrayBuffer[EntityMention]
+    def isCap(t: String): Boolean = t.length >= 2 && Character.isUpperCase(t.charAt(0)) &&
+      t.drop(1).forall(c => Character.isLowerCase(c) || c == '\'' || c == '-')
+    def isInitial(t: String): Boolean =
+      Character.isUpperCase(t.charAt(0)) && (t.length == 1 || t.length == 2 && t.charAt(1) == '.')
     var i = 0
-    def isCap(w: String): Boolean =
-      w.length >= 2 && Character.isUpperCase(w.charAt(0)) &&
-        w.drop(1).forall(c => Character.isLowerCase(c) || c == '\'' || c == '-')
-    def isInitial(w: String): Boolean =
-      (w.length == 2 && Character.isUpperCase(w.charAt(0)) && w.charAt(1) == '.') ||
-      (w.length == 1 && Character.isUpperCase(w.charAt(0)))
-    def stripDot(w: String): String = w.stripSuffix(".")
-    while (i < toks.length && out.length < PatternBank.caps("PERSON")) {
-      val (w, ws, _) = toks(i)
-      val titleHere = Corpora.personTitles.contains(stripDot(w).toLowerCase)
-      val startIdx = if (titleHere && i + 1 < toks.length) i + 1 else i
-      val (w0, _, _) = toks(startIdx)
-      if (isCap(w0) && !Corpora.personBlacklist.contains(w0.toLowerCase)) {
+    while (i < n && out.length < PatternBank.caps("PERSON")) {
+      val titleHere = Corpora.personTitles.contains(w.lower(i).stripSuffix("."))
+      val startIdx = if (titleHere && i + 1 < n) i + 1 else i
+      if (isCap(w.word(startIdx)) && !Corpora.personBlacklist.contains(w.lower(startIdx))) {
         // gather run of capitalized words / initials (max 4)
         var j = startIdx
         val run = new ArrayBuffer[Int]
         var blacklisted = false
-        while (j < toks.length && run.length < 4 &&
-               (isCap(toks(j)._1) || (run.nonEmpty && isInitial(toks(j)._1))) &&
+        while (j < n && run.length < 4 &&
+               (isCap(w.word(j)) || (run.nonEmpty && isInitial(w.word(j)))) &&
                // adjacency: next token must start within 2 chars of prev end
-               (run.isEmpty || toks(j)._2 - toks(run.last)._3 <= 2)) {
-          if (Corpora.personBlacklist.contains(toks(j)._1.toLowerCase)) blacklisted = true
+               (run.isEmpty || w.start(j) - w.end(run.last) <= 2)) {
+          if (Corpora.personBlacklist.contains(w.lower(j))) blacklisted = true
           run += j
           j += 1
         }
         // optional suffix (Jr., III, PhD)
         var suffix = false
-        if (run.nonEmpty && j < toks.length &&
-            Corpora.personSuffixes.contains(stripDot(toks(j)._1).toLowerCase) &&
-            toks(j)._2 - toks(run.last)._3 <= 2) {
+        if (run.nonEmpty && j < n &&
+            Corpora.personSuffixes.contains(w.lower(j).stripSuffix(".")) &&
+            w.start(j) - w.end(run.last) <= 2) {
           run += j; suffix = true; j += 1
         }
-        val nameToks = run.map(toks(_))
-        val fullWords = nameToks.filter { case (t, _, _) => isCap(t) }
+        val fullWords = run.filter(k => isCap(w.word(k)))
         if (!blacklisted && fullWords.length >= 2 ||
             (!blacklisted && titleHere && fullWords.length >= 1)) {
           var conf = 0.0
-          val first = fullWords.head._1.toLowerCase
-          val last = fullWords.last._1.toLowerCase
-          if (Corpora.firstNames.contains(first)) conf += 0.4
-          if (Corpora.lastNames.contains(last)) conf += 0.4
+          if (Corpora.firstNames.contains(w.lower(fullWords.head))) conf += 0.4
+          if (Corpora.lastNames.contains(w.lower(fullWords.last))) conf += 0.4
           if (titleHere) conf += 0.3
           if (suffix) conf += 0.2
           if (fullWords.length >= 2) conf += 0.1
           if (conf >= 0.7) {
-            val s = if (titleHere) ws else nameToks.head._2
-            val e = nameToks.last._3
+            val s = if (titleHere) w.start(i) else w.start(run.head)
+            val e = w.end(run.last)
             val t = text.substring(s, e)
             out += EntityMention(t, t, "PERSON", s, e)
             i = j
@@ -197,82 +231,74 @@ object Core8Extractor {
 
   // ----------------------------------------------------------------- org
 
-  // cache keys carry the corpus version: a table-loaded bundle
-  // recompiles its automatons lazily on first use in each JVM. The
-  // bundle is snapshotted ONCE per call so version and pattern set come
-  // from the SAME bundle — reading them separately could cache an old
-  // automaton under a new version key if an install lands in between
-  private def orgAc = {
-    val b = Corpora.bundle
-    AhoCorasick.cached(s"core8.orgs.${b.version}", b.orgs.toSeq.sorted)
-  }
-
-  /** E4: ORG extractor — per-sentence AC over the org corpus with
-    * word-boundary validation, plus capitalized runs ending in a legal /
-    * institutional suffix; length ≥4; stoplist filtered; longest-match
-    * dedup per sentence (`service_processor.py:1422-1520,2896-3041`).
+  /** E4: ORG extractor — the document's corpus hits that lie inside one
+    * kept sentence, with word-boundary validation, plus capitalized runs
+    * ending in a legal / institutional suffix, walked back no further
+    * than the first word of the suffix's sentence; length ≥4; stoplist
+    * filtered; longest-match dedup (`service_processor.py:1422-1520,2896-3041`).
+    *
+    * One document-level scan gives what a scan per sentence gave: kept
+    * sentences are disjoint and bounded by whitespace, `\n` or the ends
+    * of the text ([[sentences]]), so a hit inside one passes the
+    * whole-word test in the document iff it passes it in the sentence,
+    * and longest-first resolves the sentences independently. Hits that
+    * cross a sentence bound, and hits and words in a dropped short
+    * sentence, are left out, as the per-sentence scan never saw them.
     */
-  def extractOrgs(text: String): Seq[EntityMention] = {
+  def extractOrgs(text: String): Seq[EntityMention] =
+    findOrgs(text, words(text), dictionary(text)._1)
+
+  private def findOrgs(text: String, w: Words, hits: Hits): Seq[EntityMention] = {
+    val (starts, ends) = sentences(text)
+    // the kept sentence holding [s, e), or -1
+    def sentenceOf(s: Int, e: Int): Int = {
+      val b = java.util.Arrays.binarySearch(starts, s)
+      val k = if (b >= 0) b else -b - 2
+      if (k >= 0 && e <= ends(k)) k else -1
+    }
     val out = new ArrayBuffer[EntityMention]
-    splitSentences(text).foreach { case (sentence, sentStart) =>
-      // corpus matches
-      orgAc.findLongestNonOverlapping(sentence).foreach { h =>
-        val t = sentence.substring(h.start, h.end)
-        if (t.length >= 4 && !Corpora.orgStoplist.contains(t.toLowerCase))
-          out += EntityMention(t, t, "ORG", sentStart + h.start, sentStart + h.end)
+    def add(s: Int, e: Int): Unit = {
+      val t = text.substring(s, e)
+      if (t.length >= 4 && !Corpora.orgStoplist.contains(t.toLowerCase))
+        out += EntityMention(t, t, "ORG", s, e)
+    }
+    // corpus matches
+    AhoCorasick.longestFirst(hits.filter(h => sentenceOf(h.start, h.end) >= 0))(_.start, _.end)
+      .foreach(h => add(h.start, h.end))
+    // suffix-cued capitalized runs: "Birchwood Holdings LLC"
+    val sentence = Array.tabulate(w.word.length)(k => sentenceOf(w.start(k), w.end(k)))
+    var i = 0
+    while (i < sentence.length) {
+      if (sentence(i) >= 0 &&
+          (Corpora.orgSuffixes.contains(w.lower(i).stripSuffix(".")) || Corpora.orgSuffixes.contains(w.lower(i)))) {
+        // walk back over capitalized words of the same sentence
+        var k = i - 1
+        while (k >= 0 && sentence(k) == sentence(i) && Character.isUpperCase(w.word(k).charAt(0)) &&
+               !Corpora.orgStoplist.contains(w.lower(k)) &&
+               w.start(k + 1) - w.end(k) <= 2 && i - k < 5) k -= 1
+        if (k < i - 1 && Character.isUpperCase(w.word(i).charAt(0))) add(w.start(k + 1), w.end(i))
       }
-      // suffix-cued capitalized runs: "Birchwood Holdings LLC"
-      val m = wordRx.matcher(sentence)
-      val toks = new ArrayBuffer[(String, Int, Int)]
-      while (m.find()) toks += ((m.group(), m.start(), m.end()))
-      var i = 0
-      while (i < toks.length) {
-        val (w, _, _) = toks(i)
-        if (Corpora.orgSuffixes.contains(w.toLowerCase.stripSuffix(".")) ||
-            Corpora.orgSuffixes.contains(w.toLowerCase)) {
-          // walk back over capitalized words
-          var k = i - 1
-          while (k >= 0 && Character.isUpperCase(toks(k)._1.charAt(0)) &&
-                 !Corpora.orgStoplist.contains(toks(k)._1.toLowerCase) &&
-                 toks(k + 1)._2 - toks(k)._3 <= 2 && i - k < 5) k -= 1
-          if (k < i - 1 && Character.isUpperCase(w.charAt(0))) {
-            val s = toks(k + 1)._2
-            val e = toks(i)._3
-            val t = sentence.substring(s, e)
-            if (t.length >= 4 && !Corpora.orgStoplist.contains(t.toLowerCase))
-              out += EntityMention(t, t, "ORG", sentStart + s, sentStart + e)
-          }
-        }
-        i += 1
-      }
+      i += 1
     }
     dedupLongestFirst(out.toSeq)
   }
 
   // ------------------------------------------------------------- gpe/loc
 
-  private def gpeAc = {
-    val b = Corpora.bundle
-    AhoCorasick.cached(s"core8.gpe.${b.version}", b.gpe.keys.toSeq.sorted)
-  }
-  private def locAc = {
-    val b = Corpora.bundle
-    AhoCorasick.cached(s"core8.loc.${b.version}", b.loc.keys.toSeq.sorted)
-  }
+  /** E6/E7: gazetteer hits over the whole doc, split from the one
+    * dictionary scan by kind; longest first per kind; len>2; dedup.
+    */
+  def extractGpe(text: String): Seq[EntityMention] = findPlaces(text, dictionary(text)._2, "GPE")
+  def extractLoc(text: String): Seq[EntityMention] = findPlaces(text, dictionary(text)._3, "LOC")
 
-  /** E6/E7: gazetteer AC over the doc; len>2; dedup; cap 50. */
-  private def extractGazetteer(text: String, ac: AhoCorasick, tpe: String): Seq[EntityMention] = {
-    val hits = ac.findLongestNonOverlapping(text)
-    val ents = hits.collect {
+  private def findPlaces(text: String, hits: Hits, tpe: String): Seq[EntityMention] = {
+    val ents = AhoCorasick.longestFirst(hits)(_.start, _.end).collect {
       case h if h.end - h.start > 2 =>
         val t = text.substring(h.start, h.end)
         EntityMention(t, t, tpe, h.start, h.end)
     }
     dedupLongestFirst(ents)
   }
-
-  def extractGpe(text: String): Seq[EntityMention] = extractGazetteer(text, gpeAc, "GPE")
-  def extractLoc(text: String): Seq[EntityMention] = extractGazetteer(text, locAc, "LOC")
 
   // ---------------------------------------------------------- orchestrate
 
@@ -333,10 +359,9 @@ object Core8Extractor {
     // regulation's CFR/USC gate is its `Cited` trigger class
     val regs = scan(PatternBank.regulation, "REGULATION")
     val rangeInds = scan(PatternBank.rangeIndicator, "RANGE_INDICATOR")
-    val persons = extractPersons(t)
-    val orgs = extractOrgs(t)
-    val gpes = extractGpe(t)
-    val locs = extractLoc(t)
+    // one tokenization and one dictionary scan feed PERSON, ORG, GPE and LOC
+    val w = words(t)
+    val (orgHits, gpeHits, locHits) = dictionary(t)
 
     val all =
       cap("DATE", dedupLongestFirst(dates)) ++
@@ -348,10 +373,10 @@ object Core8Extractor {
       cap("URL", dedupLongestFirst(urls)) ++
       cap("REGULATION", dedupLongestFirst(regs)) ++
       cap("RANGE_INDICATOR", dedupLongestFirst(rangeInds)) ++
-      cap("PERSON", dedupLongestFirst(persons)) ++
-      cap("ORG", orgs) ++
-      cap("GPE", gpes) ++
-      cap("LOC", locs)
+      cap("PERSON", dedupLongestFirst(findPersons(t, w))) ++
+      cap("ORG", findOrgs(t, w, orgHits)) ++
+      cap("GPE", findPlaces(t, gpeHits, "GPE")) ++
+      cap("LOC", findPlaces(t, locHits, "LOC"))
 
     resolveConflicts(all).sortBy(e => (e.start, e.`type`))
   }

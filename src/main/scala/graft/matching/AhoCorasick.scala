@@ -21,7 +21,6 @@ final class AhoCorasick private (
   /** A match: [start, end) character offsets and the pattern index. */
   final case class Hit(start: Int, end: Int, patternIdx: Int) {
     def pattern: String = patterns(patternIdx)
-    def length: Int = end - start
   }
 
   @inline private def step(state: Int, c: Char): Int = {
@@ -85,20 +84,38 @@ object AhoCorasick {
     * then start asc (equal ones in input order), and keep an item when
     * its [start, end) overlaps no kept item and its key equals no kept
     * item's key. The key defaults to the item itself. Returns the kept
-    * items sorted by start. The overlap test scans the kept items, so
-    * the cost is O(n × kept).
+    * items sorted by start (equal starts in visiting order).
+    *
+    * The cost is O(n log n). Kept items of positive length are pairwise
+    * disjoint, so their ends rise with their starts, and [s, e) overlaps
+    * one of them iff the one with the largest start below e ends after
+    * s; a Fenwick tree of prefix maxima over the items' ranks by start
+    * finds that one in O(log n). An item of length ≤ 0 is visited after
+    * every longer one and overlaps no other item of length ≤ 0, so it is
+    * tested like any item and never inserted.
     */
   def longestFirst[T](items: Seq[T])(start: T => Int, end: T => Int,
       key: T => Any = (t: T) => t): IndexedSeq[T] = {
-    val taken = new ArrayBuffer[T]
+    val xs = items.sortBy(start).toIndexedSeq // the ranks: by start, then input order
+    val n = xs.length
+    val s = xs.map(start).toArray
+    val e = xs.map(end).toArray
+    val fenwick = Array.fill(n + 1)(-1) // prefix max of the kept ranks of positive length
     val keys = scala.collection.mutable.HashSet.empty[Any]
-    items.sortBy(t => (start(t) - end(t), start(t))).foreach { t =>
-      val k = key(t)
-      if (!keys.contains(k) && !taken.exists(o => start(t) < end(o) && start(o) < end(t))) {
-        keys += k; taken += t
+    val kept = new ArrayBuffer[Int]
+    (0 until n).sortBy(r => s(r) - e(r)).foreach { r =>
+      var k = 0 // the number of ranks whose start < e
+      var hi = n
+      while (k < hi) { val m = (k + hi) >>> 1; if (s(m) < e(r)) k = m + 1 else hi = m }
+      var last = -1
+      while (k > 0) { last = math.max(last, fenwick(k)); k -= k & -k }
+      if ((last < 0 || e(last) <= s(r)) && keys.add(key(xs(r)))) {
+        kept += r
+        k = if (e(r) > s(r)) r + 1 else n + 1
+        while (k <= n) { fenwick(k) = math.max(fenwick(k), r); k += k & -k }
       }
     }
-    taken.sortBy(start).toIndexedSeq
+    kept.sortBy(s(_)).map(xs).toIndexedSeq
   }
 
   def build(patternsIn: Seq[String]): AhoCorasick = {

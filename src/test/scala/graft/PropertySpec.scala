@@ -3,7 +3,8 @@ package graft
 import graft.extract.{ContentFlagsScan, Core8Extractor, PatternBank, Scan}
 import graft.html.{Boilerplate, HtmlExtractor, HtmlParser}
 import graft.html.HtmlParser.Node
-import graft.matching.AhoCorasick
+import graft.classify.Classifier
+import graft.matching.{AhoCorasick, Corpora, CorpusBundle}
 import graft.model.{CanonicalEntity, ContentFlags, EntityMention, Mention, PdfBlock, Span, SpanKinds}
 import graft.normalize.Normalizer
 import graft.pdf.PdfExtractor
@@ -430,6 +431,21 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
       v <- Gen.oneOf("osha", "OSHA", "Acme", "acme", "x")
     } yield EntityMention(v, v, "ORG", s, s + len))
     forAll(mentions)(es => assert(Core8Extractor.dedupLongestFirst(es) == dedupLoop(es)))
+    // dense runs: many short intervals over a few starts, so equal,
+    // nested, abutting and zero-length ones meet at every position
+    val dense = Gen.choose(20, 150).flatMap(k => Gen.listOfN(k, Gen.zip(Gen.choose(0, 12), Gen.choose(0, 3))))
+      .map(_.zipWithIndex.map { case ((s, len), id) => (s, s + len, id) })
+    forAll(dense) { hits =>
+      val kept = AhoCorasick.longestFirst(hits)(_._1, _._2)
+      assert(kept == acLoop(hits)(_._1, _._2))
+      assert(kept.map(h => (h._1, h._2, s"r${h._3}")) == replaceLoop(hits))
+    }
+    val denseMentions = Gen.choose(20, 150).flatMap(k => Gen.listOfN(k, for {
+      s <- Gen.choose(0, 12)
+      len <- Gen.choose(0, 3)
+      v <- Gen.oneOf("a", "A", "b", "c", "d", "e")
+    } yield EntityMention(v, v, "ORG", s, s + len)))
+    forAll(denseMentions)(es => assert(Core8Extractor.dedupLongestFirst(es) == dedupLoop(es)))
     val ac = AhoCorasick.build(Seq("ab", "abc", "bc", "b", "cab", "ab ab", "c"))
     forAll(Gen.listOf(Gen.oneOf('a', 'b', 'c', ' ')).map(_.mkString)) { text =>
       assert(ac.findLongestNonOverlapping(text) ==
@@ -837,5 +853,289 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(docGenDocs.size > 400)
     docGenDocs.foreach(d => check(d.spans))
     markdownHostile.foreach(t => check(Seq(Span(SpanKinds.Text, t, "", 0))))
+  }
+
+  // P15's references: splitSentences, extractPersons, the per-sentence
+  // extractOrgs, extractGazetteer and Classifier.classify (with its
+  // scoreFamily and keywordIndex) as they ran before the one dictionary
+  // scan and the one word pass, byte for byte, over automatons of their
+  // own built from `b`; P11's loops stand in for the overlap resolver
+  private final class PerSentence(b: CorpusBundle) {
+    private val orgAc = AhoCorasick.build(b.orgs.toSeq.sorted)
+    private val gpeAc = AhoCorasick.build(b.gpe.keys.toSeq.sorted)
+    private val locAc = AhoCorasick.build(b.loc.keys.toSeq.sorted)
+    private def findLongestNonOverlapping(ac: AhoCorasick, text: String) =
+      acLoop(ac.findWholeWords(text))(_.start, _.end)
+    private def dedupLongestFirst(es: Seq[EntityMention]) = dedupLoop(es)
+    private val wordRx = java.util.regex.Pattern.compile("[A-Za-z][A-Za-z.'-]*")
+
+    def splitSentences(text: String): Seq[(String, Int)] = {
+      val out = new ArrayBuffer[(String, Int)]
+      var start = 0
+      var i = 0
+      val n = text.length
+      while (i < n) {
+        val c = text.charAt(i)
+        if ((c == '.' || c == '!' || c == '?') &&
+            (i + 1 >= n || Character.isWhitespace(text.charAt(i + 1)))) {
+          val s = text.substring(start, i + 1)
+          if (s.trim.length >= 5) out += ((s, start))
+          start = i + 1
+          while (start < n && Character.isWhitespace(text.charAt(start))) start = start + 1
+          i = start
+        } else if (c == '\n' && i + 1 < n && text.charAt(i + 1) == '\n') {
+          val s = text.substring(start, i)
+          if (s.trim.length >= 5) out += ((s, start))
+          start = i + 1
+          i += 1
+        } else i += 1
+      }
+      if (start < n) {
+        val s = text.substring(start)
+        if (s.trim.length >= 5) out += ((s, start))
+      }
+      out.toSeq
+    }
+
+    def extractPersons(text: String): Seq[EntityMention] = {
+      // tokenize words with offsets
+      val m = wordRx.matcher(text)
+      val toks = new ArrayBuffer[(String, Int, Int)]
+      while (m.find()) toks += ((m.group(), m.start(), m.end()))
+      val out = new ArrayBuffer[EntityMention]
+      var i = 0
+      def isCap(w: String): Boolean =
+        w.length >= 2 && Character.isUpperCase(w.charAt(0)) &&
+          w.drop(1).forall(c => Character.isLowerCase(c) || c == '\'' || c == '-')
+      def isInitial(w: String): Boolean =
+        (w.length == 2 && Character.isUpperCase(w.charAt(0)) && w.charAt(1) == '.') ||
+        (w.length == 1 && Character.isUpperCase(w.charAt(0)))
+      def stripDot(w: String): String = w.stripSuffix(".")
+      while (i < toks.length && out.length < PatternBank.caps("PERSON")) {
+        val (w, ws, _) = toks(i)
+        val titleHere = Corpora.personTitles.contains(stripDot(w).toLowerCase)
+        val startIdx = if (titleHere && i + 1 < toks.length) i + 1 else i
+        val (w0, _, _) = toks(startIdx)
+        if (isCap(w0) && !Corpora.personBlacklist.contains(w0.toLowerCase)) {
+          // gather run of capitalized words / initials (max 4)
+          var j = startIdx
+          val run = new ArrayBuffer[Int]
+          var blacklisted = false
+          while (j < toks.length && run.length < 4 &&
+                 (isCap(toks(j)._1) || (run.nonEmpty && isInitial(toks(j)._1))) &&
+                 // adjacency: next token must start within 2 chars of prev end
+                 (run.isEmpty || toks(j)._2 - toks(run.last)._3 <= 2)) {
+            if (Corpora.personBlacklist.contains(toks(j)._1.toLowerCase)) blacklisted = true
+            run += j
+            j += 1
+          }
+          // optional suffix (Jr., III, PhD)
+          var suffix = false
+          if (run.nonEmpty && j < toks.length &&
+              Corpora.personSuffixes.contains(stripDot(toks(j)._1).toLowerCase) &&
+              toks(j)._2 - toks(run.last)._3 <= 2) {
+            run += j; suffix = true; j += 1
+          }
+          val nameToks = run.map(toks(_))
+          val fullWords = nameToks.filter { case (t, _, _) => isCap(t) }
+          if (!blacklisted && fullWords.length >= 2 ||
+              (!blacklisted && titleHere && fullWords.length >= 1)) {
+            var conf = 0.0
+            val first = fullWords.head._1.toLowerCase
+            val last = fullWords.last._1.toLowerCase
+            if (Corpora.firstNames.contains(first)) conf += 0.4
+            if (Corpora.lastNames.contains(last)) conf += 0.4
+            if (titleHere) conf += 0.3
+            if (suffix) conf += 0.2
+            if (fullWords.length >= 2) conf += 0.1
+            if (conf >= 0.7) {
+              val s = if (titleHere) ws else nameToks.head._2
+              val e = nameToks.last._3
+              val t = text.substring(s, e)
+              out += EntityMention(t, t, "PERSON", s, e)
+              i = j
+            } else i += 1
+          } else i += 1
+        } else i += 1
+      }
+      out.toSeq
+    }
+
+    def extractOrgs(text: String): Seq[EntityMention] = {
+      val out = new ArrayBuffer[EntityMention]
+      splitSentences(text).foreach { case (sentence, sentStart) =>
+        // corpus matches
+        findLongestNonOverlapping(orgAc, sentence).foreach { h =>
+          val t = sentence.substring(h.start, h.end)
+          if (t.length >= 4 && !Corpora.orgStoplist.contains(t.toLowerCase))
+            out += EntityMention(t, t, "ORG", sentStart + h.start, sentStart + h.end)
+        }
+        // suffix-cued capitalized runs: "Birchwood Holdings LLC"
+        val m = wordRx.matcher(sentence)
+        val toks = new ArrayBuffer[(String, Int, Int)]
+        while (m.find()) toks += ((m.group(), m.start(), m.end()))
+        var i = 0
+        while (i < toks.length) {
+          val (w, _, _) = toks(i)
+          if (Corpora.orgSuffixes.contains(w.toLowerCase.stripSuffix(".")) ||
+              Corpora.orgSuffixes.contains(w.toLowerCase)) {
+            // walk back over capitalized words
+            var k = i - 1
+            while (k >= 0 && Character.isUpperCase(toks(k)._1.charAt(0)) &&
+                   !Corpora.orgStoplist.contains(toks(k)._1.toLowerCase) &&
+                   toks(k + 1)._2 - toks(k)._3 <= 2 && i - k < 5) k -= 1
+            if (k < i - 1 && Character.isUpperCase(w.charAt(0))) {
+              val s = toks(k + 1)._2
+              val e = toks(i)._3
+              val t = sentence.substring(s, e)
+              if (t.length >= 4 && !Corpora.orgStoplist.contains(t.toLowerCase))
+                out += EntityMention(t, t, "ORG", sentStart + s, sentStart + e)
+            }
+          }
+          i += 1
+        }
+      }
+      dedupLongestFirst(out.toSeq)
+    }
+
+    private def extractGazetteer(text: String, ac: AhoCorasick, tpe: String): Seq[EntityMention] = {
+      val hits = findLongestNonOverlapping(ac, text)
+      val ents = hits.collect {
+        case h if h.end - h.start > 2 =>
+          val t = text.substring(h.start, h.end)
+          EntityMention(t, t, tpe, h.start, h.end)
+      }
+      dedupLongestFirst(ents)
+    }
+
+    def extractGpe(text: String): Seq[EntityMention] = extractGazetteer(text, gpeAc, "GPE")
+    def extractLoc(text: String): Seq[EntityMention] = extractGazetteer(text, locAc, "LOC")
+
+    private def keywordIndex(sets: Map[String, Map[String, Double]])
+        : (Seq[String], Map[String, Seq[(String, Double)]]) = {
+      val all = sets.valuesIterator.flatMap(_.keysIterator).toSeq.distinct.sorted
+      val byKeyword = all.map { kw =>
+        kw -> sets.toSeq.sortBy(_._1).collect {
+          case (dom, kws) if kws.contains(kw) => (dom, kws(kw))
+        }
+      }.toMap
+      (all, byKeyword)
+    }
+
+    private val (domainPatterns, domainByKw) = keywordIndex(Corpora.domainKeywords)
+    private val (doctypePatterns, doctypeByKw) = keywordIndex(Corpora.doctypeKeywords)
+    private val domainAc = AhoCorasick.build(domainPatterns)
+    private val doctypeAc = AhoCorasick.build(doctypePatterns)
+
+    private def scoreFamily(
+        text: String,
+        ac: AhoCorasick,
+        byKw: Map[String, Seq[(String, Double)]],
+        default: String): Map[String, Double] = {
+      val hits = ac.findWholeWords(text)
+      if (hits.isEmpty) return Map(default -> 100.0)
+      val raw = scala.collection.mutable.HashMap.empty[String, Double]
+      hits.foreach { h =>
+        byKw.getOrElse(h.pattern, Nil).foreach { case (dom, kwWeight) =>
+          raw(dom) = raw.getOrElse(dom, 0.0) + kwWeight
+        }
+      }
+      val total = raw.valuesIterator.sum
+      if (total <= 0.0) return Map(default -> 100.0)
+      val sorted = raw.toSeq.sortBy { case (d, s) => (-s, d) }
+      val out = scala.collection.immutable.ListMap.newBuilder[String, Double]
+      sorted.foreach { case (d, s) => out += d -> math.rint(s / total * 10000) / 100.0 }
+      out.result()
+    }
+
+    def classify(text: String): Classifier.Classification = {
+      val domains = scoreFamily(text, domainAc, domainByKw, "general")
+      val doctypes = scoreFamily(text, doctypeAc, doctypeByKw, "document")
+      val (pd, pdc) = domains.head
+      val (pt, _) = doctypes.head
+      Classifier.Classification(
+        domains, pd, pdc, doctypes, pt,
+        skipEntityExtraction = pdc < 5.0,
+        enableDeepDomainExtraction = pdc >= 60.0)
+    }
+  }
+
+  // an ORG name that a `. ` split cuts (the per-sentence scan never saw
+  // it whole) and a four-letter one that fits a dropped short sentence
+  private val p15Bundle = Corpora.builtIn.copy(version = "p15",
+    orgs = Corpora.builtIn.orgs ++ Set("u.s. steel", "nasa"))
+
+  // corpus names in three cases, names, titles and suffixes, capitalized
+  // and stoplisted words, keywords, names glued to `é` and `_`, each
+  // piece followed by a space, nothing, a sentence split or a newline
+  private val dictionaryDense: Gen[String] = {
+    val b = p15Bundle
+    def cased(names: Iterable[String]) = names.toSeq.sorted.flatMap { n =>
+      Seq(n, n.split(' ').map(_.capitalize).mkString(" "), n.toUpperCase)
+    }
+    val names = cased(b.orgs) ++ cased(b.gpe.keys) ++ cased(b.loc.keys)
+    val people = Seq("John", "Jane", "Smith", "Garcia", "Sarah", "Johnson", "Zofia", "J.", "A",
+      "Dr.", "Mr", "Prof.", "President", "Jr.", "III", "PhD", "John Smith", "Dr. Sarah Johnson",
+      "Jane Garcia Jr.")
+    val orgWords = Seq("Acme", "Birchwood", "Holdings", "LLC", "Inc.", "Inc", "Corp.", "Co", "Co.",
+      "Group", "Labs", "University", "The", "Table", "Chief", "North", "Safety", "Report", "O'Neil",
+      "Smith-Jones", "U.S.", "Steel", "NASA", "nasa")
+    val keywords = (Corpora.domainKeywords.values ++ Corpora.doctypeKeywords.values)
+      .flatMap(_.keys).toSeq.sorted
+    val glued = Seq("é", "_", "éChicago", "Chicago_", "_Acme Corporation", "Texasé", "U.S. Steel",
+      "NASA\n\n", "X Co\n\n", "Hi. ", "Go!", "word", "and", "of", "1", "-", "'")
+    val piece = Gen.frequency(4 -> Gen.oneOf(names), 3 -> Gen.oneOf(people), 3 -> Gen.oneOf(orgWords),
+      2 -> Gen.oneOf(keywords), 2 -> Gen.oneOf(glued))
+    val sep = Gen.frequency(8 -> Gen.const(" "), 2 -> Gen.const(""), 2 -> Gen.const(". "),
+      1 -> Gen.const("! "), 1 -> Gen.const("? "), 1 -> Gen.const("\n\n"), 1 -> Gen.const("\n"),
+      1 -> Gen.const(", "), 1 -> Gen.const(".\n\n"), 1 -> Gen.const("  "))
+    Gen.listOf(Gen.zip(piece, sep).map { case (p, s) => p + s }).map(_.mkString)
+  }
+
+  private val dictionaryHostile: Seq[String] = Seq(
+    "Chicago " * 250, "acme corporation " * 120, "Acme Holdings LLC " * 110, "John Smith " * 180,
+    "U.S. Steel " * 180, "NASA\n\n" * 300, "Acme. Holdings LLC " * 100, "Chicago" * 280)
+
+  /** Each entity function, the sentence split and the classification of
+    * `t` equal the per-sentence reference's; extractAll equals the
+    * full-pass extractor (which calls the four entity functions).
+    */
+  private def assertOneScanEqualsPerSentence(ref: PerSentence, t: String,
+      hits: scala.collection.mutable.Map[String, Int]): Unit = {
+    val clip = t.take(300)
+    assert(Core8Extractor.splitSentences(t) == ref.splitSentences(t), clip)
+    val persons = ref.extractPersons(t)
+    assert(Core8Extractor.extractPersons(t) == persons, clip)
+    val orgs = ref.extractOrgs(t)
+    assert(Core8Extractor.extractOrgs(t) == orgs, clip)
+    val gpes = ref.extractGpe(t)
+    assert(Core8Extractor.extractGpe(t) == gpes, clip)
+    val locs = ref.extractLoc(t)
+    assert(Core8Extractor.extractLoc(t) == locs, clip)
+    val c = ref.classify(t)
+    val got = Classifier.classify(t)
+    assert(got == c && got.domains.toSeq == c.domains.toSeq && got.docTypes.toSeq == c.docTypes.toSeq, clip)
+    assert(Core8Extractor.extractAll(t) == fullPassExtractAll(t), clip)
+    Seq("persons" -> persons, "orgs" -> orgs, "gpe" -> gpes, "loc" -> locs).foreach {
+      case (k, es) => hits(k) += es.size
+    }
+    if (c.primaryDomain != "general") hits("domain") += 1
+    if (c.primaryDocType != "document") hits("doctype") += 1
+  }
+
+  test("P15: one dictionary scan and one word pass extract and classify as the per-sentence scans did") {
+    val cleanTexts = docGenDocs.map(d => Core8Extractor.cleanTextOf(d.spans.map(_.text)))
+    assert(cleanTexts.size > 400)
+    val hits = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    try {
+      Corpora.install(p15Bundle)
+      val ref = new PerSentence(p15Bundle)
+      forAll(dictionaryDense)(assertOneScanEqualsPerSentence(ref, _, hits))
+      info(s"entities in the random texts: ${hits.toSeq.sorted.mkString(", ")}")
+      assert(Seq("persons", "orgs", "gpe", "loc", "domain", "doctype").forall(hits(_) > 20), hits)
+      dictionaryHostile.foreach(assertOneScanEqualsPerSentence(ref, _, hits))
+    } finally Corpora.reset()
+    val ref = new PerSentence(Corpora.builtIn)
+    (cleanTexts ++ hostileTexts ++ dictionaryHostile).foreach(assertOneScanEqualsPerSentence(ref, _, hits))
   }
 }

@@ -75,6 +75,9 @@ class Core8ExtractorSpec extends AnyFunSuite {
   // `![` runs, and one digit-group run that money's `\b\d{1,3}(,\d{3})*`
   // walks from every group. Through `ContentFlagsScan.scan` on one text
   // span: line runs, where the footnote's `^\s*` walks from every line.
+  // Dictionary runs, where every word is a hit or a name and each one is
+  // tested against the kept ones: a GPE run through `extractGpe`, and an
+  // ORG corpus name, an ORG suffix run and a person run through `run`.
   private val hostile: Seq[(String, Int => String, String)] = Seq(
     ("a.a.a…", n => "a." * (n / 2), "extractAll"),
     ("a.a.a…@", n => "a." * (n / 2) + "@", "extractAll"),
@@ -88,11 +91,16 @@ class Core8ExtractorSpec extends AnyFunSuite {
     ("![![…", n => "![" * (n / 2), "run"),
     ("1,111,…", n => "1" + ",111" * (n / 4), "run"),
     ("\\n run", n => "\n" * n, "scan"),
-    (" \\n run", n => " \n" * (n / 2), "scan"))
+    (" \\n run", n => " \n" * (n / 2), "scan"),
+    ("Chicago run", n => "Chicago " * (n / 8), "extractGpe"),
+    ("acme corporation run", n => "acme corporation " * (n / 17), "run"),
+    ("Acme Holdings LLC run", n => "Acme Holdings LLC " * (n / 18), "run"),
+    ("John Smith run", n => "John Smith " * (n / 11), "run"))
 
   private val entryPoints: Map[String, String => Any] = Map(
     "extractAll" -> Core8Extractor.extractAll,
     "run" -> Core8Extractor.run,
+    "extractGpe" -> Core8Extractor.extractGpe,
     "scan" -> (t => ContentFlagsScan.scan(Seq(graft.model.Span(graft.model.SpanKinds.Text, t, "", 0)))))
 
   /** `rounds` timings (ms) of `entry` on each of `texts`, the texts
