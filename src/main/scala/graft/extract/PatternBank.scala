@@ -43,12 +43,18 @@ object PatternBank {
     "tons?|tonnes?|gallons?|gal|liters?|litres?|ml|seconds?|secs?|minutes?|mins?|" +
     "hours?|hrs?|days?|weeks?|months?|years?|decibels?|db|degrees?|°f|°c|percent|%"
 
+  /** A lookahead for the first char of some unit, derived from `units`. */
+  private val unitAhead = units.split('|').map(_.head).distinct
+    .map(c => if (c.isLetterOrDigit) s"$c" else s"\\$c").mkString("(?=[", "", "])")
+
   // The measurement patterns with `q` after each digit and space run:
-  // "" for the patterns, "+" for their possessive twins (see `triggers`)
+  // "" for the patterns, "+" for their possessive twins (see `triggers`),
+  // which also look ahead for a unit's first char before the alternation
   private def measurementRangeRx(q: String) = Pattern.compile(
-    s"(?i)\\b\\d+$q(?:\\.\\d+$q)?\\s*$q(?:-|–|to|through)\\s*$q\\d+$q(?:\\.\\d+$q)?\\s*$q(?:$units)\\b")
+    s"(?i)\\b\\d+$q(?:\\.\\d+$q)?\\s*$q(?:-|–|to|through)\\s*$q\\d+$q(?:\\.\\d+$q)?\\s*$q${ahead(q)}(?:$units)\\b")
   private def measurementRx(q: String) = Pattern.compile(
-    s"(?i)\\b\\d+$q(?:\\.\\d+$q)?\\s*$q(?:$units)(?![a-z])")
+    s"(?i)\\b\\d+$q(?:\\.\\d+$q)?\\s*$q${ahead(q)}(?:$units)(?![a-z])")
+  private def ahead(q: String) = if (q.isEmpty) "" else unitAhead
 
   /** Measurement range first: "30-37 inches" is ONE measurement, not two
     * (`service_processor.py:443-524`).
@@ -83,9 +89,11 @@ object PatternBank {
     * money's shared-outcome rule. The scan runs the pattern itself,
     * except for the measurements: their twins are possessive on every
     * digit and space run, so a digit run is not re-tried one shorter at
-    * a time (75 unit alternatives per try). The twins match the same
-    * text, because a shorter run leaves a digit or space next, and no
-    * `.`, space run, range word or unit that may follow starts with one.
+    * a time (75 unit alternatives per try), and they try the units only
+    * where one can start. The twins match the same text, because a
+    * shorter run leaves a digit or space next, no `.`, space run, range
+    * word or unit that may follow starts with one, and every unit starts
+    * with a char of `unitAhead`.
     */
   private[graft] val triggers: Map[Pattern, Scan] = {
     import Scan._

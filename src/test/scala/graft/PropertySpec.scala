@@ -211,9 +211,12 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     dropped
   }
 
-  private def dump(n: Node): String =
+  private def dump(n: Node): String = dump(n, _ => true)
+
+  private def dump(n: Node, keep: String => Boolean): String =
     if (n.isText) s"[${n.text}]"
-    else s"<${n.tag} ${n.attrs.toSeq.sorted.mkString(",")}>${n.children.map(dump).mkString}</${n.tag}>"
+    else s"<${n.tag} ${n.attrs.filter(a => keep(a._1)).toSeq.sorted.mkString(",")}>" +
+      s"${n.children.map(dump(_, keep)).mkString}</${n.tag}>"
 
   private val soupGen: Gen[String] = Gen.listOf(Gen.frequency(
     (4, Gen.oneOf("div", "div", "section", "ul", "li", "table", "tr", "td", "a", "a", "p",
@@ -731,15 +734,18 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     "(" * 2000, "January" + " " * 2000, "1" + ",111" * 500, "1" + ",111" * 500 + " usd",
     "é1" + ",111" * 50 + " dollars", "1111,111 dollars", "1,1111,111 usd", "$1" + ",111" * 500, "[1" * 1000)
 
-  // the sf0.001 documents through the pipeline, the successful ones
-  private lazy val docGenDocs: Seq[graft.model.ExtractedDoc] = {
+  // the sf0.001 documents as DocGen synthesizes them
+  private lazy val docGenRaw: Seq[graft.model.RawDoc] = {
     val s = spark
     import s.implicits._
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text").as[(Long, String)].collect().toSeq
-      .map { case (id, text) => ExtractionPipeline.processDoc(DocGen.synthesize(id, text)) }
-      .filter(_.success)
+      .map { case (id, text) => DocGen.synthesize(id, text) }
   }
+
+  // the sf0.001 documents through the pipeline, the successful ones
+  private lazy val docGenDocs: Seq[graft.model.ExtractedDoc] =
+    docGenRaw.map(ExtractionPipeline.processDoc).filter(_.success)
 
   test("P14: the trigger-anchored scan finds what find() finds, pattern by pattern") {
     bankPatterns.zip(fullPassPatterns).foreach { case (p, (name, full)) =>
@@ -1137,5 +1143,210 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally Corpora.reset()
     val ref = new PerSentence(Corpora.builtIn)
     (cleanTexts ++ hostileTexts ++ dictionaryHostile).foreach(assertOneScanEqualsPerSentence(ref, _, hits))
+  }
+
+  // P16's reference: `HtmlParser.parse` as it was before the one-substring
+  // lexer, verbatim but for `tagName`, whose interning of known names
+  // cannot change a dumped tree. Its lexer appends text char by char,
+  // builds every tag name and keeps every attribute.
+  private def charLexerParse(s: String): Node = {
+    val rawTextElems = Set("script", "style", "noscript", "textarea")
+    val closesP = Set(
+      "p", "div", "ul", "ol", "li", "table", "h1", "h2", "h3", "h4", "h5", "h6",
+      "blockquote", "pre", "section", "article", "nav", "header", "footer",
+      "aside", "main", "hr", "form", "figure")
+    def tagName(nm: java.lang.StringBuilder): String = nm.toString
+    def isNameChar(c: Char): Boolean =
+      (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '-' || c == '_' || c == ':'
+    val root = Node.elem("#root", Map.empty)
+    val stack = new ArrayBuffer[Node]
+    stack += root
+    val openCount = new java.util.HashMap[String, scala.runtime.IntRef]
+    val counts = new ArrayBuffer[scala.runtime.IntRef]
+    val none = new scala.runtime.IntRef(0)
+    def top = stack(stack.length - 1)
+    def pop(): String = {
+      counts.remove(counts.length - 1).elem -= 1
+      stack.remove(stack.length - 1).tag
+    }
+    def text(t: String): Unit = top.children += Node.textNode(t)
+    def close(name: String): Unit = // unmatched close tags are ignored
+      if (top.tag == name || openCount.getOrDefault(name, none).elem > 0) while (pop() != name) {}
+    def open(name: String, attrs: Map[String, String], selfClosing: Boolean): Unit = {
+      // implied closes (lenient HTML recovery)
+      if (closesP.contains(name) && top.tag == "p") pop()
+      if (name == "li" && top.tag == "li") pop()
+      if ((name == "td" || name == "th") && (top.tag == "td" || top.tag == "th")) pop()
+      if (name == "tr") {
+        if (top.tag == "td" || top.tag == "th") pop()
+        if (top.tag == "tr") pop()
+      }
+      val node = Node.elem(name, attrs)
+      top.children += node
+      if (!selfClosing && !HtmlParser.voidElems.contains(name)) {
+        var count = openCount.get(name)
+        if (count == null) { count = new scala.runtime.IntRef(0); openCount.put(name, count) }
+        count.elem += 1
+        stack += node
+        counts += count
+      }
+    }
+
+    val n = s.length
+    var i = 0
+    val pending = new java.lang.StringBuilder
+    def flushText(): Unit = {
+      if (pending.length > 0) { text(pending.toString); pending.setLength(0) }
+    }
+    while (i < n) {
+      val c = s.charAt(i)
+      if (c == '<' && i + 1 < n) {
+        val c1 = s.charAt(i + 1)
+        if (c1 == '!') {
+          flushText()
+          if (s.startsWith("<!--", i)) {
+            val e = s.indexOf("-->", i + 4)
+            i = if (e < 0) n else e + 3
+          } else { // doctype / CDATA — skip to '>'
+            val e = s.indexOf('>', i + 2)
+            i = if (e < 0) n else e + 1
+          }
+        } else if (c1 == '?') { // processing instruction
+          flushText()
+          val e = s.indexOf('>', i + 2)
+          i = if (e < 0) n else e + 1
+        } else if (c1 == '/') {
+          flushText()
+          var j = i + 2
+          val nm = new java.lang.StringBuilder
+          while (j < n && isNameChar(s.charAt(j))) { nm.append(Character.toLowerCase(s.charAt(j))); j += 1 }
+          val e = s.indexOf('>', j)
+          if (nm.length > 0) close(tagName(nm))
+          i = if (e < 0) n else e + 1
+        } else if (Character.isLetter(c1)) {
+          flushText()
+          var j = i + 1
+          val nm = new java.lang.StringBuilder
+          while (j < n && isNameChar(s.charAt(j))) { nm.append(Character.toLowerCase(s.charAt(j))); j += 1 }
+          val name = tagName(nm)
+          // attributes
+          var attrs = Map.empty[String, String]
+          var selfClosing = false
+          var done = false
+          while (!done && j < n) {
+            while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
+            if (j >= n) done = true
+            else if (s.charAt(j) == '>') { j += 1; done = true }
+            else if (s.charAt(j) == '/' ) {
+              if (j + 1 < n && s.charAt(j + 1) == '>') { selfClosing = true; j += 2; done = true }
+              else j += 1
+            } else {
+              // attribute name
+              val an = new java.lang.StringBuilder
+              while (j < n && !Character.isWhitespace(s.charAt(j)) &&
+                     s.charAt(j) != '=' && s.charAt(j) != '>' && s.charAt(j) != '/') {
+                an.append(Character.toLowerCase(s.charAt(j))); j += 1
+              }
+              while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
+              var av = ""
+              if (j < n && s.charAt(j) == '=') {
+                j += 1
+                while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
+                if (j < n && (s.charAt(j) == '"' || s.charAt(j) == '\'')) {
+                  val q = s.charAt(j); j += 1
+                  val vb = new java.lang.StringBuilder
+                  while (j < n && s.charAt(j) != q) { vb.append(s.charAt(j)); j += 1 }
+                  if (j < n) j += 1 // closing quote
+                  av = vb.toString
+                } else {
+                  val vb = new java.lang.StringBuilder
+                  while (j < n && !Character.isWhitespace(s.charAt(j)) && s.charAt(j) != '>') {
+                    vb.append(s.charAt(j)); j += 1
+                  }
+                  av = vb.toString
+                }
+              }
+              if (an.length > 0 && !attrs.contains(an.toString))
+                attrs = attrs.updated(an.toString, graft.html.Entities.unescape(av))
+            }
+          }
+          open(name, attrs, selfClosing)
+          i = j
+          // raw-text elements: consume verbatim until the matching close tag
+          if (rawTextElems.contains(name) && !selfClosing) {
+            var k = i
+            var endIdx = -1
+            val closeSeq = "</" + name
+            var found = false
+            while (!found && k < n) {
+              val cand = s.indexOf('<', k)
+              if (cand < 0) { found = true; endIdx = -1 }
+              else if (cand + closeSeq.length <= n &&
+                       s.regionMatches(true, cand, closeSeq, 0, closeSeq.length)) {
+                found = true; endIdx = cand
+              } else k = cand + 1
+            }
+            if (endIdx < 0) { // unterminated — swallow to EOF
+              text(s.substring(i))
+              close(name)
+              i = n
+            } else {
+              if (endIdx > i) text(s.substring(i, endIdx))
+              val gt = s.indexOf('>', endIdx)
+              close(name)
+              i = if (gt < 0) n else gt + 1
+            }
+          }
+        } else { // '<' followed by non-tag char: literal text
+          pending.append(c); i += 1
+        }
+      } else {
+        pending.append(c); i += 1
+      }
+    }
+    flushText()
+    root
+  }
+
+  // Tag soup for P16: open tags with runs of attributes (quoted, unquoted,
+  // unterminated, duplicate, upper-case, `=`-first, with entities), close
+  // tags, comments, declarations, processing instructions, bare `<`s and
+  // text, ending anywhere; after `<` only ASCII, as HtmlExtractorSpec
+  // covers `<` before a non-ASCII letter
+  private val lexerSoupGen: Gen[String] = {
+    val attr = Gen.oneOf(" href=\"/a?x=1&amp;y=2\"", " HREF='/B'", " src=x.png", " Src = 'sp aced'",
+      " alt=\"AT&amp;T &lt;3 &#x41;&#66;\"", " alt=\"unterminated", " alt='a>b'", " rel=stylesheet",
+      " rel=\"a\" rel=\"b\"", " href", " href=", " href= >", " =v", " =\"q\"", " \"q\"=1", " a/b=c",
+      " class=\"c d\" id=i", " data-x=&quot;", " REL=Preload", " /", "\t", " sRc=\"&bogus; &#1114112;\"")
+    val open = for {
+      t <- Gen.oneOf("a", "img", "link", "DIV", "p", "Span", "li", "td", "tr", "x-y", "h1", "base",
+        "br", "script", "STYLE", "textarea", "noscript", "custom:tag", "Z9")
+      as <- Gen.listOf(attr)
+      end <- Gen.oneOf(">", "/>", " >", "")
+    } yield s"<$t${as.mkString}$end"
+    val close = Gen.oneOf("a", "div", "p", "span", "li", "td", "script", "Style", "x-y", "zz").map(t => s"</$t>")
+    val other = Gen.oneOf("<!-- c -->", "<!--", "<!x>", "<!x", "<!DOCTYPE html>", "<?pi?>", "<?", "</ >",
+      "</", "</>", "<", "< b", "<1", "<=", "<<", "-->", ">", "&amp;", "</script")
+    val text = Gen.oneOf("text", " ", "a < b", "x&lt;y", "\n", "Café", " 中文")
+    for {
+      parts <- Gen.listOf(Gen.frequency((4, open), (3, close), (2, other), (4, text)))
+      tail <- Gen.oneOf("", "<", "</", "<a", "<a href=\"x", "<!-")
+    } yield parts.mkString + tail
+  }
+
+  test("P16: the one-substring lexer builds the tree the char-at-a-time lexer built, on the kept attributes") {
+    val kept = HtmlParser.keptAttrs.toSet
+    def same(html: String): Unit =
+      assert(dump(HtmlParser.parse(html)) == dump(charLexerParse(html), kept), html)
+    def withAttrs(n: Node): Int = (if (n.attrs.nonEmpty) 1 else 0) + n.children.map(withAttrs).sum
+    var elems = 0
+    forAll(lexerSoupGen, 600) { html =>
+      same(html)
+      elems += withAttrs(HtmlParser.parse(html))
+    }
+    assert(elems > 2000, s"only $elems elements kept an attribute")
+    val pages = docGenRaw.filter(_.content_kind == "html").map(_.html)
+    assert(pages.size > 200)
+    pages.foreach(same)
   }
 }

@@ -78,6 +78,9 @@ class Core8ExtractorSpec extends AnyFunSuite {
   // Dictionary runs, where every word is a hit or a name and each one is
   // tested against the kept ones: a GPE run through `extractGpe`, and an
   // ORG corpus name, an ORG suffix run and a person run through `run`.
+  // Through `HtmlParser.parse`: an attribute value no quote closes, a
+  // `<` run, one tag with an attribute every two chars, a comment no
+  // `-->` closes, and a kept attribute dense with entities.
   private val hostile: Seq[(String, Int => String, String)] = Seq(
     ("a.a.a…", n => "a." * (n / 2), "extractAll"),
     ("a.a.a…@", n => "a." * (n / 2) + "@", "extractAll"),
@@ -95,12 +98,18 @@ class Core8ExtractorSpec extends AnyFunSuite {
     ("Chicago run", n => "Chicago " * (n / 8), "extractGpe"),
     ("acme corporation run", n => "acme corporation " * (n / 17), "run"),
     ("Acme Holdings LLC run", n => "Acme Holdings LLC " * (n / 18), "run"),
-    ("John Smith run", n => "John Smith " * (n / 11), "run"))
+    ("John Smith run", n => "John Smith " * (n / 11), "run"),
+    ("unterminated <a href=\"", n => "<a href=\"" + "x" * (n - 9), "parse"),
+    ("<<<<…", n => "<" * n, "parse"),
+    ("one tag, n/2 attributes", n => "<p" + " x" * (n / 2 - 2) + ">", "parse"),
+    ("unclosed <!--", n => "<!--" + "-" * (n - 4), "parse"),
+    ("&amp;-dense href", n => "<a href=\"" + "&amp;" * ((n - 14) / 5) + "\">x</a>", "parse"))
 
   private val entryPoints: Map[String, String => Any] = Map(
     "extractAll" -> Core8Extractor.extractAll,
     "run" -> Core8Extractor.run,
     "extractGpe" -> Core8Extractor.extractGpe,
+    "parse" -> graft.html.HtmlParser.parse,
     "scan" -> (t => ContentFlagsScan.scan(Seq(graft.model.Span(graft.model.SpanKinds.Text, t, "", 0)))))
 
   /** `rounds` timings (ms) of `entry` on each of `texts`, the texts
@@ -152,7 +161,11 @@ class Core8ExtractorSpec extends AnyFunSuite {
   }
 
   test("hostile 40 KB markdown and line runs: run and ContentFlagsScan.scan stay under 50 ms, and 20 KB -> 40 KB at most 2.5x") {
-    assertLinear(hostile.filter(_._3 != "extractAll"), 40000)
+    assertLinear(hostile.filter(c => c._3 != "extractAll" && c._3 != "parse"), 40000)
+  }
+
+  test("hostile 40 KB lexer inputs: HtmlParser.parse stays under 50 ms, and 20 KB -> 40 KB at most 2.5x") {
+    assertLinear(hostile.filter(_._3 == "parse"), 40000)
   }
 
   test("ranges_simple: 30-37 inches is ONE measurement, not two") {

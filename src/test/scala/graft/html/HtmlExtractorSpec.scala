@@ -187,6 +187,13 @@ class HtmlExtractorSpec extends AnyFunSuite {
     assert(doc.success, s"rejected: ${doc.error}")
   }
 
+  test("< before a non-ASCII letter is text, as in the HTML tokenizer: <ébc> and <中文> keep the words after them") {
+    assert(HtmlExtractor.extract("<p>a <ébc> hello world</p>") ===
+      Seq(Span(K.Text, "a <ébc> hello world", "", 0)))
+    assert(HtmlExtractor.extract("<p>a <中文> hello world</p>") ===
+      Seq(Span(K.Text, "a <中文> hello world", "", 0)))
+  }
+
   test("unmatched close tags cost O(1): 20,000 open divs and 40,000 stray </q> parse in under 0.5 s") {
     HtmlParser.parse("<div>" * 2000 + "</q>" * 4000) // warm-up
     val html = "<div>" * 20000 + "</q>" * 40000
